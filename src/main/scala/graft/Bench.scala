@@ -1,13 +1,19 @@
 package graft
+
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.SparkSession
+
 object Bench {
 
-  /** The one bench session recipe — shared with BenchOne so standalone
-    * forensics timings are measured under the exact sweep configuration
-    * (a drifted conf would make fresh-JVM numbers incomparable).
-    * `extraConfs` is for harness callers with phase-specific needs (e.g.
-    * StressMain's long-drain periodicGC) — the bench sweep itself always
-    * runs the bare recipe. */
+  /** The one session recipe, shared by the sweep, BenchOne and Verify so
+    * standalone timings and correctness dumps run under the exact sweep
+    * configuration. `extraConfs` is for harness callers with phase-specific
+    * needs (e.g. StressMain's long-drain periodicGC); the sweep itself
+    * always runs the bare recipe. */
   def benchSession(cpus: String,
       extraConfs: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
@@ -31,31 +37,20 @@ object Bench {
       .write.format("noop").mode("overwrite").save()
 
   /** Fixed-work machine-noise sentinel: a data-independent CPU-bound
-    * aggregation (hash + xor over a generated range — no IO, no parquet,
-    * no shuffle skew) timed at sweep START and END. The pair is emitted
-    * in the JSON line so a judge/round can normalize: on a quiet box both
-    * land near a stable constant; under contention they inflate by the
-    * same smear the per-query seconds carry (the r12 verdict had to
-    * reverse-engineer that factor from 180 unrelated rows). Run AFTER
-    * warmUp so it measures the machine, not session bring-up — and take
-    * min-of-2: the sweep's first execution of THIS plan pays its own
-    * whole-stage-codegen + JIT (~0.2 s, observed start=0.557 vs
-    * end=0.331 on a quiet box), which would read as phantom contention
-    * at sweep start. */
+    * aggregation (hash + xor over a generated range — no IO, no shuffle
+    * skew). On a quiet box it lands near a stable constant; under
+    * contention it inflates by the same smear the per-query seconds carry,
+    * so records can be normalized in-band. Run after warmUp, min-of-2: the
+    * first execution of this plan pays its own codegen + JIT, which would
+    * read as contention. */
   def sentinel(spark: SparkSession): Double =
     math.min(sentinelOnce(spark), sentinelOnce(spark))
 
   /** Per-tiny-job scheduler-floor sentinel: wall seconds PER JOB over 20
     * serial one-task noop jobs (no data, no shuffle, ~zero CPU) — the
-    * latency axis the CPU-bound [[sentinel]] is blind to. The round-17
-    * sweeps proved the gap matters: both sweeps passed the CPU gate
-    * (start 0.227) while every many-tiny-jobs row (streaming, RDD.pipe)
-    * rode a reproducible ~1.7× smear — fresh-JVM BenchOne of an UNTOUCHED
-    * stream row confirmed the box's per-job floor, not the plans, had
-    * slowed. Emitted in-band ("floor_*", observability only) so the next
-    * quiet/slow sessions calibrate a band BEFORE it joins the noisy gate;
-    * min-of-2 like the CPU pair so first-use codegen doesn't read as
-    * contention. */
+    * latency axis the CPU-bound [[sentinel]] is blind to, which smears
+    * every many-tiny-jobs row (streaming, RDD.pipe). Min-of-2 like the
+    * CPU pair. */
   def jobFloor(spark: SparkSession): Double =
     math.min(jobFloorOnce(spark), jobFloorOnce(spark))
 
@@ -103,59 +98,83 @@ object Bench {
     }
   }
 
-  /** Where the full metric line persists between rounds: the driver's
-    * BENCH_r{N}.json keeps only a 2000-char stdout tail, which truncates
-    * the ~3.5 KB per-query map — so Bench also writes the line here
-    * (cwd = repo root under the driver) and reads it back next round. */
+  /** Where the full metric line persists between rounds (cwd = repo
+    * root), read back by the next sweep for its `vs_prev` deltas. */
   val LastRunFile = "bench_last.json"
 
-  private def parseQueries(
-      line: String, sfDir: Option[String]): Option[Map[String, Double]] = try {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    import scala.jdk.CollectionConverters._
-    val node = om.readTree(line)
-    // seconds only compare within one scale factor: a stale line from a
-    // different sf would produce nonsense ratios — treat it as absent
-    val sfOk = sfDir.forall(want =>
-      Option(node.get("sf")).map(_.asText).contains(want))
-    if (!sfOk) None
-    else Option(node.get("queries")).map(qs =>
-      qs.fields().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap)
-  } catch { case _: Throwable => None }
+  private val Json = new ObjectMapper()
 
-  /** Per-query seconds from the previous round at the SAME scale factor,
-    * for the `vs_prev` deltas: [[LastRunFile]] if present (complete), else
-    * every metric-line candidate in the newest BENCH_r{N}.json 2000-char
-    * tail (the head of the long line may be cut; the short summary line
-    * has no queries map). Any parse trouble → no deltas. */
-  def prevQueries(sfDir: String): Map[String, Double] = try {
-    val last = new java.io.File(LastRunFile)
-    val fromFile =
-      if (!last.isFile) None
-      else parseQueries(new String(
-        java.nio.file.Files.readAllBytes(last.toPath),
-        java.nio.charset.StandardCharsets.UTF_8), Some(sfDir))
-    fromFile.getOrElse {
-      // NOTE: expression form, no early `return` — a `return` inside this
-      // by-name block would throw NonLocalReturnControl straight into the
-      // enclosing catch
-      val fs = new java.io.File(".")
-        .listFiles((_, n) => n.matches("BENCH_r\\d+\\.json"))
-      if (fs == null || fs.isEmpty) Map.empty
-      else {
-        val latest = fs.maxBy(f => "\\d+".r.findFirstIn(f.getName).get.toInt)
-        val om = new com.fasterxml.jackson.databind.ObjectMapper()
-        val tail = Option(om.readTree(latest).get("tail"))
-          .map(_.asText).getOrElse("")
-        Iterator.iterate(tail.indexOf("{\"metric\""))(i =>
-            tail.indexOf("{\"metric\"", i + 1))
-          .takeWhile(_ >= 0)
-          .flatMap(i => parseQueries(
-            tail.substring(i).takeWhile(_ != '\n'), Some(sfDir)))
-          .foldLeft(Map.empty[String, Double])((_, m) => m) // last wins
+  /** Per-query seconds from [[LastRunFile]] when it was written at the SAME
+    * scale factor (seconds only compare within one sf), for the `vs_prev`
+    * deltas. A missing or unreadable file means no deltas. */
+  def prevQueries(sfDir: String,
+      file: java.io.File = new java.io.File(LastRunFile)): Map[String, Double] =
+    try {
+      val node = Json.readTree(file)
+      if (node.path("sf").asText != sfDir) Map.empty
+      else node.path("queries").properties.asScala
+        .map(e => e.getKey -> e.getValue.asDouble).toMap
+    } catch { case NonFatal(_) => Map.empty }
+
+  /** The seven sentinel readings of one sweep (see [[sentinel]] and
+    * [[jobFloor]]), in emission order. */
+  final case class Sentinels(start: Double, end: Double, streamStart: Double,
+      streamEnd: Double, floorStart: Double, floorStream: Double,
+      floorEnd: Double) {
+
+    /** In-band quiet-box verdict: a sweep whose sentinels exceed their
+      * thresholds ran under machine contention, and its per-query seconds
+      * carry the same smear. Quiet-box start sentinels sit at 0.08–0.19 s
+      * (0.25 ≈ 1.4× the band's high edge). The stream sentinel runs after
+      * ~150 batch queries have churned the JVM and sits hotter, so it has
+      * its own wider threshold. `floorStart` is the job-floor axis the CPU
+      * pair is blind to: 0.035 s/job ≈ 2.2× the quiet median (calibration
+      * table in BENCH_NOTES). `floorStream` stays observability-only until
+      * its own quiet band has enough points. */
+    def noisy: Boolean =
+      start > 0.25 || streamStart > 0.35 || floorStart > 0.035
+  }
+
+  /** The sweep's two output lines: the full record (persisted to
+    * [[LastRunFile]]) and the short summary printed LAST, which carries
+    * `failed` so a breakage shows even when only the tail of stdout is
+    * kept. Fields may only be added, never renamed or reordered, so
+    * records stay comparable across rounds. */
+  def records(results: Map[String, Double], prev: Map[String, Double],
+      failed: Seq[String], sentinels: Sentinels,
+      sfDir: String): (String, String) = {
+    def r3(v: Double) = math.rint(v * 1000) / 1000 // keep the line short
+    def r4(v: Double) = math.rint(v * 10000) / 10000 // floors are ~10 ms
+    val total = results.values.sum
+    def line(body: ObjectNode => Unit): String = {
+      val o = Json.createObjectNode()
+      o.put("metric", "total").put("value", r3(total)).put("unit", "sec")
+        .put("noisy", sentinels.noisy)
+      body(o)
+      val f = o.putArray("failed")
+      failed.foreach(n => f.add(n))
+      val s = o.putObject("sentinel")
+      s.put("start", r3(sentinels.start)).put("end", r3(sentinels.end))
+        .put("stream_start", r3(sentinels.streamStart))
+        .put("stream_end", r3(sentinels.streamEnd))
+        .put("floor_start", r4(sentinels.floorStart))
+        .put("floor_stream", r4(sentinels.floorStream))
+        .put("floor_end", r4(sentinels.floorEnd))
+      o.put("sf", sfDir)
+      Json.writeValueAsString(o)
+    }
+    val full = line { o =>
+      val qs = o.putObject("queries")
+      results.foreach { case (k, v) => qs.put(k, r3(v)) }
+      // cur/prev ratio per query (<1 = faster than last round)
+      val vs = o.putObject("vs_prev")
+      results.foreach { case (k, v) =>
+        prev.get(k).filter(_ > 0)
+          .foreach(p => vs.put(k, math.rint(v / p * 100) / 100))
       }
     }
-  } catch { case _: Throwable => Map.empty }
+    (full, line(_.put("n_queries", results.size)))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -165,13 +184,10 @@ object Bench {
     val sentinelStart = sentinel(spark)
     val floorStart = jobFloor(spark)
     // noop-format write executes the FULL plan (a count() would let
-    // Catalyst prune projections/sorts and measure a cheaper query).
-    // Two passes, min time: a single pass is dominated by whichever query
-    // absorbs a GC pause / machine-noise spike.
-    // A failed run yields None, never its elapsed time: recording the
-    // ~60 ms it takes to THROW as if the query ran made 23 broken queries
-    // look like innocent fast rows for two rounds (r8-r9). Failures
-    // surface by name in the JSON line's "failed" list instead.
+    // Catalyst prune projections/sorts). Two passes, min time: a single
+    // pass is dominated by whichever query absorbs a GC pause or noise
+    // spike. A failed run yields None, never the time it took to throw;
+    // failures surface by name in the record's "failed" list instead.
     def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       val t0 = System.nanoTime()
       try {
@@ -183,10 +199,8 @@ object Bench {
       }
     }
     // Streaming rows run in their OWN phase after every batch row: a
-    // streaming query leaves memory-sink tables and state-store maintenance
-    // threads in the JVM, which contaminated batch pass-2 timings (r03's
-    // q_join_asof "9.7x regression" was exactly this — standalone fresh-JVM
-    // min at sf0.1 is 1.24 s, matching r02).
+    // streaming query leaves memory-sink tables and state-store
+    // maintenance threads in the JVM that skew later batch timings.
     val streamNames = streaming.Streams.queries.map(_.name).toSet
     val (streamQ, batchQ) = SparkEntry.queries.toSeq.sortBy(_._1)
       .partition { case (n, _) => streamNames(n) }
@@ -197,14 +211,10 @@ object Bench {
       }.toMap
     }
     val resultsBatch = minOf2(batchQ)
-    // The stream phase gets its OWN sentinel pair: the q_stream_* rows are
-    // dominated by RocksDB provider bring-up (~1.5 s quiet) and were the
-    // entire top-6 of the r13 driver-run inflation list — a phase-scoped
-    // pair makes that smear normalizable in-band instead of leaving stream
-    // rows the one phase a judge can't adjudicate from the JSON line. One
+    // The stream phase gets its OWN sentinel pair so its smear (RocksDB
+    // provider bring-up dominates those rows) is normalizable in-band. One
     // DISCARDED stream run first absorbs the JVM-wide one-time costs
-    // (RocksDB JNI load, state-store coordinator, streaming codegen) that
-    // otherwise land on whichever stream row happens to run first.
+    // (RocksDB JNI load, state-store coordinator, streaming codegen).
     val sentinelStreamStart = sentinel(spark)
     val floorStream = jobFloor(spark)
     streamQ.headOption.foreach { case (n, f) => once(s"$n (warm-up)", f) }
@@ -215,64 +225,15 @@ object Bench {
     val floorEnd = jobFloor(spark)
     val failed = (batchQ ++ streamQ).map(_._1)
       .filterNot(results.contains).sorted
-    def r3(v: Double) = math.rint(v * 1000) / 1000 // keep the line short
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    // cur/prev ratio per query (<1 = faster than last round), so
-    // regressions are visible straight from the round's JSON line
-    val prev = prevQueries(sfDir)
-    val vs = results.flatMap { case (k, v) =>
-      prev.get(k).filter(_ > 0).map(p =>
-        s"\"" + k + "\":" + math.rint(v / p * 100) / 100)
-    }.mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def r4(v: Double) = math.rint(v * 10000) / 10000 // floors are ~10 ms
-    val sentinelJson =
-      s"""{"start":${r3(sentinelStart)},"end":${r3(sentinelEnd)},""" +
-        s""""stream_start":${r3(sentinelStreamStart)},""" +
-        s""""stream_end":${r3(sentinelStreamEnd)},""" +
-        s""""floor_start":${r4(floorStart)},""" +
-        s""""floor_stream":${r4(floorStream)},""" +
-        s""""floor_end":${r4(floorEnd)}}"""
-    // In-band quiet-box verdict (r15 verdict item 6): a sweep whose start
-    // sentinel exceeds the threshold ran under machine contention — its
-    // per-query seconds carry the same smear — and says so itself, so
-    // round-over-round BENCH_rN comparisons stop requiring forensic
-    // sentinel reading. Quiet-box start sentinels sit at 0.08–0.19 s on
-    // this box; 0.25 s is ~1.4× the high edge of that band. The stream
-    // sentinel (taken right before the q_stream_* block, after ~150
-    // batch queries have churned the JVM) runs hotter — quiet-box
-    // readings sit at 0.08–0.21 s with occasional GC-coincident spikes —
-    // so it gets its own wider threshold rather than the start band's
-    // (r16 verdict item 3: the r16 driver sweep passed the start gate at
-    // 0.241 while carrying a 0.507 stream sentinel and broad 1.2× risers
-    // concentrated in the stream rows).
-    // ... and the JOB-FLOOR axis the CPU pair is blind to (r17 verdict
-    // item 2): two consecutive rounds of many-tiny-jobs rows rode a
-    // reproducible ~1.7× scheduler-floor smear while the CPU sentinels
-    // passed (floor_start read 43–53 ms/job against the quiet-box
-    // 14–17 ms band — calibration table in BENCH_NOTES rounds 17–18).
-    // Threshold 0.035 s/job ≈ 2.2× the quiet median: above the band's
-    // own noise, far below every smeared reading observed. floor_stream
-    // stays observability-only until its quiet band has enough points
-    // (like the stream CPU sentinel, it runs after ~150 batch queries
-    // have churned the JVM and may sit structurally hotter).
-    val noisy = sentinelStart > 0.25 || sentinelStreamStart > 0.35 ||
-      floorStart > 0.035
-    val fullLine =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","noisy":$noisy,"queries":$qs,"vs_prev":$vs,"failed":$failedJson,"sentinel":$sentinelJson,"sf":"$sfDir"}"""
+    val (fullLine, summaryLine) = records(results, prevQueries(sfDir), failed,
+      Sentinels(sentinelStart, sentinelEnd, sentinelStreamStart,
+        sentinelStreamEnd, floorStart, floorStream, floorEnd), sfDir)
     println(fullLine)
-    // persist the complete line for next round's vs_prev (the driver's
-    // 2000-char stdout tail truncates it)
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(LastRunFile),
       (fullLine + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
-    // Short summary LAST: it always fits the driver's tail capture intact.
-    // "failed" rides along here too — a breakage must be visible even when
-    // the long line is truncated.
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","noisy":$noisy,"n_queries":${results.size},"failed":$failedJson,"sentinel":$sentinelJson,"sf":"$sfDir"}""")
+    catch { case NonFatal(_) => () }
+    println(summaryLine)
     spark.stop()
   }
 }

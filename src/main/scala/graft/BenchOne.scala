@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * fresh JVM/session — isolating it from whatever ran earlier in the full
   * Bench sweep (streaming rows leave memory-sink tables and state-store
   * maintenance threads behind; earlier queries leave GC debt). Use this to
-  * decide whether a BENCH_r{N} `vs_prev` outlier is a real plan regression
+  * decide whether a sweep's `vs_prev` outlier is a real plan regression
   * or bench-context contamination.
   */
 object BenchOne {

@@ -1,6 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.SparkSession
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -35,49 +40,27 @@ object Verify {
     failed.toMap
   }
 
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
-  private def jsonObj(m: Iterable[(String, String)]): String =
-    m.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [comma-separated name prefixes] — the filter
     // is a local-iteration convenience; the driver always passes two args.
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Seq[String]] =
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Bench.benchSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     val failed = run(spark, sfDir, outDir, only)
     // failed.json is ALWAYS written ({} when clean): its absence means the
     // dump itself died, never "no failures" — a vanishing query must be
     // loud (round 8-9's events breakage hid for two rounds because a
     // thrown query simply had no row anywhere).
-    Files.writeString(Paths.get(s"$outDir/failed.json"), jsonObj(failed))
+    writeJson(s"$outDir/failed.json", failed)
     if (failed.nonEmpty)
       System.err.println(
         s"[verify] ${failed.size} queries FAILED: ${failed.keys.mkString(", ")}")
-    Files.writeString(
-      Paths.get(s"$outDir/oracle_sql.json"), jsonObj(SparkEntry.oracleSql))
+    writeJson(s"$outDir/oracle_sql.json", SparkEntry.oracleSql)
     spark.stop()
   }
+
+  private def writeJson(path: String, m: Map[String, String]): Unit =
+    Files.writeString(Paths.get(path),
+      new ObjectMapper().writeValueAsString(m.asJava))
 }

@@ -294,18 +294,10 @@ object Dedup {
     // lands.
     val p = roundCheckpoint(pairs.select(col("a_id"), col("b_id")),
       0, checkpointEvery)
-    // NOT pre-partitioned on the round-join key, TWICE measured (r18
-    // verdict item 3 closed as a refusal-with-numbers): (a) r18's
-    // repartition+persist cost 2.52 → 3.11 s (columnar cache build);
-    // (b) r19's GraftSqlBridge.partitionedLocalCheckpoint — which keeps
-    // the hashpartitioning through the checkpoint WITHOUT the cache-build
-    // cost — still lost the same-box interleaved A/B at sf0.1
-    // (q_dedup_clusters 2.66/2.30 → 3.51/2.88 s over two rounds): CC
-    // converges in 2-3 rounds, so the one pre-partitioning exchange +
-    // the bigger materialization buy at most 2 skipped edge exchanges,
-    // and the matching LPA experiment ALSO regressed wall 21 → 49 s at
-    // the ×30 stress tier despite −34% shuffle bytes (see lpaRounds).
-    // The primitive stays available for O(10)-round loops.
+    // Edges stay NOT pre-partitioned on the round-join key: CC converges
+    // in 2-3 rounds, so a pre-partitioning exchange plus a bigger
+    // materialization costs more than the few edge exchanges it would
+    // save (both forms measured slower; numbers in BENCH_NOTES).
     val edges = roundCheckpoint(ccEdges(p), 0, checkpointEvery)
     Materialize.free(p)
     var labels = roundCheckpoint(
@@ -491,18 +483,11 @@ object Dedup {
     * (v, lbl). */
   private[graft] def lpaRounds(nodes: DataFrame, edges: DataFrame,
       rounds: Int): DataFrame = {
-    // NOT materialized/pre-partitioned, TWICE measured (r18 verdict
-    // item 3 closed as a refusal-with-numbers): (a) r18's repartition+
-    // persist cost 3.69 → 5.57 s at sf0.1 (columnar cache build); (b)
-    // r19's GraftSqlBridge.partitionedLocalCheckpoint — the cache-build-
-    // free form that keeps the hashpartitioning through the checkpoint —
-    // cut LPA shuffle write 1623 → 1064 MB (−34%) at the ×30 graph
-    // stress tier yet REGRESSED wall 21.0 → 49.1 s there (and lost the
-    // sf0.1 interleaved A/B 3.29/2.69 → 3.84/3.42 s): materializing the
-    // 2E+V-row adjacency costs more than 3 rounds of its exchange save,
-    // and the cached stream side forfeits AQE's local/skew readers on
-    // the round joins. The per-round rebuild is three narrow projections
-    // over the caller's checkpointed pairs.
+    // The adjacency stays a lazy rebuild (three narrow projections over
+    // the caller's checkpointed pairs), NOT materialized or
+    // pre-partitioned: materializing the 2E+V rows costs more than a few
+    // rounds of exchange save and forfeits AQE's readers on the round
+    // joins (measured slower; numbers in BENCH_NOTES).
     val adj = edges.select(col("a_id").as("v"), col("b_id").as("u"))
       .unionByName(edges.select(col("b_id").as("v"), col("a_id").as("u")))
       .unionByName(nodes.select(col("v"), col("v").as("u")))

@@ -83,12 +83,9 @@ object Graph {
     // entry would hand pass 2 pass 1's blocks (cross-run result caching).
     // Partition count is spark.sql.shuffle.partitions — the session's
     // scale knob, not a local constant.
-    // persist, NOT GraftSqlBridge.partitionedLocalCheckpoint (r19 A/B,
-    // interleaved fresh-JVM min-of-3 at sf0.1: persist 6.74/6.66 s vs
-    // checkpoint 10.70/7.36 s): over 10 rounds the columnar cache's
-    // faster reads beat the checkpoint's cheaper build — the opposite
-    // trade from the 2-3-round loops, where BOTH forms lose (Dedup.scala
-    // refusal notes).
+    // persist, not a partitioned checkpoint: over 10 rounds the columnar
+    // cache's faster reads beat a checkpoint's cheaper build (numbers in
+    // BENCH_NOTES).
     val contrib = edges.join(deg, "src")
       .repartition(Materialize.shufflePartitions(s), col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

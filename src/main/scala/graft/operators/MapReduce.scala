@@ -65,16 +65,18 @@ final case class JobSpec(
 object MapReduce {
 
   /** D1: enumerate the input directory — flat listing, sorted by name,
-    * exactly the reference's `sorted(Path(dir).glob("*"))`
-    * (manager/__main__.py:257-259). */
+    * as the reference's `sorted(Path(dir).glob("*"))`
+    * (manager/__main__.py:257-259), except that `_`- and `.`-prefixed
+    * names are skipped as well: Hadoop's input formats reject those
+    * paths even when named explicitly, and `textFile(dir)` (the native
+    * jobs) and the text-directory source skip them too, so every job
+    * reads the same file set. */
   def listInputs(spark: SparkSession, dir: String): Seq[String] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(path).filter(_.isFile)
-      // Python's glob("*") skips hidden files — without this, chaining
-      // jobs on a checksummed filesystem would pipe the previous job's
-      // .part-*.crc / ._SUCCESS.crc binary droppings through the mapper
-      .filterNot(_.getPath.getName.startsWith("."))
+      .filterNot(f => f.getPath.getName.startsWith("_") ||
+        f.getPath.getName.startsWith("."))
       .map(_.getPath.toString)
       .sortBy(_.split('/').last).toSeq
   }

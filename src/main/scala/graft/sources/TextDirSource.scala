@@ -175,21 +175,15 @@ private[sources] class TextDirScan(
       limit.map(l => s" limit=$l").getOrElse("")
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = org.apache.spark.sql.SparkSession.active
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // D1: flat listing, sorted by name; skip Hadoop markers/hidden files,
-    // then prune whole files against the pushed file-column predicates
-    fs.listStatus(p).filter(_.isFile)
-      .map(_.getPath)
-      .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-      .sortBy(_.getName)
-      .map(_.toString)
+    // D1: the MapReduce listing, then prune whole files against the
+    // pushed file-column predicates
+    graft.operators.MapReduce
+      .listInputs(org.apache.spark.sql.SparkSession.active, path)
       // keep a file only when EVERY pushed predicate is definitely true —
       // NULL/unknown (None) drops the row, per SQL WHERE semantics
       .filter(f => pushed.forall(
         TextDirSource.evalOnFile(_, f).contains(true)))
-      .map(f => TextDirInputPartition(f): InputPartition)
+      .map(f => TextDirInputPartition(f): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {

@@ -47,51 +47,4 @@ object GraftSqlBridge {
       catalyst.expressions.ScalarSubquery(
         bloomFrame.queryExecution.analyzed),
       classic.ExpressionUtils.expression(value)))
-
-  /** `df.repartition(numPartitions, keys).localCheckpoint()` that KEEPS
-    * the hash partitioning in the checkpointed plan.
-    *
-    * `Dataset.localCheckpoint` materializes the frame as a [[LogicalRDD]]
-    * whose `outputPartitioning` under AQE is `UnknownPartitioning` (the
-    * adaptive wrapper cannot state a partitioning before execution, and
-    * `fromDataset` copies that blind answer) — so an iterative loop that
-    * pre-shuffles a loop-invariant frame on its round-join key loses
-    * exactly the property it paid the shuffle for, and every round
-    * re-exchanges the frame. The r18 workaround was `repartition` +
-    * `persist` (InMemoryRelation preserves the cached plan's
-    * partitioning), but the columnar cache BUILD costs more than 2–3
-    * rounds of exchange save (the measured LPA/CC reverts). This helper
-    * is the missing primitive: checkpoint the repartitioned frame, then
-    * rebuild the LogicalRDD with the [[HashPartitioning]] the exchange
-    * provably produced.
-    *
-    * The claim is correct BY CONSTRUCTION, never asserted about an
-    * arbitrary frame: the repartition happens inside this method, the
-    * explicit partition count pins the exchange against AQE coalescing
-    * (`REPARTITION_BY_NUM`), localCheckpoint caches that exact partition
-    * layout, and the claimed partitioning references the checkpointed
-    * plan's own output attributes. A wrong claim would silently
-    * mis-join, so misuse is made unrepresentable rather than documented.
-    *
-    * Durability class is localCheckpoint's (blocks die with their
-    * executors) — callers free it via Materialize.free like any other
-    * loop-round checkpoint. */
-  def partitionedLocalCheckpoint(df: DataFrame, numPartitions: Int,
-      keys: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, "partitionedLocalCheckpoint needs key columns")
-    val ck = df.repartition(numPartitions, keys.map(df(_)): _*)
-      .localCheckpoint()
-    val lr = ck.queryExecution.logical match {
-      case l: execution.LogicalRDD => l
-      case other => throw new IllegalStateException(
-        s"localCheckpoint did not yield a LogicalRDD plan: $other")
-    }
-    val keyAttrs = keys.map(n => lr.output.find(_.name == n).getOrElse(
-      throw new IllegalStateException(
-        s"checkpointed output lost key column $n: ${lr.output}")))
-    val part = catalyst.plans.physical.HashPartitioning(keyAttrs,
-      numPartitions)
-    ofRows(ck.sparkSession, lr.copy(outputPartitioning = part)(
-      ck.sparkSession.asInstanceOf[classic.SparkSession], None, None))
-  }
 }

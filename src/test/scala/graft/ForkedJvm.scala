@@ -1,24 +1,27 @@
 package graft
 
 import java.io.File
+import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
 
 /** Shared scaffolding for tests that must fork a fresh JVM (tiny-heap
   * memory budgets, session-construction-time extensions): assembles the
   * classpath from the compiled class dirs + the Spark jars (sbt's layered
-  * classloader hides java.class.path) and applies the JDK-17 module opens
-  * Spark needs outside spark-submit.
+  * classloader hides java.class.path) and passes on the JDK-17 module
+  * opens Spark needs outside spark-submit.
   */
 object ForkedJvm {
 
-  val jdk17AddOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
+  /** The `--add-opens=…` flags this test JVM was started with. build.sbt's
+    * `javaOptions` is the one list; the child inherits it from here. */
+  lazy val addOpens: Seq[String] = {
+    val opens = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(_.startsWith("--add-opens")).toSeq
+    require(opens.nonEmpty, "ForkedJvm: this JVM was started without " +
+      "--add-opens flags, so a forked Spark JVM would fail on JDK 17; run " +
+      "it through sbt, whose build.sbt javaOptions carry them")
+    opens
+  }
 
   /** Run `mainClass` with the given heap cap and args; returns the exit
     * code. Output is inherited so failures show in the test log. */
@@ -28,7 +31,7 @@ object ForkedJvm {
       new File("/opt/spark/jars").listFiles.map(_.getAbsolutePath))
       .mkString(File.pathSeparator)
     val java = System.getProperty("java.home") + "/bin/java"
-    val cmd = Seq(java, s"-Xmx$heap", "-cp", cp) ++ jdk17AddOpens ++
+    val cmd = Seq(java, s"-Xmx$heap", "-cp", cp) ++ addOpens ++
       (mainClass +: args)
     new ProcessBuilder(cmd: _*).inheritIO().start().waitFor()
   }

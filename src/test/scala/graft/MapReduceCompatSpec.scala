@@ -268,6 +268,40 @@ class MapReduceCompatSpec extends AnyFunSuite {
     assert(headerCount(outDefault) > 3)
   }
 
+  test("piped and native jobs skip the same _- and .-prefixed inputs") {
+    // Hadoop's input formats reject `_`/`.` names even as explicit paths,
+    // and textFile(dir) skips them: listInputs must skip both, or the
+    // piped job dies on a file the native job never reads
+    val inDir = Files.createTempDirectory("graft-mr-hidden")
+    Files.writeString(inDir.resolve("a.txt"), "Alpha beta\nbeta\tgamma [x]\n\n")
+    Files.writeString(inDir.resolve("_notes.txt"), "notes\n")
+    Files.writeString(inDir.resolve(".hidden"), "hidden\n")
+    val exec = Files.createTempDirectory("graft-mr-hidden-exec")
+    def script(name: String, body: String): String = {
+      val f = exec.resolve(name)
+      Files.writeString(f, "#!/bin/sh\n" + body + "\n")
+      f.toFile.setExecutable(true)
+      f.toString
+    }
+    val wcMap = script("wc_map.sh",
+      """tr '[ \t]' '\n' | tr '[:upper:]' '[:lower:]' | awk '{print $1"\t1"}'""")
+    val wcReduce = script("wc_reduce.sh",
+      """cut -f1 | uniq -c | awk '{print $2"\t"$1}'""")
+    val outX = tmpOut()
+    val outN = tmpOut()
+    MapReduce.run(spark, JobSpec(inDir.toString, outX, wcMap, wcReduce,
+      numMappers = 2, numReducers = 2))
+    Engine.wordCount(spark, inDir.toString, outN, numReducers = 2)
+    val (px, pn) = (partFiles(outX), partFiles(outN))
+    assert(px.map(_.getFileName) == pn.map(_.getFileName))
+    px.zip(pn).foreach { case (x, n) =>
+      assert(Files.readAllBytes(x).sameElements(Files.readAllBytes(n)),
+        s"${x.getFileName} differs")
+    }
+    assert(px.flatMap(readLines).sorted == Seq("\t3", "alpha\t1", "beta\t2",
+      "gamma\t1", "x\t1").sorted)
+  }
+
   test("native and executable word count agree per part file at r=3") {
     val outN = tmpOut()
     val outX = tmpOut()
