@@ -1,8 +1,13 @@
 package graft
 
+import scala.collection.AbstractIterator
+
+import org.apache.spark.Aggregator
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
 
 import graft.operators.{JobSpec, MapReduce}
+import graft.plans.{Md5LinePartitioner, Utf8TabKeyOrdering}
 
 /** User-facing job surface, mirroring the reference's submit CLI
   * (reference mapreduce/submit.py:59-98): a [[JobSpec]] in, part files out.
@@ -17,54 +22,66 @@ object Engine {
     MapReduce.run(spark, job)
 
   /** Native word count — the reference's flagship job
-    * (tests/testdata/exec/wc_map.sh + wc_reduce.sh) with Scala stages on
-    * the same dataflow. Faithful to the executables' edge cases: every
-    * separator emits a token, so consecutive separators and blank lines
-    * produce EMPTY tokens, which are real keys (`awk '{print $1"\t1"}'` on
-    * an empty line prints `\t1`) — and `tr '[ \t]' '\n'` treats the
-    * brackets as LITERAL characters, so `[` and `]` are separators too.
+    * (tests/testdata/exec/wc_map.sh + wc_reduce.sh) as tokenize +
+    * group-by-count, with part files byte-identical to the executables'.
+    * Faithful to their edge cases: every separator emits a token, so
+    * consecutive separators and blank lines produce EMPTY tokens, which are
+    * real keys (`awk '{print $1"\t1"}'` on an empty line prints `\t1`) —
+    * and `tr '[ \t]' '\n'` treats the brackets as LITERAL characters, so
+    * `[` and `]` are separators too.
     */
   def wordCount(spark: SparkSession, in: String, out: String,
-      numMappers: Int = 2, numReducers: Int = 2): String =
-    MapReduce.runNative(
-      spark,
-      JobSpec(in, out, "<native-wc-map>", "<native-wc-reduce>",
-        numMappers, numReducers),
-      mapper = wcMapLine,
-      reducer = wcReduce)
+      numMappers: Int = 2, numReducers: Int = 2): String = {
+    countWords(spark.sparkContext.textFile(in, math.max(numMappers, 1)),
+      numReducers).saveAsTextFile(out)
+    out
+  }
 
-  /** The wordcount map stage alone — package-visible so fault-injection
-    * tests can wrap it (RetryMain) without duplicating its edge cases. */
-  private[graft] def wcMapLine(line: String): Seq[String] =
-    asciiLower(line).split("[\\[ \t\\]]", -1).toSeq.map(_ + "\t1")
+  /** Word count from input lines to `word\tcount` output lines, without
+    * the sink — package-visible so fault-injection tests (RetryMain) can
+    * fail its map and reduce stages. Counts combine map-side, so the
+    * shuffle carries one record per distinct word per map task. The
+    * partitioner hashes the word as the executable job's does its
+    * `word\t1` line (a word holds no tab), and the ordering sorts words as
+    * that job sorts the lines, so part files and their line order match.
+    */
+  private[graft] def countWords(lines: RDD[String],
+      numReducers: Int): RDD[String] = {
+    val pairs = lines.flatMap(tokens)
+    new ShuffledRDD[String, Long, Long](pairs, new Md5LinePartitioner(numReducers))
+      .setAggregator(new Aggregator[String, Long, Long](n => n, _ + _, _ + _))
+      .setMapSideCombine(true)
+      .setKeyOrdering(Utf8TabKeyOrdering)
+      .map { case (w, n) => s"$w\t$n" }
+  }
 
-  /** The wordcount reduce stage alone (see [[wcMapLine]]). */
-  private[graft] def wcReduce: Iterator[String] => Iterator[String] =
-    countingReducer
-
-  /** `tr '[:upper:]' '[:lower:]'` in the C locale maps ONLY A-Z; JVM
+  /** `tr '[ \t]' '\n' | tr '[:upper:]' '[:lower:]'`, one `(word, 1)` per
+    * piece between separators. The C locale lower-cases ONLY A-Z; JVM
     * toLowerCase is locale- and Unicode-sensitive (Turkish dotless-i,
     * É→é) and would diverge from the executable on such input. */
-  private def asciiLower(s: String): String =
-    s.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
-
-  /** `cut -f1 | uniq -c`-style sorted-stream reducer: counts runs of equal
-    * keys in the (already whole-line-sorted) partition stream. */
-  private def countingReducer(lines: Iterator[String]): Iterator[String] =
-    new Iterator[String] {
-      private val it = lines.buffered
-      def hasNext: Boolean = it.hasNext
-      def next(): String = {
-        val key = keyOf(it.head)
-        var n = 0L
-        while (it.hasNext && keyOf(it.head) == key) { it.next(); n += 1 }
-        s"$key\t$n"
-      }
-      private def keyOf(l: String): String = {
-        val i = l.indexOf('\t')
-        if (i >= 0) l.substring(0, i) else l
+  private def tokens(line: String): Iterator[(String, Long)] = {
+    val cs = line.toCharArray
+    var i = 0
+    while (i < cs.length) {
+      val c = cs(i)
+      if (c >= 'A' && c <= 'Z') cs(i) = (c + 32).toChar
+      i += 1
+    }
+    new AbstractIterator[(String, Long)] {
+      private var start = 0
+      def hasNext: Boolean = start <= cs.length
+      def next(): (String, Long) = {
+        var end = start
+        while (end < cs.length && !isSeparator(cs(end))) end += 1
+        val w = new String(cs, start, end - start)
+        start = end + 1
+        (w, 1L)
       }
     }
+  }
+
+  private def isSeparator(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '[' || c == ']'
 
   /** Native grep — the reference's second shipped job
     * (tests/testdata/exec/grep_map.py:13-28 + grep_reduce.py:14-27):

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.SparkSession
 
 import graft.plans.{Md5BytesPartitioner, UnsignedBytesOrdering}
@@ -44,8 +46,8 @@ final case class JobSpec(
   *    one process per partition by default, or exactly one per input file
   *    with `JobSpec.pipePerFile` (reference parity for per-invocation-
   *    stateful mappers, worker/__main__.py:94-101);
-  *  - D4-D6 shuffle: `repartitionAndSortWithinPartitions` with
-  *    [[Md5LinePartitioner]] — Spark's sort-based shuffle IS the
+  *  - D4-D6 shuffle: a key-ordered `ShuffledRDD` with
+  *    [[Md5BytesPartitioner]] — Spark's sort-based shuffle IS the
   *    reference's per-file sort + heapq.merge, with spilling the reference
   *    lacks (it reads whole files into memory, worker/__main__.py:131);
   *  - D8 sink: `saveAsTextFile` — one `part-NNNNN` per reduce partition,
@@ -58,9 +60,10 @@ final case class JobSpec(
   * what Python saw.
   *
   * At 100 TB: every stage is distributed; nothing materializes on the
-  * driver; shuffle volume = mapper output (the reference has no combiner
-  * either — parity preserved; use the native query surface when partial
-  * aggregation is wanted).
+  * driver. Piped jobs run arbitrary executables, so they shuffle every
+  * mapper line, as the reference (which has no combiner) does; native word
+  * count ([[graft.Engine.wordCount]]) combines map-side and shuffles one
+  * record per distinct word per map task.
   */
 object MapReduce {
 
@@ -120,28 +123,35 @@ object MapReduce {
           spark.sparkContext.union(
             groups.map(g => spark.sparkContext.union(
               g.map(f => spark.sparkContext.textFile(f)))))
-      input.pipe(Seq(job.mapperExecutable))
+      pipe(input, job.mapperExecutable)
     }
   }
 
+  /** D3/D7: lines to and from an executable as UTF-8, as the reference's
+    * byte-level pipes carry them — `RDD.pipe`'s default, the JVM's
+    * default charset, is ASCII under a POSIX locale and would turn every
+    * non-ASCII character into `?`. */
+  private def pipe(lines: RDD[String], executable: String): RDD[String] =
+    lines.pipe(Seq(executable), encoding = UTF_8.name)
+
   /** D4-D6: MD5 hash partition + whole-line sort within each partition.
-    * The shuffle key is the line's UTF-8 BYTES with a trailing `\n`: the
-    * newline reproduces Python's `readlines()` comparison at line-prefix
-    * boundaries, and unsigned byte order equals code-point order — Java
-    * String ordering (UTF-16 units) would rank supplementary-plane
-    * characters differently than the reference's sort. */
+    * The shuffle record is the line's UTF-8 BYTES with a trailing `\n` and
+    * no value; the reduce side decodes it back, so each line crosses the
+    * shuffle once. The newline reproduces Python's `readlines()`
+    * comparison at line-prefix boundaries, and unsigned byte order equals
+    * code-point order — Java String ordering (UTF-16 units) would rank
+    * supplementary-plane characters differently than the reference's sort. */
   def shuffle(lines: RDD[String], numReducers: Int): RDD[String] = {
-    implicit val ord: Ordering[Array[Byte]] = UnsignedBytesOrdering
-    lines
-      .map(l => ((l + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8), l))
-      .repartitionAndSortWithinPartitions(new Md5BytesPartitioner(numReducers))
-      .values
+    val records = lines.map(l => ((l + "\n").getBytes(UTF_8), null))
+    new ShuffledRDD[Array[Byte], Null, Null](records,
+      new Md5BytesPartitioner(numReducers))
+      .setKeyOrdering(UnsignedBytesOrdering)
+      .map { case (b, _) => new String(b, 0, b.length - 1, UTF_8) }
   }
 
   /** Run a streaming-executable job; returns the sink directory. */
   def run(spark: SparkSession, job: JobSpec): String = {
-    shuffle(mapStage(spark, job), job.numReducers)
-      .pipe(Seq(job.reducerExecutable))
+    pipe(shuffle(mapStage(spark, job), job.numReducers), job.reducerExecutable)
       .saveAsTextFile(job.outputDirectory)
     job.outputDirectory
   }

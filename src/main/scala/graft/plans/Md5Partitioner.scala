@@ -38,10 +38,13 @@ object Md5 {
   def mod(key: String, n: Int): Int =
     mod(key.getBytes(StandardCharsets.UTF_8), n)
 
-  def mod(key: Array[Byte], n: Int): Int = {
-    val md = digests.get()
-    md.reset()
-    val digest = md.digest(key)
+  def mod(key: Array[Byte], n: Int): Int = mod(key, key.length, n)
+
+  /** MD5 of `key(0 until len)` mod n, hashed in place. */
+  def mod(key: Array[Byte], len: Int, n: Int): Int = {
+    val md = threadDigest()
+    md.update(key, 0, len)
+    val digest = md.digest()
     var r = 0L
     var i = 0
     while (i < digest.length) {
@@ -49,14 +52,6 @@ object Md5 {
       i += 1
     }
     r.toInt
-  }
-
-  /** Key bytes of a raw `key\tvalue` line: everything before the first tab
-    * (0x09), or the whole line when absent. */
-  def lineKeyBytes(line: Array[Byte]): Array[Byte] = {
-    var i = 0
-    while (i < line.length && line(i) != '\t') i += 1
-    if (i == line.length) line else java.util.Arrays.copyOfRange(line, 0, i)
   }
 
   /** The record key of a raw `key\tvalue` line: everything before the first
@@ -88,12 +83,18 @@ final class Md5LinePartitioner(n: Int) extends Partitioner {
 }
 
 /** Same assignment over UTF-8 line BYTES (the shuffle key used by
-  * [[graft.operators.MapReduce.shuffle]] for Python sort-order parity). */
+  * [[graft.operators.MapReduce.shuffle]] for Python sort-order parity):
+  * hashes the key, the bytes before the first tab (0x09) or the whole
+  * line when absent, in place. */
 final class Md5BytesPartitioner(n: Int) extends Partitioner {
   require(n > 0, s"numPartitions must be positive: $n")
   override def numPartitions: Int = n
-  override def getPartition(key: Any): Int =
-    Md5.mod(Md5.lineKeyBytes(key.asInstanceOf[Array[Byte]]), n)
+  override def getPartition(key: Any): Int = {
+    val line = key.asInstanceOf[Array[Byte]]
+    var i = 0
+    while (i < line.length && line(i) != '\t') i += 1
+    Md5.mod(line, i, n)
+  }
   override def equals(other: Any): Boolean = other match {
     case o: Md5BytesPartitioner => o.numPartitions == n
     case _                      => false
@@ -112,6 +113,32 @@ object UnsignedBytesOrdering extends Ordering[Array[Byte]] {
     while (i < n) {
       val c = (a(i) & 0xff) - (b(i) & 0xff)
       if (c != 0) return c
+      i += 1
+    }
+    a.length - b.length
+  }
+}
+
+/** Order of keys `k` as [[UnsignedBytesOrdering]] orders the UTF-8 bytes of
+  * `k + "\t"` — the order the shuffle sorts `k\tvalue\n` lines in — with no
+  * encoding or allocation. UTF-8 byte order is code-point order, so chars
+  * compare as UTF-16 units with the surrogate fix-up (surrogates rank above
+  * U+E000..U+FFFF); the `\t` is a virtual char past each key's end, which
+  * ranks `a\u0001` (0x01 < 0x09) below `a`. */
+object Utf8TabKeyOrdering extends Ordering[String] {
+  override def compare(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length) + 1
+    var i = 0
+    while (i < n) {
+      var x: Int = if (i < a.length) a.charAt(i) else '\t'
+      var y: Int = if (i < b.length) b.charAt(i) else '\t'
+      if (x != y) {
+        if (x >= 0xd800 && y >= 0xd800) {
+          x = if (x >= 0xe000) x - 0x800 else x + 0x2000
+          y = if (y >= 0xe000) y - 0x800 else y + 0x2000
+        }
+        return x - y
+      }
       i += 1
     }
     a.length - b.length

@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
@@ -33,6 +34,62 @@ class MapReduceCompatSpec extends AnyFunSuite {
     Files.list(Paths.get(dir)).iterator.asScala
       .filter(_.getFileName.toString.startsWith("part-"))
       .toSeq.sortBy(_.getFileName.toString)
+
+  /** The reference's wc_map.sh / wc_reduce.sh, written to a temp dir. */
+  private lazy val (wcMap, wcReduce) = {
+    val exec = Files.createTempDirectory("graft-mr-exec")
+    def script(name: String, body: String): String = {
+      val f = exec.resolve(name)
+      Files.writeString(f, "#!/bin/sh\n" + body + "\n")
+      f.toFile.setExecutable(true)
+      f.toString
+    }
+    (script("wc_map.sh",
+      """tr '[ \t]' '\n' | tr '[:upper:]' '[:lower:]' | awk '{print $1"\t1"}'"""),
+      script("wc_reduce.sh",
+        """cut -f1 | uniq -c | awk '{print $2"\t"$1}'"""))
+  }
+
+  /** Word count as a line-at-a-time native job, the oracle for
+    * [[Engine.wordCount]]'s combined path: one `word\t1` line per token
+    * through the whole-line shuffle, then a counting pass over each sorted
+    * partition — the executables' dataflow with Scala stages. */
+  private def lineAtATimeWordCount(in: String, out: String, r: Int): Unit =
+    MapReduce.runNative(spark,
+      JobSpec(in, out, "<wc-map>", "<wc-reduce>", numMappers = 2, numReducers = r),
+      mapper = line => line.map(c => if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)
+        .split("[\\[ \t\\]]", -1).toSeq.map(_ + "\t1"),
+      reducer = lines => new Iterator[String] {
+        private val it = lines.buffered
+        private def keyOf(l: String) = l.substring(0, l.indexOf('\t'))
+        def hasNext: Boolean = it.hasNext
+        def next(): String = {
+          val key = keyOf(it.head)
+          var n = 0L
+          while (it.hasNext && keyOf(it.head) == key) { it.next(); n += 1 }
+          s"$key\t$n"
+        }
+      })
+
+  /** Asserts two job outputs hold the same part files, byte for byte. */
+  private def assertSameParts(got: String, want: String, clue: String): Unit = {
+    val (pg, pw) = (partFiles(got), partFiles(want))
+    assert(pg.map(_.getFileName) == pw.map(_.getFileName), clue)
+    pg.zip(pw).foreach { case (g, w) =>
+      assert(Files.readAllBytes(g).sameElements(Files.readAllBytes(w)),
+        s"$clue: ${g.getFileName} differs")
+    }
+  }
+
+  /** `word\tcount` lines of a job output as a map; a word twice fails. */
+  private def countsOf(out: String): Map[String, Long] = {
+    val lines = partFiles(out).flatMap(readLines)
+    val counts = lines.map { l =>
+      val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1).toLong)
+    }.toMap
+    assert(counts.size == lines.size, "a word appears on two lines")
+    counts
+  }
 
   test("grep job via external executables is byte-identical to the golden") {
     val out = tmpOut()
@@ -105,11 +162,7 @@ class MapReduceCompatSpec extends AnyFunSuite {
     Files.writeString(inDir.resolve("f1"), "a b\n\na\n\n\nb\n")
     val out = tmpOut()
     Engine.wordCount(spark, inDir.toString, out, numReducers = 2)
-    val lines = partFiles(out).flatMap(readLines)
-    val counts = lines.map { l =>
-      val i = l.indexOf('\t'); (l.substring(0, i), l.substring(i + 1).toLong)
-    }.toMap
-    assert(counts == Map("a" -> 2L, "b" -> 2L, "" -> 3L))
+    assert(countsOf(out) == Map("a" -> 2L, "b" -> 2L, "" -> 3L))
     // the empty key lands on the partition md5("") % 2 selects — all of
     // its records together (grouping totality)
     val emptyKeyPart = graft.plans.Md5.mod("", 2)
@@ -276,28 +329,13 @@ class MapReduceCompatSpec extends AnyFunSuite {
     Files.writeString(inDir.resolve("a.txt"), "Alpha beta\nbeta\tgamma [x]\n\n")
     Files.writeString(inDir.resolve("_notes.txt"), "notes\n")
     Files.writeString(inDir.resolve(".hidden"), "hidden\n")
-    val exec = Files.createTempDirectory("graft-mr-hidden-exec")
-    def script(name: String, body: String): String = {
-      val f = exec.resolve(name)
-      Files.writeString(f, "#!/bin/sh\n" + body + "\n")
-      f.toFile.setExecutable(true)
-      f.toString
-    }
-    val wcMap = script("wc_map.sh",
-      """tr '[ \t]' '\n' | tr '[:upper:]' '[:lower:]' | awk '{print $1"\t1"}'""")
-    val wcReduce = script("wc_reduce.sh",
-      """cut -f1 | uniq -c | awk '{print $2"\t"$1}'""")
     val outX = tmpOut()
     val outN = tmpOut()
     MapReduce.run(spark, JobSpec(inDir.toString, outX, wcMap, wcReduce,
       numMappers = 2, numReducers = 2))
     Engine.wordCount(spark, inDir.toString, outN, numReducers = 2)
-    val (px, pn) = (partFiles(outX), partFiles(outN))
-    assert(px.map(_.getFileName) == pn.map(_.getFileName))
-    px.zip(pn).foreach { case (x, n) =>
-      assert(Files.readAllBytes(x).sameElements(Files.readAllBytes(n)),
-        s"${x.getFileName} differs")
-    }
+    assertSameParts(outN, outX, "native vs piped")
+    val px = partFiles(outX)
     assert(px.flatMap(readLines).sorted == Seq("\t3", "alpha\t1", "beta\t2",
       "gamma\t1", "x\t1").sorted)
   }
@@ -316,4 +354,56 @@ class MapReduceCompatSpec extends AnyFunSuite {
         s"partition $p differs")
     }
   }
+
+  test("native word count is byte-identical to the line-at-a-time and piped jobs on hostile input") {
+    // separator runs, brackets and tabs; blank lines; A-Z beside É/İ,
+    // which only A-Z lower-cases; \u0001 and \b, which sort below \t;
+    // U+E000 and U+FFFD, which UTF-16 order ranks above the
+    // supplementary plane and UTF-8 below it; CRLF and a missing final
+    // newline
+    val inDir = Files.createTempDirectory("graft-mr-hostile")
+    def write(name: String, text: String): Unit =
+      Files.write(inDir.resolve(name), text.getBytes(UTF_8))
+    write("a.txt", "Hello  World\n\n\n  lead\t\ttabs\t[x]]y[[z\n" +
+      "ABCXYZ abcxyz Éclair éclair İstanbul istanbul IŞIK\n[]\n\t\n")
+    write("b.txt", "Crlf line\r\nCRLF\r\n\r\nend [ ] \r\nno final newline")
+    write("c.txt", "a\u0001 a a\u0001b \u0001 \b x\u0002 x\ta\u0001\n" +
+      "\uD83D\uDE00 smile\uD83D\uDE00 \uE000 \uFFFD \uD835\uDD18x " +
+      "\uD835\uDD18 日本語 日本 \uE000a \uD83D\uDE00\n" +
+      "mixed\u0001Case MIXED\u0001case\n")
+    for (r <- Seq(1, 2, 3, 5)) {
+      val (outN, outO, outX) = (tmpOut(), tmpOut(), tmpOut())
+      Engine.wordCount(spark, inDir.toString, outN, numReducers = r)
+      lineAtATimeWordCount(inDir.toString, outO, r)
+      MapReduce.run(spark, JobSpec(inDir.toString, outX, wcMap, wcReduce,
+        numMappers = 2, numReducers = r))
+      assert(partFiles(outN).size == r)
+      assertSameParts(outN, outO, s"native vs line-at-a-time at r=$r")
+      assertSameParts(outN, outX, s"native vs piped at r=$r")
+    }
+  }
+
+  /** Input for the retry tests: enough distinct words that every map and
+    * reduce task has records, and the counts they must add up to. */
+  private def retryInput(): (String, Map[String, Long]) = {
+    val inDir = Files.createTempDirectory("graft-mr-retry")
+    val rnd = new scala.util.Random(5)
+    val lines = Seq.fill(2000)(Seq.fill(rnd.nextInt(6))(
+      "W" + rnd.nextInt(300)).mkString(" "))
+    Files.writeString(inDir.resolve("part-a"), lines.take(900).mkString("\n") + "\n")
+    Files.writeString(inDir.resolve("part-b"), lines.drop(900).mkString("\n") + "\n")
+    val want = lines.flatMap(_.toLowerCase.split(" ", -1))
+      .groupBy(identity).map { case (w, ws) => (w, ws.size.toLong) }
+    (inDir.toString, want)
+  }
+
+  for (stage <- Seq("map", "reduce"))
+    test(s"task retry: first-attempt $stage failures still yield the exact counts") {
+      val (in, want) = retryInput()
+      val out = tmpOut()
+      assert(ForkedJvm.run("graft.RetryMain", "1g", Seq(in, out, stage)) == 0)
+      assert(partFiles(out).map(_.getFileName.toString) ==
+        Seq("part-00000", "part-00001"))
+      assert(countsOf(out) == want)
+    }
 }

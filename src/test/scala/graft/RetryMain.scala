@@ -1,15 +1,18 @@
 package graft
 
-import org.apache.spark.TaskContext
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.{ExceptionFailure, TaskContext}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-import graft.operators.{JobSpec, MapReduce}
-
 /** Forked-JVM entry for the task-retry exactly-once test: runs the native
-  * wordcount with an injected FIRST-ATTEMPT failure in the chosen stage and
-  * exits 0 only if the job completes. The spec then byte-compares the output
-  * to the reference golden — proving Spark's task retry (the analog of the
-  * reference manager reassigning a dead worker's task, reference
+  * word count ([[Engine.countWords]]) with an injected FIRST-ATTEMPT failure
+  * in the chosen stage and exits 0 only if the job completes and the
+  * injected failure fired at least once. The spec then
+  * compares the output to the reference golden or to computed counts —
+  * proving Spark's task retry (the analog of the reference manager
+  * reassigning a dead worker's task, reference
   * mapreduce/manager/__main__.py:304-333, asserted by
   * tests/test_manager_05.py:168-235) re-executes failed tasks without
   * duplicating or losing records (SURVEY.md invariant §2.5-5).
@@ -22,6 +25,7 @@ import graft.operators.{JobSpec, MapReduce}
 object RetryMain {
   def main(args: Array[String]): Unit = {
     val Array(in, out, failStage) = args
+    val Injected = "injected first-attempt failure"
     val spark = SparkSession.builder()
       .master("local[2, 2]") // 2 threads, 2 task attempts
       .config("spark.ui.enabled", "false")
@@ -32,24 +36,36 @@ object RetryMain {
       val tc = TaskContext.get()
       if (tc != null && tc.attemptNumber() == 0)
         throw new RuntimeException(
-          s"injected first-attempt failure (partition ${tc.partitionId()})")
+          s"$Injected (partition ${tc.partitionId()})")
     }
 
-    MapReduce.runNative(
-      spark,
-      JobSpec(in, out, "<retry-wc-map>", "<retry-wc-reduce>",
-        numMappers = 2, numReducers = 2),
-      mapper = { line =>
-        if (failStage == "map") failFirstAttempt()
-        Engine.wcMapLine(line)
-      },
-      reducer = { lines =>
-        // throws BEFORE any output line is produced on attempt 0; the
-        // retried attempt must still see the complete sorted partition and
-        // the sink must contain no partial attempt-0 file
-        if (failStage == "reduce") failFirstAttempt()
-        Engine.wcReduce(lines)
-      })
-    spark.stop()
+    // count the injected failures: a retry test that never hit its
+    // injection point would pass without exercising any retry
+    val injected = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onTaskEnd(end: SparkListenerTaskEnd): Unit = end.reason match {
+        case f: ExceptionFailure if f.description.startsWith(Injected) =>
+          injected.incrementAndGet()
+        case _ =>
+      }
+    })
+
+    // each fires as its task starts, on every partition, empty or not: the
+    // map-stage one before word count reads a line; the reduce-stage one
+    // after the shuffle read, before any output line — the retried attempt
+    // must still see the complete partition and the sink must keep no
+    // partial attempt-0 file
+    def failIn(stage: String)(lines: Iterator[String]): Iterator[String] = {
+      if (failStage == stage) failFirstAttempt()
+      lines
+    }
+    val lines = spark.sparkContext.textFile(in, 2).mapPartitions(failIn("map"))
+    Engine.countWords(lines, numReducers = 2).mapPartitions(failIn("reduce"))
+      .saveAsTextFile(out)
+    spark.stop() // drains the listener bus
+    if (injected.get == 0) {
+      System.err.println(s"RetryMain: no injected $failStage failure fired")
+      sys.exit(3)
+    }
   }
 }
