@@ -154,15 +154,6 @@ object Cli {
     }
   }
 
-  /** Cross-process arm of [[status]]: scan the default Spark UI port
-    * range (SparkUI binds 4040 and walks upward on conflict, 5 retries
-    * by default) for a live app via the standard monitoring REST API,
-    * returning its id and total active cores. A fresh `spark-submit`
-    * JVM has an empty session registry, so without this arm `status`
-    * could never see a job running in another process — the exact check
-    * the reference's pgrep performs. Sub-second timeouts keep the
-    * nothing-running path fast; any I/O failure on a port just means
-    * "no app there". */
   /** SparkUI binds 4040 and walks upward on conflict (5 retries by
     * default) — the range a portless `status` scans. */
   private[graft] val defaultUiPorts: Range = 4040 to 4044
@@ -183,6 +174,15 @@ object Cli {
       case other => sys.error(s"unknown argument: ${other.mkString(" ")}")
     }
 
+  /** Cross-process arm of [[status]]: scan the default Spark UI port
+    * range (SparkUI binds 4040 and walks upward on conflict, 5 retries
+    * by default) for a live app via the standard monitoring REST API,
+    * returning its id and total active cores. A fresh `spark-submit`
+    * JVM has an empty session registry, so without this arm `status`
+    * could never see a job running in another process — the exact check
+    * the reference's pgrep performs. Sub-second timeouts keep the
+    * nothing-running path fast; any I/O failure on a port just means
+    * "no app there". */
   private[graft] def probeUi(
       ports: Range = defaultUiPorts): Option[(String, Int)] =
     ports.iterator.flatMap { p =>

@@ -11,43 +11,13 @@ import java.nio.file.{Files, Paths}
   * the `_after` files and from a worktree of the pre-round commit for
   * `_before`. Session recipe matches Bench so the plans are the ones the
   * sweep actually executes (same shuffle partitions / AQE defaults).
+  *
+  * Only registered queries are dumped. The iterative loops checkpoint
+  * every round, so their round joins are pinned in PlanSpec, which plans
+  * the round bodies directly. A query that fails to plan does not stop
+  * the dump; the run then exits 1 and names every failed query.
   */
 object PlanDump {
-  /** Per-round frames of the iterative loops (pagerank / CC min-label /
-    * CC star / LPA): their registered queries localCheckpoint every
-    * round, so the final `.explain` shows only a Scan ExistingRDD above
-    * the last checkpoint and the per-round JOIN STRATEGY — the thing the
-    * r18 shuffle-hash work changed — would be invisible to a plan audit.
-    * These pseudo-queries build round 1 with the loops' own checkpointed
-    * inputs via the factored round-body functions the loops execute. */
-  private val roundFrames
-      : Map[String, (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame] = Map(
-    "pagerank_round" -> (operators.Graph.prRoundPlanFrame _),
-    "cc_round" -> (operators.Dedup.ccRoundPlanFrame _),
-    "cc_star_round" -> (operators.Dedup.starRoundPlanFrame _),
-    "lpa_round" -> (operators.Dedup.lpaRoundPlanFrame _),
-    "cc_edges" -> (operators.Dedup.ccEdgesPlanFrame _),
-    "neardup_pairs" -> (operators.Dedup.nearDupPairsPlanFrame _),
-    "kmeans_round" -> (operators.Similarity.kmeansRoundPlanFrame _),
-    "pq_train_round" -> (operators.Similarity.pqTrainRoundPlanFrame _),
-    "pca_power_round" -> (operators.Similarity.pcaPowerRoundPlanFrame _),
-    // q_dedup_span_cut with the dup-side bloom gate FORCED (threshold 0):
-    // the plan a corpus whose dup vocabulary outgrows the broadcast
-    // threshold runs — the committed evidence that the runtime filter
-    // fires above the gate (the registered row at test SF broadcasts).
-    // The gate is evaluated eagerly inside the query builder, so the
-    // conf can be restored before the frame is explained.
-    "span_cut_bloom" -> ((s: org.apache.spark.sql.SparkSession, d: String) => {
-      s.conf.set("spark.graft.spancut.bloomCorpusBytes", "0")
-      s.conf.set("spark.graft.spancut.bloomRows", "0")
-      try SparkEntry.queries("q_dedup_span_cut")(s, d)
-      finally {
-        s.conf.unset("spark.graft.spancut.bloomCorpusBytes")
-        s.conf.unset("spark.graft.spancut.bloomRows")
-      }
-    }))
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: PlanDump <outDir> [name1,name2,...]")
     val outDir = args(0)
@@ -57,22 +27,29 @@ object PlanDump {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Bench.benchSession(cpus)
     Files.createDirectories(Paths.get(outDir))
-    val qs = (SparkEntry.queries ++ roundFrames).toSeq.sortBy(_._1)
+    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     only.foreach { want =>
       val missing = want -- qs.map(_._1).toSet
       require(missing.isEmpty, s"unknown queries: ${missing.mkString(", ")}")
     }
-    qs.foreach { case (name, fn) =>
+    val failed = qs.flatMap { case (name, fn) =>
       try {
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/$name.txt"), plan)
         println(s"[plandump] wrote $outDir/$name.txt")
+        None
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(
+        s"[plandump] ${failed.size} failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

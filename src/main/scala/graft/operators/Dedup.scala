@@ -241,7 +241,8 @@ object Dedup {
     * so a lost block recomputes from the last durable round instead of
     * failing; lineage depth is bounded by n. At 100 TB set
     * `spark.graft.cc.checkpointDir` to shared storage (HDFS/S3); the
-    * tmp-dir default only survives single-machine executor churn.
+    * tmp-dir default only survives single-machine executor churn, and
+    * is deleted at JVM exit ([[Scratch]]) — a configured dir is not.
     */
   private def roundCheckpoint(df: DataFrame, round: Int,
       checkpointEvery: Option[Int]): DataFrame =
@@ -252,12 +253,26 @@ object Dedup {
         if (sc.getCheckpointDir.isEmpty)
           sc.setCheckpointDir(df.sparkSession.conf
             .getOption("spark.graft.cc.checkpointDir")
-            .getOrElse(java.nio.file.Files
-              .createTempDirectory("graft-cc-ckpt").toString))
+            .getOrElse {
+              val tmp = java.nio.file.Files
+                .createTempDirectory("graft-cc-ckpt").toString
+              Scratch.register(tmp)
+              tmp
+            })
         if (round % n == 0) df.checkpoint()
         else df.persist()
       case None => df.localCheckpoint()
     }
+
+  /** Symmetrized edge list of a pair frame — the pre-checkpoint frame
+    * [[connectedComponents]] materializes as its round-0 edge table. The
+    * union reads `pairs` twice, so the loop hands it a MATERIALIZED pair
+    * frame; over a lazy one each branch would re-evaluate the pair
+    * subtree above its topmost reused exchange. PlanSpec pins that the
+    * subtree is evaluated once. */
+  private[graft] def ccEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
 
   /** Connected components by iterative min-label propagation: each node
     * adopts the smallest id reachable over the near-dup edges; O(diameter)
@@ -269,29 +284,17 @@ object Dedup {
     * @param checkpointEvery  durability of the per-round materialization —
     *                         see [[roundCheckpoint]]
     */
-  /** Symmetrized edge list of a pair frame — the pre-checkpoint frame
-    * [[connectedComponents]] materializes as its round-0 edge table,
-    * factored so PlanDump's `cc_edges` pseudo-query commits the exact
-    * shape (plans/r19: the union's two branches over an UNmaterialized
-    * pair frame each re-evaluated the LSH verify joins above the topmost
-    * reused exchange). */
-  private[graft] def ccEdges(pairs: DataFrame): DataFrame =
-    pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-
   def connectedComponents(pairs: DataFrame,
       checkpointEvery: Option[Int] = None): DataFrame = {
     // undirected edge list, both directions; materialized once so each
     // round re-reads a tiny table instead of replaying the whole LSH
     // pipeline
-    // r19 (VERDICT r18 item 1): materialize the PAIR list before
-    // symmetrizing — the union's two branches each re-evaluated the LSH
-    // front's verify joins + exact-Jaccard filter above its topmost
-    // exchange (ReusedExchange shares only the shuffle files, not the
-    // post-shuffle operators; plans/r19/cc_edges_before.txt shows the
-    // full pipeline TWICE). One extra tiny (a_id, b_id) materialization
-    // buys the whole front running once; freed as soon as the edge table
-    // lands.
+    // materialize the PAIR list before symmetrizing — the union's two
+    // branches would each re-evaluate the LSH front's verify joins +
+    // exact-Jaccard filter above its topmost exchange (ReusedExchange
+    // shares only the shuffle files, not the post-shuffle operators). One
+    // extra tiny (a_id, b_id) materialization buys the whole front
+    // running once; freed as soon as the edge table lands.
     val p = roundCheckpoint(pairs.select(col("a_id"), col("b_id")),
       0, checkpointEvery)
     // Edges stay NOT pre-partitioned on the round-join key: CC converges
@@ -335,11 +338,10 @@ object Dedup {
     labels
   }
 
-  /** One min-label-propagation round's pre-checkpoint frame — the loop
-    * body of [[connectedComponents]], factored so the committed plans/r18
-    * evidence (PlanDump `cc_round`) explains the exact per-round join the
-    * loop executes (round inputs are checkpointed, so the registered
-    * queries' final plans can't show it).
+  /** One min-label-propagation round — the loop body of
+    * [[connectedComponents]]. Round inputs are checkpointed, so the
+    * registered queries' final plans can't show the round join; PlanSpec
+    * pins it by planning this body directly.
     *
     * SHUFFLE_HASH on the O(V) labels side (the mode=graph lesson,
     * measured in the pagerank loop at ×100: sort-merge re-sorts the
@@ -355,25 +357,6 @@ object Dedup {
     .join(labels, "id")
     .withColumn("new_label", least(col("label"), col("nbr_min")))
 
-  /** Connected components by alternating large-star/small-star rounds —
-    * O(log n) rounds regardless of component DIAMETER (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14), where
-    * [[connectedComponents]]' min-label propagation is O(diameter). Same
-    * output contract: (id, label) with label = component minimum.
-    *
-    * Each round is two groupBy-min + join passes over the edge list —
-    * no collect_list (a high-degree node never materializes its
-    * neighborhood), so a 10⁹-edge graph runs in bounded task memory:
-    *  - large-star: every neighbor v > u re-attaches to m(u) =
-    *    min(Γ(u) ∪ u) — long chains collapse exponentially;
-    *  - small-star: every neighbor v ≤ u (and u itself) attaches to m(u),
-    *    canonicalizing each component toward a star rooted at its minimum.
-    * Fixpoint when the edge set stops changing; the star edges then ARE
-    * the (id, label) map.
-    *
-    * @param checkpointEvery  durability of the per-round materialization —
-    *                         see [[roundCheckpoint]]
-    */
   /** Canonical (hi, lo) edge form shared by [[connectedComponentsStar]]
     * and [[starRound]]. */
   private def canon(df: DataFrame): DataFrame = df
@@ -382,10 +365,9 @@ object Dedup {
     .filter(col("hi") =!= col("lo"))
     .distinct()
 
-  /** One large-star + small-star round's pre-checkpoint frame — the loop
-    * body of [[connectedComponentsStar]], factored so the committed
-    * plans/r18 evidence (PlanDump `cc_star_round`) explains the exact
-    * per-round joins the loop executes.
+  /** One large-star + small-star round — the loop body of
+    * [[connectedComponentsStar]]; PlanSpec pins its round joins by
+    * planning this body directly.
     *
     * large-star: Γ as both directions; m(u) = min(Γ(u) ∪ u); emit
     * (v, m(u)) for v > u. small-star over the large-star output: emit
@@ -411,6 +393,25 @@ object Dedup {
       .union(mn2.select(col("u").as("a"), col("m").as("b"))))
   }
 
+  /** Connected components by alternating large-star/small-star rounds —
+    * O(log n) rounds regardless of component DIAMETER (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond", SoCC'14), where
+    * [[connectedComponents]]' min-label propagation is O(diameter). Same
+    * output contract: (id, label) with label = component minimum.
+    *
+    * Each round is two groupBy-min + join passes over the edge list —
+    * no collect_list (a high-degree node never materializes its
+    * neighborhood), so a 10⁹-edge graph runs in bounded task memory:
+    *  - large-star: every neighbor v > u re-attaches to m(u) =
+    *    min(Γ(u) ∪ u) — long chains collapse exponentially;
+    *  - small-star: every neighbor v ≤ u (and u itself) attaches to m(u),
+    *    canonicalizing each component toward a star rooted at its minimum.
+    * Fixpoint when the edge set stops changing; the star edges then ARE
+    * the (id, label) map.
+    *
+    * @param checkpointEvery  durability of the per-round materialization —
+    *                         see [[roundCheckpoint]]
+    */
   def connectedComponentsStar(pairs: DataFrame,
       checkpointEvery: Option[Int] = None): DataFrame = {
     // undirected edge list as canonical (hi, lo) pairs
@@ -467,8 +468,6 @@ object Dedup {
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
   }
 
-  /** Verified near-dup pairs (a_id, b_id): LSH candidates filtered by exact
-    * Jaccard ≥ 0.5 — the shared front half of both clustering rows. */
   /** Synchronous label propagation over an undirected edge list
     * `edges(a_id, b_id)` starting from `nodes(v)` with lbl = v: each of
     * `rounds` rounds reassigns every node the mode over its neighbors'
@@ -491,17 +490,19 @@ object Dedup {
     val adj = edges.select(col("a_id").as("v"), col("b_id").as("u"))
       .unionByName(edges.select(col("b_id").as("v"), col("a_id").as("u")))
       .unionByName(nodes.select(col("v"), col("v").as("u")))
+    // round 0 is a projection over the caller's `nodes`: only rounds
+    // this loop checkpointed are freed once their successor lands
     var lab = nodes.select(col("v"), col("v").as("lbl"))
-    for (_ <- 1 to rounds) {
-      lab = lpaRound(adj, lab).localCheckpoint()
+    for (r <- 1 to rounds) {
+      val next = lpaRound(adj, lab).localCheckpoint()
+      if (r > 1) Materialize.free(lab)
+      lab = next
     }
     lab
   }
 
-  /** One LPA round's pre-checkpoint frame — the loop body of
-    * [[lpaRounds]], factored so the committed plans/r18 evidence
-    * (PlanDump `lpa_round`) explains the exact per-round join the loop
-    * executes.
+  /** One LPA round — the loop body of [[lpaRounds]]; PlanSpec pins its
+    * round join by planning this body directly.
     *
     * SHUFFLE_HASH on the O(V) label side, same reasoning as the
     * pagerank loop: sort-merge would re-sort the O(E) adjacency
@@ -521,56 +522,10 @@ object Dedup {
       .select(col("v"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
   }
 
-  /** Test-only view of [[nearDupPairs]] (GraphSpec's LPA fixed-point pin
-    * needs the row's exact edge set). */
-  private[graft] def nearDupPairsForTest(s: SparkSession,
-      d: String): DataFrame = nearDupPairs(s, d)
-
-  // Round-1 frames with each loop's own checkpointed inputs — the
-  // PlanDump evidence seams (see Graph.prRound's scaladoc for why the
-  // registered queries' final plans cannot show the per-round joins).
-  private[graft] def ccRoundPlanFrame(s: SparkSession,
+  /** Verified near-dup pairs (a_id, b_id): LSH candidates filtered by exact
+    * Jaccard ≥ 0.5 — the shared front half of both clustering rows. */
+  private[graft] def nearDupPairs(s: SparkSession,
       d: String): DataFrame = {
-    val pairs = nearDupPairs(s, d)
-    val edges = ccEdges(pairs.select(col("a_id"), col("b_id"))
-      .localCheckpoint()).localCheckpoint()
-    val labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).localCheckpoint()
-    ccRound(edges, labels)
-  }
-
-  private[graft] def starRoundPlanFrame(s: SparkSession,
-      d: String): DataFrame = {
-    val pairs = nearDupPairs(s, d)
-    val edges = canon(pairs.select(col("a_id").as("a"), col("b_id").as("b")))
-      .localCheckpoint()
-    starRound(edges)
-  }
-
-  /** The round-0 edge frame exactly as [[connectedComponents]] builds it
-    * from the LSH pair front — the PlanDump `cc_edges` evidence seam for
-    * the r19 pair-frame materialization (VERDICT r18 item 1). */
-  private[graft] def ccEdgesPlanFrame(s: SparkSession,
-      d: String): DataFrame = ccEdges(nearDupPairs(s, d)
-    .select(col("a_id"), col("b_id")).localCheckpoint())
-
-  /** The LSH pair front itself (band self-join candidates + exact-Jaccard
-    * verify) — committed so the ReusedExchange coverage of the banding
-    * subtree inside ONE query is auditable from the plan. */
-  private[graft] def nearDupPairsPlanFrame(s: SparkSession,
-      d: String): DataFrame = nearDupPairs(s, d)
-
-  private[graft] def lpaRoundPlanFrame(s: SparkSession,
-      d: String): DataFrame = {
-    val pairs = nearDupPairs(s, d).localCheckpoint()
-    val nodes = docs(s, d).select(col("doc_id").as("v"))
-    val adj = pairs.select(col("a_id").as("v"), col("b_id").as("u"))
-      .unionByName(pairs.select(col("b_id").as("v"), col("a_id").as("u")))
-      .unionByName(nodes.select(col("v"), col("v").as("u")))
-    lpaRound(adj, nodes.select(col("v"), col("v").as("lbl")))
-  }
-
-  private def nearDupPairs(s: SparkSession, d: String): DataFrame = {
     val sh = shingled(docs(s, d)).localCheckpoint()
     lshCandidates(minhashBands(s, sh))
       .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
@@ -717,9 +672,6 @@ object Dedup {
   // exchange + sort paid once per micro-batch for nothing (r19). The
   // batch row adds its own output sort below.
 
-  /** Shared oracle for both clustering rows — brute-forced pairs + a
-    * recursive transitive closure; the component minimum is the label, so
-    * min-label propagation and large-star/small-star both match it. */
   /** The recursive transitive-closure CTE chain ending in
     * `labels(doc_id, cluster_id)` — shared by the clustering rows and
     * the quality-aware representative row (must follow a
@@ -743,6 +695,9 @@ object Dedup {
            CAST(LEAST(src, MIN(dst)) AS BIGINT) AS cluster_id
          FROM reach GROUP BY src)"""
 
+  /** Shared oracle for both clustering rows — brute-forced pairs + a
+    * recursive transitive closure; the component minimum is the label, so
+    * min-label propagation and large-star/small-star both match it. */
   private lazy val ClustersOracleSql: String =
     s"""WITH RECURSIVE $sqlClusterLabelCtes
        SELECT doc_id, cluster_id, (doc_id = cluster_id) AS keep
@@ -755,11 +710,6 @@ object Dedup {
       (col("id") === col("label")).as("keep"))
     .orderBy("doc_id")
 
-  /** q_corpus_pipeline's stage chain over an arbitrary
-    * (doc_id, source, n_chars, text) frame — parameterized so DedupSpec
-    * can run it on a PLANTED frame and watch the exact-dedup stage drop
-    * duplicates in composition (the driver corpus has no exact dups, so
-    * that stage never binds in the registry row itself). */
   /** Pipeline stage 0: the four curation columns + tokenization. Shared
     * by the batch chain and the streaming arm so the two can't drift. */
   private def corpusD0(in: DataFrame): DataFrame = in
@@ -831,6 +781,11 @@ object Dedup {
       (5, "token_budget", s5))
   }
 
+  /** q_corpus_pipeline's stage chain over an arbitrary
+    * (doc_id, source, n_chars, text) frame — parameterized so DedupSpec
+    * can run it on a PLANTED frame and watch the exact-dedup stage drop
+    * duplicates in composition (the driver corpus has no exact dups, so
+    * that stage never binds in the registry row itself). */
   private[graft] def corpusPipeline(s: SparkSession,
       in: DataFrame): DataFrame = {
     def cnt(ord: Int, name: String, df: DataFrame): DataFrame =
@@ -1436,52 +1391,8 @@ object Dedup {
         // per-doc inside the rebuild projection, never through the
         // shuffle): the first x100 stress run of the exploded-positions
         // form spilled 10 GB; this form's aggregation input is exactly
-        // the dup-window rows
-        //
-        // r19 (guide §3.2, VERDICT r18 item 6): size-gated dup-side
-        // runtime filter, two gates deep so small corpora pay NOTHING:
-        //  - outer gate: the documents scan's plan-statistics bytes (a
-        //    catalog/file-size read — no job). At or below
-        //    spark.graft.spancut.bloomCorpusBytes (default 4 GB) the dup
-        //    table joins inline exactly as before — the bit-identical
-        //    plan every test SF and the bench run; a ≤4 GB corpus's dup
-        //    vocabulary either broadcasts or is cheap to shuffle.
-        //  - above it, the dup table is worth MEASURING: materialize +
-        //    count it (both amortized at that scale); a dup table under
-        //    spark.graft.spancut.bloomRows (default 250k ≈ the 10 MB
-        //    autoBroadcastJoinThreshold at 40 B/row) broadcasts
-        //    explicitly, a bigger one would otherwise pull the FULL
-        //    positioned window table through the shuffle join — so a
-        //    bloom filter over dup wh (built DISTRIBUTED via the
-        //    optimizer's own bloom_filter_agg, attached as a scalar
-        //    subquery like the automatic injection, probed codegen'd
-        //    map-side) drops non-duplicated windows before the exchange.
-        //    False positives only re-admit rows the real join then
-        //    discards, so the result is unchanged (pinned by PlanSpec's
-        //    forced-gate row-equality test).
-        val gateBytes = BigInt(s.conf
-          .getOption("spark.graft.spancut.bloomCorpusBytes")
-          .map(_.toLong).getOrElse(4L << 30))
-        val corpusBytes = docs(s, d)
-          .queryExecution.optimizedPlan.stats.sizeInBytes
-        val joined =
-          if (corpusBytes <= gateBytes) w.join(dup, "wh")
-          else {
-            val dupMat = dup.localCheckpoint()
-            val nDup = dupMat.count()
-            val bloomRows = s.conf
-              .getOption("spark.graft.spancut.bloomRows")
-              .map(_.toLong).getOrElse(250000L)
-            if (nDup <= bloomRows) w.join(broadcast(dupMat), "wh")
-            else {
-              val B = org.apache.spark.sql.GraftSqlBridge
-              val bf = dupMat.agg(B.bloomFilterAgg(xxhash64(col("wh")),
-                nDup, 8 * nDup).as("bf"))
-              w.filter(B.mightContain(bf, xxhash64(col("wh"))))
-                .join(dupMat, "wh")
-            }
-          }
-        val cov = joined
+        // the dup-window rows. AQE broadcasts a small dup table.
+        val cov = w.join(dup, "wh")
           .groupBy("doc_id").agg(collect_set(col("i")).as("starts"))
         t.join(cov, Seq("doc_id"), "left")
           .withColumn("cov", array_distinct(flatten(transform(
@@ -1904,6 +1815,15 @@ object Dedup {
     * No-op in production. */
   private[graft] var compactionHook: (String, String) => Unit = (_, _) => ()
 
+  /** Consolidated-dir output file sizing: one ~128 MB parquet file per
+    * 128 MB of merged source bytes (a year-old stream's consolidated
+    * state neither fragments into thousands of small files nor
+    * concentrates into a handful of multi-GB ones), floored at 1 and
+    * capped at 4096 files (≈512 GB of state per kind — past that the
+    * layout question is a table format's, not a directory's). */
+  private[graft] def compactionPartitions(srcBytes: Long): Int =
+    math.max(1L, math.min(4096L, srcBytes / (128L << 20))).toInt
+
   /** Idempotent compaction generation: merge every per-batch state dir
     * with id ≤ `w` (plus the previous consolidated dir, if any) into one
     * consolidated `c{w}` dir per state kind, then sweep the merged
@@ -1915,15 +1835,6 @@ object Dedup {
     * exists, and a replayed batch re-enters here with the same w — a
     * markerless c-dir rebuilds from the still-present sources, a marked
     * one skips straight to finishing the sweep. */
-  /** Consolidated-dir output file sizing: one ~128 MB parquet file per
-    * 128 MB of merged source bytes (a year-old stream's consolidated
-    * state neither fragments into thousands of small files nor
-    * concentrates into a handful of multi-GB ones), floored at 1 and
-    * capped at 4096 files (≈512 GB of state per kind — past that the
-    * layout question is a table format's, not a directory's). */
-  private[graft] def compactionPartitions(srcBytes: Long): Int =
-    math.max(1L, math.min(4096L, srcBytes / (128L << 20))).toInt
-
   private def compactCorpusState(s: SparkSession, stateRoot: String,
       w: Long): Unit =
     compactStateKinds(s, stateRoot, w,

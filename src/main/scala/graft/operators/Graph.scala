@@ -50,13 +50,14 @@ object Graph {
     * agree on every digit and the driver hash-compares exactly.
     *
     * Returns (node STRING, r LONG) with r in micro-rank units.
-    */
-  /** `onRound` is an instrumentation hook — called with (round, wall
+    *
+    * `onRound` is an instrumentation hook — called with (round, wall
     * seconds) after each round's eager checkpoint lands, so harnesses
     * (mode=graph) can pin per-round wall FLATNESS: the checkpoint/free
     * discipline means round k never re-evaluates rounds < k, and a
     * growing per-round wall would be the lineage-accretion bug this
-    * loop is designed not to have. Noop by default. */
+    * loop is designed not to have. Noop by default.
+    */
   def pagerank(s: SparkSession, edges0: DataFrame, iters: Int,
       onRound: (Int, Double) => Unit = (_, _) => ()): DataFrame = {
     // The (edge, outdeg) frame is loop-invariant — materialize it ONCE
@@ -75,7 +76,7 @@ object Graph {
     // ×100 the 10 rounds shuffled 16.7 GB, all but one round of it this
     // frame). A localCheckpoint would NOT do: Spark 4 materializes it as
     // a LogicalRDD with UnknownPartitioning, dropping exactly the
-    // property this buys (measured on the pagerank_round plan dump).
+    // property this buys (PlanSpec pins the exchange-free contrib side).
     // Same durability class — both survive only as long as their
     // executors. The count() materializes contrib NOW so edges can be
     // freed; the unpersist after the loop is load-bearing: the bench
@@ -106,13 +107,9 @@ object Graph {
     ranks
   }
 
-  /** One PageRank round's pre-checkpoint frame — the loop body of
-    * [[pagerank]], factored so the committed plans/r18 evidence
-    * (PlanDump's `pagerank_round` pseudo-query) explains the EXACT frame
-    * the loop executes: the round joins read checkpointed inputs, so the
-    * registered q_pagerank's final plan shows only a Scan ExistingRDD and
-    * the per-round join strategy would otherwise be invisible to a plan
-    * audit.
+  /** One PageRank round — the loop body of [[pagerank]]. The loop
+    * checkpoints every round, so q_pagerank's final plan cannot show the
+    * round join; PlanSpec pins it by planning this body directly.
     *
     * SHUFFLE_HASH on the O(V) ranks side: the default sort-merge join
     * re-SORTS the O(E) contrib frame every round — measured at ×100
@@ -133,24 +130,6 @@ object Graph {
     .select(col("dst").as("node"),
       floor(lit(150000.0) + lit(0.85) * col("acc").cast("double") +
         lit(0.5)).cast("long").as("r"))
-
-  /** q_pagerank's round-1 frame with the loop's own checkpointed inputs —
-    * the PlanDump evidence seam ([[prRound]] scaladoc). */
-  private[graft] def prRoundPlanFrame(s: SparkSession,
-      d: String): DataFrame = {
-    val pairs = tradingPairs(s, d)
-    val edges = pairs.union(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .select("src", "dst").localCheckpoint()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val contrib = edges.join(deg, "src")
-      .repartition(Materialize.shufflePartitions(s), col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    contrib.count()
-    val ranks = deg.select(col("src").as("node"),
-      lit(1000000L).as("r")).localCheckpoint()
-    prRound(contrib, ranks)
-  }
 
   /** One DuckDB PageRank round as CTE text — the oracle twin of the loop
     * body in [[pagerank]], kept adjacent so they can't drift. */

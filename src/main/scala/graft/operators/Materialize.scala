@@ -21,10 +21,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * unpersist those shared blocks and leak the frame's own cache.
   *
   * Otherwise the frame is a checkpoint or a cheap projection over one
-  * (e.g. kmeansRounds frees `withPrev.drop(col)`, a Project over the
+  * (e.g. connectedComponents' labels, a Project over the round's
   * LogicalRDD), so the logical plan is traversed and every LogicalRDD
   * under it is unpersisted — a CHECKPOINTED round's plan was truncated
   * at materialization, so the only LogicalRDDs under it are its own.
+  * The same traversal is why a loop must never free a projection over
+  * its CALLER's checkpoint (e.g. lpaRounds' round 0 over `nodes`).
   *
   * After this call the frame is UNRECOMPUTABLE (localCheckpoint already
   * truncated its lineage) — only free a round once its successor is

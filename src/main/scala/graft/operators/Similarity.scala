@@ -87,8 +87,7 @@ object Similarity {
   }
 
   /** One power-iteration matvec in micro² integer units: S_i = Σ_j
-    * covm_ij · xm_j, exact (the q_pca_power loop body's first half,
-    * factored for the loop AND PlanDump's `pca_power_round` evidence). */
+    * covm_ij · xm_j, exact (the first half of [[pcaPowerRound]]). */
   private[graft] def pcaMatvec(s: SparkSession, covF: DataFrame,
       v: DataFrame): DataFrame =
     covF.join(v, "j").groupBy("i")
@@ -100,11 +99,11 @@ object Similarity {
     * micro longs. The norm is a GLOBAL WINDOW over the d-row matvec frame
     * — same order-independent decimal sum as dsum (y are integers-as-
     * doubles, so round6 is the identity), but it references mv exactly
-    * ONCE, which is what lets [[q_pca_power]]'s 10 rounds compose into a
-    * single lazy plan (the old agg+crossJoin norm referenced mv twice,
-    * doubling the plan per round and forcing a localCheckpoint job every
-    * round). d is config-bounded (64 here, 4096 in the scaled regime),
-    * so the single-partition window task holds d rows, never data. */
+    * ONCE, which is what lets q_pca_power's 10 rounds compose into a
+    * single lazy plan (a norm that referenced mv twice would double the
+    * plan per round; PlanSpec pins the linear growth). d is
+    * config-bounded (64 here, 4096 in the scaled regime), so the
+    * single-partition window task holds d rows, never data. */
   private[graft] def pcaPowerRound(s: SparkSession, covF: DataFrame,
       v: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -115,41 +114,6 @@ object Similarity {
         .cast("decimal(38,6)")).over(w).cast("double")))
       .select(col("i").as("j"),
         floor(col("y") / col("nn") * 1e6 + 0.5).cast("long").as("xm"))
-  }
-
-  // Round-1 frames of the ANN/PCA training loops with each loop's own
-  // checkpointed inputs — the PlanDump evidence seams (r18 verdict item
-  // 4: the loops checkpoint every round, so the registered queries'
-  // final plans cannot show the per-round strategy; these are the same
-  // seams the graph loops got in r18).
-  private[graft] def kmeansRoundPlanFrame(s: SparkSession,
-      d: String): DataFrame = {
-    val e = dropZeroNorm(s,
-      embs(s, d).select(col("vec_id"), col("embedding")))
-    val assigned = ivfAssign(s, e, 8).localCheckpoint()
-    lloydRoundImpl(s, assigned, assigned, trackPrev = false)
-  }
-
-  private[graft] def pqTrainRoundPlanFrame(s: SparkSession,
-      d: String): DataFrame = {
-    val m = 8; val subDim = 8; val k = 8
-    val e = dropZeroNorm(s,
-      embs(s, d).select(col("vec_id"), col("embedding")))
-    val sv = pqSubs(e, "vec_id", "embedding", m, subDim, "sv")
-      .filter(col("vec_id") % 2 === 0).localCheckpoint()
-    val seed = pqCodebook(s, e, m, subDim, k).localCheckpoint()
-    pqTrainRound(s, sv, seed, subDim)
-  }
-
-  private[graft] def pcaPowerRoundPlanFrame(s: SparkSession,
-      d: String): DataFrame = {
-    val covU = covUpper(s, d)
-    val covF = covU.unionByName(covU.filter(col("i") =!= col("j"))
-        .select(col("j").as("i"), col("i").as("j"), col("cov_micros")))
-      .localCheckpoint()
-    val v = covF.select(col("i").as("j")).distinct()
-      .select(col("j"), lit(125000L).as("xm")).localCheckpoint()
-    pcaPowerRound(s, covF, v)
   }
 
   /** DuckDB CTE chain ending in `cov(i, j, cov_micros)` — the oracle twin
@@ -606,7 +570,7 @@ object Similarity {
     * (boundary-proof, see [[Arith.micro6]]) so argmins tie-break
     * identically (ties fall to the lowest code id).
     */
-  private def pqSubs(df: DataFrame, idCol: String, vecCol: String,
+  private[graft] def pqSubs(df: DataFrame, idCol: String, vecCol: String,
       m: Int, subDim: Int, outCol: String): DataFrame = df
     .select(col(idCol), explode(sequence(lit(0), lit(m - 1))).as("sub"),
       col(vecCol))
@@ -648,23 +612,21 @@ object Similarity {
   def pqTrain(s: SparkSession, sv: DataFrame, seed: DataFrame,
       subDim: Int, rounds: Int): DataFrame = {
     var cb = seed
-    (1 to rounds).foreach { _ =>
-      cb = pqTrainRound(s, sv, cb, subDim).localCheckpoint()
+    for (r <- 1 to rounds) {
+      val next = pqTrainRound(s, sv, cb, subDim).localCheckpoint()
+      if (r > 1) Materialize.free(cb) // round 0 is the caller's seed
+      cb = next
     }
     cb
   }
 
-  /** One PQ training round's pre-checkpoint frame — the loop body of
-    * [[pqTrain]], factored so PlanDump's `pq_train_round` pseudo-query
-    * commits the per-round strategy (the loop checkpoints each codebook,
-    * so the registered queries' final plans can't show it — r18 verdict
-    * item 4).
-    *
-    * r19: argmin via [[pqAssignByArray]] (one codegen'd projection, sv
-    * rides through) — the old groupBy(vec_id, sub) min_by + first(sv)
-    * SortAggregated the exploded corpus every round (struct/array agg
-    * buffers are not hash-aggregable); the (sub, code) rollup keeps its
-    * fixed-width long-sum buffers and hash-aggregates map-side. */
+  /** One PQ training round — the loop body of [[pqTrain]]. Argmin via
+    * [[pqAssignByArray]] (one codegen'd projection, sv rides through): a
+    * groupBy(vec_id, sub) min_by + first(sv) would SortAggregate the
+    * exploded corpus every round (struct/array agg buffers are not
+    * hash-aggregable); the (sub, code) rollup keeps its fixed-width
+    * long-sum buffers and hash-aggregates map-side. PlanSpec pins the
+    * round's plan free of SortAggregate. */
   private[graft] def pqTrainRound(s: SparkSession, sv: DataFrame,
       cb: DataFrame, subDim: Int): DataFrame =
     pqAssignByArray(s, sv, cb, keep = Seq("sv"))
@@ -785,10 +747,11 @@ object Similarity {
     * k=800), scan-bound at any corpus size — and one 10× step measured
     * 13.4× wall vs the old form's 33×.
     *
-    * `extra` carries pass-through columns (the trackPrev prev_bucket)
-    * that previously rode the aggregation as first(). */
-  private def assignByArray(s: SparkSession, e: DataFrame, cents: DataFrame,
-      extra: Seq[String] = Seq.empty): DataFrame =
+    * Also the stress harness's frozen-centroid recall law: k-means trains
+    * ONCE on a base corpus and the assignment runs on a scaled blow-up of
+    * it against the fixed centroid frame. */
+  private[graft] def assignByArray(s: SparkSession, e: DataFrame,
+      cents: DataFrame): DataFrame =
     e.crossJoin(broadcast(cents
         .agg(sort_array(collect_list(struct(col("c_id"), col("c_v"))))
           .as("cs"))))
@@ -797,7 +760,7 @@ object Similarity {
           (-c.getField("c_id")).as("neg"),
           c.getField("c_id").as("c_id"))))
         .getField("c_id"))
-      .select((Seq("vec_id", "embedding", "bucket") ++ extra).map(col): _*)
+      .select(col("vec_id"), col("embedding"), col("bucket"))
 
   /** DuckDB twin of [[ivfAssign]] as CTE text: defines `e` (typed vectors),
     * `cents`, `ac` (all vector×centroid cosines) and `assigned`
@@ -831,15 +794,11 @@ object Similarity {
     *
     * @return (vec_id, embedding, bucket) after the round
     */
-  private def lloydRound(s: SparkSession, corpus: DataFrame,
+  private[graft] def lloydRound(s: SparkSession, corpus: DataFrame,
       assigned: DataFrame): DataFrame =
-    lloydRoundImpl(s, corpus, assigned, trackPrev = false)
+    assignByArray(s, corpus.select(col("vec_id"), col("embedding")),
+      centroidsOf(assigned))
 
-  /** [[lloydRound]] body; with `trackPrev` the reassignment carries the
-    * input's bucket through as `prev_bucket`, so the iteration's
-    * changed-count is a filter over the round's own output instead of an
-    * n-row shuffle join against the previous round (corpus = assigned in
-    * that mode, so the column exists). */
   /** (c_id, c_v): each bucket's centroid as the exact fixed-point mean of
     * its members (VecCentroid — order-independent long micro sums), with
     * zero-vector centroids dropped: a bucket of opposing embeddings can
@@ -854,15 +813,6 @@ object Similarity {
       .filter(aggregate(col("c_v"), lit(0.0d),
         (acc, x) => acc + x * x) > 0.0)
   }
-
-  /** Assignment of `e` against a FIXED centroid frame — [[assignByArray]]
-    * exposed for the stress harness's frozen-centroid recall law, where
-    * k-means trains ONCE on a base corpus and the assignment runs on a
-    * scaled blow-up of it (the registered recall rows train on the
-    * corpus they query, so duplication changes seeding and no simple
-    * scale law holds for them; freezing restores one). */
-  def assignWithCentroids(s: SparkSession, e: DataFrame,
-      cents: DataFrame): DataFrame = assignByArray(s, e, cents)
 
   // -------------------------------------------------------------------
   // Streaming IVF index maintenance — the ANN analog of
@@ -1180,17 +1130,6 @@ object Similarity {
         FROM st JOIN dr ON st.bucket = dr.bucket
         ORDER BY st.bucket"""
 
-  private def lloydRoundImpl(s: SparkSession, corpus: DataFrame,
-      assigned: DataFrame, trackPrev: Boolean): DataFrame = {
-    val cents1 = centroidsOf(assigned)
-    val in =
-      if (trackPrev) corpus.select(col("vec_id"), col("embedding"),
-        col("bucket").as("prev_bucket"))
-      else corpus.select(col("vec_id"), col("embedding"))
-    assignByArray(s, in, cents1,
-      if (trackPrev) Seq("prev_bucket") else Seq.empty)
-  }
-
   /** One Lloyd refinement round over the IVF seeding — the single-round
     * operator (q_ann_kmeans). The reassignment side reuses the plain
     * corpus `e` (ivfAssign preserves one row per vector) to avoid
@@ -1201,41 +1140,29 @@ object Similarity {
   def kmeansRefine(s: SparkSession, e: DataFrame, k: Int): DataFrame =
     lloydRound(s, e, ivfAssign(s, e, k))
 
-  /** Lloyd iteration for exactly `rounds` rounds, with an early stop at
-    * the assignment fixed point if one arrives sooner. A stable round is a
-    * no-op (same members ⇒ same fixed-point centroids ⇒ same
-    * reassignment), so the output is IDENTICAL to running exactly `rounds`
-    * rounds in every case — which is what lets the SQL oracle unroll a
-    * fixed depth ([[sqlKmeansRounds]]) without knowing when (or whether)
-    * the early stop fires. A strict fixed point is NOT guaranteed to
-    * exist: the mean centroid optimizes the Euclidean objective while the
+  /** Exactly `rounds` Lloyd rounds over the IVF seeding. There is no
+    * early stop: a strict fixed point is NOT guaranteed to exist — the
+    * mean centroid optimizes the Euclidean objective while the
     * reassignment argmaxes COSINE, so a small set of boundary vectors can
-    * oscillate indefinitely (observed at sf0.001: changed counts decay
-    * 75 → 3 over 10 rounds without hitting 0) — the round cap, not the
-    * early stop, is the termination guarantee. Each round's assignment is
-    * localCheckpoint'ed: the per-round lineage would otherwise stack k
-    * broadcasts deep, and the checkpoint also feeds the changed-row count
-    * that drives the early stop.
-    *
-    * @return (final (vec_id, embedding, bucket), changed-count per round —
-    *         the spec pins that the iteration does real multi-round work
-    *         with a strongly decaying changed count)
-    */
-  private[graft] def kmeansRounds(s: SparkSession, e: DataFrame, k: Int,
-      rounds: Int): (DataFrame, Seq[Long]) =
-    lloydLoop(s, e, k, rounds, track = true)
-
-  /** Exactly `rounds` Lloyd rounds WITHOUT the early-stop machinery — a
-    * stable round is a no-op (see [[kmeansRounds]]), so the output is
-    * identical to the early-stopping variant, and skipping the per-round
-    * changed-count saves one Spark job (plus the prev_bucket carry) per
-    * round. All five kmeans-bucketed queries (q_ann_ivf, q_knn_join,
-    * q_ann_kmeans_iter, q_ann_ivfpq, q_dedup_embed_ivf) build on this;
-    * AnnSpec pins the changed-count telemetry by calling [[kmeansRounds]]
-    * directly. */
+    * oscillate indefinitely (AnnSpec observes changed counts decaying
+    * without reaching 0 at sf0.001) — and the SQL oracle unrolls the
+    * same fixed depth ([[sqlKmeansRounds]]). Each round's assignment is
+    * localCheckpoint'ed (the per-round lineage would otherwise stack k
+    * broadcasts deep) and the superseded round's checkpoint blocks are
+    * freed ([[Materialize.free]]), so pinned executor memory stays O(1),
+    * not O(rounds). All five kmeans-bucketed queries (q_ann_ivf,
+    * q_knn_join, q_ann_kmeans_iter, q_ann_ivfpq, q_dedup_embed_ivf) build
+    * on this. */
   def kmeansIterate(s: SparkSession, e: DataFrame, k: Int,
-      rounds: Int): DataFrame =
-    lloydLoop(s, e, k, rounds, track = false)._1
+      rounds: Int): DataFrame = {
+    var assigned = ivfAssign(s, e, k).localCheckpoint()
+    for (_ <- 1 to rounds) {
+      val next = lloydRound(s, assigned, assigned).localCheckpoint()
+      Materialize.free(assigned)
+      assigned = next
+    }
+    assigned
+  }
 
   /** kNN-join: every corpus row's `k` nearest neighbors (cosine, ties to
     * the lower nn_id). Candidates come from iterated-k-means buckets —
@@ -1274,49 +1201,12 @@ object Similarity {
       .select(col("vec_id"), col("rk"), col("nn_id"), col("cos"))
   }
 
-  /** Shared loop body of [[kmeansRounds]] / [[kmeansIterate]]. With
-    * `track`, prev_bucket rides along through the reassignment so the
-    * changed count is a filter over the round's own checkpoint — no join
-    * against the previous round's n rows — and the loop early-stops at a
-    * fixed point (semantically a no-op; see kmeansRounds). Each round
-    * frees the superseded round's checkpoint blocks (the UNDERLYING RDD —
-    * Dataset.unpersist is a silent no-op on checkpointed plans, see
-    * Materialize) so pinned executor memory stays O(1), not O(rounds). */
-  private def lloydLoop(s: SparkSession, e: DataFrame, k: Int,
-      rounds: Int, track: Boolean): (DataFrame, Seq[Long]) = {
-    var assigned = ivfAssign(s, e, k).localCheckpoint()
-    val changedPerRound = Seq.newBuilder[Long]
-    var r = 0
-    var stable = false
-    while (r < rounds && !stable) {
-      val round = lloydRoundImpl(s, assigned, assigned, trackPrev = track)
-        .localCheckpoint()
-      val next =
-        if (track) {
-          val changed = round
-            .filter(col("bucket") =!= col("prev_bucket")).count()
-          changedPerRound += changed
-          stable = changed == 0
-          round.drop("prev_bucket")
-        } else round
-      Materialize.free(assigned)
-      assigned = next
-      r += 1
-    }
-    (assigned, changedPerRound.result())
-  }
-
   /** The zero-norm predicate as DuckDB text — the oracle twin of
     * [[dropZeroNorm]], passed as sqlIvfAssign's eWhere so both engines
     * filter identically. */
   private[operators] val sqlZeroNormWhere: String =
     "list_sum([x * x FOR x IN (embedding::DOUBLE[])]) > 0"
 
-  /** DuckDB twin of `rounds` Lloyd iterations as CTE text: builds on
-    * `assigned` (from [[sqlIvfAssign]]) and defines `a1..a<rounds>`, each
-    * carrying (vec_id, v, bucket). Mirrors [[lloydRound]] exactly — micro
-    * fixed-point centroid means (VecCentroid's recipe), zero-norm centroid
-    * drop, cosine argmax reassignment with ties to the lower c_id. */
   /** DuckDB twin of [[centroidsOf]] as CTE text over an assignment CTE
     * `<prev>(vec_id, v, bucket)`: defines `u<tag>` and `cents<tag>(c_id,
     * c_v)` — VecCentroid's micro fixed-point mean, zero-norm drop. */
@@ -1333,6 +1223,11 @@ object Similarity {
           FROM u$tag GROUP BY bucket
           HAVING list_sum([c * c FOR c IN array_agg(c)]) > 0)"""
 
+  /** DuckDB twin of `rounds` Lloyd iterations as CTE text: builds on
+    * `assigned` (from [[sqlIvfAssign]]) and defines `a1..a<rounds>`, each
+    * carrying (vec_id, v, bucket). Mirrors [[lloydRound]] exactly — micro
+    * fixed-point centroid means (VecCentroid's recipe), zero-norm centroid
+    * drop, cosine argmax reassignment with ties to the lower c_id. */
   private[operators] def sqlKmeansRounds(rounds: Int): String =
     (1 to rounds).map { i =>
       val prev = if (i == 1) "assigned" else s"a${i - 1}"
@@ -2084,13 +1979,12 @@ object Similarity {
               FROM a1 GROUP BY bucket ORDER BY bucket""")),
 
     // ---- iterated k-means (the real clustering for the IVF index) --------
-    // Lloyd iterated for exactly 4 rounds (kmeansIterate — no early-stop
-    // machinery, which would be a semantic no-op anyway since a stable
-    // round reproduces itself), so the oracle simply unrolls all 4
-    // rounds: whatever the data does, both sides equal the
-    // exactly-4-rounds result. AnnSpec pins that the iteration does real
-    // multi-round work at sf0.001 (round-2 changed count > 0, strong
-    // decay across rounds) via kmeansRounds' telemetry.
+    // Lloyd iterated for exactly 4 rounds (kmeansIterate — no early
+    // stop), so the oracle simply unrolls all 4 rounds: whatever the
+    // data does, both sides equal the exactly-4-rounds result. AnnSpec
+    // pins that the iteration does real multi-round work at sf0.001
+    // (round-2 changed count > 0, strong decay across rounds) with a
+    // test-local loop over lloydRound.
     Q("q_ann_kmeans_iter",
       (s, d) => {
         val e = Similarity.dropZeroNorm(s,

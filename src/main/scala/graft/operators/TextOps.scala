@@ -153,9 +153,6 @@ object TextOps {
       b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     floor(a.cast("double") / b.cast("double")).cast("long")
 
-  /** Domain-mixture solver behind q_mixture_weights — see the
-    * registration comment for semantics. Returns (source, n_docs,
-    * mean_quality, excess_micro, weight_ppm) ordered by source. */
   /** The scan-collapse stage of [[mixtureWeights]] — one corpus scan →
     * per-source exact integer aggregates (quality is already
     * floor-micro quantized; recover the exact integer micros and sum as
@@ -171,6 +168,9 @@ object TextOps {
     .groupBy("source")
     .agg(count(lit(1)).as("n_docs"), sum(col("qm")).as("qsum"))
 
+  /** Domain-mixture solver behind q_mixture_weights — see the
+    * registration comment for semantics. Returns (source, n_docs,
+    * mean_quality, excess_micro, weight_ppm) ordered by source. */
   private[operators] def mixtureWeights(s: SparkSession,
       d: String): DataFrame = {
     val per = mixturePerSource(s, d).localCheckpoint()
@@ -186,6 +186,7 @@ object TextOps {
       .select(col("source"), col("n_docs"), col("mean_micro"),
         col("excess_micro"), idivF(lit(1000000L), col("ns")).as("w"))
       .localCheckpoint()
+    Materialize.free(per)
     for (_ <- 1 to mwRounds) {
       // w·factor ≤ 1.1e12 and raw·1e6 ≤ 1.1e12 — both exact as doubles
       val raw = w.withColumn("raw", idivF(
@@ -193,11 +194,14 @@ object TextOps {
           floor(col("excess_micro").cast("double") * mwEta + 0.5)
             .cast("long")),
         lit(1000000L)))
-      w = raw.crossJoin(broadcast(raw.agg(sum(col("raw")).as("rtot"))))
+      val next = raw
+        .crossJoin(broadcast(raw.agg(sum(col("raw")).as("rtot"))))
         .select(col("source"), col("n_docs"), col("mean_micro"),
           col("excess_micro"),
           idivF(col("raw") * lit(1000000L), col("rtot")).as("w"))
         .localCheckpoint()
+      Materialize.free(w)
+      w = next
     }
     w.select(col("source"), col("n_docs"),
         (col("mean_micro").cast("double") / 1e6).as("mean_quality"),
@@ -464,11 +468,6 @@ object TextOps {
   private def nStop(toks: org.apache.spark.sql.Column) =
     size(filter(toks, t => t.isin(stopWords: _*))).cast("long")
 
-  /** (doc_id, wh): the distinct md5 hashes of every n-token window of
-    * `text`; documents with fewer than n tokens drop out. One definition
-    * shared by q_substring_dup (n=10) and q_decontaminate (n=5) — and
-    * mirrored verbatim in both oracles — so the window rule cannot drift
-    * between the operators that compare window sets. */
   /** q_ngram_novelty's dataflow, parameterized on checkpointing: the
     * registered row eagerly localCheckpoints the distinct (source, wh)
     * frame (it is consumed twice — claim pass + credit join); PlanSpec
@@ -523,6 +522,11 @@ object TextOps {
         i => concat_ws(" ", slice(col("toks"), i + 1, lit(n))))))
       .as("gram"))
 
+  /** (doc_id, wh): the distinct md5 hashes of every n-token window of
+    * `text`; documents with fewer than n tokens drop out. One definition
+    * shared by q_substring_dup (n=10) and q_decontaminate (n=5) — and
+    * mirrored verbatim in both oracles — so the window rule cannot drift
+    * between the operators that compare window sets. */
   private[operators] def windowHashes(
       df: org.apache.spark.sql.DataFrame, n: Int,
       carry: Seq[String] = Nil): org.apache.spark.sql.DataFrame = df

@@ -497,16 +497,6 @@ object Streams {
         OutputMode.Append())
   }
 
-  /** Driver-checkable streaming row: a real file-source STREAM over the
-    * events parquet, drained with Trigger.AvailableNow through
-    * [[hourlyCounts]] into a named memory sink, returned as the sink
-    * table. The memory/complete sink is the harness choice — its size is
-    * the AGGREGATE output (hours × event types), not the input; a
-    * production deployment sinks append-mode parquet/Kafka with watermark
-    * eviction instead. The oracle is the same SQL as the batch twin
-    * q_events_hourly (minus countDistinct, which streaming aggregation
-    * doesn't support exactly — that is what approx_count_distinct is for).
-    */
   /** The file-source stream over the events parquet — the shared recipe
     * for every registered streaming row. Subtleties, in one place:
     *  - glob, not the bare file path: for a non-glob path the file stream
@@ -542,6 +532,15 @@ object Streams {
   }
 
   val queries: Seq[Q] = Seq(
+    // Driver-checkable streaming row: a real file-source STREAM over the
+    // events parquet, drained with Trigger.AvailableNow through
+    // [[hourlyCounts]] into a named memory sink, returned as the sink
+    // table. The memory/complete sink is the harness choice — its size is
+    // the AGGREGATE output (hours × event types), not the input; a
+    // production deployment sinks append-mode parquet/Kafka with watermark
+    // eviction instead. The oracle is the same SQL as the batch twin
+    // q_events_hourly (minus countDistinct, which streaming aggregation
+    // doesn't support exactly — that is what approx_count_distinct is for).
     Q("q_stream_hourly",
       (s, d) => {
         val stream = eventsStream(s, d)

@@ -222,13 +222,6 @@ class DedupSpec extends AnyFunSuite {
       _.filter(p => p.getFileName.toString.startsWith("part-")).count()
     }
     assert(files > 0, s"no checkpoint data written under ${dir.get}")
-    // drop the durable round files so the shared-session suites that
-    // follow don't inherit this test's checkpoint data on disk (the dir
-    // itself stays set — checkpoint() recreates subdirs as needed)
-    scala.util.Using.resource(java.nio.file.Files.walk(root)) {
-      _.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-    }
   }
 
   test("Materialize.free drops localCheckpoint blocks (unpersist cannot)") {
@@ -279,11 +272,59 @@ class DedupSpec extends AnyFunSuite {
     assert(row.getAs[Long]("n_true") > 0)
   }
 
+  test("loops free their superseded rounds and keep the caller's inputs") {
+    // lpaRounds, pqTrain and mixtureWeights checkpoint every round: once a
+    // round's successor lands the round is freed, so pinned executor
+    // memory stays O(1) in rounds — but the inputs the CALLER checkpointed
+    // (LPA's nodes, PQ's training subvectors and seed) must stay pinned
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.functions.col
+    val s = spark
+    import s.implicits._
+    def pinned = s.sparkContext.getPersistentRDDs.keySet
+    def rddId(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
+    def assertGrowth(before: collection.Set[Int], what: String) = {
+      val grown = pinned -- before
+      assert(grown.size <= 1, s"$what left ${grown.size} rounds pinned")
+    }
+    val nodes = (1L to 6L).toDF("v").localCheckpoint()
+    val edges = Seq(1L -> 2L, 2L -> 3L, 4L -> 5L).toDF("a_id", "b_id")
+      .localCheckpoint()
+    val beforeLpa = pinned
+    val lab = Dedup.lpaRounds(nodes, edges, rounds = 3)
+    assertGrowth(beforeLpa, "lpaRounds")
+    assert(Seq(nodes, edges).map(rddId).forall(pinned.contains),
+      "lpaRounds freed its caller's inputs")
+    assert(lab.count() == 6)
+
+    val e = graft.operators.Similarity.dropZeroNorm(s,
+      Tables(s, "/root/testdata/sf0.001", "embeddings")
+        .select(col("vec_id"), col("embedding")))
+    val sv = graft.operators.Similarity
+      .pqSubs(e, "vec_id", "embedding", 8, 8, "sv").localCheckpoint()
+    val seed = graft.operators.Similarity.pqCodebook(s, e, 8, 8, 8)
+      .localCheckpoint()
+    val beforePq = pinned
+    val cb = graft.operators.Similarity.pqTrain(s, sv, seed, 8, 3)
+    assertGrowth(beforePq, "pqTrain")
+    assert(Seq(sv, seed).map(rddId).forall(pinned.contains),
+      "pqTrain freed its caller's inputs")
+    assert(cb.count() > 0)
+
+    val beforeMw = pinned
+    val mw =
+      SparkEntry.queries("q_mixture_weights")(s, "/root/testdata/sf0.001")
+    assertGrowth(beforeMw, "mixtureWeights")
+    Seq(nodes, edges, lab, sv, seed, cb, mw)
+      .foreach(graft.operators.Materialize.free)
+  }
+
   test("Materialize.free frees through a Project over the checkpoint") {
-    // the kmeansRounds shape: the handle freed per round is
-    // withPrev.drop("prev_bucket") — a Project over the LogicalRDD, not
-    // the LogicalRDD itself. free must traverse the plan, or checkpoint
-    // blocks pin O(rounds) executor memory.
+    // a handle that is a Project over the LogicalRDD (e.g. a round frame
+    // with a column dropped), not the LogicalRDD itself: free must
+    // traverse the plan, or checkpoint blocks pin O(rounds) executor
+    // memory.
     import org.apache.spark.storage.StorageLevel
     val s = spark
     import s.implicits._

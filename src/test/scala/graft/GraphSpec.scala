@@ -98,7 +98,7 @@ class GraphSpec extends AnyFunSuite {
     val s = spark
     val docs = Tables(s, sfDir, "documents")
       .select(col("doc_id").as("v"))
-    val edges = operators.Dedup.nearDupPairsForTest(s, sfDir)
+    val edges = operators.Dedup.nearDupPairs(s, sfDir)
       .localCheckpoint()
     def labels(rounds: Int) =
       operators.Dedup.lpaRounds(docs, edges, rounds)

@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec,
+  ShuffledHashJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the properties that make queries survive a 100×
@@ -11,8 +18,22 @@ class PlanSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sfDir)
-      .queryExecution.executedPlan.toString
+    explain(SparkEntry.queries(name)(spark, sfDir))
+
+  private def explain(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString
+
+  /** Walks physical plans through AQE's wrapper and query stages. */
+  private object aqe extends AdaptiveSparkPlanHelper
+
+  private def hashJoins(df: DataFrame): Seq[ShuffledHashJoinExec] =
+    aqe.collect(df.queryExecution.executedPlan) {
+      case j: ShuffledHashJoinExec => j
+    }
+
+  private def buildCols(j: ShuffledHashJoinExec): Set[String] =
+    (if (j.buildSide == BuildRight) j.right else j.left)
+      .output.map(_.name).toSet
 
   /** True for Tables.scanFloor's keyed scan-spread exchange — and FAILS
     * for any other REPARTITION_BY_NUM exchange (r18 verdict item 2: a
@@ -43,36 +64,6 @@ class PlanSpec extends AnyFunSuite {
       assert(floorEx.nonEmpty,
         s"$q lost its scan-parallelism floor on the one-row-group testdata")
       floorEx.foreach(l => assert(isScanFloorExchange(l)))
-    }
-  }
-
-  test("q_dedup_span_cut dup side: broadcast below the bloom gate, " +
-      "runtime filter above — same result") {
-    // below the gate (test corpora): the dup table broadcasts and no
-    // bloom machinery appears
-    val lo = SparkEntry.queries("q_dedup_span_cut")(spark, sfDir)
-    val pLo = lo.queryExecution.executedPlan.toString
-    assert(pLo.contains("BroadcastHashJoin"), s"dup join not broadcast:\n$pLo")
-    assert(!pLo.contains("might_contain"),
-      s"bloom filter fired below the gate:\n$pLo")
-    val loRows = lo.collect().toSeq
-    // force the gate: the window table must be pre-filtered map-side by
-    // a broadcast bloom filter BEFORE the dup join, and the output must
-    // be row-identical to the broadcast arm (false positives are dropped
-    // by the real join)
-    val s = spark
-    s.conf.set("spark.graft.spancut.bloomCorpusBytes", "0")
-    s.conf.set("spark.graft.spancut.bloomRows", "0")
-    try {
-      val hi = SparkEntry.queries("q_dedup_span_cut")(s, sfDir)
-      val pHi = hi.queryExecution.executedPlan.toString
-      assert(pHi.contains("might_contain"),
-        s"bloom filter did not fire above the gate:\n$pHi")
-      assert(hi.collect().toSeq == loRows,
-        "bloom-gated arm diverged from the broadcast arm")
-    } finally {
-      s.conf.unset("spark.graft.spancut.bloomCorpusBytes")
-      s.conf.unset("spark.graft.spancut.bloomRows")
     }
   }
 
@@ -635,12 +626,152 @@ class PlanSpec extends AnyFunSuite {
     // covered positions must collapse via map-side partial collect_set
     // (bounded by doc length per key), the window-dup join is an
     // equi-join on the hash, and nothing all-pairs appears — the text
-    // column itself only ever feeds codegen'd projections
+    // column itself only ever feeds codegen'd projections. The small dup
+    // table broadcasts, and no bloom pre-filter is planned.
     val p = plan("q_dedup_span_cut")
     assert(p.contains("partial_collect_set"),
       s"cover set has no partial phase:\n$p")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), s"all-pairs join appeared:\n$p")
+    assert(p.contains("BroadcastHashJoin"), s"dup join not broadcast:\n$p")
+    assert(!p.contains("might_contain"), s"bloom filter planned:\n$p")
+  }
+
+  // ---- iterative round bodies ----------------------------------------
+  // The loops checkpoint every round, so a registered query's final plan
+  // shows only a scan of the last checkpoint. These pins plan each round
+  // body directly over frames materialized the way its loop does.
+
+  test("pagerank round hash-builds the ranks; contrib reads exchange-free") {
+    // prRound's SHUFFLE_HASH hint builds the O(V) ranks side, and contrib
+    // — persisted after a repartition on src, as pagerank builds it —
+    // keeps its hash partitioning through the cache: only ranks shuffles
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    val edges = Seq(1 -> 2, 2 -> 3, 3 -> 4, 4 -> 1, 1 -> 3)
+      .flatMap { case (a, b) => Seq(s"n$a" -> s"n$b", s"n$b" -> s"n$a") }
+      .toDF("src", "dst").localCheckpoint()
+    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
+    val contrib = edges.join(deg, "src")
+      .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("src"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    contrib.count()
+    val ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
+      .localCheckpoint()
+    try {
+      val round = operators.Graph.prRound(contrib, ranks)
+      val joins = hashJoins(round)
+      assert(joins.map(buildCols) == Seq(Set("src", "r")),
+        s"round join is not hash-built on ranks:\n${explain(round)}")
+      val streamed = joins.head.left // prRound's build side is its right
+      assert(aqe.collect(streamed) { case e: ShuffleExchangeExec => e }.isEmpty
+        && aqe.collect(streamed) { case t: InMemoryTableScanExec => t }
+          .nonEmpty,
+        s"contrib side is re-shuffled every round:\n${explain(round)}")
+    } finally {
+      contrib.unpersist()
+      Seq(edges, ranks).foreach(operators.Materialize.free)
+    }
+  }
+
+  test("CC, star and LPA rounds hash-build on the O(V) frame") {
+    // each hinted round join builds the labels / min-neighbour side, never
+    // the edge side that grows with |E| (a sort-merge join would re-sort
+    // the edge frame every round)
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions._
+    val pairs = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 10L -> 11L, 11L -> 12L)
+      .toDF("a_id", "b_id")
+    val edges = operators.Dedup.ccEdges(pairs).localCheckpoint()
+    val labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")).localCheckpoint()
+    val cc = operators.Dedup.ccRound(edges, labels)
+    assert(hashJoins(cc).map(buildCols) == Seq(Set("dst", "dst_label")),
+      s"ccRound is not hash-built on the labels:\n${explain(cc)}")
+    val canon = pairs.select(greatest(col("a_id"), col("b_id")).as("hi"),
+      least(col("a_id"), col("b_id")).as("lo")).localCheckpoint()
+    // the lazy round plan repeats the large-star subtree, so count
+    // nothing: every join of both halves must be hash-built on (u, m)
+    val star = operators.Dedup.starRound(canon)
+    val starJoins = aqe.collect(star.queryExecution.executedPlan) {
+      case j: BaseJoinExec => j
+    }
+    assert(starJoins.nonEmpty && starJoins.forall {
+        case j: ShuffledHashJoinExec => buildCols(j) == Set("u", "m")
+        case _ => false
+      }, s"a starRound half is not hash-built on min-neighbour:\n" +
+        explain(star))
+    val nodes = labels.select(col("id").as("v"))
+    val adj = pairs.select(col("a_id").as("v"), col("b_id").as("u"))
+      .unionByName(pairs.select(col("b_id").as("v"), col("a_id").as("u")))
+      .unionByName(nodes.select(col("v"), col("v").as("u")))
+    val lpa = operators.Dedup.lpaRound(adj,
+      nodes.select(col("v"), col("v").as("lbl")))
+    assert(hashJoins(lpa).map(buildCols) == Seq(Set("u", "u_lbl")),
+      s"lpaRound is not hash-built on the labels:\n${explain(lpa)}")
+    Seq(edges, labels, canon).foreach(operators.Materialize.free)
+  }
+
+  test("ccEdges reads the materialized pairs: the pair subtree runs once") {
+    // connectedComponents materializes the pair frame before ccEdges'
+    // union reads it twice; over a lazy frame each union branch would
+    // re-run the pair subtree (at corpus scale, the LSH verify joins)
+    val s = spark
+    import org.apache.spark.sql.functions._
+    val evals = s.sparkContext.longAccumulator("pair-evals")
+    val seen = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val pairs = s.range(0, 20)
+      .select(seen(col("id")).as("a_id"), (col("id") + 1).as("b_id"))
+    val labels = operators.Dedup.connectedComponents(pairs).collect()
+    assert(labels.length == 21 && labels.forall(_.getLong(1) == 0L))
+    assert(evals.value == 20L,
+      s"pair subtree evaluated ${evals.value} times for 20 pairs")
+  }
+
+  test("pqTrainRound plans no SortAggregate") {
+    // the argmin is a per-row array expression and the (sub, code) rollup
+    // keeps fixed-width long-sum buffers: nothing sorts the exploded corpus
+    val s = spark
+    import org.apache.spark.sql.functions.col
+    val e = operators.Similarity.dropZeroNorm(s,
+      Tables(s, sfDir, "embeddings").select(col("vec_id"), col("embedding")))
+    val sv = operators.Similarity
+      .pqSubs(e, "vec_id", "embedding", 8, 8, "sv").localCheckpoint()
+    val seed = operators.Similarity.pqCodebook(s, e, 8, 8, 8)
+      .localCheckpoint()
+    val p = explain(operators.Similarity.pqTrainRound(s, sv, seed, 8))
+    assert(!p.contains("SortAggregate"), s"training round sorts:\n$p")
+    assert(p.contains("HashAggregate"), s"rollup is not hash-aggregated:\n$p")
+    Seq(sv, seed).foreach(operators.Materialize.free)
+  }
+
+  test("pcaPowerRound chains linearly: Exchanges grow by a constant") {
+    // each round references its predecessor once, so an n-round lazy
+    // chain (q_pca_power's 10 rounds run as one action) has a plan linear
+    // in n; a second reference would double the plan every round
+    val s = spark
+    import org.apache.spark.sql.functions._
+    val idx = s.range(1, 5).select(col("id").as("i"))
+    val covF = idx.crossJoin(idx.select(col("i").as("j")))
+      .select(col("i"), col("j"),
+        (when(col("i") === col("j"), lit(4000000L)).otherwise(lit(1000000L)))
+          .as("cov_micros"))
+      .localCheckpoint()
+    val v0 = idx.select(col("i").as("j"), lit(125000L).as("xm"))
+    def exchanges(n: Int): Int = {
+      val v = (1 to n).foldLeft(v0)((v, _) =>
+        operators.Similarity.pcaPowerRound(s, covF, v))
+      aqe.collect(v.queryExecution.executedPlan) { case e: Exchange => e }
+        .size
+    }
+    val counts = (1 to 4).map(exchanges)
+    val steps = counts.zip(counts.tail).map { case (a, b) => b - a }
+    assert(steps.forall(_ == steps.head) && steps.head > 0,
+      s"Exchange count per chain length 1..4 is not linear: $counts")
+    operators.Materialize.free(covF)
   }
 
   test("q_domain_mix collapses the corpus at the scan") {

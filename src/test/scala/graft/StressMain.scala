@@ -1086,7 +1086,7 @@ object StressMain {
           .withColumn("c_rk", row_number().over(cw))
           .filter(col("c_rk") <= 2)
           .select(col("q_id"), col("q_v"), col("c_id").as("bucket"))
-        Sim.assignWithCentroids(spark, corpus, cents)
+        Sim.assignByArray(spark, corpus, cents)
           .join(qp, Seq("bucket"))
           .filter(col("vec_id") % lit(vOff) =!= col("q_id"))
           .withColumn("cos",
