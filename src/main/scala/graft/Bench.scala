@@ -83,8 +83,7 @@ object Bench {
     val in = s"$ref/input_large"
     if (!new java.io.File(in).isDirectory) Map.empty
     else {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-bench-mr").resolve("out").toString
+      val out = s"${operators.Scratch.fresh("bench-mr")}/out"
       val t0 = System.nanoTime()
       try {
         operators.MapReduce.run(spark, operators.JobSpec(

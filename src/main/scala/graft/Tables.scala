@@ -91,11 +91,18 @@ object Tables {
     * matters (the epoch_us(CAST(ts AS TIMESTAMP)) convention), which both
     * encodings satisfy.
     */
-  def events(spark: SparkSession, dir: String): DataFrame = {
+  def events(spark: SparkSession, dir: String): DataFrame =
+    readEvents(spark)(spark.read.parquet(s"$dir/events.parquet"))
+
+  /** Pin nanosAsLong (see [[events]]), then normalize the events frame
+    * `read` builds — the batch loader and the streaming file source
+    * both read through here. */
+  private[graft] def readEvents(spark: SparkSession)(
+      read: => DataFrame): DataFrame = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     if (!spark.conf.getOption(key).contains("true"))
       spark.conf.set(key, "true")
-    normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    normalizeTs(read)
   }
 
   /** Normalize the `ts` column to session-zone TimestampType, whatever

@@ -13,18 +13,9 @@ import graft.{Q, Tables}
   */
 object Complex {
 
-  /** Deterministic scratch dir for the sink round-trip queries — the
-    * per-pid root is registered with the shared shutdown-hook cleanup
-    * (Scratch), so repeated bench/test JVMs don't accumulate table
-    * copies under /tmp. */
-  private lazy val scratchRoot: String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/" +
-      s"graft-sink-${ProcessHandle.current.pid}"
-    Scratch.register(root)
-    root
-  }
-
-  private def scratch(name: String): String = s"$scratchRoot/$name"
+  /** Deterministic scratch dir for the sink round-trip queries, under
+    * the JVM's [[Scratch]] root. */
+  private def scratch(name: String): String = Scratch.path(s"sink/$name")
 
   val queries: Seq[Q] = Seq(
 

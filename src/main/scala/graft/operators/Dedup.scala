@@ -253,12 +253,7 @@ object Dedup {
         if (sc.getCheckpointDir.isEmpty)
           sc.setCheckpointDir(df.sparkSession.conf
             .getOption("spark.graft.cc.checkpointDir")
-            .getOrElse {
-              val tmp = java.nio.file.Files
-                .createTempDirectory("graft-cc-ckpt").toString
-              Scratch.register(tmp)
-              tmp
-            })
+            .getOrElse(Scratch.fresh("cc-ckpt")))
         if (round % n == 0) df.checkpoint()
         else df.persist()
       case None => df.localCheckpoint()
@@ -1662,7 +1657,7 @@ object Dedup {
   // (O(batches²) over the stream's life) and the classic small-files
   // blow-up, so every `compactEvery` batches an idempotent compaction
   // generation merges all committed per-batch dirs into one consolidated
-  // dir per state kind (see [[compactCorpusState]]); readers see ≤
+  // dir per state kind (see [[compactStateKinds]]); readers see ≤
   // compactEvery+1 dirs per kind at any stream age. Its exactly-once is
   // proven by the same kill grammar as the batch writes — StreamKillMain
   // phases corpuscompactkill (halt with a consolidated dir written but
@@ -1824,27 +1819,19 @@ object Dedup {
   private[graft] def compactionPartitions(srcBytes: Long): Int =
     math.max(1L, math.min(4096L, srcBytes / (128L << 20))).toInt
 
-  /** Idempotent compaction generation: merge every per-batch state dir
-    * with id ≤ `w` (plus the previous consolidated dir, if any) into one
-    * consolidated `c{w}` dir per state kind, then sweep the merged
-    * sources. Runs inside the foreachBatch body of batch w+1, so every
-    * merged id is a COMMITTED batch whose content is final (replays only
-    * ever rewrite the one uncommitted batch). Crash-safe by the marker
-    * discipline: the marker is created only after the overwrite-mode
-    * parquet job returns, sources are deleted only after the marker
-    * exists, and a replayed batch re-enters here with the same w — a
-    * markerless c-dir rebuilds from the still-present sources, a marked
-    * one skips straight to finishing the sweep. */
-  private def compactCorpusState(s: SparkSession, stateRoot: String,
-      w: Long): Unit =
-    compactStateKinds(s, stateRoot, w,
-      Seq("hash", "sh", "band", "s4", "counts"))
-
-  /** The generation-compaction body behind [[compactCorpusState]],
-    * parameterized on the state KINDS so any foreachBatch operator with
-    * the dir-per-batch layout reuses the same marker/sweep grammar (the
-    * ANN index stream's cents/stats/dims state is the second user —
-    * r17 verdict item 4). */
+  /** Idempotent compaction generation: for each state kind, merge every
+    * per-batch state dir with id ≤ `w` (plus the previous consolidated
+    * dir, if any) into one consolidated `c{w}` dir, then sweep the merged
+    * sources. Runs inside the foreachBatch body of batch w+1 (see
+    * [[startChunkStream]]), so every merged id is a COMMITTED batch whose
+    * content is final (replays only ever rewrite the one uncommitted
+    * batch). Crash-safe by the marker discipline: the marker is created
+    * only after the overwrite-mode parquet job returns, sources are
+    * deleted only after the marker exists, and a replayed batch re-enters
+    * here with the same w — a markerless c-dir rebuilds from the
+    * still-present sources, a marked one skips straight to finishing the
+    * sweep. Shared by every foreachBatch operator with the dir-per-batch
+    * layout (the corpus stream and the ANN index stream). */
   private[graft] def compactStateKinds(s: SparkSession, stateRoot: String,
       w: Long, kinds: Seq[String]): Unit =
     for (kind <- kinds) {
@@ -1890,14 +1877,9 @@ object Dedup {
     }
 
   /** One micro-batch of the incremental curation (driver-side foreachBatch
-    * body — every frame operation in here is a distributed Spark job).
-    * Every `compactEvery` batches the accumulated state compacts first
-    * (watermark = bid-1: strictly committed ids only, so a replay of THIS
-    * batch can still assemble its prior from the surviving dirs). */
-  private[graft] def corpusStreamBatch(s: SparkSession, stateRoot: String,
-      batch: DataFrame, bid: Long, compactEvery: Int): Unit = {
-    if (compactEvery > 0 && bid > 0 && bid % compactEvery == 0)
-      compactCorpusState(s, stateRoot, bid - 1)
+    * body — every frame operation in here is a distributed Spark job). */
+  private def corpusStreamBatch(s: SparkSession, stateRoot: String,
+      batch: DataFrame, bid: Long): Unit = {
     val d0b = corpusD0(batch).localCheckpoint()
     val s1b = d0b.filter(col("n_tokens") >= 12)
     val s2b = corpusQuality(s1b).localCheckpoint()
@@ -1975,26 +1957,41 @@ object Dedup {
     })
   }
 
-  /** Start the curation stream over a staged feed: one chunk file per
-    * micro-batch (AvailableNow drains everything then stops), state and
-    * checkpoint under `scratch`. Restartable: the same scratch resumes
-    * from the file-source offset log, replaying at most the one
-    * uncommitted batch — whose state writes are idempotent. */
-  private[graft] def startCorpusStream(s: SparkSession, feedDir: String,
-      scratch: String, compactEvery: Int = 4)
+  /** Start a foreachBatch stream over a staged chunk feed: one chunk
+    * file per micro-batch (AvailableNow drains everything then stops),
+    * state under `$scratch/state`, checkpoint under `$scratch/checkpoint`.
+    * Every `compactEvery` batches the state `kinds` compact before
+    * `batch` runs (watermark = bid-1: strictly committed ids only, so a
+    * replay of THIS batch can still assemble its prior from the
+    * surviving dirs). Restartable: the same scratch resumes from the
+    * file-source offset log, replaying at most the one uncommitted batch
+    * — whose state writes are idempotent. */
+  private[graft] def startChunkStream(s: SparkSession, feedDir: String,
+      scratch: String, compactEvery: Int, kinds: Seq[String])(
+      batch: (SparkSession, String, DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    val stateRoot = s"$scratch/state"
     val schema = s.read.parquet(feedDir).schema // footer only
     s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$feedDir/b*.parquet")
       .writeStream
-      .foreachBatch((b: DataFrame, bid: Long) =>
-        corpusStreamBatch(b.sparkSession, s"$scratch/state", b, bid,
-          compactEvery))
+      .foreachBatch { (b: DataFrame, bid: Long) =>
+        if (compactEvery > 0 && bid > 0 && bid % compactEvery == 0)
+          compactStateKinds(b.sparkSession, stateRoot, bid - 1, kinds)
+        batch(b.sparkSession, stateRoot, b, bid)
+      }
       .option("checkpointLocation", s"$scratch/checkpoint")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
   }
+
+  /** Start the curation stream over a staged feed ([[startChunkStream]]). */
+  private[graft] def startCorpusStream(s: SparkSession, feedDir: String,
+      scratch: String, compactEvery: Int = 4)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    startChunkStream(s, feedDir, scratch, compactEvery,
+      Seq("hash", "sh", "band", "s4", "counts"))(corpusStreamBatch)
 
   /** Assemble the pipeline report from the accumulated state: stages 0-4
     * are sums of the per-batch counts (each batch's verdicts are final —

@@ -39,8 +39,8 @@ object Joins {
     * to the catalog. CONTRACT: the data under `d` is immutable for the
     * process lifetime (the norm for curated parquet datasets) — a
     * pipeline that rewrites its inputs in place must drop the tables
-    * first, as with any materialized asset. A shutdown hook removes this
-    * process's scratch dirs. */
+    * first, as with any materialized asset. The table dirs live under
+    * the JVM's [[Scratch]] root, removed at exit. */
   def bucketedOrdersCustomer(s: SparkSession, d: String):
       (DataFrame, DataFrame) = synchronized {
     // synchronized: concurrent Engine.submit-style callers in one JVM
@@ -49,7 +49,7 @@ object Joins {
       java.security.MessageDigest.getInstance("MD5")
         .digest(d.getBytes("UTF-8"))
         .take(6).map(b => f"$b%02x").mkString
-    val base = s"${System.getProperty("java.io.tmpdir")}/graft-bucketed-$tag"
+    val base = Scratch.path(s"bucketed-$tag")
     val (tOrders, tCustomer) =
       (s"graft_orders_by_cust_$tag", s"graft_customer_by_cust_$tag")
     if (!s.catalog.tableExists(tOrders)) {
@@ -68,7 +68,6 @@ object Joins {
         .bucketBy(8, "c_custkey").sortBy("c_custkey")
         .saveAsTable(tCustomer)
     }
-    Scratch.register(base)
     (s.table(tOrders), s.table(tCustomer))
   }
 

@@ -50,25 +50,29 @@ object Materialize {
     * from driver code are only sequential because the driver calls
     * them sequentially, so a set of jobs over already-materialized
     * inputs pays ~max(job) instead of Σ(job) when submitted from a
-    * pool. The FIRST failure is rethrown (unwrapped) after every task
-    * was scheduled; callers rely on any failure propagating before
-    * they commit downstream state (e.g. a streaming offset log). */
+    * pool. Every action finishes before this returns or throws: a
+    * failed streaming batch may be replayed into the same state dirs,
+    * so no sibling write may still be running once the failure is
+    * seen. The first failure in submission order is then rethrown
+    * (unwrapped); callers rely on any failure propagating before they
+    * commit downstream state (e.g. a streaming offset log). */
   private[graft] def overlap(actions: Seq[() => Unit]): Unit =
     if (actions.sizeIs <= 1) actions.foreach(_.apply())
     else {
       val pool =
         java.util.concurrent.Executors.newFixedThreadPool(actions.size)
-      try {
-        actions.map { a =>
+      val futures =
+        try actions.map { a =>
           pool.submit(new java.util.concurrent.Callable[Unit] {
             override def call(): Unit = a()
           })
-        }.foreach { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause }
-        }
-      } finally pool.shutdown()
+        } finally pool.shutdown()
+      val failures = futures.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: java.util.concurrent.ExecutionException =>
+          Some(e.getCause) }
+      }
+      failures.headOption.foreach(e => throw e)
     }
 
   def free(df: DataFrame): Unit = {

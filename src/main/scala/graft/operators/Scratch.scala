@@ -1,30 +1,32 @@
 package graft.operators
 
-/** Shared per-JVM scratch-directory registry: every directory registered
-  * here is recursively deleted by ONE shutdown hook. The sink round-trips
-  * (Complex), the bucketed storage tables (Joins), and the streaming
-  * sink/checkpoint dirs (Streams) all write full table copies under
-  * /tmp — without a registered cleanup each bench/test JVM would leave
-  * them behind permanently.
+/** The JVM's one scratch root: a private `Files.createTempDirectory`
+  * directory, created on first use and recursively deleted by one
+  * shutdown hook. The sink round-trips (Complex), the bucketed storage
+  * tables (Joins), the streaming sink/checkpoint/state dirs (Streams),
+  * the default CC checkpoint dir (Dedup) and the bench's MapReduce
+  * output all live under it, so no bench/test JVM leaves table copies
+  * behind and no site writes to a predictable path in a shared /tmp.
   */
 object Scratch {
 
-  private val dirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private lazy val hook: Unit = {
+  private lazy val root: java.nio.file.Path = {
+    val r = java.nio.file.Files.createTempDirectory("graft-scratch")
     sys.addShutdownHook {
-      dirs.forEach { dir =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(new java.io.File(dir))
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete(); ()
       }
+      rm(r.toFile)
     }
-    ()
+    r
   }
 
-  /** Register `dir` for recursive best-effort deletion at JVM exit. */
-  def register(dir: String): Unit = { dirs.add(dir); hook }
+  /** A fresh, uniquely named directory under the root. */
+  def fresh(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(root, prefix).toString
+
+  /** A deterministic path under the root (not created): the same `name`
+    * resolves to the same path for the life of the JVM. */
+  def path(name: String): String = root.resolve(name).toString
 }

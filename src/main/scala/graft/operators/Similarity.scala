@@ -855,7 +855,6 @@ object Similarity {
   // -------------------------------------------------------------------
 
   private[graft] val AnnCentroids = 8
-  private val AnnStateKinds = Seq("cents", "stats", "dims")
 
   /** Stage the embeddings table as vec_id-ordered chunk files (the
     * stageCorpusFeed machinery on (vec_id, embedding)). */
@@ -865,13 +864,9 @@ object Similarity {
       embs(s, d).select("vec_id", "embedding"), "vec_id", nChunks, feedDir)
 
   /** One micro-batch of the incremental index maintenance (foreachBatch
-    * body). Batch 0 additionally freezes + persists the centroid frame;
-    * compaction runs first every `compactEvery` batches (watermark =
-    * bid-1, strictly committed ids — the corpus stream's rule). */
-  private[graft] def annIndexStreamBatch(s: SparkSession, stateRoot: String,
-      batch: DataFrame, bid: Long, compactEvery: Int): Unit = {
-    if (compactEvery > 0 && bid > 0 && bid % compactEvery == 0)
-      Dedup.compactStateKinds(s, stateRoot, bid - 1, AnnStateKinds)
+    * body). Batch 0 additionally freezes + persists the centroid frame. */
+  private def annIndexStreamBatch(s: SparkSession, stateRoot: String,
+      batch: DataFrame, bid: Long): Unit = {
     def put(kind: String, df: DataFrame): Unit =
       df.write.mode("overwrite").parquet(f"$stateRoot/$kind/b$bid%06d")
     val e0 = dropZeroNorm(s, batch.select(col("vec_id"), col("embedding")))
@@ -917,24 +912,12 @@ object Similarity {
   }
 
   /** Start the index-maintenance stream over a staged embedding feed
-    * (one chunk file per micro-batch, AvailableNow). Restartable from
-    * the same scratch: the file-source offset log replays at most the
-    * one uncommitted batch, whose state writes are idempotent. */
+    * (Dedup.startChunkStream). */
   private[graft] def startAnnIndexStream(s: SparkSession, feedDir: String,
       scratch: String, compactEvery: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = s.read.parquet(feedDir).schema // footer only
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$feedDir/b*.parquet")
-      .writeStream
-      .foreachBatch((b: DataFrame, bid: Long) =>
-        annIndexStreamBatch(b.sparkSession, s"$scratch/state", b, bid,
-          compactEvery))
-      .option("checkpointLocation", s"$scratch/checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    Dedup.startChunkStream(s, feedDir, scratch, compactEvery,
+      Seq("cents", "stats", "dims"))(annIndexStreamBatch)
 
   /** Assemble the index-health report from the accumulated state:
     * (bucket, n_vecs, mean_cos, min_cos, drift_cos) — occupancy,

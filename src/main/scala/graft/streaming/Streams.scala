@@ -1,13 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.jdk.CollectionConverters._
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
+  KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
-  TimerValues, Trigger, ValueState}
+  GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery,
+  TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.Q
-import graft.operators.Arith
+import graft.operators.{Arith, Scratch}
 
 /** Structured Streaming surface over the `events` stream shape
   * (event_id, ts, user_id, event_type, value).
@@ -78,12 +82,19 @@ object Streams {
         col("purchase_id"), col("click_ts"), col("purchase_ts"))
   }
 
-  case class Ev(user_id: Long, ts_us: Long, event_id: Long)
+  /** An event a per-user state machine folds: keyed by `user_id`, folded
+    * in (ts_us, event_id) order. */
+  sealed trait UserEvent {
+    def user_id: Long
+    def ts_us: Long
+    def event_id: Long
+  }
+  case class Ev(user_id: Long, ts_us: Long, event_id: Long) extends UserEvent
   case class SessionState(startUs: Long, endUs: Long, n: Long)
   case class Session(user_id: Long, n_events: Long, start_us: Long,
       end_us: Long)
   case class FEv(user_id: Long, ts_us: Long, event_id: Long,
-      event_type: String)
+      event_type: String) extends UserEvent
   /** Per-user funnel clocks; −1 = stage not reached. */
   case class FunnelState(t1: Long, t2: Long, t3: Long)
   case class FunnelUser(user_id: Long, s1: Boolean, s2: Boolean,
@@ -97,202 +108,132 @@ object Streams {
   /** 30-minute session gap, in microseconds. */
   val GapUs: Long = 1800L * 1000000
 
-  /** Stateful sessionization with flatMapGroupsWithState: one state object
-    * (the open session) per user; a gap > 30 min closes and emits the
-    * previous session. Batch-equivalent: q_sessionize (operators.Complex).
-    *
-    * State is BOUNDED: an event-time timeout fires once the watermark
-    * passes (session end + gap), emitting the idle session and reclaiming
-    * the user's state — without it, the last open session per user would
-    * never emit and churned users would leak state forever.
-    *
-    * Within a micro-batch the group iterator is not time-ordered, so events
-    * sort by (ts_us, event_id) first. ACROSS batches the watermark only
-    * bounds lateness to the 30-minute horizon — it does not prevent a
-    * within-horizon late event from arriving after the session has
-    * advanced — so the merge extends the session with min(start)/max(end)
-    * rather than overwriting the end (an overwrite would let a late event
-    * REGRESS the session end and mis-split on the next gap test).
-    */
-  def sessionize(events: Dataset[Ev]): Dataset[Session] = {
-    val sp = events.sparkSession
-    import sp.implicits._
-    val isStreaming = events.isStreaming // timeouts only exist on streams
-    events.toDF()
-      .withColumn("event_ts", timestamp_micros(col("ts_us")))
-      .withWatermark("event_ts", "30 minutes")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, it: Iterator[Ev], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            // watermark passed end + gap: the session can no longer grow
-            val out = state.getOption
-              .map(s => Session(userId, s.n, s.startUs, s.endUs))
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = it.toSeq.sortBy(e => (e.ts_us, e.event_id))
-            val closed = Seq.newBuilder[Session]
-            var open = state.getOption
-            sorted.foreach { e =>
-              open match {
-                case Some(s) if e.ts_us - s.endUs <= GapUs =>
-                  open = Some(SessionState(math.min(s.startUs, e.ts_us),
-                    math.max(s.endUs, e.ts_us), s.n + 1))
-                case Some(s) =>
-                  closed += Session(userId, s.n, s.startUs, s.endUs)
-                  open = Some(SessionState(e.ts_us, e.ts_us, 1))
-                case None =>
-                  open = Some(SessionState(e.ts_us, e.ts_us, 1))
-              }
-            }
-            open.foreach { s =>
-              state.update(s)
-              // clamp: a backlog replay can put end+gap at/under the
-              // watermark, which setTimeoutTimestamp rejects — the session
-              // then times out on the very next no-data batch instead
-              if (isStreaming)
-                state.setTimeoutTimestamp(math.max(
-                  s.endUs / 1000 + GapUs / 1000,
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            closed.result().iterator
-          }
-      }
+  /** One per-user stateful operator as a pure value, independent of the
+    * Spark API that runs it: [[viaGroupState]] runs it on
+    * flatMapGroupsWithState, [[viaProcessor]] on transformWithState, so
+    * the two arms of each operator cannot drift apart. Timeout instants
+    * follow the flatMapGroupsWithState convention: a state times out once
+    * the watermark (ms) is strictly past its instant. */
+  private trait Machine[E, S, O] extends Serializable {
+    /** The state of a user with none stored. */
+    def empty: S
+    /** Fold one batch of a user's events, sorted by (ts_us, event_id):
+      * the new state and the rows to emit. */
+    def fold(user: Long, s: S, events: Seq[E]): (S, Seq[O])
+    /** The timeout instant (ms) of `s` under watermark `wmMs`. */
+    def timeoutMs(s: S, wmMs: Long): Long
+    /** `s` timed out: the rows to emit, and the state to keep (re-armed)
+      * or None to drop it. */
+    def expire(user: Long, s: S, wmMs: Long): (Seq[O], Option[S])
   }
 
-  /** [[sessionize]]'s exact semantics re-expressed on Spark 4's
-    * transformWithState API — the arbitrary-state operator that replaces
-    * flatMapGroupsWithState (SPARK-40434): explicit named ValueState
-    * instead of the single implicit GroupState, explicit event-time
-    * TIMERS instead of setTimeoutTimestamp (re-armed per batch: stale
-    * timers deleted, the new one clamped past the current watermark —
-    * the same clamp the fmgws arm needs), and a separate
-    * handleExpiredTimer callback instead of the hasTimedOut branch.
-    * Requires the RocksDB state-store provider (a transformWithState
-    * constraint — callers set it; the registered row does).
+  /** Sessionization: one open session per user; a gap > 30 min closes and
+    * emits the previous session. Batch-equivalent: q_sessionize
+    * (operators.Complex).
     *
-    * Kept semantically IDENTICAL to [[sessionize]] — same in-batch
-    * (ts_us, event_id) sort, same min/max late-merge, same gap rule, same
-    * timer arithmetic — and held to it twice over: StreamingSpec drives
-    * both arms on one planted multi-batch feed, and the registered row
-    * q_stream_sessionize_tws verifies against q_stream_sessionize's
-    * DuckDB oracle VERBATIM, timeout boundary included. */
-  private class SessionTws extends StatefulProcessor[Long, Ev, Session] {
-    @transient private var open: ValueState[SessionState] = _
+    * State is bounded: the timeout fires once the watermark passes
+    * (session end + gap), emitting the idle session and reclaiming the
+    * user's state — otherwise the last open session per user would never
+    * emit and churned users would leak state.
+    *
+    * The watermark bounds lateness only to the 30-minute horizon, so a
+    * within-horizon late event can arrive after the session advanced: the
+    * fold extends with min(start)/max(end), since overwriting the end
+    * would let a late event regress it and mis-split on the next gap. */
+  private object SessionMachine
+      extends Machine[Ev, SessionState, Session] {
+    /** n = 0: no open session. */
+    val empty: SessionState = SessionState(0L, 0L, 0L)
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState[SessionState]("open",
-        Encoders.product[SessionState], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[Ev],
-        tv: TimerValues): Iterator[Session] = {
-      val sorted = rows.toSeq.sortBy(e => (e.ts_us, e.event_id))
+    def fold(user: Long, s0: SessionState, events: Seq[Ev])
+        : (SessionState, Seq[Session]) = {
       val closed = Seq.newBuilder[Session]
-      var cur = if (open.exists()) Some(open.get()) else None
-      sorted.foreach { e =>
-        cur match {
-          case Some(s) if e.ts_us - s.endUs <= GapUs =>
-            cur = Some(SessionState(math.min(s.startUs, e.ts_us),
-              math.max(s.endUs, e.ts_us), s.n + 1))
-          case Some(s) =>
-            closed += Session(userId, s.n, s.startUs, s.endUs)
-            cur = Some(SessionState(e.ts_us, e.ts_us, 1))
-          case None =>
-            cur = Some(SessionState(e.ts_us, e.ts_us, 1))
+      val s = events.foldLeft(s0) { (s, e) =>
+        if (s.n > 0 && e.ts_us - s.endUs <= GapUs)
+          SessionState(math.min(s.startUs, e.ts_us),
+            math.max(s.endUs, e.ts_us), s.n + 1)
+        else {
+          if (s.n > 0) closed += Session(user, s.n, s.startUs, s.endUs)
+          SessionState(e.ts_us, e.ts_us, 1)
         }
       }
-      cur.foreach { s =>
-        open.update(s)
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        // +1: the two APIs disagree at the watermark BOUNDARY — fmgws
-        // fires a timeout iff ts < watermark (strict), but tws expires
-        // timers iff ts <= watermark (TimerStateImpl's expiry iterator
-        // stops only when ts > watermark). Registering at fmgwsTs + 1
-        // makes the tws firing rule (fmgwsTs + 1 <= wm) exactly the
-        // fmgws rule (fmgwsTs < wm), so both arms satisfy the shared
-        // oracle's strict-inequality timeout law at the boundary too.
-        getHandle.registerTimer(math.max(s.endUs / 1000 + GapUs / 1000,
-          tv.getCurrentWatermarkInMs() + 1) + 1)
-      }
-      closed.result().iterator
+      (s, closed.result())
     }
 
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[Session] = {
-      val out =
-        if (open.exists()) {
-          val s = open.get()
-          Iterator.single(Session(userId, s.n, s.startUs, s.endUs))
-        } else Iterator.empty
-      open.clear()
-      out
-    }
+    // clamp: a backlog replay can put end+gap at/under the watermark,
+    // which setTimeoutTimestamp rejects — the session then times out on
+    // the very next no-data batch instead
+    def timeoutMs(s: SessionState, wmMs: Long): Long =
+      math.max(s.endUs / 1000 + GapUs / 1000, wmMs + 1)
+
+    def expire(user: Long, s: SessionState, wmMs: Long)
+        : (Seq[Session], Option[SessionState]) =
+      (Seq(Session(user, s.n, s.startUs, s.endUs)), None)
   }
 
-  /** The transformWithState sessionizer — see [[SessionTws]]. */
-  def sessionizeTws(events: Dataset[Ev]): Dataset[Session] = {
-    val sp = events.sparkSession
-    import sp.implicits._
-    events.toDF()
-      .withColumn("event_ts", timestamp_micros(col("ts_us")))
-      .withWatermark("event_ts", "30 minutes")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionTws, TimeMode.EventTime(),
-        OutputMode.Append())
+  /** Ordered-funnel snapshot: three stage clocks per user, advanced per
+    * event by [[advanceFunnel]], emitted and dropped when the watermark
+    * overtakes the user (the timeout sits just above the current
+    * watermark). Batch-equivalent: q_funnel (operators.Complex) — stage
+    * k's instant is a MIN over events strictly later than stage k−1's
+    * clock, and the (ts_us, event_id)-ordered fold makes the running
+    * first match exactly that MIN. Cross-batch exactness therefore needs
+    * event-time-ordered batches, which is why the registered rows drain
+    * in one data batch and enforce it. */
+  private object FunnelSnapshotMachine
+      extends Machine[FEv, FunnelState, FunnelUser] {
+    val empty: FunnelState = FunnelState(-1L, -1L, -1L)
+
+    def fold(user: Long, s: FunnelState, events: Seq[FEv])
+        : (FunnelState, Seq[FunnelUser]) =
+      (events.foldLeft(s)(advanceFunnel), Nil)
+
+    def timeoutMs(s: FunnelState, wmMs: Long): Long = wmMs + 1
+
+    def expire(user: Long, s: FunnelState, wmMs: Long)
+        : (Seq[FunnelUser], Option[FunnelState]) =
+      (Seq(FunnelUser(user, s.t1 >= 0, s.t2 >= 0, s.t3 >= 0)), None)
   }
 
-  /** Streaming ordered-funnel state machine: one [[FunnelState]] of three
-    * stage clocks per user, advanced per event, SNAPSHOT-emitted when the
-    * watermark overtakes the user (event-time timeout just above the
-    * current watermark — the "emit the funnel as of the watermark"
-    * pattern; on a live deployment every advancing watermark re-arms the
-    * timeout, so each user re-emits at most once per idle period).
-    * Batch-equivalent: q_funnel (operators.Complex) — stage k's earliest
-    * qualifying instant is a MIN over events strictly later than stage
-    * k−1's clock, and processing the group in (ts_us, event_id) order
-    * makes the running first-match EXACTLY that MIN: when a click is
-    * examined, every earlier-ts signup has already set t1, and no later
-    * event can lower t1 below the click's ts. Cross-batch exactness
-    * therefore needs event-time-ordered batches — the registered row
-    * drains AvailableNow in ONE batch and enforces that loudly, the
-    * q_stream_sessionize contract. State is three longs per user, bounded
-    * by ACTIVE USERS and reclaimed at emission. */
-  def funnelSnapshot(events: Dataset[FEv]): Dataset[FunnelUser] = {
-    val sp = events.sparkSession
-    import sp.implicits._
-    events.toDF()
-      .withColumn("event_ts", timestamp_micros(col("ts_us")))
-      .withWatermark("event_ts", "30 minutes")
-      .as[FEv]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelState, FunnelUser](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, it: Iterator[FEv], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) {
-            val out = state.getOption.map(s =>
-              FunnelUser(userId, s.t1 >= 0, s.t2 >= 0, s.t3 >= 0))
-            state.remove()
-            out.iterator
-          } else {
-            var s = state.getOption.getOrElse(FunnelState(-1L, -1L, -1L))
-            it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-              s = advanceFunnel(s, e)
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-            Iterator.empty
-          }
-      }
+  /** The live-deployment funnel: unlike the snapshot machine it RETAINS
+    * state across idle periods, so a user who returns after an idle flush
+    * still completes the funnel.
+    *  - delta emission: an idle flush emits a user only if the clocks
+    *    changed since the last emission (the first flush always emits),
+    *    so consumers see an append-only snapshot history per user and keep
+    *    the latest row;
+    *  - TTL reclaim: once the watermark passes last activity + `ttlUs`
+    *    the state is dropped (after a final emission if dirty), so state
+    *    is bounded by users active within the TTL;
+    *  - while retained, the timeout re-arms at watermark + 1: one state
+    *    read per retained user per watermark advance, the cost of TTL
+    *    expiry without a timer index. */
+  private final case class FunnelRetainedMachine(ttlUs: Long)
+      extends Machine[FEv, FunnelStateR, FunnelUser] {
+    val empty: FunnelStateR =
+      FunnelStateR(-1L, -1L, -1L, Long.MinValue, dirty = true)
+
+    def fold(user: Long, s0: FunnelStateR, events: Seq[FEv])
+        : (FunnelStateR, Seq[FunnelUser]) =
+      (events.foldLeft(s0) { (s, e) =>
+        val adv = advanceFunnel(FunnelState(s.t1, s.t2, s.t3), e)
+        FunnelStateR(adv.t1, adv.t2, adv.t3, math.max(s.lastUs, e.ts_us),
+          s.dirty || (adv.t1, adv.t2, adv.t3) != (s.t1, s.t2, s.t3))
+      }, Nil)
+
+    def timeoutMs(s: FunnelStateR, wmMs: Long): Long = wmMs + 1
+
+    def expire(user: Long, s: FunnelStateR, wmMs: Long)
+        : (Seq[FunnelUser], Option[FunnelStateR]) =
+      (if (s.dirty) Seq(FunnelUser(user, s.t1 >= 0, s.t2 >= 0, s.t3 >= 0))
+       else Nil,
+       if (wmMs >= s.lastUs / 1000 + ttlUs / 1000) None
+       else Some(s.copy(dirty = false)))
   }
 
   /** One event against the three stage clocks — strict ordering (each
     * stage's instant must be strictly later than the previous stage's),
-    * first qualifying instant wins. Shared by [[funnelSnapshot]] and
-    * [[funnelRetained]] so the two arms cannot drift apart. */
+    * first qualifying instant wins. Shared by both funnel machines. */
   private def advanceFunnel(s: FunnelState, e: FEv): FunnelState =
     e.event_type match {
       case "signup" if s.t1 < 0 => s.copy(t1 = e.ts_us)
@@ -303,199 +244,139 @@ object Streams {
       case _ => s
     }
 
-  /** The LIVE-deployment arm of [[funnelSnapshot]] (the r11 self-review
-    * follow-up): where the snapshot arm emits-and-REMOVES on each idle
-    * flush — correct for a single-drain registered row, but a user who
-    * returns after an idle period restarts a fresh funnel — this arm
-    * RETAINS state across idle periods, so a signup→click user who
-    * purchases a week later still completes the funnel. Live-stream
-    * semantics that come with retention:
-    *  - delta emission: an idle flush emits a user's snapshot only if
-    *    the stage clocks CHANGED since the last emission (first flush
-    *    always emits), so consecutive no-progress flushes are silent and
-    *    a user emits at most once per idle period with progress.
-    *    Downstream consumers therefore see an append-only snapshot
-    *    HISTORY per user and must dedupe by keeping the latest row per
-    *    user (in event-time order of arrival);
-    *  - TTL reclaim: once the watermark passes last activity + `ttlUs`
-    *    the user's state is dropped (with a final emission if dirty), so
-    *    state is bounded by users ACTIVE WITHIN THE TTL window, not by
-    *    all users ever seen — the retention/boundedness trade is an
-    *    explicit config knob instead of the snapshot arm's
-    *    reset-on-flush;
-    *  - while retained, every timeout re-arms at watermark+1 — one
-    *    state read per retained user per watermark advance is the
-    *    bookkeeping cost of TTL expiry without a timer index.
-    */
-  def funnelRetained(events: Dataset[FEv], ttlUs: Long): Dataset[FunnelUser] = {
-    val sp = events.sparkSession
-    import sp.implicits._
+  private implicit def productEncoder[T <: Product : TypeTag]: Encoder[T] =
+    Encoders.product[T]
+
+  /** The 30-minute event-time watermark and per-user grouping every
+    * machine runs under. */
+  private def byUser[E <: UserEvent : Encoder](events: Dataset[E])
+      : KeyValueGroupedDataset[Long, E] =
     events.toDF()
       .withColumn("event_ts", timestamp_micros(col("ts_us")))
       .withWatermark("event_ts", "30 minutes")
-      .as[FEv]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelStateR, FunnelUser](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, it: Iterator[FEv], state: GroupState[FunnelStateR]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            val out =
-              if (s.dirty)
-                Iterator.single(FunnelUser(userId, s.t1 >= 0, s.t2 >= 0,
-                  s.t3 >= 0))
-              else Iterator.empty
-            val expired = state.getCurrentWatermarkMs() >=
-              s.lastUs / 1000 + ttlUs / 1000
-            if (expired) state.remove()
-            else {
-              state.update(s.copy(dirty = false))
-              state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
+      .as[E]
+      .groupByKey(_.user_id)(Encoders.scalaLong)
+
+  /** Within a micro-batch the group iterator is not time-ordered. */
+  private def sorted[E <: UserEvent](events: Iterator[E]): Seq[E] =
+    events.toSeq.sortBy(e => (e.ts_us, e.event_id))
+
+  /** Run `m` on flatMapGroupsWithState with event-time timeouts.
+    * `armOnBatch = false` skips arming the timeout on batch input, where
+    * timeouts never fire. */
+  private def viaGroupState[E <: UserEvent : Encoder, S : Encoder,
+      O : Encoder](events: Dataset[E], m: Machine[E, S, O],
+      armOnBatch: Boolean = true): Dataset[O] = {
+    val armTimeouts = armOnBatch || events.isStreaming
+    byUser(events).flatMapGroupsWithState[S, O](
+      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+      (user: Long, it: Iterator[E], state: GroupState[S]) =>
+        if (state.hasTimedOut) state.getOption match {
+          case Some(s) =>
+            val wm = state.getCurrentWatermarkMs()
+            val (out, keep) = m.expire(user, s, wm)
+            keep match {
+              case Some(k) =>
+                state.update(k)
+                state.setTimeoutTimestamp(m.timeoutMs(k, wm))
+              case None => state.remove()
             }
-            out
-          } else {
-            var s = state.getOption.getOrElse(
-              FunnelStateR(-1L, -1L, -1L, Long.MinValue, dirty = true))
-            it.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-              val adv = advanceFunnel(FunnelState(s.t1, s.t2, s.t3), e)
-              s = FunnelStateR(adv.t1, adv.t2, adv.t3,
-                math.max(s.lastUs, e.ts_us),
-                s.dirty || (adv.t1, adv.t2, adv.t3) != (s.t1, s.t2, s.t3))
-            }
-            state.update(s)
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 1)
-            Iterator.empty
-          }
-      }
+            out.iterator
+          case None => Iterator.empty
+        } else {
+          val (s, out) =
+            m.fold(user, state.getOption.getOrElse(m.empty), sorted(it))
+          state.update(s)
+          if (armTimeouts)
+            state.setTimeoutTimestamp(
+              m.timeoutMs(s, state.getCurrentWatermarkMs()))
+          out.iterator
+        }
+    }
   }
 
-  /** [[funnelRetained]] re-expressed on transformWithState, the same
-    * dual-arm discipline as [[SessionTws]]/[[sessionizeTws]]: identical
-    * fold ([[advanceFunnel]] in (ts_us, event_id) order), identical
-    * delta-emission and TTL-reclaim rules, and the same +1 timer shift —
-    * fmgws fires a timeout iff ts < watermark while tws expires timers
-    * iff ts <= watermark, so every timer registers at fmgwsTs + 1 to land
-    * on the same boundary. StreamingSpec drives both arms through one
-    * planted 4-batch feed (idle flush → post-idle return → TTL reclaim)
-    * and requires emission-for-emission equality.
-    *
-    * With [[SessionTws]] this covers both arbitrary-state APIs production
-    * code meets on Spark 4 — session-style state (emit on close) and
-    * machine-style state (delta snapshots with TTL) — each checked
-    * against its flatMapGroupsWithState twin. */
-  private class FunnelRetainedTws(ttlUs: Long)
-      extends StatefulProcessor[Long, FEv, FunnelUser] {
-    @transient private var st: ValueState[FunnelStateR] = _
+  /** Runs a [[Machine]] on transformWithState: one named ValueState and
+    * one event-time timer per user (stale timers deleted on each input
+    * batch). transformWithState requires the RocksDB state store — the
+    * caller sets [[RocksDbProvider]]. */
+  private final class MachineProcessor[E <: UserEvent, S, O](
+      m: Machine[E, S, O], stateName: String, stateEnc: Encoder[S])
+      extends StatefulProcessor[Long, E, O] {
+    @transient private var st: ValueState[S] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelStateR]("funnel",
-        Encoders.product[FunnelStateR], TTLConfig.NONE)
+      st = getHandle.getValueState[S](stateName, stateEnc, TTLConfig.NONE)
 
-    override def handleInputRows(userId: Long, rows: Iterator[FEv],
-        tv: TimerValues): Iterator[FunnelUser] = {
-      var s = if (st.exists()) st.get()
-        else FunnelStateR(-1L, -1L, -1L, Long.MinValue, dirty = true)
-      rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-        val adv = advanceFunnel(FunnelState(s.t1, s.t2, s.t3), e)
-        s = FunnelStateR(adv.t1, adv.t2, adv.t3,
-          math.max(s.lastUs, e.ts_us),
-          s.dirty || (adv.t1, adv.t2, adv.t3) != (s.t1, s.t2, s.t3))
-      }
+    // +1: flatMapGroupsWithState times out iff instant < watermark, but
+    // transformWithState expires a timer iff instant <= watermark;
+    // registering one ms later puts both arms on the same strict boundary
+    private def armTimer(s: S, wmMs: Long): Unit =
+      getHandle.registerTimer(m.timeoutMs(s, wmMs) + 1)
+
+    override def handleInputRows(user: Long, rows: Iterator[E],
+        tv: TimerValues): Iterator[O] = {
+      val (s, out) =
+        m.fold(user, if (st.exists()) st.get() else m.empty, sorted(rows))
       st.update(s)
       getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(tv.getCurrentWatermarkInMs() + 1 + 1)
-      Iterator.empty
+      armTimer(s, tv.getCurrentWatermarkInMs())
+      out.iterator
     }
 
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[FunnelUser] = {
-      // a stray/duplicate timer delivered after st.clear() must be a
-      // no-op, not an NPE task failure (SessionTws has the same guard)
-      if (!st.exists()) return Iterator.empty
-      val s = st.get()
-      val out =
-        if (s.dirty)
-          Iterator.single(FunnelUser(userId, s.t1 >= 0, s.t2 >= 0,
-            s.t3 >= 0))
-        else Iterator.empty
-      val expired = tv.getCurrentWatermarkInMs() >=
-        s.lastUs / 1000 + ttlUs / 1000
-      if (expired) st.clear()
+    override def handleExpiredTimer(user: Long, tv: TimerValues,
+        info: ExpiredTimerInfo): Iterator[O] =
+      // a stray timer delivered after the state was cleared is a no-op,
+      // not an NPE task failure
+      if (!st.exists()) Iterator.empty
       else {
-        st.update(s.copy(dirty = false))
-        // the framework deletes the fired timer; re-arm for the next
-        // watermark advance (the fmgws wm+1 rule, +1-shifted)
-        getHandle.registerTimer(tv.getCurrentWatermarkInMs() + 1 + 1)
+        val (out, keep) = m.expire(user, st.get(), tv.getCurrentWatermarkInMs())
+        keep match {
+          // the framework deletes the fired timer; re-arm
+          case Some(k) =>
+            st.update(k)
+            armTimer(k, tv.getCurrentWatermarkInMs())
+          case None => st.clear()
+        }
+        out.iterator
       }
-      out
-    }
   }
 
-  /** [[funnelSnapshot]] re-expressed on transformWithState — the third
-    * dual-arm stateful pair (after [[SessionTws]] and
-    * [[FunnelRetainedTws]]): identical fold ([[advanceFunnel]] in
-    * (ts_us, event_id) order) and the same emit-and-REMOVE timeout
-    * semantics, with the +1 timer shift — fmgws fires a timeout iff
-    * ts < watermark while tws expires timers iff ts <= watermark, so the
-    * timer registers at fmgwsTs + 1 to land on the same boundary.
-    * Unlike the retained arm there is no TTL bookkeeping: the snapshot
-    * flush clears state, so an expired timer never re-arms. */
-  private class FunnelSnapshotTws
-      extends StatefulProcessor[Long, FEv, FunnelUser] {
-    @transient private var st: ValueState[FunnelState] = _
+  /** Run `m` on transformWithState, its state stored as `stateName`. */
+  private def viaProcessor[E <: UserEvent : Encoder, S : Encoder,
+      O : Encoder](events: Dataset[E], m: Machine[E, S, O],
+      stateName: String): Dataset[O] =
+    byUser(events).transformWithState(
+      new MachineProcessor(m, stateName, implicitly[Encoder[S]]),
+      TimeMode.EventTime(), OutputMode.Append())
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[FunnelState]("funnel",
-        Encoders.product[FunnelState], TTLConfig.NONE)
+  /** Sessionization ([[SessionMachine]]) on flatMapGroupsWithState. */
+  def sessionize(events: Dataset[Ev]): Dataset[Session] =
+    viaGroupState(events, SessionMachine, armOnBatch = false)
 
-    override def handleInputRows(userId: Long, rows: Iterator[FEv],
-        tv: TimerValues): Iterator[FunnelUser] = {
-      var s = if (st.exists()) st.get() else FunnelState(-1L, -1L, -1L)
-      rows.toSeq.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
-        s = advanceFunnel(s, e)
-      }
-      st.update(s)
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
-      getHandle.registerTimer(tv.getCurrentWatermarkInMs() + 1 + 1)
-      Iterator.empty
-    }
+  /** Sessionization ([[SessionMachine]]) on transformWithState; needs the
+    * RocksDB state store. */
+  def sessionizeTws(events: Dataset[Ev]): Dataset[Session] =
+    viaProcessor(events, SessionMachine, "open")
 
-    override def handleExpiredTimer(userId: Long, tv: TimerValues,
-        info: ExpiredTimerInfo): Iterator[FunnelUser] = {
-      // a stray/duplicate timer after st.clear() is a no-op, not an NPE
-      if (!st.exists()) return Iterator.empty
-      val s = st.get()
-      st.clear()
-      Iterator.single(FunnelUser(userId, s.t1 >= 0, s.t2 >= 0, s.t3 >= 0))
-    }
-  }
+  /** The snapshot funnel ([[FunnelSnapshotMachine]]) on
+    * flatMapGroupsWithState. */
+  def funnelSnapshot(events: Dataset[FEv]): Dataset[FunnelUser] =
+    viaGroupState(events, FunnelSnapshotMachine)
 
-  /** The transformWithState snapshot-funnel arm — see
-    * [[FunnelSnapshotTws]]. */
-  def funnelSnapshotTws(events: Dataset[FEv]): Dataset[FunnelUser] = {
-    val sp = events.sparkSession
-    import sp.implicits._
-    events.toDF()
-      .withColumn("event_ts", timestamp_micros(col("ts_us")))
-      .withWatermark("event_ts", "30 minutes")
-      .as[FEv]
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelSnapshotTws, TimeMode.EventTime(),
-        OutputMode.Append())
-  }
+  /** The snapshot funnel ([[FunnelSnapshotMachine]]) on
+    * transformWithState; needs the RocksDB state store. */
+  def funnelSnapshotTws(events: Dataset[FEv]): Dataset[FunnelUser] =
+    viaProcessor(events, FunnelSnapshotMachine, "funnel")
 
-  /** The transformWithState retained-funnel arm — see [[FunnelRetainedTws]]. */
-  def funnelRetainedTws(events: Dataset[FEv], ttlUs: Long): Dataset[FunnelUser] = {
-    val sp = events.sparkSession
-    import sp.implicits._
-    events.toDF()
-      .withColumn("event_ts", timestamp_micros(col("ts_us")))
-      .withWatermark("event_ts", "30 minutes")
-      .as[FEv]
-      .groupByKey(_.user_id)
-      .transformWithState(new FunnelRetainedTws(ttlUs), TimeMode.EventTime(),
-        OutputMode.Append())
-  }
+  /** The retained funnel ([[FunnelRetainedMachine]]) on
+    * flatMapGroupsWithState. */
+  def funnelRetained(events: Dataset[FEv], ttlUs: Long): Dataset[FunnelUser] =
+    viaGroupState(events, FunnelRetainedMachine(ttlUs))
+
+  /** The retained funnel ([[FunnelRetainedMachine]]) on
+    * transformWithState; needs the RocksDB state store. */
+  def funnelRetainedTws(events: Dataset[FEv], ttlUs: Long): Dataset[FunnelUser] =
+    viaProcessor(events, FunnelRetainedMachine(ttlUs), "funnel")
 
   /** The file-source stream over the events parquet — the shared recipe
     * for every registered streaming row. Subtleties, in one place:
@@ -507,79 +388,155 @@ object Streams {
     *    input as ONE micro-batch: split batches would advance the
     *    watermark between them and drop "late" rows that the batch-twin
     *    oracles keep — correctness here must not depend on file layout;
-    *  - same ts normalization (nanos-as-long / NTZ / timestamp dispatch)
-    *    as the batch Tables.events reader, via Tables.normalizeTs.
+    *  - same nanosAsLong pin and ts normalization as the batch
+    *    Tables.events reader, via Tables.readEvents.
     */
-  private def eventsStream(s: org.apache.spark.sql.SparkSession,
-      d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema // footer only
-    graft.Tables.normalizeTs(
+  private def eventsStream(s: SparkSession, d: String): DataFrame =
+    graft.Tables.readEvents(s) {
+      val schema = s.read.parquet(s"$d/events.parquet").schema // footer only
       s.readStream.schema(schema)
         .option("basePath", d)
         .option("maxFilesPerTrigger", "1000000")
-        .parquet(s"$d/events*.parquet"))
+        .parquet(s"$d/events*.parquet")
+    }
+
+  /** The state store transformWithState requires. */
+  private[graft] val RocksDbProvider = (
+    "spark.sql.streaming.stateStore.providerClass",
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
+  /** Stateful rows size their state stores by key cardinality (~150
+    * users), not core count: every stateful partition pays per-batch
+    * commit I/O, and 32 stores for 150 keys ran 4× slower than 8. */
+  private val StatePartitions = ("spark.sql.shuffle.partitions", "8")
+
+  /** Run `body` with `confs` set on `s`, then restore every key it set —
+    * a key that was unset is unset again. */
+  private[graft] def withConf[T](s: SparkSession, confs: (String, String)*)(
+      body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getAll.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 
-  /** Per-JVM scratch root for streaming sink/checkpoint dirs, removed by a
-    * shutdown hook: each q_stream_hourly_append invocation needs fresh
-    * dirs (the bench runs every query twice), and without a bounded root
-    * they would accumulate across rounds in /tmp. */
-  private lazy val scratchRoot: java.nio.file.Path = {
-    val root = java.nio.file.Files.createTempDirectory("graft-stream-scratch")
-    graft.operators.Scratch.register(root.toString)
-    root
+  /** Drain `frame` into the memory sink `<row>_sink` with AvailableNow and
+    * wait for it. `statePartitions`/`rocks` pin [[StatePartitions]] and
+    * [[RocksDbProvider]] only until `start()`: the stream clones the
+    * session conf at start. */
+  private def drain(s: SparkSession, row: String, mode: OutputMode,
+      statePartitions: Boolean = false, rocks: Boolean = false)(
+      frame: => Dataset[_]): StreamingQuery = {
+    val confs = Seq(StatePartitions).filter(_ => statePartitions) ++
+      Seq(RocksDbProvider).filter(_ => rocks)
+    val q = withConf(s, confs: _*) {
+      frame.writeStream
+        .format("memory").queryName(s"${row}_sink")
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+    }
+    q.awaitTermination()
+    q
+  }
+
+  /** Fail `row` loudly unless `q` kept its data-batch contract: an oracle
+    * row drains in at most ONE data batch (a split drain advances the
+    * watermark mid-data and drops rows its batch-twin oracle keeps), an
+    * incremental row in at least three (fewer is the batch twin in
+    * disguise). `rocks` also requires RocksDB metrics in the progress, so
+    * a silent fallback to the default store fails the row. */
+  private def requireBatches(row: String, q: StreamingQuery,
+      oracle: Boolean, rocks: Boolean = false): Unit = {
+    val data = q.recentProgress.count(_.numInputRows > 0)
+    if (oracle && data > 1) throw new IllegalStateException(
+      s"$row drained in $data data batches; " +
+        "the single-batch oracle contract is void")
+    if (!oracle && data < 3) throw new IllegalStateException(
+      s"$row drained in $data data batches; " +
+        "the incremental contract needs >= 3")
+    if (rocks && !q.recentProgress.flatMap(_.stateOperators)
+        .exists(_.customMetrics.keySet.asScala.exists(_.contains("rocksdb"))))
+      throw new IllegalStateException(
+        s"$row: no rocksdb custom metrics in progress — the " +
+          "required state-store provider did not take effect")
+  }
+
+  /** The body of the four arbitrary-state rows: the events stream as the
+    * arm's event type, drained on 8 state partitions (and RocksDB for the
+    * transformWithState arms) under the single-batch oracle contract. */
+  private def statefulRow[E <: UserEvent : Encoder](s: SparkSession,
+      d: String, row: String, arm: Dataset[E] => Dataset[_],
+      rocks: Boolean): DataFrame = {
+    val q = drain(s, row, OutputMode.Append, statePartitions = true,
+        rocks = rocks) {
+      arm(eventsStream(s, d)
+        .withColumn("ts_us", unix_micros(col("ts")))
+        .select(implicitly[Encoder[E]].schema.fieldNames.toSeq.map(col): _*)
+        .as[E])
+    }
+    requireBatches(row, q, oracle = true, rocks = rocks)
+    s.table(q.name)
+  }
+
+  private def sessionRows(df: DataFrame): DataFrame =
+    df.select(col("user_id"), col("n_events"), col("start_us"),
+      col("end_us"))
+      .orderBy("user_id", "start_us")
+
+  private def funnelCounts(df: DataFrame): DataFrame =
+    df.agg(
+      count_if(col("s1")).as("n_signup"),
+      count_if(col("s2")).as("n_click"),
+      count_if(col("s3")).as("n_purchase"))
+
+  /** The incremental foreachBatch rows: stage a 6-chunk feed under a
+    * fresh scratch dir, drain it, require >= 3 data batches, then read
+    * the result from the accumulated state. */
+  private def incrementalRow(s: SparkSession, d: String, row: String,
+      stage: (SparkSession, String, Int, String) => Unit,
+      start: (SparkSession, String, String) => StreamingQuery)(
+      result: (SparkSession, String) => DataFrame): DataFrame = {
+    val scratch = Scratch.fresh(row)
+    stage(s, d, 6, s"$scratch/feed")
+    val q = start(s, s"$scratch/feed", scratch)
+    q.awaitTermination()
+    requireBatches(row, q, oracle = false)
+    result(s, scratch)
   }
 
   val queries: Seq[Q] = Seq(
-    // Driver-checkable streaming row: a real file-source STREAM over the
-    // events parquet, drained with Trigger.AvailableNow through
-    // [[hourlyCounts]] into a named memory sink, returned as the sink
-    // table. The memory/complete sink is the harness choice — its size is
-    // the AGGREGATE output (hours × event types), not the input; a
-    // production deployment sinks append-mode parquet/Kafka with watermark
-    // eviction instead. The oracle is the same SQL as the batch twin
-    // q_events_hourly (minus countDistinct, which streaming aggregation
-    // doesn't support exactly — that is what approx_count_distinct is for).
+    // A real file-source STREAM over the events parquet, drained through
+    // [[hourlyCounts]] into a Complete-mode memory sink — the harness
+    // choice: its size is the AGGREGATE output (hours × event types); a
+    // production deployment sinks append-mode parquet/Kafka instead. The
+    // oracle is the batch twin q_events_hourly's SQL (minus
+    // countDistinct, which streaming aggregation doesn't support exactly).
     Q("q_stream_hourly",
-      (s, d) => {
-        val stream = eventsStream(s, d)
-        val sink = "q_stream_hourly_sink"
-        val q = hourlyCounts(stream).writeStream
-          .format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink).orderBy("hour_ts", "event_type")
-      },
+      (s, d) => s.table(drain(s, "q_stream_hourly", OutputMode.Complete)(
+          hourlyCounts(eventsStream(s, d))).name)
+        .orderBy("hour_ts", "event_type"),
       Some(s"""SELECT CAST(epoch(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS BIGINT) AS hour_ts,
               event_type, COUNT(*) AS n, ${Arith.sqlSum("value")} AS sum_value
               FROM events GROUP BY 1, 2 ORDER BY hour_ts, event_type""")),
 
     // Streaming top-k: the serve-side leaderboard pattern. Structured
-    // Streaming cannot run a rank window over a streaming aggregate
-    // (non-time-window aggregation chains are unsupported), and the
-    // PRODUCTION shape doesn't want it to: the stream maintains the
-    // per-(hour, type) counts incrementally (state = active groups), and
-    // the rank is computed AT READ TIME over the materialized aggregate —
-    // here a row_number cut over the memory sink after the drain, at
-    // 100 TB the same query over the sink table. The oracle ranks the
+    // Streaming cannot run a rank window over a streaming aggregate, and
+    // the production shape doesn't want it to: the stream maintains the
+    // per-(hour, type) counts incrementally and the rank is computed AT
+    // READ TIME over the materialized aggregate. The oracle ranks the
     // batch twin identically (ties → event_type asc).
     Q("q_stream_topk",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val stream = eventsStream(s, d)
-        val sink = "q_stream_topk_sink"
-        val q = hourlyCounts(stream).writeStream
-          .format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        val q = drain(s, "q_stream_topk", OutputMode.Complete)(
+          hourlyCounts(eventsStream(s, d)))
         val w = Window.partitionBy("hour_ts")
           .orderBy(col("n").desc, col("event_type"))
-        s.table(sink)
+        s.table(q.name)
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= 3)
           .select(col("hour_ts"), col("rk"), col("event_type"), col("n"))
@@ -600,17 +557,9 @@ object Streams {
     // q_stream_hourly, so ALL windows emit and the oracle is the plain
     // batch sliding aggregation — q_events_sliding's SQL verbatim).
     Q("q_stream_sliding",
-      (s, d) => {
-        val stream = eventsStream(s, d)
-        val sink = "q_stream_sliding_sink"
-        val q = slidingCounts(stream).writeStream
-          .format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink).orderBy("win_start", "event_type")
-      },
+      (s, d) => s.table(drain(s, "q_stream_sliding", OutputMode.Complete)(
+          slidingCounts(eventsStream(s, d))).name)
+        .orderBy("win_start", "event_type"),
       Some(s"""WITH x AS (
                 SELECT CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)) / 1800) * 1800
                        AS BIGINT) AS w0, event_type, value
@@ -636,10 +585,9 @@ object Streams {
     Q("q_stream_hourly_append",
       (s, d) => {
         val stream = eventsStream(s, d)
-        val outDir = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "append-out").toString
-        val ckpt = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "append-ckpt").toString
+        // fresh dirs per invocation: the bench runs every query twice
+        val outDir = Scratch.fresh("append-out")
+        val ckpt = Scratch.fresh("append-ckpt")
         val q = hourlyCounts(stream).writeStream
           .format("parquet")
           .option("path", outDir)
@@ -669,32 +617,26 @@ object Streams {
               WHERE (g.hour_ts + 3600) * 1000000 <= wm.wm_us
               ORDER BY hour_ts, event_type""")),
 
-    // Stream-static enrichment as a driver row: the events STREAM joins
-    // the customer dimension (broadcast per micro-batch — the static side
-    // re-reads, so slowly-changing dims stay fresh; the stream never
-    // shuffles for the join), then aggregates per segment. The oracle is
-    // the identical batch join. Left join: events whose user_id has no
-    // customer row land in a NULL segment bucket, which the oracle keeps.
+    // Stream-static enrichment: the events STREAM joins the customer
+    // dimension (broadcast per micro-batch — the static side re-reads, so
+    // slowly-changing dims stay fresh; the stream never shuffles for the
+    // join), then aggregates per segment. The oracle is the identical
+    // batch join; events with no customer land in a NULL segment bucket.
     Q("q_stream_enrich",
       (s, d) => {
-        val stream = eventsStream(s, d)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"))
-        // through the Tables loader like every batch query — it is the
-        // single point where per-table read quirks live
-        val customers = graft.Tables(s, d, "customer")
-          .select(col("c_custkey"), col("c_mktsegment"))
-        val sink = "q_stream_enrich_sink"
-        val q = enrich(stream, customers)
-          .groupBy("segment")
-          .agg(count(lit(1)).as("n"), Arith.dsum(col("value")).as("sum_value"))
-          .writeStream
-          .format("memory").queryName(sink)
-          .outputMode(OutputMode.Complete)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table(sink).orderBy(col("segment").asc_nulls_first)
+        val q = drain(s, "q_stream_enrich", OutputMode.Complete) {
+          val stream = eventsStream(s, d)
+            .select(col("event_id"), col("user_id"), col("event_type"),
+              col("value"))
+          // through the Tables loader like every batch query — it is the
+          // single point where per-table read quirks live
+          val customers = graft.Tables(s, d, "customer")
+            .select(col("c_custkey"), col("c_mktsegment"))
+          enrich(stream, customers)
+            .groupBy("segment")
+            .agg(count(lit(1)).as("n"), Arith.dsum(col("value")).as("sum_value"))
+        }
+        s.table(q.name).orderBy(col("segment").asc_nulls_first)
       },
       Some(s"""SELECT c_mktsegment AS segment, COUNT(*) AS n,
               ${Arith.sqlSum("value")} AS sum_value
@@ -702,180 +644,95 @@ object Streams {
               GROUP BY c_mktsegment
               ORDER BY segment NULLS FIRST""")),
 
-    // Streaming exact dedup: the LLM-pipeline dedup surface on a stream.
-    // dropDuplicates keeps ONE state row per distinct key and emits each
-    // key's first arrival — state is bounded by key CARDINALITY (here
-    // users × event types), the same bound as any exact dedup; a
-    // content-hash variant carries a 32-byte digest per distinct document.
-    // (For time-bounded retention Spark offers
-    // dropDuplicatesWithinWatermark — different semantics: re-admits a key
-    // once the watermark passes it, so its batch twin is windowed DISTINCT,
-    // not global DISTINCT.) Emitted rows are exactly the distinct keys, so
-    // the oracle is plain SELECT DISTINCT.
-    // The WithinWatermark dedup variant as a driver row: state is
-    // bounded by keys active in the watermark horizon (eviction at
-    // event time + delay) instead of global key cardinality — the shape
-    // an unbounded key domain needs at 100 TB. On an AvailableNow
-    // single-data-batch drain no key is ever evicted mid-stream, so the
-    // emitted rows are exactly the distinct keys and the oracle is the
-    // same DISTINCT as q_stream_dedup (contract enforced loudly below);
-    // the EVICTION + RE-ADMISSION semantics that need a multi-batch
-    // feed are pinned in StreamingSpec instead.
+    // Streaming dedup with bounded state: dropDuplicatesWithinWatermark
+    // evicts a key once the watermark passes event time + delay, so state
+    // is bounded by keys active in the horizon instead of global key
+    // cardinality (q_stream_dedup). On a single-data-batch drain no key is
+    // evicted mid-stream, so the emitted rows are exactly the distinct
+    // keys and the oracle is plain DISTINCT; eviction and re-admission
+    // need a multi-batch feed and are pinned in StreamingSpec.
     Q("q_stream_dedup_wm",
       (s, d) => {
-        val stream = eventsStream(s, d)
-        val sink = "q_stream_dedup_wm_sink"
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-          try stream.select(col("user_id"), col("event_type"), col("ts"))
+        val q = drain(s, "q_stream_dedup_wm", OutputMode.Append,
+            statePartitions = true) {
+          eventsStream(s, d).select(col("user_id"), col("event_type"), col("ts"))
             .withWatermark("ts", "30 minutes")
             .dropDuplicatesWithinWatermark("user_id", "event_type")
-            .writeStream
-            .format("memory").queryName(sink)
-            .outputMode(OutputMode.Append)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        if (dataBatches > 1) throw new IllegalStateException(
-          s"q_stream_dedup_wm drained in $dataBatches data batches; " +
-            "the single-batch DISTINCT oracle contract is void")
-        s.table(sink).select(col("user_id"), col("event_type"))
+        }
+        requireBatches("q_stream_dedup_wm", q, oracle = true)
+        s.table(q.name).select(col("user_id"), col("event_type"))
           .orderBy("user_id", "event_type")
       },
       Some("""SELECT DISTINCT user_id, event_type FROM events
               ORDER BY user_id, event_type""")),
 
+    // Streaming exact dedup: one state row per distinct key, emitting each
+    // key's first arrival — state is bounded by key cardinality (users ×
+    // event types). Emitted rows are exactly the distinct keys.
     Q("q_stream_dedup",
-      (s, d) => {
-        val stream = eventsStream(s, d)
-        val sink = "q_stream_dedup_sink"
-        // state-store count tracks key cardinality, not core count (the
-        // q_stream_join rationale); restored after query start
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-          try stream.select(col("user_id"), col("event_type"))
+      (s, d) => s.table(drain(s, "q_stream_dedup", OutputMode.Append,
+          statePartitions = true) {
+          eventsStream(s, d).select(col("user_id"), col("event_type"))
             .dropDuplicates("user_id", "event_type")
-            .writeStream
-            .format("memory").queryName(sink)
-            .outputMode(OutputMode.Append)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        q.awaitTermination()
-        s.table(sink).orderBy("user_id", "event_type")
-      },
+        }.name).orderBy("user_id", "event_type"),
       Some("""SELECT DISTINCT user_id, event_type FROM events
               ORDER BY user_id, event_type""")),
 
-    // The custom-state operator as a driver row: flatMapGroupsWithState
-    // sessionization over the events stream (exercising arbitrary
-    // stateful logic rather than built-in stateful operators —
-    // the batch twin q_sessionize uses a lag window, so the two
-    // formulations cross-check each other). AvailableNow drains the data
-    // as ONE micro-batch (every gap-closed session emits), then the
-    // no-data batch advances the watermark to max−30min and fires the
-    // EVENT-TIME TIMEOUTS: an idle final session flushes iff its timeout
-    // (end+gap, in watermark MILLISECONDS — Spark tracks event-time
-    // state in ms) lies strictly below that watermark. The oracle
-    // recomputes exactly that: all lag-window sessions, minus each
-    // user's last UNLESS ⌊max⌋ms − ⌊end⌋ms > 3,600,000 (delay + gap) —
-    // so the row pins the timeout arithmetic, ms flooring and strict
+    // Arbitrary stateful logic as a driver row: [[SessionMachine]] on
+    // flatMapGroupsWithState (the batch twin q_sessionize uses a lag
+    // window, so the two formulations cross-check). AvailableNow drains
+    // the data as ONE micro-batch (every gap-closed session emits), then
+    // the no-data batch advances the watermark to max−30min and fires the
+    // timeouts: an idle final session flushes iff its timeout (end+gap, in
+    // watermark MILLISECONDS) lies strictly below that watermark. The
+    // oracle recomputes exactly that: all lag-window sessions, minus each
+    // user's last UNLESS ⌊max⌋ms − ⌊end⌋ms > 3,600,000 (delay + gap) — so
+    // the row pins the timeout arithmetic, ms flooring and strict
     // inequality included, cross-engine.
     Q("q_stream_sessionize",
-      (s, d) => runSessionizeRow(s, d, "q_stream_sessionize_sink",
-        "q_stream_sessionize", sessionize, requireRocks = false),
+      (s, d) => sessionRows(statefulRow(s, d, "q_stream_sessionize",
+        sessionize, rocks = false)),
       Some(sessionizeOracleSql)),
 
-    // [[sessionizeTws]] (the Spark 4 transformWithState rewrite of the
-    // arm above) held to the SAME DuckDB oracle VERBATIM — the timer
-    // arithmetic, ms flooring and strict watermark inequality must all
-    // survive the API translation (explicit registerTimer vs
-    // setTimeoutTimestamp) for this row to hash-match. Runs on the
-    // RocksDB state-store provider, a transformWithState requirement;
-    // the progress metrics are checked so a silent fallback to the
-    // default provider fails the row rather than passing vacuously.
+    // The same machine on transformWithState, held to the SAME oracle
+    // verbatim, timeout boundary included.
     Q("q_stream_sessionize_tws",
-      (s, d) => {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-          ".RocksDBStateStoreProvider")
-        try runSessionizeRow(s, d, "q_stream_sessionize_tws_sink",
-          "q_stream_sessionize_tws", sessionizeTws, requireRocks = true)
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
-      },
+      (s, d) => sessionRows(statefulRow(s, d, "q_stream_sessionize_tws",
+        sessionizeTws, rocks = true)),
       Some(sessionizeOracleSql)),
 
-    // Streaming funnel snapshot: the per-user three-stage state machine
-    // ([[funnelSnapshot]]) flushed by the watermark timeout in the no-data
-    // batch, then the per-user flags aggregated to the same three counts
-    // as the batch twin — whose oracle SQL this row reuses VERBATIM: on a
-    // single-data-batch drain the snapshot sees every event, so streaming
-    // must equal batch exactly. The single-batch contract is enforced
-    // loudly (q_stream_sessionize's posture).
+    // Streaming funnel snapshot: [[FunnelSnapshotMachine]] flushed by the
+    // watermark timeout in the no-data batch, the per-user flags
+    // aggregated to the batch twin's three counts — whose oracle SQL this
+    // row reuses verbatim: on a single-data-batch drain the snapshot sees
+    // every event, so streaming must equal batch exactly.
     Q("q_stream_funnel",
-      (s, d) => runFunnelSnapshotRow(s, d, "q_stream_funnel_sink",
-        "q_stream_funnel", funnelSnapshot, requireRocks = false),
+      (s, d) => funnelCounts(statefulRow(s, d, "q_stream_funnel",
+        funnelSnapshot, rocks = false)),
       Some(funnelSnapshotOracleSql)),
 
-    // [[funnelSnapshotTws]] (the transformWithState rewrite of the arm
-    // above) held to the SAME DuckDB oracle VERBATIM — the third
-    // dual-arm stateful pair: with the sessionizer (emit-on-close
-    // session state) and the retained funnel (delta snapshots + TTL)
-    // this also covers the emit-and-remove snapshot machine on both
-    // Spark 4 arbitrary-state APIs. RocksDB provider required and
-    // verified via progress metrics (the q_stream_sessionize_tws
-    // posture).
+    // The same machine on transformWithState, held to the same oracle.
     Q("q_stream_funnel_tws",
-      (s, d) => {
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-          ".RocksDBStateStoreProvider")
-        try runFunnelSnapshotRow(s, d, "q_stream_funnel_tws_sink",
-          "q_stream_funnel_tws", funnelSnapshotTws, requireRocks = true)
-        finally prev match {
-          case Some(v) => s.conf.set(key, v)
-          case None => s.conf.unset(key)
-        }
-      },
+      (s, d) => funnelCounts(statefulRow(s, d, "q_stream_funnel_tws",
+        funnelSnapshotTws, rocks = true)),
       Some(funnelSnapshotOracleSql)),
 
     // Stream-stream join as a driver row: two file-source streams over the
     // same events data (clicks / purchases), joined with watermarks and an
-    // event-time range, drained via AvailableNow. The oracle is the plain
-    // batch join over MICROSECOND epochs on both sides (the parquet is
-    // nanos; both engines compare after the same truncation).
+    // event-time range. The oracle is the plain batch join over
+    // MICROSECOND epochs on both sides (the parquet is nanos; both engines
+    // compare after the same truncation).
     Q("q_stream_join",
       (s, d) => {
-        def src = eventsStream(s, d)
-          .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
-        val sink = "q_stream_join_sink"
-        val joined = clickToPurchase(
-          src.filter(col("event_type") === "click"),
-          src.filter(col("event_type") === "purchase"))
-        // state-store instances should track KEY cardinality (150 users),
-        // not core count: every stateful partition pays per-batch commit
-        // I/O, and 32 stores for 150 keys is 4× slower than 8. The value
-        // is captured at query start, so restoring it after is safe.
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        val q =
-          try joined.writeStream
-            .format("memory").queryName(sink)
-            .outputMode(OutputMode.Append)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        q.awaitTermination()
-        s.table(sink)
+        val q = drain(s, "q_stream_join", OutputMode.Append,
+            statePartitions = true) {
+          def src = eventsStream(s, d)
+            .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
+          clickToPurchase(
+            src.filter(col("event_type") === "click"),
+            src.filter(col("event_type") === "purchase"))
+        }
+        s.table(q.name)
           .select(col("user_id"), col("click_id"), col("purchase_id"),
             unix_micros(col("click_ts")).as("click_us"),
             unix_micros(col("purchase_ts")).as("purchase_us"))
@@ -896,176 +753,44 @@ object Streams {
     // Streaming corpus curation: the q_corpus_pipeline stage chain run
     // INCREMENTALLY — doc_id-ordered micro-batches through foreachBatch,
     // per-batch minlen → quality → exact/near dedup against the
-    // accumulated stage-3 state (the q_dedup_incremental machinery on
-    // persisted hash/shingle/band state), survivors and counts written
-    // idempotently per batch id. Held to the BATCH pipeline's oracle
-    // verbatim on the final corpus state — the composed shape a
-    // production training-data system runs: curation + exactly-once
-    // streaming in one arm (machinery in operators/Dedup.scala; the
-    // hard-kill/resume proof is StreamKillMain phase=corpuskill).
+    // accumulated stage-3 state, survivors and counts written idempotently
+    // per batch id. Held to the BATCH pipeline's oracle verbatim on the
+    // final corpus state (machinery in operators/Dedup.scala; the
+    // hard-kill/resume proof is StreamKillMain phase=corpuskill). It keeps
+    // the session's shuffle partitions: the per-batch minhash kernel is
+    // CPU-bound and has no state store to economize on.
     Q("q_stream_corpus_pipeline",
-      (s, d) => {
-        val Dedup = graft.operators.Dedup
-        val scratch = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "corpus").toString
-        Dedup.stageCorpusFeed(s, d, 6, s"$scratch/feed")
-        // NOTE: unlike the stateful rows, this row keeps the session's
-        // shuffle partitions — measured 19.2 s at 8 partitions vs 13.7 s
-        // at 32 (fresh-JVM BenchOne min-of-3): the per-batch minhash
-        // kernel is CPU-bound and wants the cores, and there is no state
-        // store paying per-partition commit I/O to economize on
-        val q = Dedup.startCorpusStream(s, s"$scratch/feed", scratch)
-        q.awaitTermination()
-        // the row only proves incrementality if the drain really was
-        // multi-batch — a single-batch degenerate run is the batch
-        // pipeline in disguise and must fail loudly, not pass silently
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        if (dataBatches < 3) throw new IllegalStateException(
-          s"q_stream_corpus_pipeline drained in $dataBatches data " +
-            "batches; the incremental contract needs >= 3")
-        Dedup.corpusStreamResult(s, scratch)
-      },
+      (s, d) => incrementalRow(s, d, "q_stream_corpus_pipeline",
+        graft.operators.Dedup.stageCorpusFeed,
+        graft.operators.Dedup.startCorpusStream(_, _, _))(
+        graft.operators.Dedup.corpusStreamResult),
       Some(graft.operators.Dedup.CorpusPipelineOracleSql)),
 
-    // Streaming IVF index maintenance: the ANN analog of
-    // q_stream_corpus_pipeline (r17 verdict item 4) — vec_id-ordered
-    // embedding micro-batches through foreachBatch, batch 0 freezes the
-    // IVF centroid frame, every batch assigns to the frozen buckets and
-    // accumulates exact integer per-bucket partials (occupancy, micro
-    // cosine sums, per-dim vector sums); the assembled report — per
-    // bucket n_vecs / mean_cos / min_cos / centroid-DRIFT — is held to
-    // the one-pass batch twin's DuckDB oracle exactly (machinery in
-    // operators/Similarity.scala; hard-kill/resume proof is
-    // StreamKillMain phase=annkill/annresume; compaction reuses the
-    // corpus stream's marker/sweep grammar via Dedup.compactStateKinds).
+    // Streaming IVF index maintenance, the ANN analog of
+    // q_stream_corpus_pipeline: vec_id-ordered embedding micro-batches,
+    // batch 0 freezes the IVF centroids, every batch accumulates exact
+    // integer per-bucket partials; the assembled report (n_vecs, mean_cos,
+    // min_cos, centroid drift per bucket) is held to the one-pass batch
+    // twin's oracle exactly (machinery in operators/Similarity.scala;
+    // hard-kill/resume proof is StreamKillMain phase=annkill/annresume).
     Q("q_stream_ann_index",
-      (s, d) => {
-        val Sim = graft.operators.Similarity
-        val scratch = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "annidx").toString
-        Sim.stageEmbedFeed(s, d, 6, s"$scratch/feed")
-        val q = Sim.startAnnIndexStream(s, s"$scratch/feed", scratch)
-        q.awaitTermination()
-        // incrementality contract, enforced loudly (the corpus-stream
-        // rule): a single-batch drain is the batch twin in disguise
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        if (dataBatches < 3) throw new IllegalStateException(
-          s"q_stream_ann_index drained in $dataBatches data " +
-            "batches; the incremental contract needs >= 3")
-        Sim.annIndexStreamResult(s, scratch)
-      },
+      (s, d) => incrementalRow(s, d, "q_stream_ann_index",
+        graft.operators.Similarity.stageEmbedFeed,
+        graft.operators.Similarity.startAnnIndexStream(_, _, _))(
+        graft.operators.Similarity.annIndexStreamResult),
       Some(graft.operators.Similarity.AnnIndexStreamOracleSql)),
 
     // The drift TRAJECTORY the final index report collapses: per
-    // (batch, bucket) occupancy + cumulative occupancy + cumulative
-    // centroid drift — the when-to-retrain curve over stream age. Same
-    // machinery and state as q_stream_ann_index (partials carry their
-    // batch id, so the report survives compaction); the oracle
-    // recomputes the feed's id-range batch boundaries arithmetically
-    // and windows the same integer partials.
+    // (batch, bucket) occupancy, cumulative occupancy and cumulative
+    // centroid drift. Same machinery and state as q_stream_ann_index
+    // (partials carry their batch id, so the report survives compaction);
+    // the oracle recomputes the feed's id-range batch boundaries.
     Q("q_stream_ann_drift",
-      (s, d) => {
-        val Sim = graft.operators.Similarity
-        val scratch = java.nio.file.Files
-          .createTempDirectory(scratchRoot, "anndrift").toString
-        Sim.stageEmbedFeed(s, d, 6, s"$scratch/feed")
-        val q = Sim.startAnnIndexStream(s, s"$scratch/feed", scratch)
-        q.awaitTermination()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        if (dataBatches < 3) throw new IllegalStateException(
-          s"q_stream_ann_drift drained in $dataBatches data " +
-            "batches; the incremental contract needs >= 3")
-        Sim.annIndexDriftResult(s, scratch)
-      },
+      (s, d) => incrementalRow(s, d, "q_stream_ann_drift",
+        graft.operators.Similarity.stageEmbedFeed,
+        graft.operators.Similarity.startAnnIndexStream(_, _, _))(
+        graft.operators.Similarity.annIndexDriftResult),
       Some(graft.operators.Similarity.sqlAnnDriftOracle(6))))
-
-  /** The shared drain recipe for both sessionizer rows: file-source
-    * stream → the given sessionizer arm → memory sink via AvailableNow,
-    * with the single-data-batch oracle contract enforced loudly. */
-  private def runSessionizeRow(s: org.apache.spark.sql.SparkSession,
-      d: String, sink: String, rowName: String,
-      arm: Dataset[Ev] => Dataset[Session],
-      requireRocks: Boolean): DataFrame = {
-    import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val stream = eventsStream(s, d)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"))
-      .as[Ev]
-    // state stores track user cardinality, not core count (the
-    // q_stream_join rationale); value restored after query start
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try arm(stream).writeStream
-        .format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    q.awaitTermination()
-    // the oracle's timeout rule assumes ONE data micro-batch (the
-    // watermark must not advance mid-data, or within-horizon late
-    // rows drop and the batch-twin comparison silently diverges) —
-    // enforced loudly rather than assumed: a future file layout
-    // that splits the drain fails here, not in a hash mismatch
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches > 1) throw new IllegalStateException(
-      s"$rowName drained in $dataBatches data batches; " +
-        "the single-batch oracle contract is void")
-    if (requireRocks) {
-      val usedRocks = q.recentProgress.flatMap(_.stateOperators)
-        .exists(_.customMetrics.keySet.asScala.exists(_.contains("rocksdb")))
-      if (!usedRocks) throw new IllegalStateException(
-        s"$rowName: no rocksdb custom metrics in progress — the " +
-          "required state-store provider did not take effect")
-    }
-    s.table(sink)
-      .select(col("user_id"), col("n_events"), col("start_us"),
-        col("end_us"))
-      .orderBy("user_id", "start_us")
-  }
-
-  /** Shared body of q_stream_funnel[_tws]: drain the events stream
-    * through the given snapshot-funnel arm, enforce the single-data-batch
-    * oracle contract (and the RocksDB provider when required), and
-    * aggregate the per-user flags to the batch twin's three counts. */
-  private def runFunnelSnapshotRow(s: org.apache.spark.sql.SparkSession,
-      d: String, sink: String, rowName: String,
-      arm: Dataset[FEv] => Dataset[FunnelUser],
-      requireRocks: Boolean): DataFrame = {
-    import s.implicits._
-    import scala.jdk.CollectionConverters._
-    val stream = eventsStream(s, d)
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"))
-      .as[FEv]
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val q =
-      try arm(stream).writeStream
-        .format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    if (dataBatches > 1) throw new IllegalStateException(
-      s"$rowName drained in $dataBatches data batches; " +
-        "the single-batch oracle contract is void")
-    if (requireRocks) {
-      val usedRocks = q.recentProgress.flatMap(_.stateOperators)
-        .exists(_.customMetrics.keySet.asScala.exists(_.contains("rocksdb")))
-      if (!usedRocks) throw new IllegalStateException(
-        s"$rowName: no rocksdb custom metrics in progress — the " +
-          "required state-store provider did not take effect")
-    }
-    s.table(sink).agg(
-      count_if(col("s1")).as("n_signup"),
-      count_if(col("s2")).as("n_click"),
-      count_if(col("s3")).as("n_purchase"))
-  }
 
   /** The q_stream_funnel[_tws] oracle — the batch funnel counts (stage
     * k's earliest qualifying instant is a MIN over events strictly later

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQuery,
+  StreamingQueryListener}
 
 /** Crash-recovery proof for the stateful streaming path, run in a forked
   * JVM by StreamingSpec (graceful-stop recovery is already covered there;
@@ -42,9 +43,8 @@ object StreamKillMain {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state" +
-          ".RocksDBStateStoreProvider")
+      .config(streaming.Streams.RocksDbProvider._1,
+        streaming.Streams.RocksDbProvider._2)
       // A 1B-event drain runs ~17 micro-batches in ONE JVM, each leaving
       // ~4-5 GB of shuffle files that ContextCleaner only reaps when the
       // referencing ShuffleDependency is GC'd — and a 12 GB heap under a
@@ -162,10 +162,11 @@ object StreamKillMain {
     val srcDir = if (copies > 1) s"$work/x$copies" else src
     val nChunks = if (copies > 1) 16 else 8
 
-    def haltAfter(batches: Int): Unit = {
-      // HALT, not stop: the listener thread pulls the plug after the
-      // Nth completed data micro-batch with the drain still in flight —
-      // halt skips shutdown hooks, so neither sink nor state finalize
+    /** Start `query` and HALT the JVM after its `batches`-th completed
+      * data micro-batch. HALT, not stop: the listener thread pulls the
+      * plug with the drain still in flight — halt skips shutdown hooks,
+      * so neither sink nor state finalize. */
+    def haltAfter(batches: Int)(query: => StreamingQuery): Unit = {
       spark.streams.addListener(new StreamingQueryListener {
         private var seen = 0
         override def onQueryStarted(
@@ -178,9 +179,9 @@ object StreamKillMain {
         override def onQueryTerminated(
             e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
       })
-      startQuery(spark, work).awaitTermination()
+      query.awaitTermination()
       // unreachable on the intended path: the halt exits with 42 first
-      System.err.println("KILL| query drained before the halt fired")
+      System.err.println(s"KILL| $phase drained before the halt fired")
       sys.exit(3)
     }
 
@@ -195,42 +196,28 @@ object StreamKillMain {
       // died of exactly that).
       if (copies >= 10000) org.apache.commons.io.FileUtils
         .deleteQuietly(new java.io.File(s"$work/x$copies"))
-      haltAfter(3)
+      haltAfter(3)(startQuery(spark, work))
     }
 
     if (phase == "resumekill") {
       // second hard crash DURING the recovery drain: same checkpoint,
       // fresh JVM, two more data batches (batch 1 of which is the replay
       // of the batch the first halt cut mid-commit), then halt again
-      haltAfter(2)
+      haltAfter(2)(startQuery(spark, work))
     }
 
     // ---- corpus curation kill/resume pair --------------------------------
     // Same crash grammar as the sessionize pair, but the recovering
     // machinery is the foreachBatch curation arm: its exactly-once is
     // NOT the parquet sink's _spark_metadata — it is the per-batch-id
-    // idempotent state overwrite in Dedup.corpusStreamBatch. The halt
+    // idempotent state overwrite in Dedup's corpus stream batch. The halt
     // lands after the 3rd micro-batch, i.e. possibly mid-write of batch
     // 4's state directories; the resume must overwrite those partial
     // directories and still land on the BATCH pipeline's exact counts.
     if (phase == "corpuskill") {
       operators.Dedup.stageCorpusFeed(spark, src, 6, s"$work/cfeed")
-      spark.streams.addListener(new StreamingQueryListener {
-        private var seen = 0
-        override def onQueryStarted(
-            e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: StreamingQueryListener.QueryProgressEvent): Unit = {
-          if (e.progress.numInputRows > 0) seen += 1
-          if (seen >= 3) Runtime.getRuntime.halt(42)
-        }
-        override def onQueryTerminated(
-            e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
-      operators.Dedup.startCorpusStream(spark, s"$work/cfeed",
-        s"$work/cscratch").awaitTermination()
-      System.err.println("KILL| corpus stream drained before the halt fired")
-      sys.exit(3)
+      haltAfter(3)(operators.Dedup.startCorpusStream(spark, s"$work/cfeed",
+        s"$work/cscratch"))
     }
     // Mid-COMPACTION hard kills (the state-compaction generation gets the
     // same crash grammar as the per-batch writes). Both phases stage a
@@ -277,26 +264,12 @@ object StreamKillMain {
       // the first being the replay of the batch the first halt cut
       // mid-state-write — then halt again. corpusresume after this is
       // a double-crash recovery.
-      spark.streams.addListener(new StreamingQueryListener {
-        private var seen = 0
-        override def onQueryStarted(
-            e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: StreamingQueryListener.QueryProgressEvent): Unit = {
-          if (e.progress.numInputRows > 0) seen += 1
-          if (seen >= 2) Runtime.getRuntime.halt(42)
-        }
-        override def onQueryTerminated(
-            e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
-      operators.Dedup.startCorpusStream(spark, s"$work/cfeed",
-        s"$work/cscratch").awaitTermination()
-      System.err.println("KILL| corpus resume drained before the halt fired")
-      sys.exit(3)
+      haltAfter(2)(operators.Dedup.startCorpusStream(spark, s"$work/cfeed",
+        s"$work/cscratch"))
     }
     // ---- ANN index-maintenance kill/resume pair --------------------------
     // The corpuskill grammar applied to the streaming IVF index
-    // (Similarity.annIndexStreamBatch): halt after the 3rd data
+    // (Similarity.startAnnIndexStream): halt after the 3rd data
     // micro-batch — possibly mid-write of batch 4's cents/stats/dims
     // state dirs — then resume from the checkpoint in a fresh JVM. The
     // recovered report must equal the one-pass batch twin
@@ -305,22 +278,8 @@ object StreamKillMain {
     // shows up in n_vecs/cm/sx, never rounds away.
     if (phase == "annkill") {
       operators.Similarity.stageEmbedFeed(spark, src, 6, s"$work/afeed")
-      spark.streams.addListener(new StreamingQueryListener {
-        private var seen = 0
-        override def onQueryStarted(
-            e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(
-            e: StreamingQueryListener.QueryProgressEvent): Unit = {
-          if (e.progress.numInputRows > 0) seen += 1
-          if (seen >= 3) Runtime.getRuntime.halt(42)
-        }
-        override def onQueryTerminated(
-            e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
-      operators.Similarity.startAnnIndexStream(spark, s"$work/afeed",
-        s"$work/ascratch").awaitTermination()
-      System.err.println("KILL| ann index stream drained before the halt fired")
-      sys.exit(3)
+      haltAfter(3)(operators.Similarity.startAnnIndexStream(spark,
+        s"$work/afeed", s"$work/ascratch"))
     }
     if (phase == "annresume") {
       // same no-op guard as corpusresume: a resume with every batch

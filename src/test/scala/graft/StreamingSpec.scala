@@ -302,11 +302,7 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     import scala.jdk.CollectionConverters._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider")
-    try {
+    Streams.withConf(s, Streams.RocksDbProvider) {
       val evs = Tables(s, sfDir, "events")
         .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
         .as[Ev].collect().toSeq
@@ -333,9 +329,6 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
           r.getLong(3))).toSet
       assert(got == want)
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -896,13 +889,8 @@ class StreamingSpec extends AnyFunSuite {
     // transformWithState requires RocksDB; run BOTH arms on it so the
     // store is held constant, and require identical emissions — on the
     // full semantics feed AND at the exact ms timer boundary (the test
-    // fails if the +1 shift in FunnelSnapshotTws is removed)
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider")
-    try {
+    // fails if the +1 shift in the transformWithState adapter is removed)
+    Streams.withConf(spark, Streams.RocksDbProvider) {
       val a = driveSnapshotFunnel("fmgws_rocks", Streams.funnelSnapshot)
       val b = driveSnapshotFunnel("tws_rocks", Streams.funnelSnapshotTws)
       assert(a == b, s"semantics arms diverged: fmgws=$a tws=$b")
@@ -911,9 +899,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(af._1 == Set(90L) && af._2 == Set(90L, 91L, 1L),
         s"fmgws boundary emissions wrong: $af")
       assert(af == bf, s"boundary arms diverged: fmgws=$af tws=$bf")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -986,18 +971,10 @@ class StreamingSpec extends AnyFunSuite {
   test("retained funnel tws arm == fmgws arm on the planted 4-batch feed") {
     // transformWithState requires RocksDB; run BOTH arms on it so the
     // store is held constant, and require identical emission sequences
-    val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider")
-    try {
+    Streams.withConf(spark, Streams.RocksDbProvider) {
       val a = driveRetainedFunnel("fmgws_rocks", Streams.funnelRetained)
       val b = driveRetainedFunnel("tws_rocks", Streams.funnelRetainedTws)
       assert(a == b, s"arms diverged: fmgws=$a tws=$b")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
   }
 
@@ -1075,9 +1052,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("sessionizeTws == sessionize on one planted multi-batch feed " +
       "(timeout boundary included)") {
-    // The dual-arm contract the SessionTws scaladoc promises: the
-    // flatMapGroupsWithState arm and its Spark 4 transformWithState
-    // rewrite, driven over the SAME five planted micro-batches, must emit
+    // The dual-arm contract: SessionMachine on the
+    // flatMapGroupsWithState adapter and on the Spark 4 transformWithState
+    // adapter, driven over the SAME five planted micro-batches, must emit
     // identical sessions. The feed exercises every cross-batch path:
     //  b1  u1 {10m,39m} open; u2 later; boundary users planted in b4
     //  b2  u1 15m LATE (above the 9m watermark -> admitted; min/max merge)
@@ -1095,13 +1072,9 @@ class StreamingSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     val m = 60L * 1000000
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
     // RocksDB: a transformWithState requirement; the fmgws arm runs on it
     // too so the comparison holds store constant
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider")
-    try {
+    Streams.withConf(s, Streams.RocksDbProvider) {
       def drive(tag: String,
           arm: org.apache.spark.sql.Dataset[Ev] =>
             org.apache.spark.sql.Dataset[Session]): Seq[(Long, Long, Long, Long)] = {
@@ -1137,10 +1110,28 @@ class StreamingSpec extends AnyFunSuite {
       assert(tws == want, s"tws arm diverged: $tws")
       assert(!tws.exists(_._1 == 3L),
         "u3 (timer == watermark) must stay open under the strict rule")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
+  }
+
+  test("stream rows restore the confs they pin (an unset key stays unset)") {
+    // q_stream_dedup pins the state partitions, q_stream_sessionize_tws
+    // also the RocksDB provider, each only until start(). Afterwards both
+    // keys must read as before; getAll lists only explicitly set keys, so
+    // the unset provider key must still be absent from it.
+    val s = spark
+    val provider = Streams.RocksDbProvider._1
+    val keys = Seq("spark.sql.shuffle.partitions", provider)
+    def confs() = keys.map(k => k -> s.conf.getAll.get(k)).toMap
+    val orig = s.conf.getAll.get(provider)
+    s.conf.unset(provider)
+    try {
+      val before = confs()
+      assert(before(provider).isEmpty)
+      for (row <- Seq("q_stream_dedup", "q_stream_sessionize_tws")) {
+        assert(SparkEntry.queries(row)(s, sfDir).count() > 0, s"$row: no rows")
+        assert(confs() == before, s"$row left ${confs()}, not $before")
+      }
+    } finally orig.foreach(s.conf.set(provider, _))
   }
 
   test("dropDuplicatesWithinWatermark: dedup state is reclaimed and keys re-admit") {

@@ -522,9 +522,7 @@ object StressMain {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import graft.streaming.Streams
       import graft.streaming.Streams.{Ev, Session}
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-        ".RocksDBStateStoreProvider")
+      spark.conf.set(Streams.RocksDbProvider._1, Streams.RocksDbProvider._2)
       val evs = spark.read.parquet(s"$work/events.parquet")
         .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
         .orderBy("ts_us", "event_id").as[Ev].collect()
@@ -578,7 +576,7 @@ object StressMain {
             col("start_us"), col("end_us")))
       } finally {
         sq.stop()
-        spark.conf.unset(key)
+        spark.conf.unset(Streams.RocksDbProvider._1)
       }
     }
 
@@ -1823,9 +1821,7 @@ object StressMain {
     // the restart boundary) must be restored for the final output to
     // match the batch twin. The parquet sink + checkpoint pair is Spark's
     // exactly-once contract; the multiset equality below proves it held.
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider")
+    spark.conf.set(Streams.RocksDbProvider._1, Streams.RocksDbProvider._2)
     val sessDir = s"$work/stream_sessions"
     val ckpt = new java.io.File(s"$work/ckpt_stream")
     org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
@@ -1859,7 +1855,7 @@ object StressMain {
     (half until nChunks).foreach(moveChunk)
     moveSentinel()
     val (peak2, batches2, rocks2) = drive()
-    spark.conf.unset(key)
+    spark.conf.unset(Streams.RocksDbProvider._1)
     val secs = (System.nanoTime() - t0) / 1e9
     val peakState = math.max(peak1, peak2)
     val nBatches = batches1 + batches2
