@@ -22,9 +22,9 @@ object MemBudgetMain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val ref = "/root/reference/tests/testdata"
+    val (wcMap, wcReduce) = WcScripts.write()
     operators.MapReduce.run(spark, operators.JobSpec(
-      in, out, s"$ref/exec/wc_map.sh", s"$ref/exec/wc_reduce.sh",
+      in, out, wcMap, wcReduce,
       numMappers = 2, numReducers = 2))
     spark.stop()
   }

@@ -31,10 +31,11 @@ class MemoryBudgetSpec extends AnyFunSuite {
     }
     val out = dir.resolve("out").toString
 
-    assert(ForkedJvm.run("graft.MemBudgetMain", "256m",
-      Seq(in.toString, out)) == 0,
-      "forked 256 MB JVM failed — pipeline materialized data it should " +
-        "stream (or OOMed in the shuffle)")
+    val code = ForkedJvm.run("graft.MemBudgetMain", "256m",
+      Seq(in.toString, out))
+    assert(code == 0, s"forked 256 MB MemBudgetMain exited $code; its " +
+      "exception (an OutOfMemoryError, a missing executable, …) is in the " +
+      "forked log above")
 
     // every word count must equal the total line count, summed across the
     // reduce partitions each word hashed to
