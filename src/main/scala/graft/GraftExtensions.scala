@@ -4,16 +4,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 
 import graft.functions.{BloomFns, CmsEstimate, CosineSim, DotProduct,
   SimHash32}
-import graft.plans.{CosineJoinStrategy, RewriteCosineSelfJoin,
-  RewritePrefixWindow}
 
 /** Session extension wiring: `--conf spark.sql.extensions=graft.GraftExtensions`
   * (or `.withExtensions(new GraftExtensions)`) makes the engine's native
   * functions available to plain SQL (e.g.
-  * `SELECT cosine_sim(a.embedding, b.embedding)`) and installs the
-  * cosine-self-join optimizer rule + planner strategy, so oversized
-  * declarative similarity joins auto-dispatch to the blocked-GEMM physical
-  * operator (see graft.plans.CosineJoin).
+  * `SELECT cosine_sim(a.embedding, b.embedding)`). It injects functions
+  * only: the engine has no optimizer rules, and its size-gated operators
+  * (`Similarity.cosinePairs`, `PrefixSum.shardedPrior`) are API calls.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -23,8 +20,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(BloomFns.aggRegistration)
     ext.injectFunction(BloomFns.containsRegistration)
     ext.injectFunction(CmsEstimate.registration)
-    ext.injectOptimizerRule(_ => RewriteCosineSelfJoin)
-    ext.injectOptimizerRule(_ => RewritePrefixWindow)
-    ext.injectPlannerStrategy(_ => CosineJoinStrategy)
   }
 }

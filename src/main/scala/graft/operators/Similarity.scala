@@ -241,41 +241,22 @@ object Similarity {
       s: SparkSession, df: DataFrame, threshold: Double,
       blocks: Int): DataFrame = {
     import s.implicits._
+    // a null id or vector has no pair; the broadcast arm's join and norm
+    // filter drop such rows, and the tuple decoder below would throw
     val vecs = df.select(col("vec_id"), col("embedding"))
+      .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
       .as[(Long, Array[Float])].rdd
     blockedPairs(vecs, threshold, blocks).toDF("a_id", "b_id", "cos")
   }
 
-  /** Core of [[blockedCosineJoin]] on a raw vector RDD — shared with the
-    * custom physical operator (graft.plans.BlockedCosineJoinExec).
-    *
-    * @param keepNaN  zero-norm pairs have no defined cosine. The API
-    *                 paths drop them (`false` — cosinePairs filters
-    *                 zero-norm rows on the broadcast arm too, so the arms
-    *                 agree). The OPTIMIZER REWRITE passes `true`, and it
-    *                 only ever replaces ROUND-form plans
-    *                 (`round(cosine_sim, 6) >= t`) — there `round`
-    *                 preserves NaN and Spark's NaN-is-largest comparison
-    *                 PASSES it, so the rewrite must return those rows
-    *                 too. (A floor-form plan behaves differently — NaN
-    *                 floors to 0L — but the rule never matches that
-    *                 shape; the floor-form API paths guard zero-norms
-    *                 out before any kernel.)
-    * @param sparkRound6  which 6-decimal quantization the kernel
-    *                 replicates. `false` (API paths): floor(x·1e6 + ½)
-    *                 / 1e6 — the boundary-proof cross-engine form that
-    *                 cosine()/cosinePairs use. `true` (the optimizer
-    *                 rewrite): Spark's round(x, 6) = HALF_UP on the
-    *                 shortest-decimal rendering, because the rule
-    *                 pattern-matches a user plan written with
-    *                 `round(cosine_sim(a,b), 6)` and must return
-    *                 bit-for-bit what that plan would have. */
+  /** Core of [[blockedCosineJoin]] on a raw vector RDD. Zero-norm
+    * vectors have no defined cosine and are dropped, as on the broadcast
+    * arm of [[cosinePairs]], so the arms agree. Cosines quantize as
+    * floor(x·1e6 + ½)/1e6, the cross-engine form cosine() uses. */
   def blockedPairs(
       vecs: org.apache.spark.rdd.RDD[(Long, Array[Float])],
       threshold: Double,
-      blocks: Int,
-      keepNaN: Boolean = false,
-      sparkRound6: Boolean = false): org.apache.spark.rdd.RDD[(Long, Long, Double)] = {
+      blocks: Int): org.apache.spark.rdd.RDD[(Long, Long, Double)] = {
     val bucketed = vecs
       // floorMod: a plain % would hand a negative vec_id a NEGATIVE
       // bucket, outside the 0..blocks-1 pair grid below — the broadcast
@@ -324,12 +305,10 @@ object Similarity {
           r = {
             var dot = 0.0; var k = 0
             while (k < av.length) { dot += av(k).toDouble * bv(k); k += 1 }
-            // zero-norm vector ⇒ no defined cosine: NaN when the caller
-            // needs Spark's NaN-passes-any-threshold semantics, else a
-            // sentinel that the filter drops (BigDecimal(NaN) throws)
-            if (sa == 0.0 || sb == 0.0) {
-              if (keepNaN) Double.NaN else Double.NegativeInfinity
-            } else {
+            // zero-norm vector ⇒ no defined cosine: a sentinel that the
+            // threshold filter drops
+            if (sa == 0.0 || sb == 0.0) Double.NegativeInfinity
+            else {
               val raw = dot / (sa * sb)
               // floor(x·1e6 + ½)/1e6 — the same IEEE quantization as the
               // declarative arms' cosine() and DuckDB's FLOOR formula, so
@@ -341,12 +320,10 @@ object Similarity {
               // than 1e-6 below the threshold can never reach it — skip
               // the quantization for ~all of the n²/2 pairs that lose.
               if (raw < threshold - 1e-6) Double.NegativeInfinity
-              else if (sparkRound6) BigDecimal(raw)
-                .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
               else math.floor(raw * 1e6 + 0.5) / 1e6
             }
           }
-          if r.isNaN || r >= threshold
+          if r >= threshold
         } yield (math.min(aId, bId), math.max(aId, bId), r)
       }
   }

@@ -44,63 +44,50 @@ object PrefixSum {
     * Requirements: `shard` must be non-decreasing along `orderCols`
     * within every group and constant on `orderCols` ties that straddle
     * rows (in practice: derive it from a prefix of the FIRST ordering
-    * column), with a bounded distinct count; `value` must be an EXACT
-    * type — long (the engine's cross-engine discipline) or a decimal
-    * whose scale survives promotion (see
-    * [[RewritePrefixWindow.isExactDecimal]]'s scale ≤ 6 argument) —
-    * never float/double, whose addition is not associative.
+    * column), with a bounded distinct count. `value` must be an EXACT
+    * type, never float/double, whose addition is not associative: a
+    * long (the engine's cross-engine discipline) or a decimal of scale
+    * 0..6. Why that scale bound: the decomposition's binary adds
+    * (offset + shard-local running sum − value) promote precision, and
+    * once a promoted precision crosses 38 Spark's adjustPrecisionScale
+    * picks `max(38 - intDigits, min(s, 6))` — for s ≤ 6 that is always
+    * s, so the scale is preserved and an add can only overflow (which
+    * checked decimal arithmetic surfaces, as Spark's own window Sum
+    * does), while for s ≥ 7 the last digit could round and the result
+    * would no longer equal the single-window prior.
     * The offsets frame is (groups × shards)-sized and is broadcast, so
     * `partCols` must be bounded-cardinality (source, lang, ... — the
     * grouping this operator family uses).
     */
   def shardedPrior(df: DataFrame, partCols: Seq[String], shard: Column,
       orderCols: Seq[Column], value: Column,
-      priorName: String = "prior"): DataFrame =
-    shardedPriors(df, partCols, shard, orderCols, Seq(priorName -> value))
-
-  /** Multi-value form of [[shardedPrior]]: several exact exclusive prefix
-    * sums over ONE shard histogram pass (one grouped aggregate, one
-    * bounded self-join, one shard-local window — not one set per value).
-    * Same requirements per value; each (name, value) pair adds a column
-    * `name`. `hintBroadcast=false` drops the explicit broadcast hint on
-    * the offsets join — for callers (the optimizer rewrite) whose
-    * partition-column cardinality is unknown at plan-build time, where a
-    * forced broadcast of groups × shards rows could itself blow up; the
-    * join keys are (partCols, shard) either way, so Catalyst/AQE still
-    * broadcasts when the frame is small. */
-  def shardedPriors(df: DataFrame, partCols: Seq[String], shard: Column,
-      orderCols: Seq[Column], values: Seq[(String, Column)],
-      hintBroadcast: Boolean = true): DataFrame = {
+      priorName: String = "prior"): DataFrame = {
+    val n = priorName
     val grp = partCols.map(col)
     val t = df.withColumn("__ps_shard", shard)
-    val sums = values.map { case (n, v) => sum(v).as(s"__ps_ssum_$n") }
     val hist = t.groupBy(grp :+ col("__ps_shard"): _*)
-      .agg(sums.head, sums.tail: _*)
+      .agg(sum(value).as(s"__ps_ssum_$n"))
     // offsets via a bounded histogram self-join (earlier shards of the
     // same group), NOT a window: with empty partCols a per-group window
     // here would be exactly the single-partition stage this helper exists
     // to remove. The join is ≤ shards² pairs per group.
     val earlier = hist.select(
       partCols.map(c => col(c).as(s"__pe_$c")) ++
-        Seq(col("__ps_shard").as("__pe_shard")) ++
-        values.map { case (n, _) =>
-          col(s"__ps_ssum_$n").as(s"__pe_ssum_$n") }: _*)
+        Seq(col("__ps_shard").as("__pe_shard"),
+          col(s"__ps_ssum_$n").as(s"__pe_ssum_$n")): _*)
     // <=> on the group keys, both here and in the row join below: window
     // semantics treat a NULL group value as its own partition, so plain
     // equality would compute zero offsets for the null group and then
-    // drop its rows entirely at the inner join (caught by the
-    // null-partition case in WindowShardRewriteSpec)
+    // drop its rows entirely at the inner join (PrefixSumSpec's NULL
+    // sources catch it)
     val cond = partCols
       .map(c => col(c) <=> col(s"__pe_$c"))
       .foldLeft(col("__pe_shard") < col("__ps_shard"))(_ && _)
-    val offs = values.map { case (n, _) =>
-      coalesce(sum(col(s"__pe_ssum_$n")), lit(0L)).as(s"__ps_off_$n") }
     val off = hist.join(earlier, cond, "left")
       .groupBy(grp :+ col("__ps_shard"): _*)
-      .agg(offs.head, offs.tail: _*)
+      .agg(coalesce(sum(col(s"__pe_ssum_$n")), lit(0L)).as(s"__ps_off_$n"))
       .select(partCols.map(c => col(c).as(s"__po_$c")) ++
-        Seq(col("__ps_shard").as("__po_shard")) ++
-        values.map(v => col(s"__ps_off_${v._1}")): _*)
+        Seq(col("__ps_shard").as("__po_shard"), col(s"__ps_off_$n")): _*)
     val w = Window
       .partitionBy(grp :+ col("__ps_shard"): _*)
       .orderBy(orderCols: _*)
@@ -108,123 +95,11 @@ object PrefixSum {
     val rowCond = (partCols
       .map(c => col(c) <=> col(s"__po_$c")) :+
       (col("__ps_shard") <=> col("__po_shard"))).reduce(_ && _)
-    val joined = t.join(if (hintBroadcast) broadcast(off) else off, rowCond)
-    // ALL prior columns in one select ⇒ ONE analyzed Window node. A
-    // withColumn per value would analyze to one Window node each;
-    // user-space plans get them re-merged by CollapseWindow, but the
-    // auto-dispatch rewrite inserts this subtree AFTER that batch has
-    // run, so a multi-value call would execute N same-spec window passes
-    // over the sorted partitions instead of one (caught by the
-    // rides-ONE-pass invariant in the ×1000 prefix stress).
-    val names = values.map(_._1).toSet
-    joined.select(joined.columns.filterNot(names).map(col) ++
-      values.map { case (n, v) =>
-        (col(s"__ps_off_$n") + sum(v).over(w) - v).as(n) }: _*)
+    val joined = t.join(broadcast(off), rowCond)
+    joined.select(joined.columns.filterNot(_ == n).map(col) :+
+      (col(s"__ps_off_$n") + sum(value).over(w) - value).as(n): _*)
       .drop(Seq("__ps_shard", "__po_shard") ++
-        partCols.map(c => s"__po_$c") ++
-        values.map(v => s"__ps_off_${v._1}"): _*)
-  }
-
-  /** Scale-safe global rank family: adds `rankName` = the `mode` window
-    * function ("rank" | "dense_rank" | "percent_rank" | "cume_dist")
-    * over `orderCols` within each `partCols` group, with the same
-    * sharded decomposition as [[shardedPriors]] — no stage holds an
-    * unbounded partition.
-    *
-    * Exactness: rows tying on the FULL ordering key tie on its first
-    * expression, so every peer group lives inside one shard, and all
-    * rows of earlier shards sort strictly before — hence
-    * global rank = (rows in earlier shards) + shard-local rank, and
-    * global dense_rank = (DISTINCT keys in earlier shards) +
-    * shard-local dense_rank. The histogram aggregates count(*) per
-    * (group, shard) for the row-counting modes and count(distinct key
-    * tuple) for dense_rank (`keyCols` = the raw ordering expressions, no
-    * sort direction — a distinct over sort-order wrappers is not a
-    * thing); offsets come from the same bounded histogram self-join,
-    * never a window. percent_rank and cume_dist also need the group
-    * TOTAL — free from the same histogram (sum over ALL its shards) —
-    * and stay integer-exact until one final double division with the
-    * IDENTICAL operands Spark's own evaluators divide ((rank-1)/(N-1),
-    * peer-cumulative/N), so the IEEE result is bit-equal; cume_dist's
-    * shard-local peer-cumulative count is a count over the DEFAULT
-    * (peer-inclusive RANGE) frame. All group-key joins are null-safe (a
-    * NULL group value is its own partition under window semantics). No
-    * broadcast hint on the joins (callers with unknown group cardinality
-    * — the optimizer rewrite — must not force one; AQE broadcasts small
-    * frames by estimate). */
-  def shardedRank(df: DataFrame, partCols: Seq[String], shard: Column,
-      orderCols: Seq[Column], keyCols: Seq[Column], mode: String,
-      rankName: String = "rank"): DataFrame = {
-    require(Set("rank", "dense_rank", "percent_rank", "cume_dist")(mode),
-      s"unknown rank mode: $mode")
-    val dense = mode == "dense_rank"
-    val needTotal = mode == "percent_rank" || mode == "cume_dist"
-    val grp = partCols.map(col)
-    val t = df.withColumn("__ps_shard", shard)
-    val cnt =
-      if (dense) countDistinct(struct(keyCols: _*)).as("__ps_scnt")
-      else count(lit(1)).as("__ps_scnt")
-    val hist = t.groupBy(grp :+ col("__ps_shard"): _*).agg(cnt)
-    val earlier = hist.select(
-      partCols.map(c => col(c).as(s"__pe_$c")) ++
-        Seq(col("__ps_shard").as("__pe_shard"),
-          col("__ps_scnt").as("__pe_scnt")): _*)
-    // <=> on group keys (see shardedPriors): a NULL group is a partition
-    val cond = partCols.map(c => col(c) <=> col(s"__pe_$c"))
-      .foldLeft(col("__pe_shard") < col("__ps_shard"))(_ && _)
-    val off = hist.join(earlier, cond, "left")
-      .groupBy(grp :+ col("__ps_shard"): _*)
-      .agg(coalesce(sum(col("__pe_scnt")), lit(0L)).as("__ps_off"))
-      .select(partCols.map(c => col(c).as(s"__po_$c")) ++
-        Seq(col("__ps_shard").as("__po_shard"), col("__ps_off")): _*)
-    val w = Window.partitionBy(grp :+ col("__ps_shard"): _*)
-      .orderBy(orderCols: _*)
-    val local = (mode match {
-      case "dense_rank" => dense_rank().over(w)
-      // peer-inclusive cumulative row count: the DEFAULT (RANGE
-      // UNBOUNDED PRECEDING .. CURRENT ROW) frame counts through the
-      // current peer group, which is exactly cume_dist's numerator
-      case "cume_dist" => count(lit(1)).over(w)
-      case _ => rank().over(w)
-    }).cast("long")
-    val rowCond = (partCols.map(c => col(c) <=> col(s"__po_$c")) :+
-      (col("__ps_shard") <=> col("__po_shard"))).reduce(_ && _)
-    val joined = t.join(off, rowCond)
-      .withColumn("__ps_lraw", col("__ps_off") + local)
-    val withTotal =
-      if (!needTotal) joined
-      else {
-        val tot = hist.groupBy(grp: _*)
-          .agg(sum(col("__ps_scnt")).as("__ps_n"))
-          .select(partCols.map(c => col(c).as(s"__pt_$c")) :+
-            col("__ps_n"): _*)
-        // empty partCols ⇒ the total frame is ONE row and the join is an
-        // explicit crossJoin, not `join(_, lit(true))`: a trivially-true
-        // inner condition is what CheckCartesianProducts rejects when
-        // spark.sql.crossJoin.enabled=false, and when this runs inside
-        // the optimizer rewrite that error surfaces OUTSIDE tryRewrite's
-        // try/catch — turning a working naive query into a hard
-        // AnalysisException instead of a fallback (r16 ADVICE, medium).
-        // The Cross join type is exempt from the check by design.
-        if (partCols.isEmpty) joined.crossJoin(tot)
-        else joined.join(tot,
-          partCols.map(c => col(c) <=> col(s"__pt_$c")).reduce(_ && _))
-      }
-    val result = mode match {
-      case "percent_rank" =>
-        // Spark: 0.0 for a 1-row partition, else (rank-1)/(N-1) — the
-        // same exact-long operands, so the IEEE division is bit-equal
-        when(col("__ps_n") > 1L,
-          (col("__ps_lraw") - 1L).cast("double") /
-            (col("__ps_n") - 1L).cast("double"))
-          .otherwise(lit(0.0))
-      case "cume_dist" =>
-        col("__ps_lraw").cast("double") / col("__ps_n").cast("double")
-      case _ => col("__ps_lraw")
-    }
-    withTotal.withColumn(rankName, result)
-      .drop(Seq("__ps_shard", "__po_shard", "__ps_off", "__ps_lraw",
-        "__ps_n") ++ partCols.flatMap(c => Seq(s"__po_$c", s"__pt_$c")): _*)
+        partCols.map(c => s"__po_$c") :+ s"__ps_off_$n": _*)
   }
 
   /** The md5-priority token-budget prior over a (doc_id, source, …)

@@ -1,16 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-import graft.functions.CosineSim
-import graft.plans.{RewriteCosineSelfJoin, RewritePrefixWindow}
 
 /** Forked-JVM entry for ExtensionsSpec: builds a FRESH session with
   * `.withExtensions(new GraftExtensions)` (impossible on the shared test
   * session — extensions only apply at session construction) and proves the
-  * whole wiring: SQL functions resolve by name, and the cosine-self-join
-  * rewrite fires from plain SQL once the size gate is lowered.
+  * wiring: every injected SQL function resolves by name and computes.
   * Exit 0 = all checks passed.
   */
 object ExtensionsMain {
@@ -58,52 +53,6 @@ object ExtensionsMain {
             FROM emb),
            CAST(1 AS LONG))""").collect()(0).getLong(0)
     require(cms >= 1, s"cms estimate for a present key must be >= 1: $cms")
-
-    // 2. the optimizer rule + strategy fire from PLAIN SQL
-    spark.conf.set(RewriteCosineSelfJoin.ConfKey, "0")
-    val df = spark.sql(
-      """SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-         round(cosine_sim(a.embedding, b.embedding), 6) AS cos
-         FROM emb a JOIN emb b ON a.vec_id < b.vec_id
-         WHERE round(cosine_sim(a.embedding, b.embedding), 6) >= 0.45""")
-    val plan = df.queryExecution.executedPlan.toString
-    require(plan.contains("BlockedCosineJoin") &&
-      !plan.contains("!BlockedCosineJoin"),
-      s"SQL cosine self-join did not rewrite:\n$plan")
-
-    // 3. and computes the same pairs as the library API
-    val got = df.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val want = graft.operators.Similarity.cosinePairs(spark,
-      Tables(spark, sfDir, "embeddings").select(col("vec_id"), col("embedding")),
-      0.45).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    require(got == want && got.nonEmpty,
-      s"SQL path != API path: ${got.size} vs ${want.size} pairs")
-
-    // 4. the prefix-window auto-dispatch rule fires from PLAIN SQL (the
-    // q_sample_budget shape written naively, global order) once its size
-    // gate is lowered — and computes the same prefix sums as the window
-    Tables(spark, sfDir, "documents").createOrReplaceTempView("docs")
-    val wsql =
-      """SELECT doc_id, sum(n_chars) OVER (
-           ORDER BY md5(CAST(doc_id AS STRING)), doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run
-         FROM docs"""
-    spark.conf.set(RewritePrefixWindow.ConfKey, "0")
-    val wdf = spark.sql(wsql)
-    val globalWins = wdf.queryExecution.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.isEmpty => w
-    }
-    require(globalWins.isEmpty,
-      s"SQL prefix window did not rewrite:\n${wdf.queryExecution.optimizedPlan}")
-    val gotW = wdf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    spark.conf.set(RewritePrefixWindow.ConfKey, Long.MaxValue.toString)
-    val wantW = spark.sql(wsql).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    require(gotW == wantW && gotW.nonEmpty,
-      "rewritten SQL prefix sums diverge from the window form")
 
     spark.stop()
   }

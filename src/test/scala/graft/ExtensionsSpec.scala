@@ -7,8 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** End-to-end proof of the GraftExtensions wiring in a FRESH session:
   * extensions only apply at session construction, and the shared test
   * session already exists, so this forks a JVM running [[ExtensionsMain]]
-  * (SQL function injection + optimizer rule + planner strategy from plain
-  * SQL).
+  * (SQL function injection, checked from plain SQL).
   */
 class ExtensionsSpec extends AnyFunSuite {
 

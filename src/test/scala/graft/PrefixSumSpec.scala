@@ -35,11 +35,13 @@ class PrefixSumSpec extends AnyFunSuite {
     val s = spark
     import s.implicits._
     // skewed synthetic frame: group 0 holds half the rows; values vary;
-    // the priority key (md5 of id) is adversarially unrelated to id
+    // the priority key (md5 of id) is adversarially unrelated to id.
+    // Every 13th row has a NULL source, which a window treats as its own
+    // partition, so the helper's group joins must be null-safe.
     val df = s.range(4000).select(
       col("id").as("doc_id"),
-      concat(lit("g"),
-        pmod(pmod(col("id"), lit(17)) * pmod(col("id"), lit(3)), lit(4)))
+      when(pmod(col("id"), lit(13)) =!= 0, concat(lit("g"),
+        pmod(pmod(col("id"), lit(17)) * pmod(col("id"), lit(3)), lit(4))))
         .as("source"),
       pmod(col("id") * 31 + 7, lit(997)).as("n_chars"))
     val w = Window.partitionBy("source")

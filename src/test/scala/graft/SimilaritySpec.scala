@@ -53,11 +53,14 @@ class SimilaritySpec extends AnyFunSuite {
   test("zero-norm vectors are dropped identically on both dispatch arms") {
     val s = spark
     import s.implicits._
-    val df = Seq(
-      (0L, Array(0f, 0f)), // zero norm: no defined cosine, must vanish
-      (1L, Array(1f, 0f)),
-      (2L, Array(2f, 0f)),
-      (3L, Array(0f, 1f))).toDF("vec_id", "embedding")
+    val df = Seq[(Option[Long], Array[Float])](
+      (Some(0L), Array(0f, 0f)), // zero norm: no defined cosine, must vanish
+      (Some(1L), Array(1f, 0f)),
+      (Some(2L), Array(2f, 0f)),
+      (Some(3L), Array(0f, 1f)),
+      (Some(4L), null),          // null vector: no cosine either
+      (None, Array(1f, 0f))      // null id: no pair to report
+    ).toDF("vec_id", "embedding")
     def rows(maxBytes: Long) =
       Similarity.cosinePairs(s, df, 0.45, maxBroadcastBytes = maxBytes)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))

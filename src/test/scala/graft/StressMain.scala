@@ -2045,123 +2045,6 @@ object StressMain {
         f"${metrics(s"${win}_x$copies")._3}%.1f s vs $sh peak " +
         s"${mb(metrics(s"${sh}_x$copies")._1)} MB / " +
         f"${metrics(s"${sh}_x$copies")._3}%.1f s")
-
-    // ---- the auto-dispatch rule ITSELF at the hi tier (round 16) ---------
-    // Everything above measures hand-registered sharded arms. This
-    // section measures the production artifact a USER hits: the same
-    // naive global-window query run twice — rule absent (the one-task
-    // sort Spark warns about) vs RewritePrefixWindow installed with the
-    // gate at 0 (what the 1 GiB default does to a real corpus estimate).
-    // A rank-with-dense-ties shape, the function class added in round
-    // 16: every n_chars value carries ~copies× peers, so peer-group
-    // counting (not just row counting) is what's being held equal.
-    {
-      import org.apache.spark.sql.catalyst.plans.logical.{Window => LW}
-      import org.apache.spark.sql.expressions.{Window => WS}
-      val RP = graft.plans.RewritePrefixWindow
-      def userRank(dir: String): DataFrame = spark.read
-        .parquet(s"$dir/documents.parquet")
-        .select(col("doc_id"), rank()
-          .over(WS.orderBy(col("n_chars").desc_nulls_last)).as("r"))
-      // the r16-verdict-item-2 shape: sum + row_number in ONE select —
-      // Catalyst plans ONE Window node with two expressions, and the
-      // multi-expression dispatch must carry BOTH on a single
-      // sharded-priors pass (one histogram, one offsets join, one
-      // shard-local window)
-      def userMulti(dir: String): DataFrame = {
-        val w = WS.orderBy(col("n_chars").asc_nulls_first, col("doc_id"))
-        spark.read.parquet(s"$dir/documents.parquet")
-          .select(col("doc_id"),
-            sum(col("n_chars")).over(w.rowsBetween(
-              WS.unboundedPreceding, WS.currentRow)).as("run"),
-            row_number().over(w).as("rn"))
-      }
-      def globalWins(df: DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case w: LW if w.partitionSpec.isEmpty => w
-        }.size
-      def shardWins(df: DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case w: LW if w.partitionSpec.exists {
-            case a: org.apache.spark.sql.catalyst.expressions
-              .AttributeReference => a.name == "__ps_shard"
-            case _ => false
-          } => w
-        }.size
-      spark.conf.set(pKey,
-        (pBase.toInt * (copies.toDouble / lo)).toInt.toString)
-      try {
-        val naive = userRank(s"$work/x$copies")
-        check("user rank window WITHOUT the rule plans the one-task sort",
-          globalWins(naive) == 1, "positive control lost its global window")
-        val (pN, _, _) = timed(s"user_rank_naive_x$copies", s"$work/out",
-          naive)
-        val (pMN, _, _) = timed(s"user_multi_naive_x$copies", s"$work/out",
-          userMulti(s"$work/x$copies"))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ RP
-        spark.conf.set(RP.ConfKey, "0")
-        try {
-          val dispatched = userRank(s"$work/x$copies")
-          check("user rank window WITH the rule auto-dispatches " +
-              "(no global-order window in the optimized plan)",
-            globalWins(dispatched) == 0, "rule did not fire at stress scale")
-          val (pD, _, wD) = timed(s"user_rank_dispatched_x$copies",
-            s"$work/out", dispatched)
-          sameSet(s"auto-dispatched rank == naive window rank at ×$copies " +
-              "(dense ties)",
-            out(s"user_rank_dispatched_x$copies"),
-            out(s"user_rank_naive_x$copies"))
-          check(s"auto-dispatched rank peak ≤ pool fair share at ×$copies",
-            pD <= fairShare,
-            s"peak ${mb(pD)} MB vs fair share ${mb(fairShare)} MB")
-          println(s"STRESS| auto-dispatch evidence ×$copies: naive rank " +
-            s"peak ${mb(pN)} MB (one task) vs dispatched ${mb(pD)} MB")
-          // the shardOf double-scan trade, measured alone (scaladoc in
-          // WindowShard.shardOf): the dispatched plan reads the input
-          // twice — data pass + a 1-row min/max frame. Time the min/max
-          // by itself so its share of the dispatched wall is on record;
-          // this is the number a future "optimization" into a driver
-          // collect would be buying back (at the cost of an action
-          // inside the optimizer and stale bounds under plan reuse).
-          val tMm = System.nanoTime()
-          spark.read.parquet(s"$work/x$copies/documents.parquet")
-            .agg(min(col("n_chars").cast("double")),
-              max(col("n_chars").cast("double"))).head()
-          val mmSec = (System.nanoTime() - tMm) / 1e9
-          println(f"STRESS| shardOf min/max extra scan ×$copies: " +
-            f"$mmSec%.2f s = ${mmSec / wD * 100}%.0f%% of the " +
-            f"dispatched $wD%.2f s wall")
-          // the multi-expression node, dispatched: both window columns on
-          // ONE sharded pass (exactly one __ps_shard-partitioned window
-          // in the optimized plan), set-equal to the naive pair, peak
-          // bounded like every other sharded arm
-          val multi = userMulti(s"$work/x$copies")
-          check("user sum+row_number node WITH the rule auto-dispatches",
-            globalWins(multi) == 0,
-            "multi-expression rule did not fire at stress scale")
-          check("dispatched sum+row_number rides ONE sharded-priors pass",
-            shardWins(multi) == 1,
-            s"${shardWins(multi)} shard-local windows in the plan")
-          val (pMD, _, _) = timed(s"user_multi_dispatched_x$copies",
-            s"$work/out", multi)
-          sameSet("auto-dispatched sum+row_number == naive multi-window " +
-              s"at ×$copies",
-            out(s"user_multi_dispatched_x$copies"),
-            out(s"user_multi_naive_x$copies"))
-          check(s"auto-dispatched sum+row_number peak ≤ pool fair share " +
-              s"at ×$copies",
-            pMD <= fairShare,
-            s"peak ${mb(pMD)} MB vs fair share ${mb(fairShare)} MB")
-          println(s"STRESS| multi-expr dispatch evidence ×$copies: naive " +
-            s"peak ${mb(pMN)} MB (one task) vs dispatched ${mb(pMD)} MB")
-        } finally {
-          spark.experimental.extraOptimizations =
-            spark.experimental.extraOptimizations.filterNot(_ == RP)
-          spark.conf.unset(RP.ConfKey)
-        }
-      } finally spark.conf.set(pKey, pBase)
-    }
   }
 
   /** `only` selects one text op per JVM for the ≥×10000 tier, where the
