@@ -13,7 +13,17 @@ object Bench {
     * standalone timings and correctness dumps run under the exact sweep
     * configuration. `extraConfs` is for harness callers with phase-specific
     * needs (e.g. StressMain's long-drain periodicGC); the sweep itself
-    * always runs the bare recipe. */
+    * always runs the bare recipe.
+    *
+    * `spark.sql.codegen.cache.maxEntries` sizes Spark's JVM-wide cache of
+    * compiled generated classes (default 100). Its key is (context class
+    * loader, code body), and in local mode the driver and the executor
+    * threads compile under different loaders, so each body takes two
+    * entries. One pass of all 201 registered rows at sf0.001 in a fresh
+    * session makes 3,561 such keys (`CodegenReuseMain`), so at the default
+    * the LRU cache evicts every class before its next use and a warm
+    * session recompiles the code it ran one pass earlier. 5000 holds the
+    * whole registry. */
   def benchSession(cpus: String,
       extraConfs: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
@@ -23,6 +33,7 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
     extraConfs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
