@@ -165,13 +165,18 @@ object Cli {
     args match {
       case Seq() => defaultUiPorts
       case Seq("--port", v) =>
-        val p = try v.toInt catch {
-          case _: NumberFormatException =>
-            sys.error(s"--port expects a number, got: $v")
-        }
+        val p = number("--port", v)
         p to p
       case Seq("--port") => sys.error("missing value for --port")
       case other => sys.error(s"unknown argument: ${other.mkString(" ")}")
+    }
+
+  /** A numeric flag's value, or the "`flag` expects a number" diagnostic
+    * (click's `type=int` rejection in the reference CLI). */
+  private def number(flag: String, v: String): Int =
+    try v.toInt catch {
+      case _: NumberFormatException =>
+        sys.error(s"$flag expects a number, got: $v")
     }
 
   /** Cross-process arm of [[status]]: scan the default Spark UI port
@@ -224,7 +229,10 @@ object Cli {
   /** Flag parsing, factored out for unit testing. Diagnostics distinguish
     * an UNKNOWN flag from a known flag MISSING ITS VALUE (a trailing
     * odd-length window) — the latter used to fall through to the
-    * catch-all and report "unknown argument: --output". */
+    * catch-all and report "unknown argument: --output". A non-numeric
+    * `--nmappers`/`--nreducers` and a reducer count below 1 fail here,
+    * before any session starts; a mapper count below 1 is clamped to 1
+    * by [[Engine]]. */
   private[graft] def parse(args: Array[String]): JobSpec = {
     var in = "tests/testdata/input"
     var out = "output"
@@ -239,8 +247,10 @@ object Cli {
       case Array("--output", v)    => out = v
       case Array("--mapper", v)    => mapper = v
       case Array("--reducer", v)   => reducer = v
-      case Array("--nmappers", v)  => m = v.toInt
-      case Array("--nreducers", v) => r = v.toInt
+      case Array("--nmappers", v)  => m = number("--nmappers", v)
+      case Array("--nreducers", v) =>
+        r = number("--nreducers", v)
+        if (r < 1) sys.error(s"--nreducers must be at least 1, got: $v")
       case Array(flag) if known(flag) =>
         sys.error(s"missing value for $flag")
       case other =>

@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native Catalyst expression for cosine similarity over
   * `ArrayType(FloatType)` / `ArrayType(DoubleType)` columns (each side
@@ -24,28 +21,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * stay exact at 6 decimals.
   */
 case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends VecPair {
 
-  override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
-
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _                                                  => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (Seq(left, right).forall(e => elemOk(e.dataType)))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cosine_sim requires array<float> or array<double> inputs, " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  private def isFloat(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -58,8 +36,8 @@ case class CosineSim(left: Expression, right: Expression)
     var nb = 0.0
     var i = 0
     while (i < n) {
-      val xv = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
+      val xv = elem(x, xf, i)
+      val yv = elem(y, yf, i)
       dot += xv * yv
       na += xv * xv
       nb += yv * yv
@@ -70,14 +48,12 @@ case class CosineSim(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      def get(arr: String, dt: DataType) =
-        if (isFloat(dt)) s"(double) $arr.getFloat(i)" else s"$arr.getDouble(i)"
       s"""
          |double ${ev.value}_dot = 0.0, ${ev.value}_na = 0.0, ${ev.value}_nb = 0.0;
          |int ${ev.value}_n = java.lang.Math.min($a.numElements(), $b.numElements());
          |for (int i = 0; i < ${ev.value}_n; i++) {
-         |  double xv = ${get(a, left.dataType)};
-         |  double yv = ${get(b, right.dataType)};
+         |  double xv = ${elemCode(a, left.dataType)};
+         |  double yv = ${elemCode(b, right.dataType)};
          |  ${ev.value}_dot += xv * yv;
          |  ${ev.value}_na += xv * xv;
          |  ${ev.value}_nb += yv * yv;
@@ -86,10 +62,6 @@ case class CosineSim(left: Expression, right: Expression)
          |  (java.lang.Math.sqrt(${ev.value}_na) * java.lang.Math.sqrt(${ev.value}_nb));
        """.stripMargin
     })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object CosineSim {

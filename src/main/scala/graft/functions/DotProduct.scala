@@ -1,13 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Codegen'd dot product over `ArrayType(FloatType)` /
   * `ArrayType(DoubleType)` columns (each side independently) — the
@@ -20,28 +17,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * the same IEEE operations.
   */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends VecPair {
 
-  override def dataType: DataType = DoubleType
   override def prettyName: String = "dot_product"
-
-  private def elemOk(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _                                                  => false
-  }
-
-  private def isFloat(dt: DataType): Boolean = dt match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (Seq(left, right).forall(e => elemOk(e.dataType)))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_product requires array<float> or array<double> inputs, " +
-        s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
@@ -52,8 +30,8 @@ case class DotProduct(left: Expression, right: Expression)
     var dot = 0.0
     var i = 0
     while (i < n) {
-      val xv = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yv = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
+      val xv = elem(x, xf, i)
+      val yv = elem(y, yf, i)
       dot += xv * yv
       i += 1
     }
@@ -62,21 +40,15 @@ case class DotProduct(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      def get(arr: String, dt: DataType) =
-        if (isFloat(dt)) s"(double) $arr.getFloat(i)" else s"$arr.getDouble(i)"
       s"""
          |double ${ev.value}_dot = 0.0;
          |int ${ev.value}_n = java.lang.Math.min($a.numElements(), $b.numElements());
          |for (int i = 0; i < ${ev.value}_n; i++) {
-         |  ${ev.value}_dot += ${get(a, left.dataType)} * ${get(b, right.dataType)};
+         |  ${ev.value}_dot += ${elemCode(a, left.dataType)} * ${elemCode(b, right.dataType)};
          |}
          |${ev.value} = ${ev.value}_dot;
        """.stripMargin
     })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 object DotProduct {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,6 +16,105 @@ object Complex {
   /** Deterministic scratch dir for the sink round-trip queries, under
     * the JVM's [[Scratch]] root. */
   private def scratch(name: String): String = Scratch.path(s"sink/$name")
+
+  /** Numbers each user's 30-minute-gap sessions: a lag over the
+    * (ts, event_id) order, then a running sum of session starts. One
+    * user_id shuffle, two ordered window passes. Microseconds everywhere:
+    * exact integers on both engines (a seconds cast truncates on Spark but
+    * not in DuckDB's epoch()). */
+  private def withSessionId(events: DataFrame): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    events
+      .withColumn("gap_us",
+        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
+      .withColumn("new_session",
+        when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1L)
+          .otherwise(0L))
+      .withColumn("session_id",
+        sum(col("new_session")).over(
+          w.rowsBetween(Window.unboundedPreceding, 0)))
+  }
+
+  /** The oracle's `g` CTE: each user's events in microsecond order with
+    * the gap to the previous one; `cols` are the extra event columns it
+    * carries. */
+  private def sessionGapCte(cols: String): String = s"""WITH g AS (
+                SELECT user_id, event_id, $cols
+                  epoch_us(CAST(ts AS TIMESTAMP)) AS eus,
+                  epoch_us(CAST(ts AS TIMESTAMP)) -
+                    lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
+                      (PARTITION BY user_id
+                       -- order by the MICROSECOND-truncated time, like the
+                       -- Spark side (whose reader truncates nanos): raw-ts
+                       -- order could invert same-microsecond pairs
+                       ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id)
+                      AS gap_us
+                FROM events)"""
+
+  /** [[sessionGapCte]] plus `sid`, the oracle's [[withSessionId]]: `cols`
+    * carried through `g`, `sidCols` kept by `sid` next to `session_id`. */
+  private[graft] def sessionIdCtes(cols: String, sidCols: String): String =
+    sessionGapCte(cols) + s""",
+              sid AS (
+                SELECT user_id, $sidCols
+                  CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000
+                                THEN 1 ELSE 0 END)
+                    OVER (PARTITION BY user_id ORDER BY eus, event_id
+                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS BIGINT) AS session_id
+                FROM g)"""
+
+  /** One row per session over [[sessionIdCtes]]' `sid`. */
+  private[graft] val SessionRollupSql: String =
+    """SELECT user_id, session_id, COUNT(*) AS n_events,
+                MIN(eus) AS start_us, MAX(eus) AS end_us
+              FROM sid GROUP BY user_id, session_id"""
+
+  /** Ordered funnel stages signup → click → purchase: stage k's earliest
+    * instant is a per-user MIN over the events `after(us, t_{k-1})`
+    * admits. Every shuffle is on user_id with map-side partials; the
+    * 1-row stage counts meet via broadcast. */
+  private def funnel(events: DataFrame,
+      after: (Column, Column) => Column): DataFrame = {
+    val ev = events
+      .select(col("user_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"))
+    val t1 = ev.filter(col("event_type") === "signup")
+      .groupBy("user_id").agg(min(col("us")).as("t1"))
+    val t2 = ev.filter(col("event_type") === "click")
+      .join(t1, "user_id").filter(after(col("us"), col("t1")))
+      .groupBy("user_id").agg(min(col("us")).as("t2"))
+    val t3 = ev.filter(col("event_type") === "purchase")
+      .join(t2, "user_id").filter(after(col("us"), col("t2")))
+      .groupBy("user_id").agg(min(col("us")).as("t3"))
+    t1.agg(count(lit(1)).as("n_signup"))
+      .crossJoin(broadcast(t2.agg(count(lit(1)).as("n_click"))))
+      .crossJoin(broadcast(t3.agg(count(lit(1)).as("n_purchase"))))
+  }
+
+  /** [[funnel]]'s oracle; `after(t)` is the stage predicate over the
+    * previous stage's instant `t`. */
+  private def funnelSql(after: String => String): String =
+    s"""WITH ev AS (
+                SELECT user_id, event_type,
+                  epoch_us(CAST(ts AS TIMESTAMP)) AS us
+                FROM events),
+              t1 AS (SELECT user_id, MIN(us) AS t1 FROM ev
+                     WHERE event_type = 'signup' GROUP BY user_id),
+              t2 AS (SELECT ev.user_id, MIN(us) AS t2
+                     FROM ev JOIN t1 USING (user_id)
+                     WHERE event_type = 'click' AND ${after("t1")}
+                     GROUP BY ev.user_id),
+              t3 AS (SELECT ev.user_id, MIN(us) AS t3
+                     FROM ev JOIN t2 USING (user_id)
+                     WHERE event_type = 'purchase' AND ${after("t2")}
+                     GROUP BY ev.user_id)
+              SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM t1) AS n_signup,
+                (SELECT CAST(COUNT(*) AS BIGINT) FROM t2) AS n_click,
+                (SELECT CAST(COUNT(*) AS BIGINT) FROM t3) AS n_purchase"""
+
+  /** q_funnel's oracle: each stage strictly after the previous one. */
+  private[graft] val FunnelOracleSql: String = funnelSql(t => s"us > $t")
 
   val queries: Seq[Q] = Seq(
 
@@ -82,47 +181,14 @@ object Complex {
     // flatMapGroupsWithState; kept here in batch form so it gets a
     // correctness row. One shuffle (user_id), two ordered window passes.
     Q("q_sessionize",
-      (s, d) => {
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        Tables(s, d, "events")
-          // microseconds everywhere: exact integers on both engines (a
-          // seconds cast truncates on Spark but not in DuckDB's epoch()).
-          .withColumn("gap_us",
-            unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-          .withColumn("new_session",
-            when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1L)
-              .otherwise(0L))
-          .withColumn("session_id",
-            sum(col("new_session")).over(
-              w.rowsBetween(Window.unboundedPreceding, 0)))
-          .groupBy("user_id", "session_id")
-          .agg(count(lit(1)).as("n_events"),
-            min(unix_micros(col("ts"))).as("start_us"),
-            max(unix_micros(col("ts"))).as("end_us"))
-          .orderBy("user_id", "session_id")
-      },
-      Some("""WITH g AS (
-                SELECT user_id, event_id,
-                  epoch_us(CAST(ts AS TIMESTAMP)) AS eus,
-                  epoch_us(CAST(ts AS TIMESTAMP)) -
-                    lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-                      (PARTITION BY user_id
-                       -- order by the MICROSECOND-truncated time, like the
-                       -- Spark side (whose reader truncates nanos): raw-ts
-                       -- order could invert same-microsecond pairs
-                       ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id)
-                      AS gap_us
-                FROM events),
-              sid AS (
-                SELECT user_id, event_id, eus,
-                  CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY eus, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS session_id
-                FROM g)
-              SELECT user_id, session_id, COUNT(*) AS n_events,
-                MIN(eus) AS start_us, MAX(eus) AS end_us
-              FROM sid GROUP BY user_id, session_id
+      (s, d) => withSessionId(Tables(s, d, "events"))
+        .groupBy("user_id", "session_id")
+        .agg(count(lit(1)).as("n_events"),
+          min(unix_micros(col("ts"))).as("start_us"),
+          max(unix_micros(col("ts"))).as("end_us"))
+        .orderBy("user_id", "session_id"),
+      Some(sessionIdCtes("", "event_id, eus,") + s"""
+              $SessionRollupSql
               ORDER BY user_id, session_id""")),
 
     // ---- session attribution (first/last touch + conversion) -------------
@@ -149,22 +215,13 @@ object Complex {
     // decimal discipline.
     Q("q_session_attrib",
       (s, d) => {
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
         val dim = Tables(s, d, "events").select("event_type").distinct()
           .withColumn("etc", row_number().over(Window.orderBy("event_type")))
           .localCheckpoint()
         val k = expr("unix_micros(ts)").cast("decimal(20,0)") *
           lit(1000000000000L).cast("decimal(13,0)") + col("event_id")
-        Tables(s, d, "events")
-          .join(broadcast(dim), Seq("event_type"))
-          .withColumn("gap_us",
-            unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-          .withColumn("new_session",
-            when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1L)
-              .otherwise(0L))
-          .withColumn("session_id",
-            sum(col("new_session")).over(
-              w.rowsBetween(Window.unboundedPreceding, 0)))
+        withSessionId(Tables(s, d, "events")
+            .join(broadcast(dim), Seq("event_type")))
           .groupBy("user_id", "session_id")
           .agg(count(lit(1)).as("n_events"),
             min_by(col("etc"), k).as("ftc"),
@@ -181,24 +238,8 @@ object Complex {
             col("purchase_value"))
           .orderBy("user_id", "session_id")
       },
-      Some(s"""WITH g AS (
-                SELECT user_id, event_id, event_type, value,
-                  epoch_us(CAST(ts AS TIMESTAMP)) AS eus,
-                  epoch_us(CAST(ts AS TIMESTAMP)) -
-                    lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-                      (PARTITION BY user_id
-                       ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id)
-                      AS gap_us
-                FROM events),
-              sid AS (
-                SELECT user_id, event_id, event_type, value, eus,
-                  eus::HUGEINT * 1000000000000 + event_id AS k,
-                  CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000
-                    THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY eus, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS session_id
-                FROM g)
+      Some(sessionIdCtes("event_type, value,", """event_id, event_type, value, eus,
+                  eus::HUGEINT * 1000000000000 + event_id AS k,""") + s"""
               SELECT user_id, session_id, COUNT(*) AS n_events,
                 arg_min(event_type, k) AS first_touch,
                 arg_max(event_type, k) AS last_touch,
@@ -677,18 +718,7 @@ object Complex {
         .select(col("user_id"), col("n_events"), col("start_us"),
           col("end_us"))
         .orderBy("user_id", "start_us"),
-      Some("""WITH g AS (
-                SELECT user_id, event_id,
-                  epoch_us(CAST(ts AS TIMESTAMP)) AS eus,
-                  epoch_us(CAST(ts AS TIMESTAMP)) -
-                    lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-                      (PARTITION BY user_id
-                       -- order by the MICROSECOND-truncated time, like the
-                       -- Spark side (whose reader truncates nanos): raw-ts
-                       -- order could invert same-microsecond pairs
-                       ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id)
-                      AS gap_us
-                FROM events),
+      Some(sessionGapCte("") + """,
               s AS (
                 SELECT user_id, eus,
                   SUM(CASE WHEN gap_us IS NULL OR gap_us >= 1800000000
@@ -713,39 +743,8 @@ object Complex {
     // user-partitioned agg over an already-filtered event slice — no
     // windows over the full stream, no per-user state beyond one MIN.
     Q("q_funnel",
-      (s, d) => {
-        val ev = Tables(s, d, "events")
-          .select(col("user_id"), col("event_type"),
-            unix_micros(col("ts")).as("us"))
-        val t1 = ev.filter(col("event_type") === "signup")
-          .groupBy("user_id").agg(min(col("us")).as("t1"))
-        val t2 = ev.filter(col("event_type") === "click")
-          .join(t1, "user_id").filter(col("us") > col("t1"))
-          .groupBy("user_id").agg(min(col("us")).as("t2"))
-        val t3 = ev.filter(col("event_type") === "purchase")
-          .join(t2, "user_id").filter(col("us") > col("t2"))
-          .groupBy("user_id").agg(min(col("us")).as("t3"))
-        t1.agg(count(lit(1)).as("n_signup"))
-          .crossJoin(broadcast(t2.agg(count(lit(1)).as("n_click"))))
-          .crossJoin(broadcast(t3.agg(count(lit(1)).as("n_purchase"))))
-      },
-      Some("""WITH ev AS (
-                SELECT user_id, event_type,
-                  epoch_us(CAST(ts AS TIMESTAMP)) AS us
-                FROM events),
-              t1 AS (SELECT user_id, MIN(us) AS t1 FROM ev
-                     WHERE event_type = 'signup' GROUP BY user_id),
-              t2 AS (SELECT ev.user_id, MIN(us) AS t2
-                     FROM ev JOIN t1 USING (user_id)
-                     WHERE event_type = 'click' AND us > t1
-                     GROUP BY ev.user_id),
-              t3 AS (SELECT ev.user_id, MIN(us) AS t3
-                     FROM ev JOIN t2 USING (user_id)
-                     WHERE event_type = 'purchase' AND us > t2
-                     GROUP BY ev.user_id)
-              SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM t1) AS n_signup,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM t2) AS n_click,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM t3) AS n_purchase""")),
+      (s, d) => funnel(Tables(s, d, "events"), (us, t) => us > t),
+      Some(FunnelOracleSql)),
 
     // ---- funnel with a bounded conversion window ---------------------------
     // The production form of q_funnel: a stage converts only within a
@@ -760,44 +759,10 @@ object Complex {
     Q("q_funnel_windowed",
       (s, d) => {
         val horizonUs = 172800000000L // 48 h
-        val ev = Tables(s, d, "events")
-          .select(col("user_id"), col("event_type"),
-            unix_micros(col("ts")).as("us"))
-        val t1 = ev.filter(col("event_type") === "signup")
-          .groupBy("user_id").agg(min(col("us")).as("t1"))
-        val t2 = ev.filter(col("event_type") === "click")
-          .join(t1, "user_id")
-          .filter(col("us") > col("t1") &&
-            col("us") - col("t1") <= horizonUs)
-          .groupBy("user_id").agg(min(col("us")).as("t2"))
-        val t3 = ev.filter(col("event_type") === "purchase")
-          .join(t2, "user_id")
-          .filter(col("us") > col("t2") &&
-            col("us") - col("t2") <= horizonUs)
-          .groupBy("user_id").agg(min(col("us")).as("t3"))
-        t1.agg(count(lit(1)).as("n_signup"))
-          .crossJoin(broadcast(t2.agg(count(lit(1)).as("n_click"))))
-          .crossJoin(broadcast(t3.agg(count(lit(1)).as("n_purchase"))))
+        funnel(Tables(s, d, "events"),
+          (us, t) => us > t && us - t <= horizonUs)
       },
-      Some("""WITH ev AS (
-                SELECT user_id, event_type,
-                  epoch_us(CAST(ts AS TIMESTAMP)) AS us
-                FROM events),
-              t1 AS (SELECT user_id, MIN(us) AS t1 FROM ev
-                     WHERE event_type = 'signup' GROUP BY user_id),
-              t2 AS (SELECT ev.user_id, MIN(us) AS t2
-                     FROM ev JOIN t1 USING (user_id)
-                     WHERE event_type = 'click' AND us > t1
-                       AND us - t1 <= 172800000000
-                     GROUP BY ev.user_id),
-              t3 AS (SELECT ev.user_id, MIN(us) AS t3
-                     FROM ev JOIN t2 USING (user_id)
-                     WHERE event_type = 'purchase' AND us > t2
-                       AND us - t2 <= 172800000000
-                     GROUP BY ev.user_id)
-              SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM t1) AS n_signup,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM t2) AS n_click,
-                (SELECT CAST(COUNT(*) AS BIGINT) FROM t3) AS n_purchase""")),
+      Some(funnelSql(t => s"us > $t\n                       AND us - $t <= 172800000000"))),
 
     // ---- cohort retention --------------------------------------------------
     // Users cohorted by their FIRST active hour; retention = distinct

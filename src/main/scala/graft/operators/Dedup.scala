@@ -705,6 +705,32 @@ object Dedup {
       (col("id") === col("label")).as("keep"))
     .orderBy("doc_id")
 
+  /** The embedding near-dup rows' output: every vector of `e` with its
+    * connected-component cluster over `edges` (a_id, b_id), singletons
+    * their own cluster, the minimum vec_id kept. */
+  private def embedClusters(e: DataFrame, edges: DataFrame): DataFrame = {
+    val labels = connectedComponents(edges)
+      .withColumnRenamed("id", "vec_id")
+    e.select(col("vec_id")).join(labels, Seq("vec_id"), "left")
+      .withColumn("cluster_id", coalesce(col("label"), col("vec_id")))
+      .withColumn("keep", col("vec_id") === col("cluster_id"))
+      .select("vec_id", "cluster_id", "keep")
+      .orderBy("vec_id")
+  }
+
+  /** [[embedClusters]]' oracle over an edge CTE `p` (a_id, b_id): a
+    * recursive transitive closure seeded with every vec_id of `seed`. */
+  private def embedClusterSql(seed: String): String = s"""edges AS (
+                SELECT a_id AS a, b_id AS b FROM p
+                UNION SELECT b_id, a_id FROM p),
+              r(id, n) AS (
+                SELECT vec_id, vec_id FROM $seed
+                UNION
+                SELECT r.id, edges.b FROM r JOIN edges ON r.n = edges.a)
+              SELECT id AS vec_id, MIN(n) AS cluster_id,
+                (MIN(n) = id) AS keep
+              FROM r GROUP BY id ORDER BY vec_id"""
+
   /** Pipeline stage 0: the four curation columns + tokenization. Shared
     * by the batch chain and the streaming arm so the two can't drift. */
   private def corpusD0(in: DataFrame): DataFrame = in
@@ -1065,13 +1091,7 @@ object Dedup {
           .select(col("vec_id"), col("embedding"))
         val edges = Similarity.cosinePairs(s, e, 0.45)
           .select(col("a_id"), col("b_id"))
-        val labels = connectedComponents(edges)
-          .withColumnRenamed("id", "vec_id")
-        e.select(col("vec_id")).join(labels, Seq("vec_id"), "left")
-          .withColumn("cluster_id", coalesce(col("label"), col("vec_id")))
-          .withColumn("keep", col("vec_id") === col("cluster_id"))
-          .select("vec_id", "cluster_id", "keep")
-          .orderBy("vec_id")
+        embedClusters(e, edges)
       },
       // edge predicate = Similarity.sqlCosineCols — the SAME floor-micro
       // quantization cosinePairs applies (this oracle was the one cosine
@@ -1083,16 +1103,7 @@ object Dedup {
                 SELECT a.vec_id AS a_id, b.vec_id AS b_id
                 FROM e a JOIN e b ON a.vec_id < b.vec_id
                 WHERE ${Similarity.sqlCosineCols("a.v", "b.v")} >= 0.45),
-              edges AS (
-                SELECT a_id AS a, b_id AS b FROM p
-                UNION SELECT b_id, a_id FROM p),
-              r(id, n) AS (
-                SELECT vec_id, vec_id FROM e
-                UNION
-                SELECT r.id, edges.b FROM r JOIN edges ON r.n = edges.a)
-              SELECT id AS vec_id, MIN(n) AS cluster_id,
-                (MIN(n) = id) AS keep
-              FROM r GROUP BY id ORDER BY vec_id""")),
+              ${embedClusterSql("e")}""")),
 
     // ---- bucketed embedding near-dup (the 100 TB semantic-dedup path) ----
     // SemDeDup shape: q_dedup_embed's exact all-pairs join is O(n²) in TASK
@@ -1131,13 +1142,7 @@ object Dedup {
           .filter(col("a_id") < col("b_id"))
           .filter(Similarity.cosine(s, col("a_v"), col("b_v")) >= 0.45)
           .select("a_id", "b_id")
-        val labels = connectedComponents(edges)
-          .withColumnRenamed("id", "vec_id")
-        e.select(col("vec_id")).join(labels, Seq("vec_id"), "left")
-          .withColumn("cluster_id", coalesce(col("label"), col("vec_id")))
-          .withColumn("keep", col("vec_id") === col("cluster_id"))
-          .select("vec_id", "cluster_id", "keep")
-          .orderBy("vec_id")
+        embedClusters(e, edges)
       },
       // the oracle filters `e` with the SAME zero-norm predicate the Spark
       // side applies (dropZeroNorm) rather than relying on DuckDB's 0/0 →
@@ -1155,16 +1160,7 @@ object Dedup {
                 FROM a4 a JOIN a4 b
                   ON a.bucket = b.bucket AND a.vec_id < b.vec_id
                 WHERE ${Similarity.sqlCosineCols("a.v", "b.v")} >= 0.45),
-              edges AS (
-                SELECT a_id AS a, b_id AS b FROM p
-                UNION SELECT b_id, a_id FROM p),
-              r(id, n) AS (
-                SELECT vec_id, vec_id FROM all_e
-                UNION
-                SELECT r.id, edges.b FROM r JOIN edges ON r.n = edges.a)
-              SELECT id AS vec_id, MIN(n) AS cluster_id,
-                (MIN(n) = id) AS keep
-              FROM r GROUP BY id ORDER BY vec_id""")),
+              ${embedClusterSql("all_e")}""")),
 
     // ---- embedding near-dup, hyperplane-LSH (the third index family) -----
     // Sign-LSH (Charikar SimHash over the embedding space) next to the
@@ -1209,13 +1205,7 @@ object Dedup {
             col("embedding").as("b_v")), Seq("b_id"))
           .filter(Similarity.cosine(s, col("a_v"), col("b_v")) >= 0.45)
           .select("a_id", "b_id")
-        val labels = connectedComponents(edges)
-          .withColumnRenamed("id", "vec_id")
-        e.select(col("vec_id")).join(labels, Seq("vec_id"), "left")
-          .withColumn("cluster_id", coalesce(col("label"), col("vec_id")))
-          .withColumn("keep", col("vec_id") === col("cluster_id"))
-          .select("vec_id", "cluster_id", "keep")
-          .orderBy("vec_id")
+        embedClusters(e, edges)
       },
       Some(s"""WITH RECURSIVE
               e AS (SELECT vec_id, embedding::DOUBLE[] AS v
@@ -1233,16 +1223,7 @@ object Dedup {
                 JOIN e ea ON ea.vec_id = a_id
                 JOIN e eb ON eb.vec_id = b_id
                 WHERE ${Similarity.sqlCosineCols("ea.v", "eb.v")} >= 0.45),
-              edges AS (
-                SELECT a_id AS a, b_id AS b FROM p
-                UNION SELECT b_id, a_id FROM p),
-              r(id, n) AS (
-                SELECT vec_id, vec_id FROM all_e
-                UNION
-                SELECT r.id, edges.b FROM r JOIN edges ON r.n = edges.a)
-              SELECT id AS vec_id, MIN(n) AS cluster_id,
-                (MIN(n) = id) AS keep
-              FROM r GROUP BY id ORDER BY vec_id""")),
+              ${embedClusterSql("all_e")}""")),
 
     // ---- incremental dedup (new batch vs existing corpus) ------------------
     // The shape a production pipeline actually runs nightly: dedup an

@@ -38,23 +38,8 @@ object Relational {
     * runs it over `orders` against a DuckDB oracle.
     */
   def profile(df: DataFrame,
-      cols: Seq[(String, Column => Column)]): DataFrame = {
-    val aggs = count(lit(1)).as("n_rows") +: cols.flatMap { case (n, fmt) =>
-      Seq(count(col(n)).as(s"cnt_$n"),
-        countDistinct(col(n)).as(s"nd_$n"),
-        fmt(min(col(n))).as(s"min_$n"),
-        fmt(max(col(n))).as(s"max_$n"))
-    }
-    val one = df.agg(aggs.head, aggs.tail: _*)
-    val entries = cols.map { case (n, _) =>
-      struct(lit(n).as("col_name"), col("n_rows"),
-        (col("n_rows") - col(s"cnt_$n")).as("n_null"),
-        col(s"nd_$n").as("n_distinct"),
-        col(s"min_$n").as("min_val"), col(s"max_$n").as("max_val"))
-    }
-    one.select(explode(array(entries: _*)).as("p"))
-      .select("p.*").orderBy("col_name")
-  }
+      cols: Seq[(String, Column => Column)]): DataFrame =
+    profileOf(df, cols, c => countDistinct(c), "n_distinct")
 
   /** The 100 TB arm of [[profile]]: identical long-form shape but the
     * distinct counts come from `approx_count_distinct` — ONE scan, ONE
@@ -70,10 +55,16 @@ object Relational {
     * reduces it to a cross-engine bound verdict (the q_approx_distinct
     * pattern). */
   def profileApprox(df: DataFrame, cols: Seq[(String, Column => Column)],
-      rsd: Double = 0.05): DataFrame = {
+      rsd: Double = 0.05): DataFrame =
+    profileOf(df, cols, approx_count_distinct(_, rsd), "nd_approx")
+
+  /** The long-form profile with `distinct` as the per-column distinct
+    * count, emitted as column `ndName`. */
+  private def profileOf(df: DataFrame, cols: Seq[(String, Column => Column)],
+      distinct: Column => Column, ndName: String): DataFrame = {
     val aggs = count(lit(1)).as("n_rows") +: cols.flatMap { case (n, fmt) =>
       Seq(count(col(n)).as(s"cnt_$n"),
-        approx_count_distinct(col(n), rsd).as(s"nd_$n"),
+        distinct(col(n)).as(s"nd_$n"),
         fmt(min(col(n))).as(s"min_$n"),
         fmt(max(col(n))).as(s"max_$n"))
     }
@@ -81,7 +72,7 @@ object Relational {
     val entries = cols.map { case (n, _) =>
       struct(lit(n).as("col_name"), col("n_rows"),
         (col("n_rows") - col(s"cnt_$n")).as("n_null"),
-        col(s"nd_$n").as("nd_approx"),
+        col(s"nd_$n").as(ndName),
         col(s"min_$n").as("min_val"), col(s"max_$n").as("max_val"))
     }
     one.select(explode(array(entries: _*)).as("p"))
@@ -194,6 +185,20 @@ object Relational {
         allow
       FROM exact CROSS JOIN tot ORDER BY exact_n DESC, l_suppkey""")
   }
+
+  /** q_events_sliding's oracle: the two 30-minute window starts of each
+    * event expanded explicitly. */
+  private[graft] val EventsSlidingOracleSql: String = s"""WITH x AS (
+                SELECT CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)) / 1800) * 1800
+                       AS BIGINT) AS w0, event_type, value
+                FROM events),
+              u AS (
+                SELECT w0 AS win_start, event_type, value FROM x
+                UNION ALL
+                SELECT w0 - 1800, event_type, value FROM x)
+              SELECT win_start, event_type, COUNT(*) AS n,
+                ${sqlSum("value")} AS sum_value
+              FROM u GROUP BY 1, 2 ORDER BY win_start, event_type"""
 
   val queries: Seq[Q] = Seq(
 
@@ -917,17 +922,7 @@ object Relational {
         .select(unix_timestamp(col("window.start")).as("win_start"),
           col("event_type"), col("n"), col("sum_value"))
         .orderBy("win_start", "event_type"),
-      Some(s"""WITH x AS (
-                SELECT CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)) / 1800) * 1800
-                       AS BIGINT) AS w0, event_type, value
-                FROM events),
-              u AS (
-                SELECT w0 AS win_start, event_type, value FROM x
-                UNION ALL
-                SELECT w0 - 1800, event_type, value FROM x)
-              SELECT win_start, event_type, COUNT(*) AS n,
-                ${sqlSum("value")} AS sum_value
-              FROM u GROUP BY 1, 2 ORDER BY win_start, event_type""")),
+      Some(EventsSlidingOracleSql)),
 
     // GROUPING SETS (the general form rollup/cube specialize): per-status,
     // per-priority, and grand-total aggregates in ONE pass (Spark plans an

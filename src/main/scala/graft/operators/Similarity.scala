@@ -1247,10 +1247,7 @@ object Similarity {
       .orderBy(col("rrf").desc, col("doc_id"))
     lex.join(vec, Seq("q_id", "doc_id"), "full_outer")
       .select(col("q_id"), col("doc_id"), col("r_lex"), col("r_vec"),
-        micro6(
-          coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)))
-          .as("rrf"))
+        rrf)
       .withColumn("rn", row_number().over(outW))
       .filter(col("rn") <= kOut).drop("rn")
       .orderBy(col("q_id"), col("rrf").desc, col("doc_id"))
@@ -1297,6 +1294,39 @@ object Similarity {
       .orderBy("a_id")
   }
 
+  /** Reciprocal-rank fusion (Cormack et al. 2009, k = 60) of the ranks
+    * `r_lex` and `r_vec`: one IEEE expression tree, a missing rank
+    * contributing 0, floor-micro quantized. */
+  private def rrf: Column =
+    micro6(
+      coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
+        coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)))
+      .as("rrf")
+
+  /** An MMR round's score over the remaining candidates: `max_sim` (0.0
+    * before any pick) and `mmr_micros` = floor-micro(λ·rel − μ·max_sim). */
+  private def mmrScored(rem: DataFrame, lambda: Double,
+      mu: Double): DataFrame = rem
+    .withColumn("max_sim", coalesce(col("msim"), lit(0.0)))
+    .withColumn("mmr_micros", floor(
+      (lit(lambda) * col("rel") - lit(mu) * col("max_sim")) * 1e6
+        + 0.5).cast("long"))
+
+  /** Drops the newest pick `(s_id, s_v)` joined onto the remaining
+    * candidates and folds its cosine into their running `msim`. */
+  private def foldMaxSim(s: SparkSession, joined: DataFrame): DataFrame =
+    joined
+      .filter(col("doc_id") =!= col("s_id"))
+      .withColumn("msim",
+        greatest(col("msim"), cosine(s, col("embedding"), col("s_v"))))
+      .drop("s_id", "s_v")
+
+  /** Frees an MMR loop's candidate checkpoint and every round but the
+    * last, which the result reads. */
+  private def freeRounds(cand: DataFrame,
+      rounds: collection.Seq[DataFrame]): Unit =
+    (cand +: rounds.init).foreach(Materialize.free)
+
   /** Greedy MMR selection over a candidate frame `(doc_id, embedding,
     * rel)` — the kernel behind q_mmr_rerank: `k` driver-composed rounds,
     * each keeping the argmax of floor-micro(λ·rel − μ·max_sim(selected))
@@ -1307,7 +1337,9 @@ object Similarity {
     * the exact decimal both engines parse. The candidate frame is
     * expected to be config-bounded (a top-K cut); every round
     * localCheckpoints so the composed plan stays flat in k. Returns
-    * (rank, doc_id, rel, max_sim, mmr) in selection order. */
+    * (rank, doc_id, rel, max_sim, mmr) in selection order. Not run as
+    * [[mmrSelectBatch]] at one query: the batch form's per-query window
+    * adds an exchange to every round. */
   def mmrSelect(s: SparkSession, candidates: DataFrame, lambda: Double,
       mu: Double, k: Int): DataFrame = {
     val cand = candidates.localCheckpoint()
@@ -1326,28 +1358,23 @@ object Similarity {
     // round-1 contract (max_sim = 0.0) is restored at pick time.
     var rem = cand.withColumn("msim", lit(null).cast("double"))
     var selected: DataFrame = null
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (i <- 1 to k) {
-      val pick = rem
-        .withColumn("max_sim", coalesce(col("msim"), lit(0.0)))
-        .withColumn("mmr_micros", floor(
-          (lit(lambda) * col("rel") - lit(mu) * col("max_sim")) * 1e6
-            + 0.5).cast("long"))
+      val pick = mmrScored(rem, lambda, mu)
         .orderBy(col("mmr_micros").desc, col("doc_id")).limit(1)
         .select(lit(i).as("rank"), col("doc_id"), col("embedding"),
           col("rel"), col("max_sim"), col("mmr_micros"))
       selected =
         (if (i == 1) pick else selected.unionByName(pick))
           .localCheckpoint()
+      rounds += selected
       if (i < k) {
         val last = selected.filter(col("rank") === i)
           .select(col("doc_id").as("s_id"), col("embedding").as("s_v"))
-        rem = rem.crossJoin(broadcast(last))
-          .filter(col("doc_id") =!= col("s_id"))
-          .withColumn("msim",
-            greatest(col("msim"), cosine(s, col("embedding"), col("s_v"))))
-          .drop("s_id", "s_v")
+        rem = foldMaxSim(s, rem.crossJoin(broadcast(last)))
       }
     }
+    freeRounds(cand, rounds)
     selected.select(col("rank"), col("doc_id"), col("rel"),
       col("max_sim"), col("mmr_micros")).orderBy("rank")
   }
@@ -1376,10 +1403,7 @@ object Similarity {
       .select(col("doc_id"), row_number().over(vecW).as("r_vec"))
     lex.join(vec, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("r_lex"), col("r_vec"),
-        micro6(
-          coalesce(lit(1.0) / (lit(60) + col("r_lex")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(60) + col("r_vec")), lit(0.0)))
-          .as("rrf"))
+        rrf)
   }
 
   /** [[mmrSelect]] generalized to a QUERY BATCH: candidates carry a q_id
@@ -1402,34 +1426,326 @@ object Similarity {
     // so the inner join drops nothing.
     var rem = cand.withColumn("msim", lit(null).cast("double"))
     var selected: DataFrame = null
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (i <- 1 to k) {
       val w = Window.partitionBy("q_id")
         .orderBy(col("mmr_micros").desc, col("doc_id"))
-      val pick = rem
-        .withColumn("max_sim", coalesce(col("msim"), lit(0.0)))
-        .withColumn("mmr_micros", floor(
-          (lit(lambda) * col("rel") - lit(mu) * col("max_sim")) * 1e6
-            + 0.5).cast("long"))
+      val pick = mmrScored(rem, lambda, mu)
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
         .select(lit(i).as("rank"), col("q_id"), col("doc_id"),
           col("embedding"), col("rel"), col("max_sim"), col("mmr_micros"))
       selected =
         (if (i == 1) pick else selected.unionByName(pick))
           .localCheckpoint()
+      rounds += selected
       if (i < k) {
         val last = selected.filter(col("rank") === i)
           .select(col("q_id"), col("doc_id").as("s_id"),
             col("embedding").as("s_v"))
-        rem = rem.join(broadcast(last), Seq("q_id"))
-          .filter(col("doc_id") =!= col("s_id"))
-          .withColumn("msim",
-            greatest(col("msim"), cosine(s, col("embedding"), col("s_v"))))
-          .drop("s_id", "s_v")
+        rem = foldMaxSim(s, rem.join(broadcast(last), Seq("q_id")))
       }
     }
+    freeRounds(cand, rounds)
     selected.select(col("rank"), col("q_id"), col("doc_id"), col("rel"),
       col("max_sim"), col("mmr_micros")).orderBy("q_id", "rank")
   }
+
+  /** [[tripletFrame]]'s oracle; `negWhere` restricts the negative
+    * candidates exactly as the Spark side's does. */
+  private def sqlTriplet(negWhere: Option[String]): String =
+    s"""WITH e AS (
+                SELECT vec_id, embedding::DOUBLE[] AS v, label
+                FROM embeddings WHERE $sqlZeroNormWhere),
+              a AS (SELECT vec_id AS a_id, v AS a_v, label AS a_label
+                    FROM e WHERE vec_id < 20),
+              pos AS (
+                SELECT a_id, vec_id AS pos_id, cos AS pos_cos FROM (
+                  SELECT a.a_id, e.vec_id,
+                    ${sqlCosineCols("e.v", "a.a_v")} AS cos,
+                    row_number() OVER (PARTITION BY a.a_id ORDER BY
+                      ${sqlCosineCols("e.v", "a.a_v")} DESC, e.vec_id)
+                      AS rn
+                  FROM e JOIN a ON e.label = a.a_label
+                    AND e.vec_id <> a.a_id)
+                WHERE rn = 1),
+              neg AS (
+                SELECT a_id, vec_id AS neg_id, label AS neg_label FROM (
+                  SELECT a.a_id, e.vec_id, e.label,
+                    row_number() OVER (PARTITION BY a.a_id ORDER BY
+                      md5(CAST(a.a_id AS VARCHAR) || '_' ||
+                          CAST(e.vec_id AS VARCHAR)), e.vec_id) AS rn
+                  FROM e JOIN a ON e.label <> a.a_label${
+                    negWhere.fold("")(w => s" WHERE $w")})
+                WHERE rn = 1)
+              SELECT a.a_id, a.a_label, pos.pos_id, pos.pos_cos,
+                neg.neg_id, neg.neg_label
+              FROM a JOIN pos USING (a_id) JOIN neg USING (a_id)
+              ORDER BY a_id"""
+
+  /** The fused score both hybrid retrieval forms emit: reciprocal-rank
+    * fusion at k = 60, one IEEE expression tree floor-micro quantized. */
+  private val sqlRrf: String =
+    Arith.sqlMicro6("""COALESCE(CAST(1 AS DOUBLE) / (60 + r_lex), 0.0) +
+                      COALESCE(CAST(1 AS DOUBLE) / (60 + r_vec), 0.0)""")
+
+  /** [[fixedHybridFused]]'s oracle arms: the BM25 top-50 `lex(doc_id,
+    * r_lex)` and the cosine top-50 `vec(doc_id, r_vec)` against vec 0. */
+  private val sqlFixedHybridArms: String = s"""WITH ${TextOps.sqlBm25Ctes},
+              lex AS (
+                SELECT doc_id,
+                  CAST(row_number() OVER (ORDER BY score DESC, doc_id)
+                    AS INTEGER) AS r_lex
+                FROM bm25
+                QUALIFY row_number() OVER (ORDER BY score DESC, doc_id)
+                  <= 50),
+              e AS (SELECT vec_id, embedding::DOUBLE[] AS v
+                    FROM embeddings),
+              qv AS (SELECT v AS q_v FROM e WHERE vec_id = 0),
+              vcand AS (
+                SELECT e.vec_id AS doc_id,
+                  ${sqlCosineCols("e.v", "qv.q_v")} AS cos
+                FROM e, qv WHERE e.vec_id <> 0),
+              vec AS (
+                SELECT doc_id,
+                  CAST(row_number() OVER (ORDER BY cos DESC, doc_id)
+                    AS INTEGER) AS r_vec
+                FROM vcand
+                QUALIFY row_number() OVER (ORDER BY cos DESC, doc_id)
+                  <= 50)"""
+
+  /** The oracle arms of [[retrieveBatch]] at the rows' fixed three-query
+    * batch `qt`: per query, `lex(q_id, doc_id, r_lex)` and
+    * `vec(q_id, doc_id, r_vec)`, each a top-50. */
+  private val sqlBatchRetrievalArms: String = s"""WITH qt AS (
+                SELECT CAST(q_id AS BIGINT) AS q_id, word
+                FROM (VALUES (0, 'spark'), (0, 'data'), (1, 'the'),
+                  (1, 'of'), (2, 'merge'), (2, 'sort')) t(q_id, word)),
+              ${TextOps.sqlBm25BatchCtes},
+              lex AS (
+                SELECT q_id, doc_id,
+                  CAST(row_number() OVER (PARTITION BY q_id
+                    ORDER BY score DESC, doc_id) AS INTEGER) AS r_lex
+                FROM lexs
+                QUALIFY row_number() OVER (PARTITION BY q_id
+                  ORDER BY score DESC, doc_id) <= 50),
+              e AS (SELECT vec_id, embedding::DOUBLE[] AS v
+                    FROM embeddings),
+              qv AS (SELECT vec_id AS q_id, v AS q_v FROM e
+                     WHERE vec_id < 3),
+              vcand AS (
+                SELECT qv.q_id, e.vec_id AS doc_id,
+                  ${sqlCosineCols("e.v", "qv.q_v")} AS cos
+                FROM e, qv WHERE e.vec_id <> qv.q_id),
+              vec AS (
+                SELECT q_id, doc_id,
+                  CAST(row_number() OVER (PARTITION BY q_id
+                    ORDER BY cos DESC, doc_id) AS INTEGER) AS r_vec
+                FROM vcand
+                QUALIFY row_number() OVER (PARTITION BY q_id
+                  ORDER BY cos DESC, doc_id) <= 50)"""
+
+  /** [[mmrSelect]]'s oracle at λ = 0.7, μ = 0.3, k = 5 over a
+    * `cand(doc_id, v, rel)` CTE: the greedy rounds unrolled as CTEs
+    * `s1`/`sel1` … `s5`/`sel5`. */
+  private val sqlMmrTop5: String =
+    s"""s1 AS (
+              SELECT CAST(1 AS INTEGER) AS rank, doc_id, v, rel,
+                CAST(0.0 AS DOUBLE) AS max_sim,
+                CAST(FLOOR((0.7 * rel - 0.3 * 0.0)
+                  * 1000000 + 0.5) AS BIGINT) AS mmr_micros
+              FROM cand ORDER BY mmr_micros DESC, doc_id LIMIT 1),
+            sel1 AS (SELECT * FROM s1),
+            ${(2 to 5).map { k =>
+          s"""p$k AS (
+               SELECT c.doc_id, c.v, c.rel,
+                 MAX(${sqlCosineCols("c.v", "s.v")}) AS max_sim
+               FROM cand c, sel${k - 1} s
+               WHERE c.doc_id NOT IN (SELECT doc_id FROM sel${k - 1})
+               GROUP BY c.doc_id, c.v, c.rel),
+             s$k AS (
+               SELECT CAST($k AS INTEGER) AS rank, doc_id, v, rel,
+                 max_sim, CAST(FLOOR((0.7 * rel - 0.3 * max_sim)
+                   * 1000000 + 0.5) AS BIGINT) AS mmr_micros
+               FROM p$k ORDER BY mmr_micros DESC, doc_id LIMIT 1),
+             sel$k AS (SELECT * FROM sel${k - 1}
+                       UNION ALL SELECT * FROM s$k)"""
+        }.mkString(",\n")}"""
+
+  /** The PQ rows' search over `codes` and the query LUT joined on
+    * `keys`: per query, the top-20 by exact-decimal ADC distance (ties to
+    * the lower vec_id), re-ranked by exact cosine against `queries`
+    * (q_id, q_v) to the top 3. */
+  private def pqSearch(s: SparkSession, codes: DataFrame, lut: DataFrame,
+      keys: Seq[String], e: DataFrame, queries: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val adc = codes.join(broadcast(lut), keys)
+      .filter(col("vec_id") =!= col("q_id"))
+      .groupBy("q_id", "vec_id")
+      .agg(sum(col("qd2").cast("decimal(38,6)")).as("adc"))
+    val cands = adc
+      .withColumn("rk", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("adc"), col("vec_id"))))
+      .filter(col("rk") <= 20)
+    cands
+      .join(e, Seq("vec_id"))
+      .join(broadcast(queries), Seq("q_id"))
+      .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
+      .withColumn("rank", row_number().over(
+          Window.partitionBy("q_id")
+            .orderBy(col("cos").desc, col("vec_id")))
+        .cast("long"))
+      .filter(col("rank") <= 3)
+      .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
+      .orderBy("q_id", "rank")
+  }
+
+  /** The PQ rows' oracle encode CTE `enc(vec_id, keep…, sub, code)` over
+    * `sv` and the trained codebook `cb2`. */
+  private def sqlPqEnc(keep: Seq[String]): String =
+    s"""enc AS (
+                SELECT vec_id, ${keep.map(k => s"$k, ").mkString}sub, code FROM (
+                  SELECT sv.vec_id, ${keep.map(k => s"sv.$k, ").mkString}sv.sub, cb.code,
+                    ${sqlPqD2("sv.sv", "cb.cw", 8)} AS d2
+                  FROM sv JOIN cb2 cb ON sv.sub = cb.sub)
+                QUALIFY row_number() OVER (PARTITION BY vec_id, sub
+                  ORDER BY d2, code) = 1)"""
+
+  /** The PQ rows' oracle query LUT `lut(q_id, keep…, sub, code, qd2)`
+    * over the query subvectors `qsub`. */
+  private def sqlPqLut(keep: Seq[String]): String =
+    s"""lut AS (
+                SELECT q_id, ${keep.map(k => s"qsub.$k, ").mkString}qsub.sub, cb.code,
+                  ${sqlPqD2("qsub.qsv", "cb.cw", 8)} AS qd2
+                FROM qsub JOIN cb2 cb ON qsub.sub = cb.sub)"""
+
+  /** [[pqSearch]]'s ADC top-20 as CTEs `adc` and `cands`, `enc` and
+    * `lut` joined on `keep` plus (sub, code). */
+  private def sqlPqCands(keep: Seq[String]): String =
+    s"""adc AS (
+                SELECT l.q_id, enc.vec_id,
+                  SUM(CAST(l.qd2 AS DECIMAL(38,6))) AS adc
+                FROM enc JOIN lut l
+                  ON ${keep.map(k => s"enc.$k = l.$k AND ").mkString}enc.sub = l.sub AND enc.code = l.code
+                WHERE enc.vec_id <> l.q_id
+                GROUP BY l.q_id, enc.vec_id),
+              cands AS (
+                SELECT q_id, vec_id FROM adc
+                QUALIFY row_number() OVER (PARTITION BY q_id
+                  ORDER BY adc, vec_id) <= 20)"""
+
+  /** [[pqSearch]]'s cosine re-rank of `cands` against the query CTE
+    * `queries` (aliased q), ending the query. */
+  private def sqlPqRerank(queries: String): String =
+    s"""rer AS (
+                SELECT t.q_id, t.vec_id,
+                  ${sqlCosineCols("e.v", "q.q_v")} AS cos
+                FROM cands t JOIN e ON e.vec_id = t.vec_id
+                JOIN $queries ON q.q_id = t.q_id)
+              SELECT q_id, rank, vec_id, cos FROM (
+                SELECT q_id, vec_id, cos,
+                  row_number() OVER (PARTITION BY q_id
+                    ORDER BY cos DESC, vec_id) AS rank
+                FROM rer)
+              WHERE rank <= 3 ORDER BY q_id, rank"""
+
+  /** Rank order of the IVF rows' neighbors: per query, cosine
+    * descending, ties to the lower vec_id. */
+  private def byQueryCos = {
+    import org.apache.spark.sql.expressions.Window
+    Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
+  }
+
+  /** The IVF rows' exact arm: each query's (vec_id < 10) top-10 cosine
+    * neighbors `(q_id, nn_id)`, by one broadcast-query corpus scan. */
+  private def exactTop10(s: SparkSession, e: DataFrame): DataFrame = {
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
+    e.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
+      .withColumn("rk", row_number().over(byQueryCos))
+      .filter(col("rk") <= 10)
+      .select(col("q_id"), col("vec_id").as("nn_id"))
+  }
+
+  /** Each query vector's rank `c_rk` over the centroids `cents`, by
+    * cosine `c_cos` descending, ties to the lower c_id. */
+  private def probeRanks(s: SparkSession, queries: DataFrame,
+      cents: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cw = Window.partitionBy(col("vec_id"))
+      .orderBy(col("c_cos").desc, col("c_id"))
+    queries.crossJoin(broadcast(cents))
+      .withColumn("c_cos", cosine(s, col("embedding"), col("c_v")))
+      .withColumn("c_rk", row_number().over(cw))
+  }
+
+  /** The `probes` nearest buckets of each query: `(q_id, q_v, bucket)`. */
+  private def probed(ranked: DataFrame, probes: Int): DataFrame =
+    ranked.filter(col("c_rk") <= probes)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_v"),
+        col("c_id").as("bucket"))
+
+  /** The `k` nearest `bucketed` vectors to each query within its probed
+    * buckets `qp(q_id, q_v, bucket)`, ranked `rk` by [[byQueryCos]]. */
+  private def probedTopK(s: SparkSession, bucketed: DataFrame,
+      qp: DataFrame, k: Int): DataFrame =
+    bucketed.join(qp, Seq("bucket"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
+      .withColumn("rk", row_number().over(byQueryCos))
+      .filter(col("rk") <= k)
+
+  /** The IVF rows' oracle prologue: 8 buckets over the nonzero vectors
+    * `e`, two unrolled Lloyd rounds (`a2`) and the probe centroids
+    * `centsp`. */
+  private val sqlIvfTrained: String =
+    s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
+              ${sqlKmeansRounds(2)},
+              ${sqlCentroids("a2", "p")}"""
+
+  /** [[exactTop10]]'s oracle: CTEs `qs` and `exact(q_id, nn_id)`. */
+  private val sqlExactTop10: String =
+    s"""qs AS (SELECT vec_id AS q_id, v AS q_v FROM e
+                     WHERE vec_id < 10),
+              exact AS (
+                SELECT q_id, nn_id FROM (
+                  SELECT q.q_id, e.vec_id AS nn_id,
+                    row_number() OVER (PARTITION BY q.q_id ORDER BY
+                      ${sqlCosineCols("e.v", "q.q_v")} DESC, e.vec_id)
+                      AS rk
+                  FROM e JOIN qs q ON e.vec_id <> q.q_id)
+                WHERE rk <= 10)"""
+
+  /** [[probeRanks]]' cosines as CTE `qc`. */
+  private val sqlQueryCentroidCos: String =
+    s"""qc AS (
+                SELECT e.vec_id, e.v, c.c_id,
+                  ${sqlCosineCols("e.v", "c.c_v")} AS c_cos
+                FROM e, centsp c WHERE e.vec_id < 10)"""
+
+  /** [[probed]] and the candidates of [[probedTopK]] over `qc`, as CTEs
+    * `qprobe<tag>` and `cand<tag>(q_id, nn_id, cos)`. */
+  private def sqlProbeCands(probes: Int, tag: String): String =
+    s"""qprobe$tag AS (
+                SELECT vec_id AS q_id, v AS q_v, c_id AS bucket FROM qc
+                QUALIFY row_number() OVER (PARTITION BY vec_id
+                  ORDER BY c_cos DESC, c_id) <= $probes),
+              cand$tag AS (
+                SELECT q.q_id, a.vec_id AS nn_id,
+                  ${sqlCosineCols("a.v", "q.q_v")} AS cos
+                FROM qprobe$tag q JOIN a2 a ON a.bucket = q.bucket
+                WHERE a.vec_id <> q.q_id)"""
+
+  /** [[probedTopK]] at k = 10 over `cand<tag>`, as CTE `ivf<tag>`. */
+  private def sqlIvfTop10(tag: String): String =
+    s"""ivf$tag AS (
+                SELECT q_id, nn_id FROM (
+                  SELECT q_id, nn_id,
+                    row_number() OVER (PARTITION BY q_id
+                      ORDER BY cos DESC, nn_id) AS rk
+                  FROM cand$tag)
+                WHERE rk <= 10)"""
 
   val queries: Seq[Q] = Seq(
 
@@ -1574,50 +1890,22 @@ object Similarity {
     // tie-breaks) is fully deterministic, so it has an exact SQL oracle.
     Q("q_ann_ivf",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val e = Similarity.dropZeroNorm(s,
           embs(s, d).select(col("vec_id"), col("embedding")))
         val bucketed = kmeansIterate(s, e, 8, 2)
         val cents = centroidsOf(bucketed)
         // queries probe their 2 nearest buckets (tiny set: rank per query)
-        val qw = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c_cos").desc, col("c_id"))
-        val q = e.filter(col("vec_id") < 10)
-          .crossJoin(broadcast(cents))
-          .withColumn("c_cos", cosine(s, col("embedding"), col("c_v")))
-          .withColumn("c_rk", row_number().over(qw))
-          .filter(col("c_rk") <= 2)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_v"),
-            col("c_id").as("bucket"))
-        val w = Window.partitionBy("q_id")
-          .orderBy(col("cos").desc, col("vec_id"))
-        bucketed.join(q, Seq("bucket"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-          .withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= 3)
+        val q = probed(probeRanks(s, e.filter(col("vec_id") < 10), cents), 2)
+        probedTopK(s, bucketed, q, 3)
           .select(col("q_id"), col("rk"), col("vec_id").as("nn_id"), col("cos"))
           .orderBy("q_id", "rk")
       },
       // Same formulation: a2 = 2 unrolled Lloyd rounds, probe centroids =
       // centroidsOf(a2) (the `p`-tagged CTE), queries probe top-2 buckets
       // (ties → lower c_id), rank candidates by (cos DESC, nn_id).
-      Some(s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
-              ${sqlKmeansRounds(2)},
-              ${sqlCentroids("a2", "p")},
-              qc AS (
-                SELECT e.vec_id, e.v, c.c_id,
-                  ${sqlCosineCols("e.v", "c.c_v")} AS c_cos
-                FROM e, centsp c WHERE e.vec_id < 10),
-              qprobe AS (
-                SELECT vec_id AS q_id, v AS q_v, c_id AS bucket FROM qc
-                QUALIFY row_number() OVER (PARTITION BY vec_id
-                  ORDER BY c_cos DESC, c_id) <= 2),
-              cand AS (
-                SELECT q.q_id, a.vec_id AS nn_id,
-                  ${sqlCosineCols("a.v", "q.q_v")} AS cos
-                FROM qprobe q JOIN a2 a ON a.bucket = q.bucket
-                WHERE a.vec_id <> q.q_id)
+      Some(s"""$sqlIvfTrained,
+              $sqlQueryCentroidCos,
+              ${sqlProbeCands(2, "")}
               SELECT q_id, CAST(rk AS INTEGER) AS rk, nn_id, cos FROM (
                 SELECT q_id, nn_id, cos,
                   row_number() OVER (PARTITION BY q_id
@@ -1640,35 +1928,13 @@ object Similarity {
     // computed corpus-wide, and the per-query contract is unchanged.
     Q("q_ann_ivf_recall",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val e = dropZeroNorm(s,
           embs(s, d).select(col("vec_id"), col("embedding")))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
-        val wq = Window.partitionBy("q_id")
-          .orderBy(col("cos").desc, col("vec_id"))
-        val exact = e.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-          .withColumn("rk", row_number().over(wq))
-          .filter(col("rk") <= 10)
-          .select(col("q_id"), col("vec_id").as("nn_id"))
+        val exact = exactTop10(s, e)
         val bucketed = kmeansIterate(s, e, 8, 2)
         val cents = centroidsOf(bucketed)
-        val cw = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c_cos").desc, col("c_id"))
-        val qp = e.filter(col("vec_id") < 10)
-          .crossJoin(broadcast(cents))
-          .withColumn("c_cos", cosine(s, col("embedding"), col("c_v")))
-          .withColumn("c_rk", row_number().over(cw))
-          .filter(col("c_rk") <= 2)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_v"),
-            col("c_id").as("bucket"))
-        val ivf = bucketed.join(qp, Seq("bucket"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-          .withColumn("rk", row_number().over(wq))
-          .filter(col("rk") <= 10)
+        val qp = probed(probeRanks(s, e.filter(col("vec_id") < 10), cents), 2)
+        val ivf = probedTopK(s, bucketed, qp, 10)
           .select(col("q_id"), col("vec_id").as("nn_id"), lit(1).as("m"))
         exact.join(ivf, Seq("q_id", "nn_id"), "left")
           .groupBy("q_id")
@@ -1683,39 +1949,11 @@ object Similarity {
             (col("n_hits") / col("n_exact")).as("recall_at_10"))
           .orderBy("q_id")
       },
-      Some(s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
-              ${sqlKmeansRounds(2)},
-              ${sqlCentroids("a2", "p")},
-              qs AS (SELECT vec_id AS q_id, v AS q_v FROM e
-                     WHERE vec_id < 10),
-              exact AS (
-                SELECT q_id, nn_id FROM (
-                  SELECT q.q_id, e.vec_id AS nn_id,
-                    row_number() OVER (PARTITION BY q.q_id ORDER BY
-                      ${sqlCosineCols("e.v", "q.q_v")} DESC, e.vec_id)
-                      AS rk
-                  FROM e JOIN qs q ON e.vec_id <> q.q_id)
-                WHERE rk <= 10),
-              qc AS (
-                SELECT e.vec_id, e.v, c.c_id,
-                  ${sqlCosineCols("e.v", "c.c_v")} AS c_cos
-                FROM e, centsp c WHERE e.vec_id < 10),
-              qprobe AS (
-                SELECT vec_id AS q_id, v AS q_v, c_id AS bucket FROM qc
-                QUALIFY row_number() OVER (PARTITION BY vec_id
-                  ORDER BY c_cos DESC, c_id) <= 2),
-              cand AS (
-                SELECT q.q_id, a.vec_id AS nn_id,
-                  ${sqlCosineCols("a.v", "q.q_v")} AS cos
-                FROM qprobe q JOIN a2 a ON a.bucket = q.bucket
-                WHERE a.vec_id <> q.q_id),
-              ivf AS (
-                SELECT q_id, nn_id FROM (
-                  SELECT q_id, nn_id,
-                    row_number() OVER (PARTITION BY q_id
-                      ORDER BY cos DESC, nn_id) AS rk
-                  FROM cand)
-                WHERE rk <= 10)
+      Some(s"""$sqlIvfTrained,
+              $sqlExactTop10,
+              $sqlQueryCentroidCos,
+              ${sqlProbeCands(2, "")},
+              ${sqlIvfTop10("")}
               SELECT exact.q_id,
                 CAST(COUNT(ivf.nn_id) AS BIGINT) AS n_hits,
                 CAST(COUNT(ivf.nn_id) AS BIGINT) / COUNT(*)::DOUBLE
@@ -1741,39 +1979,16 @@ object Similarity {
     // cross-check (r11 ADVICE). One exact IEEE long/double division.
     Q("q_ann_probe_curve",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val e = dropZeroNorm(s,
           embs(s, d).select(col("vec_id"), col("embedding")))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
-        val wq = Window.partitionBy("q_id")
-          .orderBy(col("cos").desc, col("vec_id"))
-        val exact = e.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-          .withColumn("rk", row_number().over(wq))
-          .filter(col("rk") <= 10)
-          .select(col("q_id"), col("vec_id").as("nn_id"))
-          .localCheckpoint()
+        val exact = exactTop10(s, e).localCheckpoint()
         val bucketed = kmeansIterate(s, e, 8, 2).localCheckpoint()
         val cents = centroidsOf(bucketed).localCheckpoint()
-        val cw = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c_cos").desc, col("c_id"))
-        val ranked = e.filter(col("vec_id") < 10)
-          .crossJoin(broadcast(cents))
-          .withColumn("c_cos", cosine(s, col("embedding"), col("c_v")))
-          .withColumn("c_rk", row_number().over(cw))
+        val ranked = probeRanks(s, e.filter(col("vec_id") < 10), cents)
           .localCheckpoint()
         val denom = exact.agg(count(lit(1)).cast("double").as("n_exact"))
         def arm(probes: Int): DataFrame = {
-          val qp = ranked.filter(col("c_rk") <= probes)
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_v"),
-              col("c_id").as("bucket"))
-          val ivf = bucketed.join(qp, Seq("bucket"))
-            .filter(col("vec_id") =!= col("q_id"))
-            .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-            .withColumn("rk", row_number().over(wq))
-            .filter(col("rk") <= 10)
+          val ivf = probedTopK(s, bucketed, probed(ranked, probes), 10)
             .select(col("q_id"), col("vec_id").as("nn_id"),
               lit(1).as("m"))
           exact.join(ivf, Seq("q_id", "nn_id"), "left")
@@ -1786,22 +2001,8 @@ object Similarity {
       },
       Some {
         val arms = Seq(1, 2, 4).map { p =>
-          s"""qprobe$p AS (
-               SELECT vec_id AS q_id, v AS q_v, c_id AS bucket FROM qc
-               QUALIFY row_number() OVER (PARTITION BY vec_id
-                 ORDER BY c_cos DESC, c_id) <= $p),
-             cand$p AS (
-               SELECT q.q_id, a.vec_id AS nn_id,
-                 ${sqlCosineCols("a.v", "q.q_v")} AS cos
-               FROM qprobe$p q JOIN a2 a ON a.bucket = q.bucket
-               WHERE a.vec_id <> q.q_id),
-             ivf$p AS (
-               SELECT q_id, nn_id FROM (
-                 SELECT q_id, nn_id,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY cos DESC, nn_id) AS rk
-                 FROM cand$p)
-               WHERE rk <= 10),
+          s"""${sqlProbeCands(p, p.toString)},
+             ${sqlIvfTop10(p.toString)},
              hit$p AS (
                SELECT CAST($p AS INTEGER) AS probes,
                  CAST(COUNT(ivf$p.nn_id) AS BIGINT) AS n_hits_total,
@@ -1811,23 +2012,9 @@ object Similarity {
                  ON exact.q_id = ivf$p.q_id
                  AND exact.nn_id = ivf$p.nn_id)"""
         }.mkString(",\n")
-        s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
-            ${sqlKmeansRounds(2)},
-            ${sqlCentroids("a2", "p")},
-            qs AS (SELECT vec_id AS q_id, v AS q_v FROM e
-                   WHERE vec_id < 10),
-            exact AS (
-              SELECT q_id, nn_id FROM (
-                SELECT q.q_id, e.vec_id AS nn_id,
-                  row_number() OVER (PARTITION BY q.q_id ORDER BY
-                    ${sqlCosineCols("e.v", "q.q_v")} DESC, e.vec_id)
-                    AS rk
-                FROM e JOIN qs q ON e.vec_id <> q.q_id)
-              WHERE rk <= 10),
-            qc AS (
-              SELECT e.vec_id, e.v, c.c_id,
-                ${sqlCosineCols("e.v", "c.c_v")} AS c_cos
-              FROM e, centsp c WHERE e.vec_id < 10),
+        s"""$sqlIvfTrained,
+            $sqlExactTop10,
+            $sqlQueryCentroidCos,
             $arms
             SELECT * FROM hit1 UNION ALL SELECT * FROM hit2
             UNION ALL SELECT * FROM hit4 ORDER BY probes"""
@@ -2015,7 +2202,6 @@ object Similarity {
     // the raw embeddings until the re-rank's top-20 fetch.
     Q("q_ann_pq",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val m = 8; val subDim = 8; val k = 8
         val e = Similarity.dropZeroNorm(s,
           embs(s, d).select(col("vec_id"), col("embedding")))
@@ -2037,25 +2223,7 @@ object Similarity {
           .join(broadcast(cb), Seq("sub"))
           .withColumn("qd2", pqD2(s, col("qsv"), col("cw")))
           .select(col("q_id"), col("sub"), col("code"), col("qd2"))
-        val adc = codes.join(broadcast(lut), Seq("sub", "code"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .groupBy("q_id", "vec_id")
-          .agg(sum(col("qd2").cast("decimal(38,6)")).as("adc"))
-        val cands = adc
-          .withColumn("rk", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("adc"), col("vec_id"))))
-          .filter(col("rk") <= 20)
-        cands
-          .join(e, Seq("vec_id"))
-          .join(broadcast(queries), Seq("q_id"))
-          .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-          .withColumn("rank", row_number().over(
-              Window.partitionBy("q_id")
-                .orderBy(col("cos").desc, col("vec_id")))
-            .cast("long"))
-          .filter(col("rank") <= 3)
-          .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
-          .orderBy("q_id", "rank")
+        pqSearch(s, codes, lut, Seq("sub", "code"), e, queries)
       },
       Some(s"""WITH e AS (
                 SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -2066,54 +2234,15 @@ object Similarity {
                   list_slice(e.v, s.m * 8 + 1, s.m * 8 + 8) AS sv
                 FROM e, subs s),
               ${sqlPqTrain(8, 8, 2, "sv.vec_id % 2 = 0")},
-              enc AS (
-                SELECT vec_id, sub, code FROM (
-                  SELECT sv.vec_id, sv.sub, cb.code,
-                    ${Arith.sqlMicro6("""list_sum([sv.sv[i] * sv.sv[i]
-                                FOR i IN generate_series(1, 8)])
-                      - 2.0 * list_sum([sv.sv[i] * cb.cw[i]
-                                        FOR i IN generate_series(1, 8)])
-                      + list_sum([cb.cw[i] * cb.cw[i]
-                                  FOR i IN generate_series(1, 8)])""")} AS d2
-                  FROM sv JOIN cb2 cb ON sv.sub = cb.sub)
-                QUALIFY row_number() OVER (PARTITION BY vec_id, sub
-                  ORDER BY d2, code) = 1),
+              ${sqlPqEnc(Nil)},
               q AS (SELECT vec_id AS q_id, v AS q_v FROM e WHERE vec_id < 5),
               qsub AS (
                 SELECT q_id, s.m AS sub,
                   list_slice(q.q_v, s.m * 8 + 1, s.m * 8 + 8) AS qsv
                 FROM q, subs s),
-              lut AS (
-                SELECT q_id, qsub.sub, cb.code,
-                  ${Arith.sqlMicro6("""list_sum([qsub.qsv[i] * qsub.qsv[i]
-                              FOR i IN generate_series(1, 8)])
-                    - 2.0 * list_sum([qsub.qsv[i] * cb.cw[i]
-                                      FOR i IN generate_series(1, 8)])
-                    + list_sum([cb.cw[i] * cb.cw[i]
-                                FOR i IN generate_series(1, 8)])""")} AS qd2
-                FROM qsub JOIN cb2 cb ON qsub.sub = cb.sub),
-              adc AS (
-                SELECT l.q_id, enc.vec_id,
-                  SUM(CAST(l.qd2 AS DECIMAL(38,6))) AS adc
-                FROM enc JOIN lut l
-                  ON enc.sub = l.sub AND enc.code = l.code
-                WHERE enc.vec_id <> l.q_id
-                GROUP BY l.q_id, enc.vec_id),
-              cands AS (
-                SELECT q_id, vec_id FROM adc
-                QUALIFY row_number() OVER (PARTITION BY q_id
-                  ORDER BY adc, vec_id) <= 20),
-              rer AS (
-                SELECT t.q_id, t.vec_id,
-                  ${sqlCosineCols("e.v", "q.q_v")} AS cos
-                FROM cands t JOIN e ON e.vec_id = t.vec_id
-                JOIN q ON q.q_id = t.q_id)
-              SELECT q_id, rank, vec_id, cos FROM (
-                SELECT q_id, vec_id, cos,
-                  row_number() OVER (PARTITION BY q_id
-                    ORDER BY cos DESC, vec_id) AS rank
-                FROM rer)
-              WHERE rank <= 3 ORDER BY q_id, rank""")),
+              ${sqlPqLut(Nil)},
+              ${sqlPqCands(Nil)},
+              ${sqlPqRerank("q")}""")),
 
     // ---- IVF-PQ composite index (the full FAISS-style ANN stack) ----------
     // The two index families composed the way a production vector index
@@ -2137,7 +2266,6 @@ object Similarity {
     // codebooks/LUTs.
     Q("q_ann_ivfpq",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
         val m = 8; val subDim = 8; val k = 8; val nBuckets = 8
         val e = Similarity.dropZeroNorm(s,
           embs(s, d).select(col("vec_id"), col("embedding")))
@@ -2173,12 +2301,7 @@ object Similarity {
                 .as("sv")),
           cb, keep = Seq("bucket"))
         // probe: 2 nearest refined centroids per query (the q_ann_ivf rule)
-        val qw = Window.partitionBy(col("vec_id"))
-          .orderBy(col("c_cos").desc, col("c_id"))
-        val qprobe = e.filter(col("vec_id") < 5)
-          .crossJoin(broadcast(cents))
-          .withColumn("c_cos", cosine(s, col("embedding"), col("c_v")))
-          .withColumn("c_rk", row_number().over(qw))
+        val qprobe = probeRanks(s, e.filter(col("vec_id") < 5), cents)
           .filter(col("c_rk") <= 2)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_v"),
             col("c_id").as("bucket"), col("c_v"))
@@ -2196,25 +2319,9 @@ object Similarity {
           .withColumn("qd2", pqD2(s, col("qsv"), col("cw")))
           .select(col("q_id"), col("bucket"), col("sub"), col("code"),
             col("qd2"))
-        val adc = codes.join(broadcast(lut), Seq("bucket", "sub", "code"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .groupBy("q_id", "vec_id")
-          .agg(sum(col("qd2").cast("decimal(38,6)")).as("adc"))
-        val cands = adc.withColumn("rk", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("adc"), col("vec_id"))))
-          .filter(col("rk") <= 20)
         val qv = e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
-        cands.join(e, Seq("vec_id"))
-          .join(broadcast(qv), Seq("q_id"))
-          .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-          .withColumn("rank", row_number().over(
-              Window.partitionBy("q_id")
-                .orderBy(col("cos").desc, col("vec_id")))
-            .cast("long"))
-          .filter(col("rank") <= 3)
-          .select(col("q_id"), col("rank"), col("vec_id"), col("cos"))
-          .orderBy("q_id", "rank")
+        pqSearch(s, codes, lut, Seq("bucket", "sub", "code"), e, qv)
       },
       Some(s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
               ${sqlKmeansRounds(2)},
@@ -2229,18 +2336,7 @@ object Similarity {
                   list_slice(r.r, s.m * 8 + 1, s.m * 8 + 8) AS sv
                 FROM resid r, subs s),
               ${sqlPqTrain(8, 8, 2, "sv.vec_id % 2 = 0")},
-              enc AS (
-                SELECT vec_id, bucket, sub, code FROM (
-                  SELECT sv.vec_id, sv.bucket, sv.sub, cb.code,
-                    ${Arith.sqlMicro6("""list_sum([sv.sv[i] * sv.sv[i]
-                                FOR i IN generate_series(1, 8)])
-                      - 2.0 * list_sum([sv.sv[i] * cb.cw[i]
-                                        FOR i IN generate_series(1, 8)])
-                      + list_sum([cb.cw[i] * cb.cw[i]
-                                  FOR i IN generate_series(1, 8)])""")} AS d2
-                  FROM sv JOIN cb2 cb ON sv.sub = cb.sub)
-                QUALIFY row_number() OVER (PARTITION BY vec_id, sub
-                  ORDER BY d2, code) = 1),
+              ${sqlPqEnc(Seq("bucket"))},
               qc AS (
                 SELECT e.vec_id, e.v, c.c_id, c.c_v,
                   ${sqlCosineCols("e.v", "c.c_v")} AS c_cos
@@ -2255,40 +2351,11 @@ object Similarity {
                               FOR i IN generate_series(1, 64)],
                     s.m * 8 + 1, s.m * 8 + 8) AS qsv
                 FROM qprobe, subs s),
-              lut AS (
-                SELECT q_id, qsub.bucket, qsub.sub, cb.code,
-                  ${Arith.sqlMicro6("""list_sum([qsub.qsv[i] * qsub.qsv[i]
-                              FOR i IN generate_series(1, 8)])
-                    - 2.0 * list_sum([qsub.qsv[i] * cb.cw[i]
-                                      FOR i IN generate_series(1, 8)])
-                    + list_sum([cb.cw[i] * cb.cw[i]
-                                FOR i IN generate_series(1, 8)])""")} AS qd2
-                FROM qsub JOIN cb2 cb ON qsub.sub = cb.sub),
-              adc AS (
-                SELECT l.q_id, enc.vec_id,
-                  SUM(CAST(l.qd2 AS DECIMAL(38,6))) AS adc
-                FROM enc JOIN lut l
-                  ON enc.bucket = l.bucket AND enc.sub = l.sub
-                    AND enc.code = l.code
-                WHERE enc.vec_id <> l.q_id
-                GROUP BY l.q_id, enc.vec_id),
-              cands AS (
-                SELECT q_id, vec_id FROM adc
-                QUALIFY row_number() OVER (PARTITION BY q_id
-                  ORDER BY adc, vec_id) <= 20),
+              ${sqlPqLut(Seq("bucket"))},
+              ${sqlPqCands(Seq("bucket"))},
               q1 AS (SELECT vec_id AS q_id, v AS q_v FROM e
                      WHERE vec_id < 5),
-              rer AS (
-                SELECT t.q_id, t.vec_id,
-                  ${sqlCosineCols("e.v", "q.q_v")} AS cos
-                FROM cands t JOIN e ON e.vec_id = t.vec_id
-                JOIN q1 q ON q.q_id = t.q_id)
-              SELECT q_id, rank, vec_id, cos FROM (
-                SELECT q_id, vec_id, cos,
-                  row_number() OVER (PARTITION BY q_id
-                    ORDER BY cos DESC, vec_id) AS rank
-                FROM rer)
-              WHERE rank <= 3 ORDER BY q_id, rank""")),
+              ${sqlPqRerank("q1 q")}""")),
 
     // ---- seeded-hyperplane LSH recall (sign-LSH in its design regime) -----
     // q_dedup_embed_lsh runs on the same seeded plane family this row
@@ -2560,33 +2627,9 @@ object Similarity {
       (s, d) => fixedHybridFused(s, d)
         .orderBy(col("rrf").desc, col("doc_id"))
         .limit(15),
-      Some(s"""WITH ${TextOps.sqlBm25Ctes},
-              lex AS (
-                SELECT doc_id,
-                  CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-                    AS INTEGER) AS r_lex
-                FROM bm25
-                QUALIFY row_number() OVER (ORDER BY score DESC, doc_id)
-                  <= 50),
-              e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                    FROM embeddings),
-              qv AS (SELECT v AS q_v FROM e WHERE vec_id = 0),
-              vcand AS (
-                SELECT e.vec_id AS doc_id,
-                  ${sqlCosineCols("e.v", "qv.q_v")} AS cos
-                FROM e, qv WHERE e.vec_id <> 0),
-              vec AS (
-                SELECT doc_id,
-                  CAST(row_number() OVER (ORDER BY cos DESC, doc_id)
-                    AS INTEGER) AS r_vec
-                FROM vcand
-                QUALIFY row_number() OVER (ORDER BY cos DESC, doc_id)
-                  <= 50)
+      Some(s"""$sqlFixedHybridArms
               SELECT COALESCE(lex.doc_id, vec.doc_id) AS doc_id,
-                r_lex, r_vec,
-                ${Arith.sqlMicro6("""COALESCE(CAST(1 AS DOUBLE) / (60 + r_lex), 0.0) +
-                      COALESCE(CAST(1 AS DOUBLE) / (60 + r_vec), 0.0)""")}
-                  AS rrf
+                r_lex, r_vec, $sqlRrf AS rrf
               FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id
               ORDER BY rrf DESC, doc_id LIMIT 15""")),
 
@@ -2707,33 +2750,7 @@ object Similarity {
     // keep the per-anchor-aggregate contract.
     Q("q_triplet_sample",
       (s, d) => tripletFrame(s, d, negWhere = None),
-      Some(s"""WITH e AS (
-                SELECT vec_id, embedding::DOUBLE[] AS v, label
-                FROM embeddings WHERE $sqlZeroNormWhere),
-              a AS (SELECT vec_id AS a_id, v AS a_v, label AS a_label
-                    FROM e WHERE vec_id < 20),
-              pos AS (
-                SELECT a_id, vec_id AS pos_id, cos AS pos_cos FROM (
-                  SELECT a.a_id, e.vec_id,
-                    ${sqlCosineCols("e.v", "a.a_v")} AS cos,
-                    row_number() OVER (PARTITION BY a.a_id ORDER BY
-                      ${sqlCosineCols("e.v", "a.a_v")} DESC, e.vec_id)
-                      AS rn
-                  FROM e JOIN a ON e.label = a.a_label
-                    AND e.vec_id <> a.a_id)
-                WHERE rn = 1),
-              neg AS (
-                SELECT a_id, vec_id AS neg_id, label AS neg_label FROM (
-                  SELECT a.a_id, e.vec_id, e.label,
-                    row_number() OVER (PARTITION BY a.a_id ORDER BY
-                      md5(CAST(a.a_id AS VARCHAR) || '_' ||
-                          CAST(e.vec_id AS VARCHAR)), e.vec_id) AS rn
-                  FROM e JOIN a ON e.label <> a.a_label)
-                WHERE rn = 1)
-              SELECT a.a_id, a.a_label, pos.pos_id, pos.pos_cos,
-                neg.neg_id, neg.neg_label
-              FROM a JOIN pos USING (a_id) JOIN neg USING (a_id)
-              ORDER BY a_id""")),
+      Some(sqlTriplet(None))),
 
     // ---- triplet sampling, stratum-restricted negatives -------------------
     // The scale arm the q_triplet_sample scaladoc promised (the advisor's
@@ -2749,35 +2766,8 @@ object Similarity {
       (s, d) => tripletFrame(s, d, negWhere = Some(
         substring(md5(col("vec_id").cast("string")), 1, 1)
           .isin("0", "1"))),
-      Some(s"""WITH e AS (
-                SELECT vec_id, embedding::DOUBLE[] AS v, label
-                FROM embeddings WHERE $sqlZeroNormWhere),
-              a AS (SELECT vec_id AS a_id, v AS a_v, label AS a_label
-                    FROM e WHERE vec_id < 20),
-              pos AS (
-                SELECT a_id, vec_id AS pos_id, cos AS pos_cos FROM (
-                  SELECT a.a_id, e.vec_id,
-                    ${sqlCosineCols("e.v", "a.a_v")} AS cos,
-                    row_number() OVER (PARTITION BY a.a_id ORDER BY
-                      ${sqlCosineCols("e.v", "a.a_v")} DESC, e.vec_id)
-                      AS rn
-                  FROM e JOIN a ON e.label = a.a_label
-                    AND e.vec_id <> a.a_id)
-                WHERE rn = 1),
-              neg AS (
-                SELECT a_id, vec_id AS neg_id, label AS neg_label FROM (
-                  SELECT a.a_id, e.vec_id, e.label,
-                    row_number() OVER (PARTITION BY a.a_id ORDER BY
-                      md5(CAST(a.a_id AS VARCHAR) || '_' ||
-                          CAST(e.vec_id AS VARCHAR)), e.vec_id) AS rn
-                  FROM e JOIN a ON e.label <> a.a_label
-                  WHERE substring(md5(CAST(e.vec_id AS VARCHAR)), 1, 1)
-                    IN ('0', '1'))
-                WHERE rn = 1)
-              SELECT a.a_id, a.a_label, pos.pos_id, pos.pos_cos,
-                neg.neg_id, neg.neg_label
-              FROM a JOIN pos USING (a_id) JOIN neg USING (a_id)
-              ORDER BY a_id""")),
+      Some(sqlTriplet(Some(
+        "substring(md5(CAST(e.vec_id AS VARCHAR)), 1, 1) IN ('0', '1')")))),
 
     // ---- batch-parameterized hybrid retrieval -----------------------------
     // The q_hybrid_rrf kernels behind a query-batch API ([[retrieveBatch]]):
@@ -2797,41 +2787,11 @@ object Similarity {
         retrieveBatch(s, d, qTerms, qVecs, kArm = 50, kOut = 10,
           excludeSelf = true)
       },
-      Some(s"""WITH qt AS (
-                SELECT CAST(q_id AS BIGINT) AS q_id, word
-                FROM (VALUES (0, 'spark'), (0, 'data'), (1, 'the'),
-                  (1, 'of'), (2, 'merge'), (2, 'sort')) t(q_id, word)),
-              ${TextOps.sqlBm25BatchCtes},
-              lex AS (
-                SELECT q_id, doc_id,
-                  CAST(row_number() OVER (PARTITION BY q_id
-                    ORDER BY score DESC, doc_id) AS INTEGER) AS r_lex
-                FROM lexs
-                QUALIFY row_number() OVER (PARTITION BY q_id
-                  ORDER BY score DESC, doc_id) <= 50),
-              e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                    FROM embeddings),
-              qv AS (SELECT vec_id AS q_id, v AS q_v FROM e
-                     WHERE vec_id < 3),
-              vcand AS (
-                SELECT qv.q_id, e.vec_id AS doc_id,
-                  ${sqlCosineCols("e.v", "qv.q_v")} AS cos
-                FROM e, qv WHERE e.vec_id <> qv.q_id),
-              vec AS (
-                SELECT q_id, doc_id,
-                  CAST(row_number() OVER (PARTITION BY q_id
-                    ORDER BY cos DESC, doc_id) AS INTEGER) AS r_vec
-                FROM vcand
-                QUALIFY row_number() OVER (PARTITION BY q_id
-                  ORDER BY cos DESC, doc_id) <= 50),
+      Some(s"""$sqlBatchRetrievalArms,
               fused AS (
                 SELECT COALESCE(lex.q_id, vec.q_id) AS q_id,
                   COALESCE(lex.doc_id, vec.doc_id) AS doc_id,
-                  r_lex, r_vec,
-                  ${Arith.sqlMicro6(
-                    """COALESCE(CAST(1 AS DOUBLE) / (60 + r_lex), 0.0) +
-                        COALESCE(CAST(1 AS DOUBLE) / (60 + r_vec), 0.0)""")}
-                    AS rrf
+                  r_lex, r_vec, $sqlRrf AS rrf
                 FROM lex FULL OUTER JOIN vec
                   ON lex.q_id = vec.q_id AND lex.doc_id = vec.doc_id)
               SELECT q_id, doc_id, r_lex, r_vec, rrf FROM fused
@@ -2870,23 +2830,7 @@ object Similarity {
           .orderBy(col("rel").desc, col("doc_id")).limit(15)
         mmrSelect(s, cand, lambda = 0.7, mu = 0.3, k = 5)
       },
-      Some {
-        val rounds = (2 to 5).map { k =>
-          s"""p$k AS (
-               SELECT c.doc_id, c.v, c.rel,
-                 MAX(${sqlCosineCols("c.v", "s.v")}) AS max_sim
-               FROM cand c, sel${k - 1} s
-               WHERE c.doc_id NOT IN (SELECT doc_id FROM sel${k - 1})
-               GROUP BY c.doc_id, c.v, c.rel),
-             s$k AS (
-               SELECT CAST($k AS INTEGER) AS rank, doc_id, v, rel,
-                 max_sim, CAST(FLOOR((0.7 * rel - 0.3 * max_sim)
-                   * 1000000 + 0.5) AS BIGINT) AS mmr_micros
-               FROM p$k ORDER BY mmr_micros DESC, doc_id LIMIT 1),
-             sel$k AS (SELECT * FROM sel${k - 1}
-                       UNION ALL SELECT * FROM s$k)"""
-        }.mkString(",\n")
-        s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
+      Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v
                   FROM embeddings WHERE $sqlZeroNormWhere),
             qv AS (SELECT v AS q_v FROM e WHERE vec_id = 0),
             cand AS (
@@ -2894,17 +2838,9 @@ object Similarity {
                 ${sqlCosineCols("e.v", "qv.q_v")} AS rel
               FROM e, qv WHERE e.vec_id <> 0
               ORDER BY rel DESC, doc_id LIMIT 15),
-            s1 AS (
-              SELECT CAST(1 AS INTEGER) AS rank, doc_id, v, rel,
-                CAST(0.0 AS DOUBLE) AS max_sim,
-                CAST(FLOOR((0.7 * rel - 0.3 * 0.0)
-                  * 1000000 + 0.5) AS BIGINT) AS mmr_micros
-              FROM cand ORDER BY mmr_micros DESC, doc_id LIMIT 1),
-            sel1 AS (SELECT * FROM s1),
-            $rounds
+            $sqlMmrTop5
             SELECT rank, doc_id, rel, max_sim, mmr_micros FROM sel5
-            ORDER BY rank"""
-      }),
+            ORDER BY rank""")),
 
     // ---- batch MMR rerank --------------------------------------------------
     // [[mmrSelectBatch]] over the q_hybrid_rrf_batch candidate sets: all
@@ -2952,39 +2888,11 @@ object Similarity {
              sel$k AS (SELECT * FROM sel${k - 1}
                        UNION ALL SELECT * FROM s$k)"""
         }.mkString(",\n")
-        s"""WITH qt AS (
-              SELECT CAST(q_id AS BIGINT) AS q_id, word
-              FROM (VALUES (0, 'spark'), (0, 'data'), (1, 'the'),
-                (1, 'of'), (2, 'merge'), (2, 'sort')) t(q_id, word)),
-            ${TextOps.sqlBm25BatchCtes},
-            lex AS (
-              SELECT q_id, doc_id,
-                CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY score DESC, doc_id) AS INTEGER) AS r_lex
-              FROM lexs
-              QUALIFY row_number() OVER (PARTITION BY q_id
-                ORDER BY score DESC, doc_id) <= 50),
-            e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                  FROM embeddings),
-            qv AS (SELECT vec_id AS q_id, v AS q_v FROM e
-                   WHERE vec_id < 3),
-            vcand AS (
-              SELECT qv.q_id, e.vec_id AS doc_id,
-                ${sqlCosineCols("e.v", "qv.q_v")} AS cos
-              FROM e, qv WHERE e.vec_id <> qv.q_id),
-            vec AS (
-              SELECT q_id, doc_id,
-                CAST(row_number() OVER (PARTITION BY q_id
-                  ORDER BY cos DESC, doc_id) AS INTEGER) AS r_vec
-              FROM vcand
-              QUALIFY row_number() OVER (PARTITION BY q_id
-                ORDER BY cos DESC, doc_id) <= 50),
+        s"""$sqlBatchRetrievalArms,
             fused AS (
               SELECT COALESCE(lex.q_id, vec.q_id) AS q_id,
                 COALESCE(lex.doc_id, vec.doc_id) AS doc_id,
-                ${Arith.sqlMicro6("""COALESCE(CAST(1 AS DOUBLE) / (60 + r_lex), 0.0) +
-                      COALESCE(CAST(1 AS DOUBLE) / (60 + r_vec), 0.0)""")}
-                  AS rrf
+                $sqlRrf AS rrf
               FROM lex FULL OUTER JOIN vec
                 ON lex.q_id = vec.q_id AND lex.doc_id = vec.doc_id),
             ftop AS (
@@ -3057,49 +2965,10 @@ object Similarity {
               .as("ctx_tokens"))
           .orderBy("ctx_rank")
       },
-      Some {
-        val rounds = (2 to 5).map { k =>
-          s"""p$k AS (
-               SELECT c.doc_id, c.v, c.rel,
-                 MAX(${sqlCosineCols("c.v", "s.v")}) AS max_sim
-               FROM cand c, sel${k - 1} s
-               WHERE c.doc_id NOT IN (SELECT doc_id FROM sel${k - 1})
-               GROUP BY c.doc_id, c.v, c.rel),
-             s$k AS (
-               SELECT CAST($k AS INTEGER) AS rank, doc_id, v, rel,
-                 max_sim, CAST(FLOOR((0.7 * rel - 0.3 * max_sim)
-                   * 1000000 + 0.5) AS BIGINT) AS mmr_micros
-               FROM p$k ORDER BY mmr_micros DESC, doc_id LIMIT 1),
-             sel$k AS (SELECT * FROM sel${k - 1}
-                       UNION ALL SELECT * FROM s$k)"""
-        }.mkString(",\n")
-        s"""WITH ${TextOps.sqlBm25Ctes},
-            lex AS (
-              SELECT doc_id,
-                CAST(row_number() OVER (ORDER BY score DESC, doc_id)
-                  AS INTEGER) AS r_lex
-              FROM bm25
-              QUALIFY row_number() OVER (ORDER BY score DESC, doc_id)
-                <= 50),
-            e AS (SELECT vec_id, embedding::DOUBLE[] AS v
-                  FROM embeddings),
-            qv AS (SELECT v AS q_v FROM e WHERE vec_id = 0),
-            vcand AS (
-              SELECT e.vec_id AS doc_id,
-                ${sqlCosineCols("e.v", "qv.q_v")} AS cos
-              FROM e, qv WHERE e.vec_id <> 0),
-            vec AS (
-              SELECT doc_id,
-                CAST(row_number() OVER (ORDER BY cos DESC, doc_id)
-                  AS INTEGER) AS r_vec
-              FROM vcand
-              QUALIFY row_number() OVER (ORDER BY cos DESC, doc_id)
-                <= 50),
+      Some(s"""$sqlFixedHybridArms,
             fused AS (
               SELECT COALESCE(lex.doc_id, vec.doc_id) AS doc_id,
-                ${Arith.sqlMicro6("""COALESCE(CAST(1 AS DOUBLE) / (60 + r_lex), 0.0) +
-                      COALESCE(CAST(1 AS DOUBLE) / (60 + r_vec), 0.0)""")}
-                  AS rrf
+                $sqlRrf AS rrf
               FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id),
             top10 AS (
               SELECT doc_id FROM fused
@@ -3108,14 +2977,7 @@ object Similarity {
               SELECT t.doc_id, e.v,
                 ${sqlCosineCols("e.v", "qv.q_v")} AS rel
               FROM top10 t JOIN e ON e.vec_id = t.doc_id, qv),
-            s1 AS (
-              SELECT CAST(1 AS INTEGER) AS rank, doc_id, v, rel,
-                CAST(0.0 AS DOUBLE) AS max_sim,
-                CAST(FLOOR((0.7 * rel - 0.3 * 0.0)
-                  * 1000000 + 0.5) AS BIGINT) AS mmr_micros
-              FROM cand ORDER BY mmr_micros DESC, doc_id LIMIT 1),
-            sel1 AS (SELECT * FROM s1),
-            $rounds,
+            $sqlMmrTop5,
             tok AS (
               SELECT doc_id,
                 CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
@@ -3128,7 +2990,6 @@ object Similarity {
               FROM sel5 s JOIN tok USING (doc_id))
             SELECT ctx_rank, doc_id, n_tokens,
               least(n_tokens, 192 - prior) AS ctx_tokens
-            FROM ctx WHERE prior < 192 ORDER BY ctx_rank"""
-      })
+            FROM ctx WHERE prior < 192 ORDER BY ctx_rank"""))
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -43,8 +43,31 @@ object TextOps {
     * factored out so the hybrid-retrieval fusion (q_hybrid_rrf) ranks
     * its lexical arm with exactly the oracle-verified formula. Returns
     * (doc_id, score, n_terms_hit); see q_bm25's registration for the
-    * shape and exactness argument. */
+    * shape and exactness argument. Not run as [[bm25ScoresBatch]] at one
+    * query: the batch form's query joins cost the single query more jobs. */
   private[operators] def bm25Scores(s: SparkSession, d: String): DataFrame = {
+    val (toks, dl, stats) = bm25Corpus(s, d)
+    val tf = toks.filter(col("word").isin("spark", "data"))
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
+    val dfc = tf.groupBy("word")
+      .agg(countDistinct(col("doc_id")).as("df"))
+    bm25TermScore(tf.join(dfc, "word")
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(stats)))
+      .groupBy("doc_id")
+      // floor(x·1e6 + ½)/1e6, not round(x, 6): one IEEE expression both
+      // engines evaluate identically on the binary value — round(x, 6)
+      // is Spark's shortest-decimal half-up vs DuckDB's binary half-up,
+      // which diverge on .xxxxxx5-boundary scores (the r11 MMR lesson)
+      .agg((floor(sum(col("term_score")) * 1e6 + 0.5) / 1e6).as("score"),
+        count(lit(1)).as("n_terms_hit"))
+  }
+
+  /** The BM25 corpus side: the non-empty lowercase tokens
+    * `(doc_id, word)`, each document's length `(doc_id, dl)` and the
+    * one-row `(avgdl, n_docs)`. */
+  private def bm25Corpus(s: SparkSession,
+      d: String): (DataFrame, DataFrame, DataFrame) = {
     val toks = docs(s, d)
       .select(col("doc_id"),
         explode(split(lower(col("text")), " ")).as("word"))
@@ -54,28 +77,19 @@ object TextOps {
     val stats = dl.agg(
       avg(col("dl")).as("avgdl"),
       count(lit(1)).cast("double").as("n_docs"))
-    val tf = toks.filter(col("word").isin("spark", "data"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-    val dfc = tf.groupBy("word")
-      .agg(countDistinct(col("doc_id")).as("df"))
-    tf.join(dfc, "word")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) /
-          (col("df") + 0.5)))
-      .withColumn("term_score",
-        col("idf") * (col("tf") * 2.2) /
-          (col("tf") +
-            lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
-      .groupBy("doc_id")
-      // floor(x·1e6 + ½)/1e6, not round(x, 6): one IEEE expression both
-      // engines evaluate identically on the binary value — round(x, 6)
-      // is Spark's shortest-decimal half-up vs DuckDB's binary half-up,
-      // which diverge on .xxxxxx5-boundary scores (the r11 MMR lesson)
-      .agg((floor(sum(col("term_score")) * 1e6 + 0.5) / 1e6).as("score"),
-        count(lit(1)).as("n_terms_hit"))
+    (toks, dl, stats)
   }
+
+  /** The Okapi term score (k1=1.2, b=0.75, +1 idf smoothing) over rows
+    * carrying tf, df, dl, avgdl and n_docs: adds `idf` and `term_score`. */
+  private def bm25TermScore(df: DataFrame): DataFrame = df
+    .withColumn("idf",
+      log(lit(1.0) + (col("n_docs") - col("df") + 0.5) /
+        (col("df") + 0.5)))
+    .withColumn("term_score",
+      col("idf") * (col("tf") * 2.2) /
+        (col("tf") +
+          lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
 
   /** Per-document composite quality scores — the q_quality scorer
     * (length + mean-word-length + stopword-ratio), factored out so the
@@ -326,9 +340,8 @@ object TextOps {
   /** Batch-parameterized BM25 — [[bm25Scores]] generalized from the fixed
     * {spark, data} query to an arbitrary QUERY BATCH `qTerms(q_id LONG,
     * word STRING)`: per (query, document), the Okapi score (k1=1.2,
-    * b=0.75, +1 idf smoothing) summed over that query's terms, with the
-    * SAME expression tree term-for-term as the oracle-verified fixed
-    * scorer. Returns (q_id, doc_id, score).
+    * b=0.75, +1 idf smoothing, [[bm25TermScore]]) summed over that
+    * query's terms. Returns (q_id, doc_id, score).
     *
     * Scale shape: the corpus is scanned ONCE for the union of all
     * queries' terms — dl/avgdl are query-independent, tf filters the
@@ -344,31 +357,16 @@ object TextOps {
     * terms would need the Arith round-6/decimal-sum discipline. */
   private[operators] def bm25ScoresBatch(s: SparkSession, d: String,
       qTerms: DataFrame): DataFrame = {
-    val toks = docs(s, d)
-      .select(col("doc_id"),
-        explode(split(lower(col("text")), " ")).as("word"))
-      .filter(col("word") =!= "")
-    val dl = toks.groupBy("doc_id")
-      .agg(count(lit(1)).cast("double").as("dl"))
-    val stats = dl.agg(
-      avg(col("dl")).as("avgdl"),
-      count(lit(1)).cast("double").as("n_docs"))
+    val (toks, dl, stats) = bm25Corpus(s, d)
     val words = qTerms.select(col("word")).distinct()
     val tf = toks.join(broadcast(words), "word")
       .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
     val dfc = tf.groupBy("word")
       .agg(countDistinct(col("doc_id")).as("df"))
-    tf.join(broadcast(dfc), "word")
+    bm25TermScore(tf.join(broadcast(dfc), "word")
       .join(broadcast(qTerms), "word")
       .join(dl, "doc_id")
-      .crossJoin(broadcast(stats))
-      .withColumn("idf",
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) /
-          (col("df") + 0.5)))
-      .withColumn("term_score",
-        col("idf") * (col("tf") * 2.2) /
-          (col("tf") +
-            lit(1.2) * (lit(0.25) + lit(0.75) * col("dl") / col("avgdl"))))
+      .crossJoin(broadcast(stats)))
       .groupBy("q_id", "doc_id")
       // same floor-micro quantization as [[bm25Scores]]
       .agg((floor(sum(col("term_score")) * 1e6 + 0.5) / 1e6).as("score"))
@@ -406,6 +404,39 @@ object TextOps {
           CAST(FLOOR(SUM(term_score) * 1000000 + 0.5) AS BIGINT)
             / 1000000.0 AS score
         FROM bscored GROUP BY q_id, doc_id)"""
+
+  /** Adjacent token pairs of each row's `toks` as struct `p` (w1, w2),
+    * both non-empty, next to the `keep` columns. */
+  private def tokenPairs(toks: DataFrame, keep: Column*): DataFrame = toks
+    .select(keep :+ explode(arrays_zip(
+      slice(col("toks"), lit(1), size(col("toks")) - 1).as("w1"),
+      slice(col("toks"), lit(2), size(col("toks")) - 1).as("w2")))
+      .as("p"): _*)
+    .filter(col("p.w1") =!= "" && col("p.w2") =!= "")
+
+  /** [[tokenPairs]]' oracle: a CTE chain ending in `pairs`, which selects
+    * `cols` from the adjacent token rows `a`, `b` (doc_id, w, i). */
+  private def sqlTokenPairs(cols: String): String = s"""WITH t AS (
+                SELECT doc_id, string_split(lower(text), ' ') AS toks
+                FROM documents),
+              u AS (
+                SELECT doc_id, unnest(toks) AS w,
+                  generate_subscripts(toks, 1) AS i
+                FROM t),
+              pairs AS (
+                SELECT $cols
+                FROM u a JOIN u b ON a.doc_id = b.doc_id AND b.i = a.i + 1
+                WHERE a.w <> '' AND b.w <> '')"""
+
+  /** The curriculum schedule table: per `stage`, the doc count, token
+    * mass and quality range of the scored docs. */
+  private def curriculumStages(staged: DataFrame): DataFrame = staged
+    .groupBy("stage")
+    .agg(count(lit(1)).as("n_docs"),
+      sum(col("n_tokens")).as("n_tokens"),
+      min(col("quality")).as("min_q"),
+      max(col("quality")).as("max_q"))
+    .orderBy("stage")
 
   /** Overlapping token-window chunking of `(doc_id, text)` rows: windows
     * of `window` tokens starting every `stride` tokens (stride < window ⇒
@@ -468,6 +499,64 @@ object TextOps {
   private def nStop(toks: org.apache.spark.sql.Column) =
     size(filter(toks, t => t.isin(stopWords: _*))).cast("long")
 
+  /** Every non-empty lowercase token with its 1-based position:
+    * `(doc_id, i, term)`, the postings both index rows and phrase search
+    * read. */
+  private def positionedTerms(s: SparkSession, d: String): DataFrame =
+    docs(s, d)
+      .select(col("doc_id"),
+        posexplode(split(lower(col("text")), " ")).as(Seq("p0", "term")))
+      .filter(col("term") =!= "")
+      .select(col("doc_id"), (col("p0") + 1).cast("long").as("i"),
+        col("term"))
+
+  /** [[positionedTerms]]' oracle: the CTE `f(doc_id, term, i)`. */
+  private val sqlPositionedTerms: String = """WITH t AS (
+                SELECT doc_id, string_split(lower(text), ' ') AS toks
+                FROM documents),
+              u AS (
+                SELECT doc_id, unnest(toks) AS term,
+                  CAST(generate_subscripts(toks, 1) AS BIGINT) AS i
+                FROM t),
+              f AS (SELECT * FROM u WHERE term <> '')"""
+
+  /** The token-budget table over a frame carrying each doc's `prior`
+    * chars: per source, docs, docs kept under the 50k budget and their
+    * chars. */
+  private def budgetCounts(withPrior: DataFrame): DataFrame = withPrior
+    .withColumn("keep", col("prior") < 50000L)
+    .groupBy("source")
+    .agg(count(lit(1)).as("n_total"),
+      count_if(col("keep")).as("n_kept"),
+      sum(when(col("keep"), col("n_chars")).otherwise(0L))
+        .cast("long").as("chars_kept"))
+    .orderBy("source")
+
+  /** The weighted-sample oracles' CTE `u(doc_id, n_chars, u)`: each doc's
+    * uniform draw from the first 8 hex digits of md5('w_' || doc_id). */
+  private val sqlWeightedDraw: String = s"""u AS (
+                SELECT doc_id, n_chars,
+                  (${(0 until 8).map(k =>
+                    s"(strpos('0123456789abcdef', substr(md5('w_' || doc_id), ${k + 1}, 1)) - 1) * ${math.pow(16, 7 - k).toLong}.0")
+                    .mkString(" + ")}) / 4294967296.0 AS u
+                FROM documents)"""
+
+  /** The distinct (source, wh) 5-gram window hashes of the corpus, the
+    * frame q_cross_source_overlap and q_ngram_novelty start from. */
+  private def sourceGrams(s: SparkSession, d: String): DataFrame =
+    windowHashes(docs(s, d), 5, Seq("source"))
+      .select("source", "wh").distinct()
+
+  /** [[sourceGrams]]' oracle: the CTE `g(source, wh)`. */
+  private val sqlSourceGrams: String = """WITH g AS (
+                SELECT DISTINCT source, wh FROM (
+                  SELECT source,
+                    unnest(list_distinct([md5(array_to_string(toks[i:i+4], ' '))
+                      FOR i IN generate_series(1, len(toks) - 4)])) AS wh
+                  FROM (SELECT source, string_split(text, ' ') AS toks
+                        FROM documents)
+                  WHERE len(toks) >= 5))"""
+
   /** q_ngram_novelty's dataflow, parameterized on checkpointing: the
     * registered row eagerly localCheckpoints the distinct (source, wh)
     * frame (it is consumed twice — claim pass + credit join); PlanSpec
@@ -479,8 +568,7 @@ object TextOps {
   private[graft] def ngramNovelty(s: SparkSession, d: String,
       checkpoint: Boolean = true): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ws0 = windowHashes(docs(s, d), 5, Seq("source"))
-      .select("source", "wh").distinct()
+    val ws0 = sourceGrams(s, d)
     val ws = if (checkpoint) ws0.localCheckpoint() else ws0
     // r19: the claim pass mins an INT source rank, not the source string.
     // min(string)'s immutable aggregation buffer is not hash-aggregable,
@@ -681,14 +769,8 @@ object TextOps {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val w = Window.orderBy(col("quality").desc, col("doc_id"))
-        qualityScores(s, d)
-          .withColumn("stage", ntile(4).over(w))
-          .groupBy("stage")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("n_tokens"),
-            min(col("quality")).as("min_q"),
-            max(col("quality")).as("max_q"))
-          .orderBy("stage")
+        curriculumStages(qualityScores(s, d)
+          .withColumn("stage", ntile(4).over(w)))
       },
       Some(sqlCurriculumOracle)),
 
@@ -715,7 +797,7 @@ object TextOps {
           expr("(1000000L - __qm) * 256 DIV 1000001"),
           Seq(col("quality").desc, col("doc_id")), lit(1L))
         val n = qualityScores(s, d).agg(count(lit(1)).as("__n"))
-        ranked.crossJoin(broadcast(n))
+        curriculumStages(ranked.crossJoin(broadcast(n))
           .withColumn("__rank", col("prior") + lit(1L))
           .withColumn("stage", expr(
             """CAST(CASE
@@ -724,13 +806,7 @@ object TextOps {
                  ELSE (__n % 4) +
                       ((__rank - (__n % 4) * ((__n DIV 4) + 1) - 1)
                          DIV GREATEST(__n DIV 4, 1)) + 1
-               END AS INT)"""))
-          .groupBy("stage")
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("n_tokens")).as("n_tokens"),
-            min(col("quality")).as("min_q"),
-            max(col("quality")).as("max_q"))
-          .orderBy("stage")
+               END AS INT)""")))
       },
       Some(sqlCurriculumOracle)),
 
@@ -879,13 +955,9 @@ object TextOps {
     // ulp-identical in both engines (pinned green, same as unigram).
     Q("q_bigram_lm",
       (s, d) => {
-        val pairs = docs(s, d)
-          .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-          .select(col("doc_id"), explode(arrays_zip(
-            slice(col("toks"), lit(1), size(col("toks")) - 1).as("w1"),
-            slice(col("toks"), lit(2), size(col("toks")) - 1).as("w2")))
-            .as("p"))
-          .filter(col("p.w1") =!= "" && col("p.w2") =!= "")
+        val pairs = tokenPairs(docs(s, d)
+            .select(col("doc_id"), split(lower(col("text")), " ").as("toks")),
+            col("doc_id"))
           .select(col("doc_id"),
             concat_ws(" ", col("p.w1"), col("p.w2")).as("bg"),
             col("p.w1").as("w1"))
@@ -901,17 +973,7 @@ object TextOps {
               .as("avg_logprob"))
           .orderBy("doc_id")
       },
-      Some(s"""WITH t AS (
-                SELECT doc_id, string_split(lower(text), ' ') AS toks
-                FROM documents),
-              u AS (
-                SELECT doc_id, unnest(toks) AS w,
-                  generate_subscripts(toks, 1) AS i
-                FROM t),
-              pairs AS (
-                SELECT a.doc_id, a.w || ' ' || b.w AS bg, a.w AS w1
-                FROM u a JOIN u b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-                WHERE a.w <> '' AND b.w <> ''),
+      Some(s"""${sqlTokenPairs("a.doc_id, a.w || ' ' || b.w AS bg, a.w AS w1")},
               c2 AS (SELECT bg, COUNT(*) AS c2 FROM pairs GROUP BY bg),
               c1 AS (SELECT w1, COUNT(*) AS c1 FROM pairs GROUP BY w1)
               SELECT doc_id, COUNT(*) AS n_bigrams,
@@ -953,12 +1015,7 @@ object TextOps {
         val toks = base
           .select(col("doc_id"), col("is_train"), explode(col("toks")).as("w"))
           .filter(col("w") =!= "")
-        val pairs = base.select(col("doc_id"), col("is_train"),
-            explode(arrays_zip(
-              slice(col("toks"), lit(1), size(col("toks")) - 1).as("w1"),
-              slice(col("toks"), lit(2), size(col("toks")) - 1).as("w2")))
-              .as("p"))
-          .filter(col("p.w1") =!= "" && col("p.w2") =!= "")
+        val pairs = tokenPairs(base, col("doc_id"), col("is_train"))
           .select(col("doc_id"), col("is_train"),
             concat_ws(" ", col("p.w1"), col("p.w2")).as("bg"),
             col("p.w1").as("w1"), col("p.w2").as("w2"))
@@ -1052,13 +1109,8 @@ object TextOps {
     // word keys; the top-30 is TakeOrderedAndProject.
     Q("q_cooccur_pmi",
       (s, d) => {
-        val base = docs(s, d)
-          .select(split(lower(col("text")), " ").as("toks"))
-          .select(explode(arrays_zip(
-            slice(col("toks"), lit(1), size(col("toks")) - 1).as("w1"),
-            slice(col("toks"), lit(2), size(col("toks")) - 1).as("w2")))
-            .as("p"))
-          .filter(col("p.w1") =!= "" && col("p.w2") =!= "")
+        val base = tokenPairs(docs(s, d)
+            .select(split(lower(col("text")), " ").as("toks")))
           .select(concat_ws(" ", col("p.w1"), col("p.w2")).as("bg"),
             col("p.w1").as("w1"), col("p.w2").as("w2"))
         val c2 = base.groupBy("bg", "w1", "w2")
@@ -1073,17 +1125,7 @@ object TextOps {
           .orderBy(col("pmi").desc, col("bg"))
           .limit(30)
       },
-      Some(s"""WITH t AS (
-                SELECT doc_id, string_split(lower(text), ' ') AS toks
-                FROM documents),
-              u AS (
-                SELECT doc_id, unnest(toks) AS w,
-                  generate_subscripts(toks, 1) AS i
-                FROM t),
-              pairs AS (
-                SELECT a.w || ' ' || b.w AS bg, a.w AS w1, b.w AS w2
-                FROM u a JOIN u b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-                WHERE a.w <> '' AND b.w <> ''),
+      Some(s"""${sqlTokenPairs("a.w || ' ' || b.w AS bg, a.w AS w1, b.w AS w2")},
               c2 AS (
                 SELECT bg, w1, w2, CAST(COUNT(*) AS BIGINT) AS c2
                 FROM pairs GROUP BY bg, w1, w2 HAVING COUNT(*) >= 5),
@@ -1352,8 +1394,7 @@ object TextOps {
     // arithmetic (DECIMAL div) — no float divergence.
     Q("q_cross_source_overlap",
       (s, d) => {
-        val ws = windowHashes(docs(s, d), 5, Seq("source"))
-          .select("source", "wh").distinct()
+        val ws = sourceGrams(s, d)
         val sizes = ws.groupBy("source").agg(count(lit(1)).as("n"))
         val a = ws.select(col("wh"), col("source").as("source_a"))
         val b = ws.select(col("wh"), col("source").as("source_b"))
@@ -1371,14 +1412,7 @@ object TextOps {
             col("n_a"), col("n_b"), col("jaccard_ppm"))
           .orderBy("source_a", "source_b")
       },
-      Some("""WITH g AS (
-                SELECT DISTINCT source, wh FROM (
-                  SELECT source,
-                    unnest(list_distinct([md5(array_to_string(toks[i:i+4], ' '))
-                      FOR i IN generate_series(1, len(toks) - 4)])) AS wh
-                  FROM (SELECT source, string_split(text, ' ') AS toks
-                        FROM documents)
-                  WHERE len(toks) >= 5)),
+      Some(s"""$sqlSourceGrams,
               sz AS (SELECT source, COUNT(*) AS n FROM g GROUP BY source),
               p AS (
                 SELECT a.source AS source_a, b.source AS source_b,
@@ -1410,14 +1444,7 @@ object TextOps {
     // (DECIMAL div) like the overlap row, so no float divergence.
     Q("q_ngram_novelty",
       (s, d) => ngramNovelty(s, d),
-      Some("""WITH g AS (
-                SELECT DISTINCT source, wh FROM (
-                  SELECT source,
-                    unnest(list_distinct([md5(array_to_string(toks[i:i+4], ' '))
-                      FOR i IN generate_series(1, len(toks) - 4)])) AS wh
-                  FROM (SELECT source, string_split(text, ' ') AS toks
-                        FROM documents)
-                  WHERE len(toks) >= 5)),
+      Some(s"""$sqlSourceGrams,
               f AS (SELECT wh, MIN(source) AS first_source FROM g GROUP BY wh)
               SELECT g.source, CAST(COUNT(*) AS BIGINT) AS n_grams,
                 CAST(COUNT(*) FILTER (WHERE f.first_source = g.source)
@@ -1667,16 +1694,9 @@ object TextOps {
           .rowsBetween(
             org.apache.spark.sql.expressions.Window.unboundedPreceding,
             org.apache.spark.sql.expressions.Window.currentRow)
-        docs(s, d)
+        budgetCounts(docs(s, d)
           .withColumn("prior",
-            sum(col("n_chars")).over(w) - col("n_chars"))
-          .withColumn("keep", col("prior") < 50000L)
-          .groupBy("source")
-          .agg(count(lit(1)).as("n_total"),
-            count_if(col("keep")).as("n_kept"),
-            sum(when(col("keep"), col("n_chars")).otherwise(0L))
-              .cast("long").as("chars_kept"))
-          .orderBy("source")
+            sum(col("n_chars")).over(w) - col("n_chars")))
       },
       Some(sqlSampleBudgetOracle)),
 
@@ -1690,15 +1710,8 @@ object TextOps {
     // priors by construction; same oracle. This sharded prior is also
     // what the corpus pipeline's stage 5 (batch and streaming) runs.
     Q("q_sample_budget_shard",
-      (s, d) => graft.plans.PrefixSum
-        .md5BudgetPrior(docs(s, d), col("n_chars"))
-        .withColumn("keep", col("prior") < 50000L)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_total"),
-          count_if(col("keep")).as("n_kept"),
-          sum(when(col("keep"), col("n_chars")).otherwise(0L))
-            .cast("long").as("chars_kept"))
-        .orderBy("source"),
+      (s, d) => budgetCounts(graft.plans.PrefixSum
+        .md5BudgetPrior(docs(s, d), col("n_chars"))),
       Some(sqlSampleBudgetOracle)),
 
     // ---- balanced output sharding + manifest ------------------------------
@@ -2148,12 +2161,7 @@ object TextOps {
     // synthetic vocab (~31 terms), not corpus size.
     Q("q_inverted_index",
       (s, d) => {
-        val toks = docs(s, d)
-          .select(col("doc_id"),
-            posexplode(split(lower(col("text")), " ")).as(Seq("p0", "term")))
-          .filter(col("term") =!= "")
-          .select(col("doc_id"), (col("p0") + 1).cast("long").as("i"),
-            col("term"))
+        val toks = positionedTerms(s, d)
         toks.groupBy("term")
           .agg(countDistinct(col("doc_id")).as("df"),
             count(lit(1)).as("cf"),
@@ -2181,12 +2189,7 @@ object TextOps {
     // compare, the q_knn_join_scaledk pattern applied to indexing.
     Q("q_inverted_index_shard",
       (s, d) => {
-        val toks = docs(s, d)
-          .select(col("doc_id"),
-            posexplode(split(lower(col("text")), " ")).as(Seq("p0", "term")))
-          .filter(col("term") =!= "")
-          .select(col("doc_id"), (col("p0") + 1).cast("long").as("i"),
-            col("term"))
+        val toks = positionedTerms(s, d)
         val shards = toks
           .withColumn("shard", expr("doc_id div 128"))
           .groupBy("term", "shard")
@@ -2219,12 +2222,7 @@ object TextOps {
     // bounded by the rarest term's postings.
     Q("q_phrase_search",
       (s, d) => {
-        val toks = docs(s, d)
-          .select(col("doc_id"),
-            posexplode(split(lower(col("text")), " ")).as(Seq("p0", "term")))
-          .filter(col("term") =!= "")
-          .select(col("doc_id"), (col("p0") + 1).cast("long").as("i"),
-            col("term"))
+        val toks = positionedTerms(s, d)
         val a = toks.filter(col("term") === "customer")
           .select(col("doc_id"), col("i"))
         val b = toks.filter(col("term") === "join")
@@ -2235,14 +2233,7 @@ object TextOps {
           .agg(count(lit(1)).as("n_matches"), min(col("i")).as("first_i"))
           .orderBy("doc_id")
       },
-      Some("""WITH t AS (
-                SELECT doc_id, string_split(lower(text), ' ') AS toks
-                FROM documents),
-              u AS (
-                SELECT doc_id, unnest(toks) AS term,
-                  CAST(generate_subscripts(toks, 1) AS BIGINT) AS i
-                FROM t),
-              f AS (SELECT * FROM u WHERE term <> '')
+      Some(s"""$sqlPositionedTerms
               SELECT a.doc_id, CAST(COUNT(*) AS BIGINT) AS n_matches,
                 MIN(a.i) AS first_i
               FROM f a JOIN f b
@@ -2268,12 +2259,7 @@ object TextOps {
       },
       // hex → int per char like q_quality_classifier (no conv() in DuckDB)
       Some(s"""WITH mx AS (SELECT MAX(n_chars) AS mx FROM documents),
-              u AS (
-                SELECT doc_id, n_chars,
-                  (${(0 until 8).map(k =>
-                    s"(strpos('0123456789abcdef', substr(md5('w_' || doc_id), ${k + 1}, 1)) - 1) * ${math.pow(16, 7 - k).toLong}.0")
-                    .mkString(" + ")}) / 4294967296.0 AS u
-                FROM documents)
+              $sqlWeightedDraw
               SELECT doc_id, n_chars FROM u, mx
               WHERE u.u < CAST(n_chars AS DOUBLE) / mx.mx
               ORDER BY doc_id""")),
@@ -2290,12 +2276,7 @@ object TextOps {
     // normalizer comes from.
     Q("q_sample_weighted_cfg",
       (s, d) => sampleWeightedKeep(docs(s, d), lit(600.0d)),
-      Some(s"""WITH u AS (
-                SELECT doc_id, n_chars,
-                  (${(0 until 8).map(k =>
-                    s"(strpos('0123456789abcdef', substr(md5('w_' || doc_id), ${k + 1}, 1)) - 1) * ${math.pow(16, 7 - k).toLong}.0")
-                    .mkString(" + ")}) / 4294967296.0 AS u
-                FROM documents)
+      Some(s"""WITH $sqlWeightedDraw
               SELECT doc_id, n_chars FROM u
               WHERE u.u < CAST(n_chars AS DOUBLE) / 600.0
               ORDER BY doc_id""")),
@@ -2611,14 +2592,7 @@ object TextOps {
     * doc-ordered postings string), so one SQL serves both rows and the
     * hash compare proves the equivalence. */
   private def invertedIndexOracleSql: String =
-    """WITH t AS (
-         SELECT doc_id, string_split(lower(text), ' ') AS toks
-         FROM documents),
-       u AS (
-         SELECT doc_id, unnest(toks) AS term,
-           CAST(generate_subscripts(toks, 1) AS BIGINT) AS i
-         FROM t),
-       f AS (SELECT * FROM u WHERE term <> '')
+    s"""$sqlPositionedTerms
        SELECT term, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df,
          CAST(COUNT(*) AS BIGINT) AS cf,
          md5(string_agg(doc_id || ':' || i, ','

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.Q
-import graft.operators.{Arith, Scratch}
+import graft.operators.{Arith, Complex, Relational, Scratch}
 
 /** Structured Streaming surface over the `events` stream shape
   * (event_id, ts, user_id, event_type, value).
@@ -555,22 +555,12 @@ object Streams {
 
     // Sliding windows on the stream (Complete-mode memory sink like
     // q_stream_hourly, so ALL windows emit and the oracle is the plain
-    // batch sliding aggregation — q_events_sliding's SQL verbatim).
+    // batch sliding aggregation — q_events_sliding's oracle).
     Q("q_stream_sliding",
       (s, d) => s.table(drain(s, "q_stream_sliding", OutputMode.Complete)(
           slidingCounts(eventsStream(s, d))).name)
         .orderBy("win_start", "event_type"),
-      Some(s"""WITH x AS (
-                SELECT CAST(FLOOR(epoch(CAST(ts AS TIMESTAMP)) / 1800) * 1800
-                       AS BIGINT) AS w0, event_type, value
-                FROM events),
-              u AS (
-                SELECT w0 AS win_start, event_type, value FROM x
-                UNION ALL
-                SELECT w0 - 1800, event_type, value FROM x)
-              SELECT win_start, event_type, COUNT(*) AS n,
-                ${Arith.sqlSum("value")} AS sum_value
-              FROM u GROUP BY 1, 2 ORDER BY win_start, event_type""")),
+      Some(Relational.EventsSlidingOracleSql)),
 
     // Append-mode parquet sink — the PRODUCTION sink shape (q_stream_hourly's
     // memory/Complete sink is the harness-bounded variant): each window row
@@ -704,18 +694,18 @@ object Streams {
     // Streaming funnel snapshot: [[FunnelSnapshotMachine]] flushed by the
     // watermark timeout in the no-data batch, the per-user flags
     // aggregated to the batch twin's three counts — whose oracle SQL this
-    // row reuses verbatim: on a single-data-batch drain the snapshot sees
+    // row reuses: on a single-data-batch drain the snapshot sees
     // every event, so streaming must equal batch exactly.
     Q("q_stream_funnel",
       (s, d) => funnelCounts(statefulRow(s, d, "q_stream_funnel",
         funnelSnapshot, rocks = false)),
-      Some(funnelSnapshotOracleSql)),
+      Some(Complex.FunnelOracleSql)),
 
     // The same machine on transformWithState, held to the same oracle.
     Q("q_stream_funnel_tws",
       (s, d) => funnelCounts(statefulRow(s, d, "q_stream_funnel_tws",
         funnelSnapshotTws, rocks = true)),
-      Some(funnelSnapshotOracleSql)),
+      Some(Complex.FunnelOracleSql)),
 
     // Stream-stream join as a driver row: two file-source streams over the
     // same events data (clicks / purchases), joined with watermarks and an
@@ -792,53 +782,13 @@ object Streams {
         graft.operators.Similarity.annIndexDriftResult),
       Some(graft.operators.Similarity.sqlAnnDriftOracle(6))))
 
-  /** The q_stream_funnel[_tws] oracle — the batch funnel counts (stage
-    * k's earliest qualifying instant is a MIN over events strictly later
-    * than stage k−1's clock). Shared verbatim so the two API arms are
-    * held to one bar. */
-  private lazy val funnelSnapshotOracleSql: String =
-    """WITH ev AS (
-         SELECT user_id, event_type,
-           epoch_us(CAST(ts AS TIMESTAMP)) AS us
-         FROM events),
-       t1 AS (SELECT user_id, MIN(us) AS t1 FROM ev
-              WHERE event_type = 'signup' GROUP BY user_id),
-       t2 AS (SELECT ev.user_id, MIN(us) AS t2
-              FROM ev JOIN t1 USING (user_id)
-              WHERE event_type = 'click' AND us > t1
-              GROUP BY ev.user_id),
-       t3 AS (SELECT ev.user_id, MIN(us) AS t3
-              FROM ev JOIN t2 USING (user_id)
-              WHERE event_type = 'purchase' AND us > t2
-              GROUP BY ev.user_id)
-       SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM t1) AS n_signup,
-         (SELECT CAST(COUNT(*) AS BIGINT) FROM t2) AS n_click,
-         (SELECT CAST(COUNT(*) AS BIGINT) FROM t3) AS n_purchase"""
-
-  /** The q_stream_sessionize[_tws] oracle — see the registration comment
-    * for the timeout-rule derivation. Shared so the two API arms are held
-    * to ONE cross-engine contract, character for character. */
-  private lazy val sessionizeOracleSql: String = """WITH g AS (
-                SELECT user_id, event_id,
-                  epoch_us(CAST(ts AS TIMESTAMP)) AS eus,
-                  epoch_us(CAST(ts AS TIMESTAMP)) -
-                    lag(epoch_us(CAST(ts AS TIMESTAMP))) OVER
-                      (PARTITION BY user_id
-                       ORDER BY epoch_us(CAST(ts AS TIMESTAMP)), event_id)
-                      AS gap_us
-                FROM events),
-              sid AS (
-                SELECT user_id, eus,
-                  CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000
-                                THEN 1 ELSE 0 END)
-                    OVER (PARTITION BY user_id ORDER BY eus, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                    AS BIGINT) AS session_id
-                FROM g),
+  /** The q_stream_sessionize[_tws] oracle: q_sessionize's sessions minus
+    * each user's unflushed last one (see the registration comment for the
+    * timeout-rule derivation). */
+  private lazy val sessionizeOracleSql: String =
+    Complex.sessionIdCtes("", "eus,") + s""",
               sess AS (
-                SELECT user_id, session_id, COUNT(*) AS n_events,
-                  MIN(eus) AS start_us, MAX(eus) AS end_us
-                FROM sid GROUP BY user_id, session_id),
+                ${Complex.SessionRollupSql}),
               wm AS (
                 SELECT MAX(epoch_us(CAST(ts AS TIMESTAMP))) AS max_us
                 FROM events),

@@ -35,6 +35,22 @@ class CliSpec extends AnyFunSuite {
     assert(e.getMessage.contains("unknown argument: --bogus x"), e.getMessage)
   }
 
+  test("non-numeric counts and a reducer count below 1 fail the parse") {
+    for (flag <- Seq("--nmappers", "--nreducers")) {
+      val e = intercept[RuntimeException](Cli.parse(Array(flag, "abc")))
+      assert(e.getMessage.contains(s"$flag expects a number, got: abc"),
+        e.getMessage)
+    }
+    for (n <- Seq("0", "-1")) {
+      val e = intercept[RuntimeException](
+        Cli.parse(Array("--nreducers", n)))
+      assert(e.getMessage.contains(s"--nreducers must be at least 1, got: $n"),
+        e.getMessage)
+    }
+    // a mapper count below 1 still parses; Engine clamps it to 1
+    assert(Cli.parse(Array("--nmappers", "0")).numMappers == 0)
+  }
+
   test("activeCores sums totalCores over active executors only") {
     // canned /api/v1/applications/<id>/executors payload — pins the REST
     // parse without a live UI (the end-to-end probe is StatusMain)

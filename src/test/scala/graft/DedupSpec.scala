@@ -273,10 +273,11 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("loops free their superseded rounds and keep the caller's inputs") {
-    // lpaRounds, pqTrain and mixtureWeights checkpoint every round: once a
-    // round's successor lands the round is freed, so pinned executor
-    // memory stays O(1) in rounds — but the inputs the CALLER checkpointed
-    // (LPA's nodes, PQ's training subvectors and seed) must stay pinned
+    // lpaRounds, pqTrain, mixtureWeights and the two MMR kernels
+    // checkpoint every round: once a round's successor lands the round is
+    // freed, so pinned executor memory stays O(1) in rounds — but the
+    // inputs the CALLER checkpointed (LPA's nodes, PQ's training
+    // subvectors and seed) must stay pinned
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.functions.col
     val s = spark
@@ -316,7 +317,25 @@ class DedupSpec extends AnyFunSuite {
     val mw =
       SparkEntry.queries("q_mixture_weights")(s, "/root/testdata/sf0.001")
     assertGrowth(beforeMw, "mixtureWeights")
-    Seq(nodes, edges, lab, sv, seed, cb, mw)
+
+    // MMR pins its candidate checkpoint and one selected set per round;
+    // only the last round's set is read by the result
+    val cand = Seq(
+      (1L, Array(1.0f, 0.0f), 0.9),
+      (2L, Array(0.0f, 1.0f), 0.8),
+      (3L, Array(0.7f, 0.7f), 0.7)).toDF("doc_id", "embedding", "rel")
+    val beforeMmr = pinned
+    val mmr = graft.operators.Similarity.mmrSelect(s, cand,
+      lambda = 0.5, mu = 0.5, k = 3)
+    assertGrowth(beforeMmr, "mmrSelect")
+    assert(mmr.count() == 3)
+    val beforeMmrBatch = pinned
+    val mmrBatch = graft.operators.Similarity.mmrSelectBatch(s,
+      cand.withColumn("q_id", org.apache.spark.sql.functions.lit(0L)),
+      lambda = 0.5, mu = 0.5, k = 3)
+    assertGrowth(beforeMmrBatch, "mmrSelectBatch")
+    assert(mmrBatch.count() == 3)
+    Seq(nodes, edges, lab, sv, seed, cb, mw, mmr, mmrBatch)
       .foreach(graft.operators.Materialize.free)
   }
 
