@@ -5,6 +5,8 @@ import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 object Bench {
@@ -23,7 +25,12 @@ object Bench {
     * session makes 3,561 such keys (`CodegenReuseMain`), so at the default
     * the LRU cache evicts every class before its next use and a warm
     * session recompiles the code it ran one pass earlier. 5000 holds the
-    * whole registry. */
+    * whole registry.
+    *
+    * `Materialize.free` unpersists locally checkpointed rounds, and Spark
+    * logs a WARN from `MapPartitionsRDD` for each ("cannot be recomputed
+    * after unpersisting"), which the loops mean. That logger runs at ERROR
+    * so the WARNs left are ones worth reading. */
   def benchSession(cpus: String,
       extraConfs: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
@@ -37,6 +44,7 @@ object Bench {
     extraConfs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
     spark
   }
 

@@ -1610,7 +1610,8 @@ object Dedup {
   // -------------------------------------------------------------------
   // Streaming corpus curation — the incremental foreachBatch arm of
   // q_corpus_pipeline (registered as q_stream_corpus_pipeline in
-  // streaming/Streams.scala, same oracle verbatim).
+  // streaming/Streams.scala, same oracle verbatim; feed, state layout,
+  // exactly-once and compaction in [[ChunkStream]]).
   //
   // Shape: the corpus arrives as doc_id-ordered micro-batches; each
   // batch runs minlen → quality locally, then the exact/near dedup
@@ -1619,248 +1620,27 @@ object Dedup {
   // corpus in doc_id order, "first occurrence of a hash" and "near-dups
   // a smaller-id stage-3 doc" mean exactly what they mean in the batch
   // chain, so the final survivor set — and every stage count — is the
-  // batch pipeline's answer, not an approximation of it.
-  //
-  // Exactly-once comes from the foreachBatch contract plus idempotent
-  // state writes: every per-batch output lands under a directory keyed
-  // by the micro-batch id with mode=overwrite, so a replayed batch
-  // (crash before the offset commit) rewrites its own directories and
-  // nothing else; reads of prior state filter to ids strictly BELOW the
-  // current batch, so a half-written directory from a killed attempt of
-  // THIS batch is never consumed. 100 TB shape: per-batch work shuffles
-  // digests and band keys (batch bands ⋈ corpus bands), never corpus
-  // text; the persisted state is the stage-3 docs' hashes, shingle sets
-  // and band keys — minhash runs ONCE per doc over the stream's life,
-  // where re-deriving corpus bands each batch would be quadratic.
-  //
-  // State LAYOUT is bounded too: a dir-per-batch-forever layout pays
-  // O(batches) driver listings + parquet-footer opens per batch
-  // (O(batches²) over the stream's life) and the classic small-files
-  // blow-up, so every `compactEvery` batches an idempotent compaction
-  // generation merges all committed per-batch dirs into one consolidated
-  // dir per state kind (see [[compactStateKinds]]); readers see ≤
-  // compactEvery+1 dirs per kind at any stream age. Its exactly-once is
-  // proven by the same kill grammar as the batch writes — StreamKillMain
-  // phases corpuscompactkill (halt with a consolidated dir written but
-  // unmarked) and corpuscompactkill2 (halt with the marker created but
-  // the merged sources unswept).
+  // batch pipeline's answer, not an approximation of it. 100 TB shape:
+  // per-batch work shuffles digests and band keys (batch bands ⋈ corpus
+  // bands), never corpus text; the persisted state is the stage-3 docs'
+  // hashes, shingle sets and band keys — minhash runs ONCE per doc over
+  // the stream's life, where re-deriving corpus bands each batch would
+  // be quadratic.
   // -------------------------------------------------------------------
 
   /** Stage the documents table as `nChunks` doc_id-range chunk files
-    * under `feedDir` with ascending modification times: a file stream
-    * with maxFilesPerTrigger=1 then replays the corpus as doc_id-ordered
-    * micro-batches (FileStreamSource admits oldest-first), one chunk per
-    * batch. repartition(n, chunk) puts each chunk wholly in one task, so
-    * partitionBy writes exactly one file per chunk — two files of one
-    * chunk would split a doc range across two batches. TEST-ONLY feed
-    * machinery (mtime-ordered admission needs a local dir by design) —
-    * deliberately java.io; the STATE layer below is Hadoop-FS throughout
-    * because its root is a cluster URI in production. */
+    * under `feedDir` ([[ChunkStream.stageFeedOrdered]]). */
   private[graft] def stageCorpusFeed(s: SparkSession, d: String,
       nChunks: Int, feedDir: String): Unit =
-    stageFeedOrdered(s,
+    ChunkStream.stageFeedOrdered(s,
       docs(s, d).select("doc_id", "source", "n_chars", "text"),
       "doc_id", nChunks, feedDir)
 
-  /** Generic id-range-ordered feed stager behind [[stageCorpusFeed]] —
-    * also used by the ANN index stream's embedding feed
-    * (Similarity.stageEmbedFeed): chunk any `df` on `idCol` ranges so
-    * the file stream replays it as id-ordered micro-batches. */
-  private[graft] def stageFeedOrdered(s: SparkSession,
-      df: DataFrame, idCol: String,
-      nChunks: Int, feedDir: String): Unit = {
-    val mm = df.agg(min(idCol), max(idCol)).head
-    val lo = mm.getLong(0)
-    val span = (mm.getLong(1) - lo) / nChunks + 1
-    val stage = s"$feedDir.stage"
-    // integer DIV, never `/`: Column./ is DOUBLE division, whose rounding
-    // can misassign boundary docs between adjacent chunks once doc_id
-    // spans approach 2^53 — and a doc in the wrong chunk silently breaks
-    // the cross-batch doc_id ordering the first-occurrence semantics
-    // rest on (r14 ADVICE)
-    df.withColumn("chunk",
-        expr(s"CAST(($idCol - ${lo}L) DIV ${span}L AS INT)"))
-      .repartition(nChunks, col("chunk"))
-      .write.mode("overwrite").partitionBy("chunk").parquet(stage)
-    val feed = new java.io.File(feedDir)
-    feed.mkdirs()
-    val t0 = System.currentTimeMillis() - 3600000L
-    for (k <- 0 until nChunks) {
-      Option(new java.io.File(s"$stage/chunk=$k").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .zipWithIndex.foreach { case (f, i) =>
-          val to = new java.io.File(feed, f"b$k%03d-$i.parquet")
-          java.nio.file.Files.move(f.toPath, to.toPath)
-          // the mtime IS the admission order; a silent failure here would
-          // let FileStreamSource replay out of doc_id order, breaking the
-          // first-occurrence invariant far from the cause (r14 ADVICE)
-          require(to.setLastModified(t0 + k * 1000L),
-            s"setLastModified failed staging $to")
-        }
-    }
-  }
-
-  /** Resolve the Hadoop FileSystem owning `path` from the session's
-    * hadoopConfiguration. The whole state-dir layer below goes through
-    * this — never `java.io.File` — because the state root is a cluster
-    * URI in production (hdfs://, s3a://): a java.io listing of such a
-    * URI returns null, so `prior()` would silently dedup against NOTHING
-    * and every exactly-once proof would pass vacuously on a corrupt
-    * answer (r16 verdict item 1). `file:` roots resolve to
-    * LocalFileSystem through the same API, so the local tests exercise
-    * the identical code path — StreamingSpec runs the corpus stream
-    * through an explicit `file:`-scheme state root to pin that. */
-  private def stateFs(path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val conf = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession)
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    (p.getFileSystem(conf), p)
-  }
-
-  /** Immediate subdirectories of `root` via the FS API; empty when the
-    * root does not (yet) exist. */
-  private def stateSubdirs(root: String)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val (fs, p) = stateFs(root)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.filter(_.isDirectory)
-  }
-
-  /** The per-batch state directories under `root`, (batchId, path) in id
-    * order. Directory-per-batch (b%06d), not a partitioned table: prior
-    * reads must enumerate EXPLICIT committed ids — a root-level read
-    * could list a half-written directory from a killed attempt. */
-  private def corpusBatchDirs(root: String): Seq[(Long, String)] =
-    stateSubdirs(root)
-      .filter(_.getPath.getName.startsWith("b"))
-      .flatMap(st => st.getPath.getName.stripPrefix("b").toLongOption
-        .map(_ -> st.getPath.toString))
-      .sortBy(_._1)
-
-  /** Marker written INSIDE a consolidated dir after its parquet job
-    * finishes; `_`-prefixed so Spark's file index never reads it as data.
-    * Directory existence alone is not completeness — a kill can land
-    * between the overwrite-delete and the last part file. */
-  private val CompactedMarker = "_GRAFT_COMPACTED"
-
-  /** The newest COMPLETE consolidated state dir under `root`, as
-    * (watermark, path): `c%06d` named, marker present. A half-written
-    * c-dir (killed mid-compaction) has no marker and is invisible here —
-    * it gets rebuilt, never read. */
-  private def validConsolidated(root: String): Option[(Long, String)] = {
-    val (fs, _) = stateFs(root)
-    stateSubdirs(root)
-      .filter(st => st.getPath.getName.startsWith("c") &&
-        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, CompactedMarker)))
-      .flatMap(st => st.getPath.getName.stripPrefix("c").toLongOption
-        .map(_ -> st.getPath.toString))
-      .sortBy(_._1).lastOption
-  }
-
-  /** State paths a reader consumes: the newest complete consolidated dir
-    * (if any) plus the per-batch dirs above its watermark, bounded by
-    * `beforeId` (exclusive) for prior reads. With compaction every K
-    * batches this is ≤ K+1 directories regardless of stream age — the
-    * fix for the O(batches) per-batch listings (and O(batches²) over the
-    * stream's life) the uncompacted layout paid. */
-  private[graft] def corpusReadDirs(root: String,
-      beforeId: Long = Long.MaxValue): Seq[String] = {
-    val c = validConsolidated(root)
-    // a consolidated dir at/past the read bound cannot be un-merged; by
-    // construction (compaction watermark = bid-1, run inside batch bid)
-    // it never happens — fail loudly rather than read too much state
-    c.foreach { case (w, _) => require(w < beforeId,
-      s"consolidated watermark $w >= read bound $beforeId under $root") }
-    val lo = c.map(_._1).getOrElse(-1L)
-    c.map(_._2).toSeq ++
-      corpusBatchDirs(root).filter(t => t._1 > lo && t._1 < beforeId)
-        .map(_._2)
-  }
-
-  /** Test seam for the mid-compaction kill proofs (StreamKillMain
-    * phases corpuscompactkill/corpuscompactkill2): called at the two
-    * crash-interesting points of every kind's compaction — "premark"
-    * (consolidated parquet written, marker NOT yet created: a crash here
-    * must rebuild) and "postmark" (marker created, merged sources not yet
-    * swept: a crash here must skip the rebuild and finish the sweep).
-    * No-op in production. */
-  private[graft] var compactionHook: (String, String) => Unit = (_, _) => ()
-
-  /** Consolidated-dir output file sizing: one ~128 MB parquet file per
-    * 128 MB of merged source bytes (a year-old stream's consolidated
-    * state neither fragments into thousands of small files nor
-    * concentrates into a handful of multi-GB ones), floored at 1 and
-    * capped at 4096 files (≈512 GB of state per kind — past that the
-    * layout question is a table format's, not a directory's). */
-  private[graft] def compactionPartitions(srcBytes: Long): Int =
-    math.max(1L, math.min(4096L, srcBytes / (128L << 20))).toInt
-
-  /** Idempotent compaction generation: for each state kind, merge every
-    * per-batch state dir with id ≤ `w` (plus the previous consolidated
-    * dir, if any) into one consolidated `c{w}` dir, then sweep the merged
-    * sources. Runs inside the foreachBatch body of batch w+1 (see
-    * [[startChunkStream]]), so every merged id is a COMMITTED batch whose
-    * content is final (replays only ever rewrite the one uncommitted
-    * batch). Crash-safe by the marker discipline: the marker is created
-    * only after the overwrite-mode parquet job returns, sources are
-    * deleted only after the marker exists, and a replayed batch re-enters
-    * here with the same w — a markerless c-dir rebuilds from the
-    * still-present sources, a marked one skips straight to finishing the
-    * sweep. Shared by every foreachBatch operator with the dir-per-batch
-    * layout (the corpus stream and the ANN index stream). */
-  private[graft] def compactStateKinds(s: SparkSession, stateRoot: String,
-      w: Long, kinds: Seq[String]): Unit =
-    for (kind <- kinds) {
-      val root = s"$stateRoot/$kind"
-      val cPath = f"$root/c$w%06d"
-      val (fs, _) = stateFs(root)
-      val marker =
-        new org.apache.hadoop.fs.Path(cPath, CompactedMarker)
-      if (!fs.exists(marker)) {
-        val prev = validConsolidated(root)
-        val lo = prev.map(_._1).getOrElse(-1L)
-        val srcs = prev.map(_._2).toSeq ++
-          corpusBatchDirs(root).filter(t => t._1 > lo && t._1 <= w)
-            .map(_._2)
-        if (srcs.nonEmpty) {
-          // plain union — batches partition the corpus, so no dedup is
-          // needed; the output file count scales with the merged source
-          // BYTES (the small-files blow-up was half of what compaction
-          // exists to fix; a fixed coalesce(32) would instead concentrate
-          // a year-old stream's state into 32 ever-growing files)
-          val bytes = srcs.map(p => fs.getContentSummary(
-            new org.apache.hadoop.fs.Path(p)).getLength).sum
-          s.read.parquet(srcs: _*).coalesce(compactionPartitions(bytes))
-            .write.mode("overwrite").parquet(cPath)
-          compactionHook("premark", kind)
-          require(fs.createNewFile(marker) || fs.exists(marker),
-            s"compaction marker create failed: $marker")
-        }
-      }
-      compactionHook("postmark", kind)
-      // sweep merged sources: per-batch dirs at/below the watermark and
-      // any OTHER c-dir (the superseded older generation, or a stale
-      // markerless attempt at a lower watermark)
-      stateSubdirs(root)
-        .filter { st =>
-          val n = st.getPath.getName
-          (n.startsWith("b") &&
-            n.stripPrefix("b").toLongOption.exists(_ <= w)) ||
-          (n.startsWith("c") &&
-            n.stripPrefix("c").toLongOption.exists(_ != w))
-        }
-        .foreach(st => fs.delete(st.getPath, true))
-    }
-
   /** One micro-batch of the incremental curation (driver-side foreachBatch
     * body — every frame operation in here is a distributed Spark job). */
-  private def corpusStreamBatch(s: SparkSession, stateRoot: String,
+  private def corpusStreamBatch(st: ChunkStream.State,
       batch: DataFrame, bid: Long): Unit = {
+    val s = st.spark
     val d0b = corpusD0(batch).localCheckpoint()
     val s1b = d0b.filter(col("n_tokens") >= 12)
     val s2b = corpusQuality(s1b).localCheckpoint()
@@ -1895,22 +1675,15 @@ object Dedup {
     val s2bR = s2b.join(repIds, "doc_id")
     val bSh = shingled(s2bR).localCheckpoint()
     val bBands = minhashBands(s, bSh).localCheckpoint()
-    def prior(kind: String, like: DataFrame): DataFrame = {
-      val dirs = corpusReadDirs(s"$stateRoot/$kind", bid)
-      if (dirs.isEmpty) like.limit(0) else s.read.parquet(dirs: _*)
-    }
     val verdicts = incrementalDedupPre(s, bHash, bSh, bBands,
-      prior("hash", bHash.select("h")), prior("sh", bSh),
-      prior("band", bBands)).localCheckpoint()
+      st.prior("hash", bid, bHash.select("h")), st.prior("sh", bid, bSh),
+      st.prior("band", bid, bBands)).localCheckpoint()
     val s3ids = verdicts
       .filter(!col("reason").isin("exact_corpus", "exact_batch"))
       .select("doc_id")
     val s4b = s2b
       .join(verdicts.filter(col("keep")).select("doc_id"), "doc_id")
       .select("doc_id", "source", "n_chars")
-    def put(kind: String, df: DataFrame): Unit =
-      df.write.mode("overwrite")
-        .parquet(f"$stateRoot/$kind/b$bid%06d")
     // ONE job for all five stage counts: 1-row aggs crossJoined (each
     // broadcasts trivially) instead of five .count() actions + a toDF —
     // per-batch driver job count is this row's entire cost at test SF
@@ -1921,10 +1694,9 @@ object Dedup {
     // and at test SF each is dominated by the per-job floor — submit
     // them from a small pool so the batch pays ~max(write) instead of
     // Σ(write) (guide §2.6 "overlap independent jobs"; actions are only
-    // sequential because driver code calls them sequentially). Exactly-
-    // once is untouched: each write still lands in its own
-    // batch-id-keyed dir with mode=overwrite, and ANY failure fails the
-    // batch before the offset commits, so a replay rewrites all five.
+    // sequential because driver code calls them sequentially). Any
+    // failure fails the batch before the offset commits, so a replay
+    // rewrites all five.
     val writes: Seq[(String, DataFrame)] = Seq(
       "hash" -> bHash.join(s3ids, "doc_id").select("h"),
       "sh" -> bSh.join(s3ids, "doc_id"),
@@ -1934,44 +1706,14 @@ object Dedup {
         .crossJoin(n("n2", s2b)).crossJoin(n("n3", s3ids))
         .crossJoin(n("n4", s4b)))
     Materialize.overlap(writes.map { case (kind, df) =>
-      () => put(kind, df)
+      () => st.put(kind, bid, df)
     })
   }
 
-  /** Start a foreachBatch stream over a staged chunk feed: one chunk
-    * file per micro-batch (AvailableNow drains everything then stops),
-    * state under `$scratch/state`, checkpoint under `$scratch/checkpoint`.
-    * Every `compactEvery` batches the state `kinds` compact before
-    * `batch` runs (watermark = bid-1: strictly committed ids only, so a
-    * replay of THIS batch can still assemble its prior from the
-    * surviving dirs). Restartable: the same scratch resumes from the
-    * file-source offset log, replaying at most the one uncommitted batch
-    * — whose state writes are idempotent. */
-  private[graft] def startChunkStream(s: SparkSession, feedDir: String,
-      scratch: String, compactEvery: Int, kinds: Seq[String])(
-      batch: (SparkSession, String, DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val stateRoot = s"$scratch/state"
-    val schema = s.read.parquet(feedDir).schema // footer only
-    s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$feedDir/b*.parquet")
-      .writeStream
-      .foreachBatch { (b: DataFrame, bid: Long) =>
-        if (compactEvery > 0 && bid > 0 && bid % compactEvery == 0)
-          compactStateKinds(b.sparkSession, stateRoot, bid - 1, kinds)
-        batch(b.sparkSession, stateRoot, b, bid)
-      }
-      .option("checkpointLocation", s"$scratch/checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Start the curation stream over a staged feed ([[startChunkStream]]). */
+  /** Start the curation stream over a staged feed ([[ChunkStream.start]]). */
   private[graft] def startCorpusStream(s: SparkSession, feedDir: String,
-      scratch: String, compactEvery: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    startChunkStream(s, feedDir, scratch, compactEvery,
+      scratch: String): org.apache.spark.sql.streaming.StreamingQuery =
+    ChunkStream.start(s, feedDir, scratch,
       Seq("hash", "sh", "band", "s4", "counts"))(corpusStreamBatch)
 
   /** Assemble the pipeline report from the accumulated state: stages 0-4
@@ -1982,13 +1724,10 @@ object Dedup {
     * one stage that is only well-defined on the END state). */
   private[graft] def corpusStreamResult(s: SparkSession,
       scratch: String): DataFrame = {
-    val stateRoot = s"$scratch/state"
-    val c = s.read
-      .parquet(corpusReadDirs(s"$stateRoot/counts"): _*)
+    val st = new ChunkStream.State(s, scratch)
+    val c = st.read("counts")
       .agg(sum("n0"), sum("n1"), sum("n2"), sum("n3"), sum("n4")).head
-    val s4 = s.read
-      .parquet(corpusReadDirs(s"$stateRoot/s4"): _*)
-    val n5 = budgetPrior(s4)
+    val n5 = budgetPrior(st.read("s4"))
       .filter(col("prior") < 5000L)
       .count()
     import s.implicits._

@@ -813,39 +813,30 @@ object Similarity {
   // (cosine between the frozen centroid and the exact fixed-point mean
   // of everything assigned to it — the "retrain me" signal an index
   // operator watches) numbers equal the batch run bit for bit, which is
-  // what lets the row hold to a DuckDB batch-twin oracle.
-  //
-  // Exactly-once is the corpus stream's grammar reused verbatim: state
-  // writes land under per-batch-id dirs with mode=overwrite (replays
-  // rewrite their own dirs), readers enumerate committed ids through
-  // Dedup.corpusReadDirs, and every compactEvery batches
-  // Dedup.compactStateKinds merges committed dirs into a marked
-  // consolidated generation — ≤ compactEvery+1 dirs per kind at any
-  // stream age. Hard-kill/resume proof: StreamKillMain phases
-  // annkill/annresume.
+  // what lets the row hold to a DuckDB batch-twin oracle. Feed, state
+  // layout, exactly-once and compaction: [[ChunkStream]].
   //
   // 100 TB shape: per batch the corpus-sized work is ONE scan of the
   // batch (assignment is a broadcast crossJoin of one collapsed
   // centroid row — the assignByArray scaladoc's argument); the shuffles
   // carry only (bucket, partial) rows bounded by k and k×64. State is
-  // O(k) per batch, O(k·compactEvery) on disk.
+  // O(k) per batch.
   // -------------------------------------------------------------------
 
   private[graft] val AnnCentroids = 8
 
-  /** Stage the embeddings table as vec_id-ordered chunk files (the
-    * stageCorpusFeed machinery on (vec_id, embedding)). */
+  /** Stage the embeddings table as vec_id-ordered chunk files
+    * ([[ChunkStream.stageFeedOrdered]] on (vec_id, embedding)). */
   private[graft] def stageEmbedFeed(s: SparkSession, d: String,
       nChunks: Int, feedDir: String): Unit =
-    Dedup.stageFeedOrdered(s,
+    ChunkStream.stageFeedOrdered(s,
       embs(s, d).select("vec_id", "embedding"), "vec_id", nChunks, feedDir)
 
   /** One micro-batch of the incremental index maintenance (foreachBatch
     * body). Batch 0 additionally freezes + persists the centroid frame. */
-  private def annIndexStreamBatch(s: SparkSession, stateRoot: String,
+  private def annIndexStreamBatch(st: ChunkStream.State,
       batch: DataFrame, bid: Long): Unit = {
-    def put(kind: String, df: DataFrame): Unit =
-      df.write.mode("overwrite").parquet(f"$stateRoot/$kind/b$bid%06d")
+    val s = st.spark
     val e0 = dropZeroNorm(s, batch.select(col("vec_id"), col("embedding")))
     // e has TWO consumers only at batch 0 (the centroid freeze + the
     // assignment); every later batch consumes it exactly once, inside
@@ -853,10 +844,9 @@ object Similarity {
     // a pure extra per-batch job (guide §1.2: count the actions)
     val e = if (bid == 0) e0.localCheckpoint() else e0
     if (bid == 0)
-      put("cents", e.filter(col("vec_id") < AnnCentroids)
+      st.put("cents", bid, e.filter(col("vec_id") < AnnCentroids)
         .select(col("vec_id").as("c_id"), col("embedding").as("c_v")))
-    val cents = s.read
-      .parquet(Dedup.corpusReadDirs(s"$stateRoot/cents"): _*)
+    val cents = st.read("cents")
     // checkpointed: consumed by BOTH partial puts below
     val assigned = assignByArray(s, e, cents).localCheckpoint()
     // partials carry their batch id as a COLUMN (not just the dir name):
@@ -864,9 +854,8 @@ object Similarity {
     // ([[annIndexDriftResult]]) needs per-batch resolution to survive it.
     // The two puts are independent jobs over the assigned checkpoint —
     // overlapped, the batch pays ~max(write) instead of Σ(write) (the
-    // corpus stream's §2.6 recipe; exactly-once is untouched: both land
-    // in batch-id-keyed dirs with overwrite, and any failure fails the
-    // batch before the offset commits, so a replay rewrites both).
+    // corpus stream's §2.6 recipe; any failure fails the batch before
+    // the offset commits, so a replay rewrites both).
     val stats = assigned
       .join(broadcast(cents), col("bucket") === col("c_id"))
       .withColumn("cos", cosine(s, col("embedding"), col("c_v")))
@@ -884,16 +873,15 @@ object Similarity {
         .as("sx"))
       .withColumn("bid", lit(bid))
     Materialize.overlap(Seq(
-      () => put("stats", stats),
-      () => put("dims", dims)))
+      () => st.put("stats", bid, stats),
+      () => st.put("dims", bid, dims)))
   }
 
   /** Start the index-maintenance stream over a staged embedding feed
-    * (Dedup.startChunkStream). */
+    * ([[ChunkStream.start]]). */
   private[graft] def startAnnIndexStream(s: SparkSession, feedDir: String,
-      scratch: String, compactEvery: Int = 4)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    Dedup.startChunkStream(s, feedDir, scratch, compactEvery,
+      scratch: String): org.apache.spark.sql.streaming.StreamingQuery =
+    ChunkStream.start(s, feedDir, scratch,
       Seq("cents", "stats", "dims"))(annIndexStreamBatch)
 
   /** Assemble the index-health report from the accumulated state:
@@ -904,14 +892,14 @@ object Similarity {
     * batch twin ([[annIndexBatchReport]] / the DuckDB oracle) exactly. */
   private[graft] def annIndexStreamResult(s: SparkSession,
       scratch: String): DataFrame = {
-    val root = s"$scratch/state"
-    val cents = s.read.parquet(Dedup.corpusReadDirs(s"$root/cents"): _*)
-    val stats = s.read.parquet(Dedup.corpusReadDirs(s"$root/stats"): _*)
+    val st = new ChunkStream.State(s, scratch)
+    val cents = st.read("cents")
+    val stats = st.read("stats")
       .groupBy("bucket")
       .agg(sum(col("n")).as("n_vecs"),
         sum(col("cos_micro")).as("cm"),
         min(col("min_cos")).as("min_cos"))
-    val dims = s.read.parquet(Dedup.corpusReadDirs(s"$root/dims"): _*)
+    val dims = st.read("dims")
       .groupBy("bucket", "i").agg(sum(col("sx")).as("sx"))
     annReportAssemble(s, stats, dims, cents)
   }
@@ -932,16 +920,16 @@ object Similarity {
   private[graft] def annIndexDriftResult(s: SparkSession,
       scratch: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val root = s"$scratch/state"
-    val cents = s.read.parquet(Dedup.corpusReadDirs(s"$root/cents"): _*)
+    val st = new ChunkStream.State(s, scratch)
+    val cents = st.read("cents")
     val wB = Window.partitionBy("bucket").orderBy("bid")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val stc = s.read.parquet(Dedup.corpusReadDirs(s"$root/stats"): _*)
+    val stc = st.read("stats")
       .select(col("bid"), col("bucket"), col("n").as("n_batch"))
       .withColumn("n_cum", sum(col("n_batch")).over(wB))
     val wD = Window.partitionBy("bucket", "i").orderBy("bid")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dcum = s.read.parquet(Dedup.corpusReadDirs(s"$root/dims"): _*)
+    val dcum = st.read("dims")
       .withColumn("sx_cum", sum(col("sx")).over(wD))
       .select("bid", "bucket", "i", "sx_cum")
     val mv = dcum

@@ -11,7 +11,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 
 import graft.Q
-import graft.operators.{Arith, Complex, Relational, Scratch}
+import graft.operators.{Arith, ChunkStream, Complex, Relational, Scratch}
 
 /** Structured Streaming surface over the `events` stream shape
   * (event_id, ts, user_id, event_type, value).
@@ -501,8 +501,8 @@ object Streams {
       start: (SparkSession, String, String) => StreamingQuery)(
       result: (SparkSession, String) => DataFrame): DataFrame = {
     val scratch = Scratch.fresh(row)
-    stage(s, d, 6, s"$scratch/feed")
-    val q = start(s, s"$scratch/feed", scratch)
+    stage(s, d, 6, ChunkStream.feed(scratch))
+    val q = start(s, ChunkStream.feed(scratch), scratch)
     q.awaitTermination()
     requireBatches(row, q, oracle = false)
     result(s, scratch)
@@ -745,14 +745,15 @@ object Streams {
     // per-batch minlen → quality → exact/near dedup against the
     // accumulated stage-3 state, survivors and counts written idempotently
     // per batch id. Held to the BATCH pipeline's oracle verbatim on the
-    // final corpus state (machinery in operators/Dedup.scala; the
-    // hard-kill/resume proof is StreamKillMain phase=corpuskill). It keeps
-    // the session's shuffle partitions: the per-batch minhash kernel is
-    // CPU-bound and has no state store to economize on.
+    // final corpus state (batch body in operators/Dedup.scala, state in
+    // operators/ChunkStream.scala; the hard-kill/resume proof is
+    // StreamKillMain phase=corpuskill). It keeps the session's shuffle
+    // partitions: the per-batch minhash kernel is CPU-bound and has no
+    // state store to economize on.
     Q("q_stream_corpus_pipeline",
       (s, d) => incrementalRow(s, d, "q_stream_corpus_pipeline",
         graft.operators.Dedup.stageCorpusFeed,
-        graft.operators.Dedup.startCorpusStream(_, _, _))(
+        graft.operators.Dedup.startCorpusStream)(
         graft.operators.Dedup.corpusStreamResult),
       Some(graft.operators.Dedup.CorpusPipelineOracleSql)),
 
@@ -766,7 +767,7 @@ object Streams {
     Q("q_stream_ann_index",
       (s, d) => incrementalRow(s, d, "q_stream_ann_index",
         graft.operators.Similarity.stageEmbedFeed,
-        graft.operators.Similarity.startAnnIndexStream(_, _, _))(
+        graft.operators.Similarity.startAnnIndexStream)(
         graft.operators.Similarity.annIndexStreamResult),
       Some(graft.operators.Similarity.AnnIndexStreamOracleSql)),
 
@@ -778,7 +779,7 @@ object Streams {
     Q("q_stream_ann_drift",
       (s, d) => incrementalRow(s, d, "q_stream_ann_drift",
         graft.operators.Similarity.stageEmbedFeed,
-        graft.operators.Similarity.startAnnIndexStream(_, _, _))(
+        graft.operators.Similarity.startAnnIndexStream)(
         graft.operators.Similarity.annIndexDriftResult),
       Some(graft.operators.Similarity.sqlAnnDriftOracle(6))))
 

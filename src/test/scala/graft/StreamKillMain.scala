@@ -222,9 +222,9 @@ object StreamKillMain {
     // Mid-COMPACTION hard kills (the state-compaction generation gets the
     // same crash grammar as the per-batch writes). Both phases stage a
     // 10-chunk feed and drain until the SECOND compaction generation
-    // (compactEvery=4 default: bid 4 merges batches 0-3, bid 8 merges
+    // (CompactEvery=4: bid 4 merges batches 0-3, bid 8 merges
     // 4-7 AND supersedes the first c-dir), halting INSIDE it via the
-    // Dedup.compactionHook test seam at the two crash-interesting
+    // ChunkStream.compactionHook test seam at the two crash-interesting
     // points, on the SECOND state kind ("sh") — so at halt time "hash"
     // is fully re-compacted AND its first generation swept, "sh" is
     // mid-supersession (BOTH its generations on disk in some state), and
@@ -245,7 +245,7 @@ object StreamKillMain {
       val point = if (phase == "corpuscompactkill") "premark" else "postmark"
       operators.Dedup.stageCorpusFeed(spark, src, 10, s"$work/cfeed")
       val fired = new java.util.concurrent.atomic.AtomicInteger
-      operators.Dedup.compactionHook = (p, kind) =>
+      operators.ChunkStream.compactionHook = (p, kind) =>
         if (p == point && kind == "sh" && fired.incrementAndGet() == 2) {
           System.err.println(s"KILL| halting mid-compaction at ($p, $kind)" +
             ", generation 2")

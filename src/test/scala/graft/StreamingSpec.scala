@@ -545,9 +545,9 @@ class StreamingSpec extends AnyFunSuite {
     // The production state root is a cluster URI (hdfs://, s3a://); any
     // surviving java.io.File list/exists/delete in the state layer would
     // see a `file:/...` root as a relative path named "file:", list
-    // nothing, and prior() would silently dedup against NOTHING — the
+    // nothing, and a prior read would silently dedup against NOTHING — the
     // report would diverge from the batch pipeline. Running the whole
-    // stream (compaction included: 6 batches, compactEvery=4 fires at
+    // stream (compaction included: 6 batches, CompactEvery=4 fires at
     // bid 4) through an explicit URI root pins the FS-API port end to
     // end (r16 verdict item 1).
     val s = spark
@@ -594,7 +594,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("compaction output partitioning scales with merged state bytes, " +
       "floored and capped") {
-    val f = graft.operators.Dedup.compactionPartitions _
+    val f = graft.operators.ChunkStream.compactionPartitions _
     assert(f(0L) == 1, "empty state must still write one file")
     assert(f(127L << 20) == 1)
     assert(f(128L << 20) == 1)
@@ -697,8 +697,8 @@ class StreamingSpec extends AnyFunSuite {
     // per-batch state writes. Each phase stages a 10-chunk feed and halts
     // INSIDE the second compaction (batch 8's — the one that must
     // supersede batch 4's consolidated dir, the sweep path generation 1
-    // never exercises) via the Dedup.compactionHook seam, on the second
-    // state kind — so "hash" is fully re-compacted with its first
+    // never exercises) via the ChunkStream.compactionHook seam, on the
+    // second state kind — so "hash" is fully re-compacted with its first
     // generation swept, "sh" is mid-supersession with BOTH generations on
     // disk:
     //   corpuscompactkill : gen-2 dir written, marker NOT created — the

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.functions._
 
 /** Scale-stress harness (the empirical evidence behind the 100 TB scale
@@ -1311,6 +1312,57 @@ object StressMain {
     * (c) the streamed closed-session set is EXACTLY the batch
     * q_sessionize output on the same corpus (sentinel sessions never
     * close, so the file-sink multiset must equal the batch twin). */
+  /** Drain one chunk stream (the [[graft.operators.ChunkStream]] corpus
+    * or ANN arm) and print its drain metrics, its job count per batch
+    * (at test SF the drain wall is driver job count × the per-job floor,
+    * so the job total is the number optimization work moves) and each
+    * data batch's trigger wall. Checks that the feed drained in `nChunks`
+    * data batches and returns (batchId, rows, seconds) per data batch in
+    * id order. */
+  private def drainChunkStream(spark: SparkSession, label: String,
+      nChunks: Int)(start: => StreamingQuery): Seq[(Long, Long, Double)] = {
+    val walls =
+      scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
+    spark.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(
+          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(
+          e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) walls.synchronized {
+          walls += ((e.progress.batchId, e.progress.numInputRows,
+            e.progress.durationMs.get("triggerExecution").toDouble / 1000))
+        }
+      override def onQueryTerminated(
+          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    })
+    resetMetrics()
+    val jobCount = new java.util.concurrent.atomic.AtomicLong
+    val jobListener = new SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobCount.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    val t0 = System.nanoTime()
+    start.awaitTermination()
+    val wall = (System.nanoTime() - t0) / 1e9
+    drainMetrics()
+    spark.sparkContext.removeSparkListener(jobListener)
+    println(f"STRESS| $label drain ${wall}%7.2f s  peakTask " +
+      f"${mb(peak.get)}%5d MB  shufW ${mb(shuf.get)}%5d MB  " +
+      f"spill ${mb(spill.get)}%5d MB")
+    println(f"STRESS| $label jobs: ${jobCount.get} total over " +
+      f"$nChunks batches = ${jobCount.get.toDouble / nChunks}%.1f /batch")
+    val batchWalls = walls.synchronized { walls.sortBy(_._1).toSeq }
+    batchWalls.foreach { case (bid, rows, s) =>
+      println(f"STRESS| $label batch $bid: $rows%9d rows ${s}%7.2f s")
+    }
+    check(s"$label drained the staged feed in $nChunks data batches",
+      batchWalls.size == nChunks, s"${batchWalls.size} data batches")
+    batchWalls
+  }
+
   /** Stress tier for the q_stream_corpus_pipeline arm (the r14 verdict's
     * missing record): blow the documents table up ×copies (copies are
     * EXACT text duplicates under fresh doc_ids — the hardest case for the
@@ -1327,9 +1379,8 @@ object StressMain {
     *      corpus (the registered row's oracle contract, at ×copies). */
   private def corpusStreamStress(spark: SparkSession, src: String,
       copies: Int, work: String, nChunks: Int): Unit = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
     val Dedup = graft.operators.Dedup
-    val compactEvery = 4 // startCorpusStream's default, named for the laws
+    val compactEvery = graft.operators.ChunkStream.CompactEvery
     val docs0 = spark.read.parquet(s"$src/documents.parquet")
     val dOff = docs0.agg(max("doc_id")).head.getLong(0) + 1
     val nDocs = docs0.count()
@@ -1337,50 +1388,8 @@ object StressMain {
     println(s"STRESS| corpus-stream corpus: ${nDocs * copies} docs " +
       s"($copies× $src) at $work, $nChunks micro-batches")
     Dedup.stageCorpusFeed(spark, work, nChunks, s"$work/cfeed")
-    val walls =
-      scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.numInputRows > 0) walls.synchronized {
-          walls += ((e.progress.batchId, e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toDouble / 1000))
-        }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
-    resetMetrics()
-    // jobs/batch telemetry (r19): at test SF this row's wall is driver
-    // JOB COUNT × the per-job floor, so the job total is the number the
-    // optimization work moves — count every job submitted during the
-    // drain and report the per-batch mean
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    val jobListener = new SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(jobListener)
-    val t0 = System.nanoTime()
-    Dedup.startCorpusStream(spark, s"$work/cfeed", s"$work/cscratch")
-      .awaitTermination()
-    val wall = (System.nanoTime() - t0) / 1e9
-    drainMetrics()
-    spark.sparkContext.removeSparkListener(jobListener)
-    println(f"STRESS| corpus-stream drain ${wall}%7.2f s  peakTask " +
-      f"${mb(peak.get)}%5d MB  shufW ${mb(shuf.get)}%5d MB  " +
-      f"spill ${mb(spill.get)}%5d MB")
-    println(f"STRESS| corpus-stream jobs: ${jobCount.get} total over " +
-      f"$nChunks batches = ${jobCount.get.toDouble / nChunks}%.1f /batch")
-    val batchWalls = walls.synchronized { walls.sortBy(_._1).toSeq }
-    batchWalls.foreach { case (bid, rows, s) =>
-      println(f"STRESS| corpus-stream batch $bid: $rows%8d rows ${s}%7.2f s")
-    }
-    check(s"corpus-stream drained the staged feed in $nChunks data batches",
-      batchWalls.size == nChunks, s"${batchWalls.size} data batches")
+    val batchWalls = drainChunkStream(spark, "corpus-stream", nChunks)(
+      Dedup.startCorpusStream(spark, s"$work/cfeed", s"$work/cscratch"))
     // law 1: the last batch verifies against nChunks-1 batches of
     // accumulated state; equal batch sizes, so a blow-up here means
     // per-batch work scales with the CORPUS instead of (batch + candidates)
@@ -1658,9 +1667,8 @@ object StressMain {
     */
   private def annStreamStress(spark: SparkSession, src: String, copies: Int,
       work: String, nChunks: Int): Unit = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
     val Sim = graft.operators.Similarity
-    val compactEvery = 4 // startAnnIndexStream's default, named for law 2
+    val compactEvery = graft.operators.ChunkStream.CompactEvery
     val embs0 = spark.read.parquet(s"$src/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val vOff = embs0.agg(max("vec_id")).head.getLong(0) + 1
@@ -1674,49 +1682,8 @@ object StressMain {
     println(s"STRESS| annstream corpus: ${nVecs * copies} vectors " +
       s"($copies× $src) at $work, $nChunks micro-batches")
     Sim.stageEmbedFeed(spark, work, nChunks, s"$work/afeed")
-    val walls =
-      scala.collection.mutable.ArrayBuffer[(Long, Long, Double)]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.numInputRows > 0) walls.synchronized {
-          walls += ((e.progress.batchId, e.progress.numInputRows,
-            e.progress.durationMs.get("triggerExecution").toDouble / 1000))
-        }
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    })
-    resetMetrics()
-    // jobs/batch telemetry (the corpus stress's r19 instrument): at test
-    // SF the drain wall is driver job count × the per-job floor
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    val jobListener = new SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(jobListener)
-    val t0 = System.nanoTime()
-    Sim.startAnnIndexStream(spark, s"$work/afeed", s"$work/ascratch")
-      .awaitTermination()
-    val wall = (System.nanoTime() - t0) / 1e9
-    drainMetrics()
-    spark.sparkContext.removeSparkListener(jobListener)
-    val sp = spill.get
-    println(f"STRESS| annstream drain ${wall}%7.2f s  peakTask " +
-      f"${mb(peak.get)}%5d MB  shufW ${mb(shuf.get)}%5d MB  " +
-      f"spill ${mb(sp)}%5d MB")
-    println(f"STRESS| annstream jobs: ${jobCount.get} total over " +
-      f"$nChunks batches = ${jobCount.get.toDouble / nChunks}%.1f /batch")
-    val batchWalls = walls.synchronized { walls.sortBy(_._1).toSeq }
-    batchWalls.foreach { case (bid, rows, s) =>
-      println(f"STRESS| annstream batch $bid: $rows%9d rows ${s}%7.2f s")
-    }
-    check(s"annstream drained the staged feed in $nChunks data batches",
-      batchWalls.size == nChunks, s"${batchWalls.size} data batches")
+    val batchWalls = drainChunkStream(spark, "annstream", nChunks)(
+      Sim.startAnnIndexStream(spark, s"$work/afeed", s"$work/ascratch"))
     if (batchWalls.nonEmpty)
       check("annstream per-batch wall flat as state accumulates",
         batchWalls.last._3 <= batchWalls.head._3 * 4 + 10.0,
@@ -1730,8 +1697,8 @@ object StressMain {
           s"(≤ ${compactEvery + 1} after $nChunks batches)",
         dirs <= compactEvery + 1, s"$dirs dirs")
     }
-    check(s"annstream zero spill at ×$copies", sp == 0,
-      s"spill ${mb(sp)} MB")
+    check(s"annstream zero spill at ×$copies", spill.get == 0,
+      s"spill ${mb(spill.get)} MB")
     val got = Sim.annIndexStreamResult(spark, s"$work/ascratch")
     val expect = Sim.annIndexBatchReport(spark, src)
       .withColumn("n_vecs", col("n_vecs") * copies)

@@ -2,24 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run. */
+/** One shared local session for the whole test run: the session recipe
+  * Verify, Bench and perfbench run ([[Bench.benchSession]]) on 4 cores,
+  * with a temp warehouse dir. cleanCheckpoints stays OFF here (unlike
+  * Verify/Bench): the ContextCleaner would GC-delete superseded CC round
+  * checkpoints out from under DedupSpec's durability assertion; the spec
+  * deletes its checkpoint data explicitly instead. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // NOTE: cleanCheckpoints stays OFF here (unlike Verify/Bench): the
-      // ContextCleaner would GC-delete superseded CC round checkpoints
-      // out from under DedupSpec's durability assertion; the spec deletes
-      // its checkpoint data explicitly instead.
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Bench.benchSession("4", Map(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString,
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "false"))
 }
