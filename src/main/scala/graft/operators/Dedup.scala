@@ -226,39 +226,6 @@ object Dedup {
     .select(col("doc_id"),
       graft.functions.SimHash32(df.sparkSession, col("text")).as("simhash"))
 
-  /** Per-round materialization for the iterative CC loops.
-    *
-    * Default (`checkpointEvery = None`): `localCheckpoint` — blocks live
-    * on executors, lineage is truncated. Fast, but an executor loss
-    * mid-iteration KILLS the job (truncated lineage cannot recompute
-    * lost blocks); acceptable for small/medium corpora where a re-run is
-    * cheap.
-    *
-    * Reliable (`checkpointEvery = Some(n)`): every n-th round (and round
-    * 0, the edge list itself) is `Dataset.checkpoint()`-ed to the
-    * checkpoint dir — durable storage the driver can re-read after ANY
-    * executor loss. Rounds in between keep their lineage (plain persist),
-    * so a lost block recomputes from the last durable round instead of
-    * failing; lineage depth is bounded by n. At 100 TB set
-    * `spark.graft.cc.checkpointDir` to shared storage (HDFS/S3); the
-    * tmp-dir default only survives single-machine executor churn, and
-    * is deleted at JVM exit ([[Scratch]]) — a configured dir is not.
-    */
-  private def roundCheckpoint(df: DataFrame, round: Int,
-      checkpointEvery: Option[Int]): DataFrame =
-    checkpointEvery match {
-      case Some(n) =>
-        require(n > 0, s"checkpointEvery must be positive, got $n")
-        val sc = df.sparkSession.sparkContext
-        if (sc.getCheckpointDir.isEmpty)
-          sc.setCheckpointDir(df.sparkSession.conf
-            .getOption("spark.graft.cc.checkpointDir")
-            .getOrElse(Scratch.fresh("cc-ckpt")))
-        if (round % n == 0) df.checkpoint()
-        else df.persist()
-      case None => df.localCheckpoint()
-    }
-
   /** Symmetrized edge list of a pair frame — the pre-checkpoint frame
     * [[connectedComponents]] materializes as its round-0 edge table. The
     * union reads `pairs` twice, so the loop hands it a MATERIALIZED pair
@@ -277,61 +244,54 @@ object Dedup {
     * shape, O(log n) rounds).
     *
     * @param checkpointEvery  durability of the per-round materialization —
-    *                         see [[roundCheckpoint]]
+    *                         see [[Materialize.land]]
     */
   def connectedComponents(pairs: DataFrame,
       checkpointEvery: Option[Int] = None): DataFrame = {
-    // undirected edge list, both directions; materialized once so each
-    // round re-reads a tiny table instead of replaying the whole LSH
-    // pipeline
     // materialize the PAIR list before symmetrizing — the union's two
     // branches would each re-evaluate the LSH front's verify joins +
     // exact-Jaccard filter above its topmost exchange (ReusedExchange
     // shares only the shuffle files, not the post-shuffle operators). One
     // extra tiny (a_id, b_id) materialization buys the whole front
     // running once; freed as soon as the edge table lands.
-    val p = roundCheckpoint(pairs.select(col("a_id"), col("b_id")),
-      0, checkpointEvery)
+    val p = Materialize.land(pairs.select(col("a_id"), col("b_id")),
+      0, checkpointEvery).df
     // Edges stay NOT pre-partitioned on the round-join key: CC converges
     // in 2-3 rounds, so a pre-partitioning exchange plus a bigger
     // materialization costs more than the few edge exchanges it would
     // save (both forms measured slower; numbers in BENCH_NOTES).
-    val edges = roundCheckpoint(ccEdges(p), 0, checkpointEvery)
+    val edges = Materialize.land(ccEdges(p), 0, checkpointEvery).df
     Materialize.free(p)
-    var labels = roundCheckpoint(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")),
-      0, checkpointEvery)
-    // handle to the round's MATERIALIZED frame (labels is a projection
-    // over it) — unpersisted once the next round is materialized, so
-    // cached blocks stay O(1) across the run instead of O(rounds)
-    var prevMat = labels
     val maxRounds = 50
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
-      val next = roundCheckpoint(ccRound(edges, labels),
-        rounds + 1, checkpointEvery)
-      changed = next.filter(col("new_label") < col("label")).count()
-      labels = next.select(col("id"), col("new_label").as("label"))
-      Materialize.free(prevMat)
-      prevMat = next
-      rounds += 1
-    }
-    // a silent cap would return WRONG cluster ids for a >50-diameter chain;
-    // near-dup graphs never get close, so treat hitting it as a bug signal
-    // (connectedComponentsStar is the O(log n) fix when one appears)
-    if (changed > 0)
+    var changed = 0L
+    val last = Materialize.untilStable(
+      Materialize.land(edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id")), 0, checkpointEvery),
+      maxRounds, checkpointEvery)(r => ccRound(edges, ccLabels(r))) {
+      (_, next) =>
+        changed = next.filter(col("new_label") < col("label")).count()
+        changed == 0
+    }.getOrElse(
+      // a silent cap would return WRONG cluster ids for a >50-diameter
+      // chain; near-dup graphs never get close, so treat hitting it as a
+      // bug signal (connectedComponentsStar is the O(log n) fix)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds " +
           s"($changed labels still changing) — component diameter too " +
-          "large for min-label propagation")
+          "large for min-label propagation"))
     // the returned labels are a projection over the FINAL round only —
     // the edge list is dead once the loop exits, and without this every
     // CC-based query would pin an edge list of blocks until session end
     Materialize.free(edges)
-    labels
+    ccLabels(last)
   }
+
+  /** A min-label round's (id, label) view: the seed round is one;
+    * [[ccRound]]'s output carries its new label beside the old. */
+  private def ccLabels(round: DataFrame): DataFrame =
+    if (round.columns.contains("new_label"))
+      round.select(col("id"), col("new_label").as("label"))
+    else round
 
   /** One min-label-propagation round — the loop body of
     * [[connectedComponents]]. Round inputs are checkpointed, so the
@@ -405,45 +365,37 @@ object Dedup {
     * the (id, label) map.
     *
     * @param checkpointEvery  durability of the per-round materialization —
-    *                         see [[roundCheckpoint]]
+    *                         see [[Materialize.land]]
     */
   def connectedComponentsStar(pairs: DataFrame,
       checkpointEvery: Option[Int] = None): DataFrame = {
     // undirected edge list as canonical (hi, lo) pairs
-    var edges = roundCheckpoint(
+    val first = Materialize.land(
       canon(pairs.select(col("a_id").as("a"), col("b_id").as("b"))),
       0, checkpointEvery)
-    val ids = roundCheckpoint(
-      edges.select(explode(array(col("hi"), col("lo"))).as("id")).distinct(),
-      0, checkpointEvery)
+    val ids = Materialize.land(first.df
+      .select(explode(array(col("hi"), col("lo"))).as("id")).distinct(),
+      0, checkpointEvery).df
     val maxRounds = 50
-    var rounds = 0
-    var stable = false
-    // r18: carry the edge count across rounds — this round's edges ARE
-    // last round's small, so re-counting them was one full O(E) scan job
-    // per round for a number already in hand (guide §1.2: don't compute
-    // things you throw away)
-    var edgeCount = edges.count()
-    while (!stable && rounds < maxRounds) {
-      val small = roundCheckpoint(starRound(edges),
-        rounds + 1, checkpointEvery)
+    // carry the edge count across rounds: this round's edges ARE last
+    // round's result, so re-counting them would be one O(E) scan job per
+    // round for a number already in hand
+    var edgeCount = first.df.count()
+    val edges = Materialize.untilStable(first, maxRounds, checkpointEvery)(
+      starRound) { (prev, small) =>
       // fixpoint test: same canonical edge set. The count equality guard
       // is load-bearing at scale: counts are shuffle-free scans over the
       // materialized sets and differ in every NON-stable round, so the
       // set-comparison join (which exchanges both full edge lists) runs
       // only in the one round that actually converged. Given equal counts
-      // and distinct sets, small∖edges = ∅ ⟺ equality.
+      // and distinct sets, small∖prev = ∅ ⟺ equality.
       val smallCount = small.count()
-      stable = smallCount == edgeCount &&
-        small.join(edges, Seq("hi", "lo"), "left_anti").isEmpty
-      Materialize.free(edges)
-      edges = small
+      val same = smallCount == edgeCount &&
+        small.join(prev, Seq("hi", "lo"), "left_anti").isEmpty
       edgeCount = smallCount
-      rounds += 1
-    }
-    if (!stable)
-      throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxRounds rounds")
+      same
+    }.getOrElse(throw new IllegalStateException(
+      s"connectedComponentsStar did not converge in $maxRounds rounds"))
     // converged: every component is a star rooted at its minimum — each
     // node's single neighbor IS its label; roots label themselves. The
     // label extraction below ASSUMES the star shape (each hi paired with
@@ -485,15 +437,9 @@ object Dedup {
     val adj = edges.select(col("a_id").as("v"), col("b_id").as("u"))
       .unionByName(edges.select(col("b_id").as("v"), col("a_id").as("u")))
       .unionByName(nodes.select(col("v"), col("v").as("u")))
-    // round 0 is a projection over the caller's `nodes`: only rounds
-    // this loop checkpointed are freed once their successor lands
-    var lab = nodes.select(col("v"), col("v").as("lbl"))
-    for (r <- 1 to rounds) {
-      val next = lpaRound(adj, lab).localCheckpoint()
-      if (r > 1) Materialize.free(lab)
-      lab = next
-    }
-    lab
+    val first = Materialize.borrowed(nodes.select(col("v"), col("v").as("lbl")))
+    Materialize.rounds(first, rounds)(lpaRound(adj, _))
+      .foldLeft(first.df)((_, lab) => lab)
   }
 
   /** One LPA round — the loop body of [[lpaRounds]]; PlanSpec pins its
@@ -1126,10 +1072,10 @@ object Dedup {
         // threshold Spark-side while the oracle's NULL fails it — exclude
         // them up front; the left join below still emits them as
         // singletons, exactly like the exact path.
-        // Buckets come from ITERATED k-means (4 Lloyd rounds, early-
-        // stopping at a fixed point), not the raw first-k seeding: bucket
-        // balance — and with it the Σ bucket² pair work — no longer hangs
-        // on whichever vectors happen to be rows 0..k-1.
+        // Buckets come from ITERATED k-means (exactly 4 Lloyd rounds, no
+        // early stop), not the raw first-k seeding: bucket balance — and
+        // with it the Σ bucket² pair work — no longer hangs on whichever
+        // vectors happen to be rows 0..k-1.
         val assigned = Similarity.kmeansIterate(
           s, Similarity.dropZeroNorm(s, e), 8, 4)
         // per-bucket self-join: shuffles on `bucket` co-locate each bucket,

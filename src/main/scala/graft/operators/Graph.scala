@@ -18,7 +18,7 @@ import graft.{Q, Tables}
   * partial-aggregated shuffles on node ids — node state (rank) is O(V),
   * edges O(E), and no step ever materializes anything denser. Each round
   * shuffles contributions on dst only after map-side partial aggregation,
-  * and superseded round state is freed ([[Materialize.free]]) so pinned
+  * and superseded round state is freed ([[Materialize.rounds]]) so pinned
   * executor memory stays O(1) across rounds, the same discipline as the
   * Lloyd/CC loops.
   */
@@ -63,8 +63,7 @@ object Graph {
     // The (edge, outdeg) frame is loop-invariant — materialize it ONCE
     // with the degree already attached, so each round is a single join
     // against the current ranks instead of two (outdeg is a per-src
-    // constant; attaching it before the loop changes no value). Ranks
-    // are re-checkpointed per round and the superseded round freed.
+    // constant; attaching it before the loop changes no value).
     val edges = edges0.select("src", "dst").localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // repartitioned by the round-join key, then PERSISTED (not
@@ -91,16 +90,14 @@ object Graph {
       .repartition(Materialize.shufflePartitions(s), col("src"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     contrib.count()
-    var ranks = deg.select(col("src").as("node"),
-      lit(1000000L).as("r")).localCheckpoint()
+    val first = Materialize.land(
+      deg.select(col("src").as("node"), lit(1000000L).as("r")))
     Materialize.free(edges) // loop reads only contrib + ranks from here on
-    var i = 0
-    while (i < iters) {
+    val landed = Materialize.rounds(first, iters)(prRound(contrib, _))
+    var ranks = first.df
+    for (i <- 1 to iters) {
       val t0 = System.nanoTime()
-      val next = prRound(contrib, ranks).localCheckpoint()
-      Materialize.free(ranks)
-      ranks = next
-      i += 1
+      ranks = landed.next()
       onRound(i, (System.nanoTime() - t0) / 1e9)
     }
     Materialize.free(contrib)

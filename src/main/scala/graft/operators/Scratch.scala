@@ -4,7 +4,7 @@ package graft.operators
   * directory, created on first use and recursively deleted by one
   * shutdown hook. The sink round-trips (Complex), the bucketed storage
   * tables (Joins), the streaming sink/checkpoint/state dirs (Streams),
-  * the default CC checkpoint dir (Dedup) and the bench's MapReduce
+  * the fallback CC checkpoint dir (Materialize) and the bench's MapReduce
   * output all live under it, so no bench/test JVM leaves table copies
   * behind and no site writes to a predictable path in a shared /tmp.
   */

@@ -588,13 +588,9 @@ object Similarity {
     */
   def pqTrain(s: SparkSession, sv: DataFrame, seed: DataFrame,
       subDim: Int, rounds: Int): DataFrame = {
-    var cb = seed
-    for (r <- 1 to rounds) {
-      val next = pqTrainRound(s, sv, cb, subDim).localCheckpoint()
-      if (r > 1) Materialize.free(cb) // round 0 is the caller's seed
-      cb = next
-    }
-    cb
+    val first = Materialize.borrowed(seed)
+    Materialize.rounds(first, rounds)(pqTrainRound(s, sv, _, subDim))
+      .foldLeft(first.df)((_, cb) => cb)
   }
 
   /** One PQ training round — the loop body of [[pqTrain]]. Argmin via
@@ -1094,22 +1090,19 @@ object Similarity {
     * reassignment argmaxes COSINE, so a small set of boundary vectors can
     * oscillate indefinitely (AnnSpec observes changed counts decaying
     * without reaching 0 at sf0.001) — and the SQL oracle unrolls the
-    * same fixed depth ([[sqlKmeansRounds]]). Each round's assignment is
-    * localCheckpoint'ed (the per-round lineage would otherwise stack k
-    * broadcasts deep) and the superseded round's checkpoint blocks are
-    * freed ([[Materialize.free]]), so pinned executor memory stays O(1),
-    * not O(rounds). All five kmeans-bucketed queries (q_ann_ivf,
-    * q_knn_join, q_ann_kmeans_iter, q_ann_ivfpq, q_dedup_embed_ivf) build
-    * on this. */
+    * same fixed depth ([[sqlKmeansRounds]]). The rounds run through
+    * [[Materialize.rounds]]: each assignment is localCheckpoint'ed (the
+    * per-round lineage would otherwise stack k broadcasts deep) and the
+    * superseded one freed, so pinned executor memory stays O(1), not
+    * O(rounds). The result is that last localCheckpoint'ed round, already
+    * materialized: callers read it without checkpointing it again. All
+    * five kmeans-bucketed queries (q_ann_ivf, q_knn_join,
+    * q_ann_kmeans_iter, q_ann_ivfpq, q_dedup_embed_ivf) build on this. */
   def kmeansIterate(s: SparkSession, e: DataFrame, k: Int,
       rounds: Int): DataFrame = {
-    var assigned = ivfAssign(s, e, k).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val next = lloydRound(s, assigned, assigned).localCheckpoint()
-      Materialize.free(assigned)
-      assigned = next
-    }
-    assigned
+    val first = Materialize.land(ivfAssign(s, e, k))
+    Materialize.rounds(first, rounds)(a => lloydRound(s, a, a))
+      .foldLeft(first.df)((_, a) => a)
   }
 
   /** kNN-join: every corpus row's `k` nearest neighbors (cosine, ties to
@@ -1970,7 +1963,7 @@ object Similarity {
         val e = dropZeroNorm(s,
           embs(s, d).select(col("vec_id"), col("embedding")))
         val exact = exactTop10(s, e).localCheckpoint()
-        val bucketed = kmeansIterate(s, e, 8, 2).localCheckpoint()
+        val bucketed = kmeansIterate(s, e, 8, 2)
         val cents = centroidsOf(bucketed).localCheckpoint()
         val ranked = probeRanks(s, e.filter(col("vec_id") < 10), cents)
           .localCheckpoint()

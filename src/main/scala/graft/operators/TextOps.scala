@@ -190,7 +190,7 @@ object TextOps {
     val per = mixturePerSource(s, d).localCheckpoint()
     val tot = per.agg(sum(col("n_docs")).as("nn"), sum(col("qsum")).as("qq"),
       count(lit(1)).as("ns"))
-    var w = per.crossJoin(broadcast(tot))
+    val first = Materialize.land(per.crossJoin(broadcast(tot))
       .withColumn("mean_micro",
         floor(col("qsum").cast("double") / col("n_docs").cast("double") +
           0.5).cast("long"))
@@ -198,25 +198,21 @@ object TextOps {
         floor(col("qq").cast("double") / col("nn").cast("double") + 0.5)
           .cast("long"))
       .select(col("source"), col("n_docs"), col("mean_micro"),
-        col("excess_micro"), idivF(lit(1000000L), col("ns")).as("w"))
-      .localCheckpoint()
+        col("excess_micro"), idivF(lit(1000000L), col("ns")).as("w")))
     Materialize.free(per)
-    for (_ <- 1 to mwRounds) {
+    val w = Materialize.rounds(first, mwRounds) { w =>
       // w·factor ≤ 1.1e12 and raw·1e6 ≤ 1.1e12 — both exact as doubles
       val raw = w.withColumn("raw", idivF(
         col("w") * (lit(1000000L) +
           floor(col("excess_micro").cast("double") * mwEta + 0.5)
             .cast("long")),
         lit(1000000L)))
-      val next = raw
+      raw
         .crossJoin(broadcast(raw.agg(sum(col("raw")).as("rtot"))))
         .select(col("source"), col("n_docs"), col("mean_micro"),
           col("excess_micro"),
           idivF(col("raw") * lit(1000000L), col("rtot")).as("w"))
-        .localCheckpoint()
-      Materialize.free(w)
-      w = next
-    }
+    }.foldLeft(first.df)((_, w) => w)
     w.select(col("source"), col("n_docs"),
         (col("mean_micro").cast("double") / 1e6).as("mean_quality"),
         col("excess_micro"), col("w").as("weight_ppm"))

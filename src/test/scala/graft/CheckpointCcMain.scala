@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.util.Using
+
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 
@@ -9,8 +13,11 @@ import org.apache.spark.sql.SparkSession
   * dying mid-task, reference mapreduce/manager/__main__.py:304-333), and
   * the clustering runs with `checkpointEvery = Some(2)` — the durable
   * rounds land on disk, the in-between rounds keep recomputable lineage —
-  * in `local[2, 2]` (2 task attempts). Exits 0 only if the run completes
-  * AND every node of the planted chain labels to its minimum.
+  * in `local[2, 2]` (2 task attempts). The session sets Spark's own
+  * `spark.checkpoint.dir` to a fresh [[operators.Scratch]] dir. Exits 0
+  * only if the run completes, every node of the planted chain labels to
+  * its minimum, AND the durable rounds' `part-` files landed under that
+  * dir.
   *
   * What local mode CAN prove: task failures during the durable-round
   * materialization and the iteration's joins are retried and the labels
@@ -18,18 +25,19 @@ import org.apache.spark.sql.SparkSession
   * loss of already-materialized executor BLOCKS (local mode has one
   * BlockManager; losing it is losing the JVM) — that is the documented
   * cluster-mode property of Dataset.checkpoint (data re-read from the
-  * checkpoint dir), exercised here down to the on-disk files, which
-  * DedupSpec's durable-rounds test already asserts exist.
+  * checkpoint dir), exercised here down to the on-disk files.
   *
   * args: <nNodes>
   */
 object CheckpointCcMain {
   def main(args: Array[String]): Unit = {
     val n = args(0).toInt
+    val ckptDir = Paths.get(operators.Scratch.fresh("cc-ckpt-conf"))
     val spark = SparkSession.builder()
       .master("local[2, 2]") // 2 threads, 2 task attempts
       .config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.checkpoint.dir", ckptDir.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
@@ -51,6 +59,14 @@ object CheckpointCcMain {
       System.err.println(
         s"wrong labels after recovery: n=${labels.length} (want $n), " +
           s"$bad nodes off the component minimum")
+      sys.exit(1)
+    }
+    val parts = Using.resource(Files.walk(ckptDir)) {
+      _.filter(_.getFileName.toString.startsWith("part-")).count()
+    }
+    if (parts == 0) {
+      System.err.println(
+        s"no durable round landed under spark.checkpoint.dir=$ckptDir")
       sys.exit(1)
     }
     spark.stop()

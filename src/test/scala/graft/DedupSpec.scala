@@ -273,11 +273,12 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("loops free their superseded rounds and keep the caller's inputs") {
-    // lpaRounds, pqTrain, mixtureWeights and the two MMR kernels
-    // checkpoint every round: once a round's successor lands the round is
-    // freed, so pinned executor memory stays O(1) in rounds — but the
-    // inputs the CALLER checkpointed (LPA's nodes, PQ's training
-    // subvectors and seed) must stay pinned
+    // lpaRounds, pqTrain, mixtureWeights, kmeansIterate, pagerank, both
+    // CC loops (local and durable) and the two MMR kernels checkpoint
+    // every round: once a round's successor lands the round is freed, so
+    // pinned executor memory stays O(1) in rounds — but the inputs the
+    // CALLER checkpointed (LPA's nodes, PQ's training subvectors and
+    // seed, the corpus, edge and pair frames) must stay pinned
     import org.apache.spark.sql.execution.LogicalRDD
     import org.apache.spark.sql.functions.col
     val s = spark
@@ -285,9 +286,10 @@ class DedupSpec extends AnyFunSuite {
     def pinned = s.sparkContext.getPersistentRDDs.keySet
     def rddId(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.logical.asInstanceOf[LogicalRDD].rdd.id
-    def assertGrowth(before: collection.Set[Int], what: String) = {
+    def assertGrowth(before: collection.Set[Int], what: String,
+        bound: Int = 1) = {
       val grown = pinned -- before
-      assert(grown.size <= 1, s"$what left ${grown.size} rounds pinned")
+      assert(grown.size <= bound, s"$what left ${grown.size} rounds pinned")
     }
     val nodes = (1L to 6L).toDF("v").localCheckpoint()
     val edges = Seq(1L -> 2L, 2L -> 3L, 4L -> 5L).toDF("a_id", "b_id")
@@ -335,8 +337,43 @@ class DedupSpec extends AnyFunSuite {
       lambda = 0.5, mu = 0.5, k = 3)
     assertGrowth(beforeMmrBatch, "mmrSelectBatch")
     assert(mmrBatch.count() == 3)
-    Seq(nodes, edges, lab, sv, seed, cb, mw, mmr, mmrBatch)
-      .foreach(graft.operators.Materialize.free)
+
+    // the result is the one round left pinned: the last assignment, the
+    // last ranks (PageRank's edge and contrib frames are freed), the
+    // last labels (CC's pair and edge lists are freed) — and for star
+    // also its ids frame, which the result joins
+    val eCk = e.localCheckpoint()
+    val beforeKm = pinned
+    val km = graft.operators.Similarity.kmeansIterate(s, eCk, 8, 3)
+    assertGrowth(beforeKm, "kmeansIterate")
+    assert(pinned.contains(rddId(eCk)),
+      "kmeansIterate freed its caller's input")
+    assert(km.count() > 0)
+
+    val directed = Seq(1L -> 2L, 2L -> 1L, 2L -> 3L, 3L -> 2L)
+      .toDF("src", "dst").localCheckpoint()
+    val beforePr = pinned
+    val pr = graft.operators.Graph.pagerank(s, directed, 3)
+    assertGrowth(beforePr, "pagerank")
+    assert(pinned.contains(rddId(directed)),
+      "pagerank freed its caller's input")
+    assert(pr.count() == 3)
+
+    val pairs = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 10L -> 11L)
+      .toDF("a_id", "b_id").localCheckpoint()
+    val ccs = Seq(None, Some(2)).flatMap { every =>
+      val beforeCc = pinned
+      val cc = Dedup.connectedComponents(pairs, every)
+      assertGrowth(beforeCc, s"connectedComponents($every)")
+      val beforeStar = pinned
+      val star = Dedup.connectedComponentsStar(pairs, every)
+      assertGrowth(beforeStar, s"connectedComponentsStar($every)", bound = 2)
+      assert(cc.count() == 7 && star.count() == 7)
+      Seq(cc, star)
+    }
+    assert(pinned.contains(rddId(pairs)), "CC freed its caller's pairs")
+    (Seq(nodes, edges, lab, sv, seed, cb, mw, mmr, mmrBatch, eCk, km,
+      directed, pr, pairs) ++ ccs).foreach(graft.operators.Materialize.free)
   }
 
   test("Materialize.free frees through a Project over the checkpoint") {
