@@ -14,8 +14,8 @@ object Bench {
   /** The one session recipe, shared by the sweep, BenchOne and Verify so
     * standalone timings and correctness dumps run under the exact sweep
     * configuration. `extraConfs` is for harness callers with phase-specific
-    * needs (e.g. StressMain's long-drain periodicGC); the sweep itself
-    * always runs the bare recipe.
+    * needs (e.g. the long-drain periodicGC of ScaleLawMain and
+    * StreamKillMain); the sweep itself always runs the bare recipe.
     *
     * `spark.sql.codegen.cache.maxEntries` sizes Spark's JVM-wide cache of
     * compiled generated classes (default 100). Its key is (context class

@@ -298,7 +298,7 @@ object Dedup {
     * registered queries' final plans can't show the round join; PlanSpec
     * pins it by planning this body directly.
     *
-    * SHUFFLE_HASH on the O(V) labels side (the mode=graph lesson,
+    * SHUFFLE_HASH on the O(V) labels side (the graph scale laws' lesson,
     * measured in the pagerank loop at ×100: sort-merge re-sorts the
     * O(E) side every round — 63 GB of spill); hash-build the
     * per-partition V/P label slice, stream the edge frame sort-free. */
@@ -447,8 +447,8 @@ object Dedup {
     *
     * SHUFFLE_HASH on the O(V) label side, same reasoning as the
     * pagerank loop: sort-merge would re-sort the O(E) adjacency
-    * every round (measured 20.6 GB of sort spill at ×100 in
-    * mode=graph); hash-building the per-partition label slice
+    * every round (measured 20.6 GB of sort spill at ×100 in the graph
+    * scale laws); hash-building the per-partition label slice
     * streams adj sort-free, and the build side is the frame that
     * does not grow with |E|. */
   private[graft] def lpaRound(adj: DataFrame, lab: DataFrame): DataFrame = {

@@ -52,8 +52,8 @@ object Graph {
     * Returns (node STRING, r LONG) with r in micro-rank units.
     *
     * `onRound` is an instrumentation hook — called with (round, wall
-    * seconds) after each round's eager checkpoint lands, so harnesses
-    * (mode=graph) can pin per-round wall FLATNESS: the checkpoint/free
+    * seconds) after each round's eager checkpoint lands, so the graph
+    * scale laws (ScaleLaws) can pin per-round wall FLATNESS: the checkpoint/free
     * discipline means round k never re-evaluates rounds < k, and a
     * growing per-round wall would be the lineage-accretion bug this
     * loop is designed not to have. Noop by default.
@@ -110,7 +110,7 @@ object Graph {
     *
     * SHUFFLE_HASH on the O(V) ranks side: the default sort-merge join
     * re-SORTS the O(E) contrib frame every round — measured at ×100
-    * (118M edges, mode=graph) that sort spilled 63 GB across the 10
+    * (118M edges, the graph scale laws) that sort spilled 63 GB across the 10
     * rounds. Hash-building the per-partition V/P rank slice streams
     * contrib with no sort at all; the build side is the frame that
     * does NOT grow with |E|, and P scales with the corpus, so the
@@ -154,9 +154,9 @@ object Graph {
 
   /** The distinct customer–supplier trading pairs behind q_pagerank's
     * graph (an edge per distinct trading relationship from
-    * lineitem⋈orders), factored out of the registration so the
-    * mode=graph stress tier runs pagerank on a ×copies blow-up of the
-    * EXACT registered graph, not a lookalike. Directed c:→s:;
+    * lineitem⋈orders), factored out of the registration so the graph
+    * scale laws (ScaleLaws) run pagerank and LPA on a ×copies blow-up of
+    * the EXACT registered graph, not a lookalike. Directed c:→s:;
     * symmetrize before [[pagerank]]. */
   private[graft] def tradingPairs(s: SparkSession, d: String): DataFrame =
     t(s, d, "lineitem").select("l_orderkey", "l_suppkey")
@@ -165,20 +165,6 @@ object Graph {
       .select(
         concat(lit("c:"), col("o_custkey").cast("string")).as("src"),
         concat(lit("s:"), col("l_suppkey").cast("string")).as("dst"))
-      .distinct()
-
-  /** Numeric twin of [[tradingPairs]] for graph ops whose semantics
-    * order node ids (LPA's smallest-label tie-break needs `<` on
-    * labels, and string order over "c:10" vs "c:9" inverts numeric
-    * order): customer c ↦ 2c, supplier s ↦ 2s+1 — injective and
-    * disjoint. */
-  private[graft] def tradingPairsNumeric(s: SparkSession,
-      d: String): DataFrame =
-    t(s, d, "lineitem").select("l_orderkey", "l_suppkey")
-      .join(t(s, d, "orders").select("o_orderkey", "o_custkey"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("a_id"),
-        (col("l_suppkey") * 2 + 1).as("b_id"))
       .distinct()
 
   val queries: Seq[Q] = Seq(

@@ -357,7 +357,7 @@ object Similarity {
     *    the blocks deserialize to tuple arrays with JVM object overhead
     *    while their serialized copies are still in the fetch buffers —
     *    a constant of the JVM, still corpus-row-independent; the
-    *    embeddim stress pins 4·MaxBlockBytes). Clamps are load-bearing: Catalyst's unknown-stats default
+    *    embeddim scale laws pin 4·MaxBlockBytes). Clamps are load-bearing: Catalyst's unknown-stats default
     *    is Long.MaxValue — a truncating .toInt there yields 0, i.e. TWO
     *    blocks of half the corpus each, an OOM at exactly the scale the
     *    dispatch exists to survive — and past 2^16 blocks the pair-grid
@@ -720,9 +720,9 @@ object Similarity {
     * k=800), scan-bound at any corpus size — and one 10× step measured
     * 13.4× wall vs the old form's 33×.
     *
-    * Also the stress harness's frozen-centroid recall law: k-means trains
-    * ONCE on a base corpus and the assignment runs on a scaled blow-up of
-    * it against the fixed centroid frame. */
+    * Also ScaleLaws' frozen-centroid ANN law: k-means trains ONCE on a
+    * base corpus and the assignment runs on a scaled blow-up of it
+    * against the fixed centroid frame. */
   private[graft] def assignByArray(s: SparkSession, e: DataFrame,
       cents: DataFrame): DataFrame =
     e.crossJoin(broadcast(cents
@@ -1112,21 +1112,20 @@ object Similarity {
     * per-task memory is O(largest bucket), NOT O(n). The scale contract
     * is therefore `buckets` ∝ corpus size: grown proportionally, bucket
     * occupancy — and with it per-task memory and per-bucket pair work —
-    * stays CONSTANT as the corpus grows (StressMain demonstrates this:
-    * 10× the vectors with 10× the buckets holds peak task memory at the
-    * fixed-bucket sf0.1 level). Recall is approximate by definition (a
-    * true neighbor in another bucket is missed); the computation itself
-    * is deterministic, so the fixed-bucket q_knn_join row has an exact
-    * SQL oracle. Zero-norm vectors (no defined cosine) are dropped;
-    * vectors alone in their bucket emit no rows. */
-  def knnJoin(s: SparkSession, e: DataFrame, k: Int, buckets: Int,
-      rounds: Int = 2): DataFrame =
-    rankWithinBuckets(s, kmeansIterate(s, dropZeroNorm(s, e), buckets,
-      rounds), k)
+    * stays CONSTANT as the corpus grows (ScaleLawMain's full group checks
+    * this: 10× the vectors with 10× the buckets holds peak task memory at
+    * the fixed-bucket level). k-means runs 2 Lloyd rounds. Recall is
+    * approximate by definition (a true neighbor in another bucket is
+    * missed); the computation itself is deterministic, so the
+    * fixed-bucket q_knn_join row has an exact SQL oracle. Zero-norm
+    * vectors (no defined cosine) are dropped; vectors alone in their
+    * bucket emit no rows. */
+  def knnJoin(s: SparkSession, e: DataFrame, k: Int,
+      buckets: Int): DataFrame =
+    rankWithinBuckets(s, kmeansIterate(s, dropZeroNorm(s, e), buckets, 2), k)
 
   /** knnJoin's ranking half over an existing (vec_id, embedding, bucket)
-    * assignment — exposed so the stress harness can time/attribute the
-    * clustering and ranking stages separately. */
+    * assignment. */
   def rankWithinBuckets(s: SparkSession, assigned: DataFrame,
       k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window

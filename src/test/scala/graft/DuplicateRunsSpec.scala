@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards `src/main/scala` against copied code: fails on any run of at
+/** Guards `src/main/scala` and the scale-law harness (the `ScaleLaw*`
+  * files and StreamKillMain) against copied code: fails on any run of at
   * least [[DuplicateRuns.MinLines]] consecutive lines, totalling at least
   * [[DuplicateRuns.MinChars]] characters, that appears twice. Lines are
   * compared after whitespace collapse; blank, comment, `import` and
@@ -14,13 +15,23 @@ import org.scalatest.funsuite.AnyFunSuite
   * def` or `val` of the owning module, parameterized by what differs. */
 class DuplicateRunsSpec extends AnyFunSuite {
 
-  test("no copied run of 8+ lines in src/main/scala") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repo root: $root")
-    val runs = DuplicateRuns.scan(root)
+  private def noRuns(runs: Seq[DuplicateRuns.Run]): Unit =
     if (runs.nonEmpty)
       fail(s"${runs.size} copied runs (fold each into one definition):\n" +
         runs.mkString("\n"))
+
+  test("no copied run of 8+ lines in src/main/scala") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: $root")
+    noRuns(DuplicateRuns.scan(root))
+  }
+
+  test("no copied run of 8+ lines in the scale-law harness") {
+    val root = Paths.get("src/test/scala")
+    assert(Files.exists(root.resolve("graft/ScaleLaws.scala")),
+      s"run from the repo root: $root")
+    noRuns(DuplicateRuns.scan(root, p => Seq("ScaleLaw", "StreamKillMain")
+      .exists(p.getFileName.toString.startsWith)))
   }
 
   test("the scan finds a planted copy and ignores comments and imports") {
@@ -58,10 +69,12 @@ object DuplicateRuns {
     l.isEmpty || l.startsWith("//") || l.startsWith("/*") ||
       l.startsWith("*") || l.startsWith("import ") || l.startsWith("package ")
 
-  /** Every maximal copied run under `root`, one per pair of copies. */
-  def scan(root: Path): Seq[Run] = {
+  /** Every maximal copied run among the `.scala` files under `root` that
+    * `include` keeps, one per pair of copies. */
+  def scan(root: Path, include: Path => Boolean = _ => true): Seq[Run] = {
     val files = Files.walk(root).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+      .filter(f => f.toString.endsWith(".scala") && include(f))
+      .toSeq.sortBy(_.toString)
     // per file: (whitespace-collapsed text, 1-based line number)
     val code: IndexedSeq[(String, IndexedSeq[(String, Int)])] =
       files.map { f =>

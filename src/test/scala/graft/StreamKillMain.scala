@@ -10,8 +10,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery,
   * this is the HARD-crash variant the graceful tests cannot express).
   *
   * Phase `kill`: stage the sf0.001 events as 8 event-time-range-chunked
-  * feed files plus a far-future per-user sentinel file (the mode=stream
-  * stress recipe at unit scale), start sessionize on the RocksDB state
+  * feed files plus a far-future per-user sentinel file
+  * ([[ScaleLaws.stageEventFeed]]), start sessionize on the RocksDB state
   * store with `maxFilesPerTrigger=1` into a parquet sink + checkpoint,
   * and HALT the JVM (`Runtime.halt` — no graceful stop, no shutdown
   * hooks, no sink/state finalization) from the progress listener after
@@ -35,102 +35,29 @@ import org.apache.spark.sql.streaming.{StreamingQuery,
   */
 object StreamKillMain {
 
+  /** The bench session recipe on the RocksDB state store. A long drain
+    * in one JVM leaves each micro-batch's shuffle files until the
+    * ContextCleaner sees their dependency collected, and a big heap can go
+    * a whole drain without a full GC (measured at ×10000: 42 GB of dead
+    * shuffle filled the disk mid-drain); a 60 s periodic GC bounds that
+    * at about one batch's worth. */
   private def session(threads: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$threads]")
-      .appName("stream-kill")
-      .config("spark.sql.shuffle.partitions", threads.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(streaming.Streams.RocksDbProvider._1,
-        streaming.Streams.RocksDbProvider._2)
-      // A 1B-event drain runs ~17 micro-batches in ONE JVM, each leaving
-      // ~4-5 GB of shuffle files that ContextCleaner only reaps when the
-      // referencing ShuffleDependency is GC'd — and a 12 GB heap under a
-      // streaming workload can go the whole drain without a full GC
-      // (measured at ×10000: 42 GB of dead shuffle accumulated and filled
-      // the disk mid-drain). Forcing the cleaner's periodic GC to 60 s
-      // bounds dead-shuffle residency at ~one batch's worth. This is the
-      // same knob a real long-running streaming executor fleet sets.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .getOrCreate()
+    val s = Bench.benchSession(threads.toString, Map(
+      streaming.Streams.RocksDbProvider,
+      "spark.cleaner.periodicGC.interval" -> "60s"))
     s.sparkContext.setLogLevel("ERROR")
     s
   }
 
-  /** Blow the source events up ×copies (disjoint user/event id ranges per
-    * copy — the streamStress recipe) into `<work>/x<copies>/events.parquet`
-    * so the kill/resume pair runs against a corpus far past the unit
-    * test's, with nothing ever collected on the driver. The RANGE is the
-    * distributed side and the events table broadcasts (the r14 events-tier
-    * lesson): sf0.1 events is one ~2 MB file = one scan partition, so a
-    * copies-way unionByName (the r13 form) funnels every output row
-    * through one task — hours at ×10000; range ⨯ broadcast(events) lets
-    * every task build its own copies, wall ∝ rows/parallelism. */
-  private def buildCorpus(spark: SparkSession, src: String, copies: Int,
-      work: String): Unit = {
-    val ev0 = Tables(spark, src, "events")
-    val uOff = ev0.agg(max("user_id")).head.getLong(0) + 1
-    val eOff = ev0.agg(max("event_id")).head.getLong(0) + 1
-    spark.range(0, copies, 1, math.max(16, math.min(copies / 4, 2048)))
-      .select(col("id").as("cpy"))
-      .crossJoin(broadcast(ev0))
-      .withColumn("user_id", col("user_id") + col("cpy") * lit(uOff))
-      .withColumn("event_id", col("event_id") + col("cpy") * lit(eOff))
-      .drop("cpy")
-      .write.mode("overwrite").parquet(s"$work/x$copies/events.parquet")
-  }
-
-  private def stageFeed(spark: SparkSession, src: String,
+  /** Stage the events of `dir` as `nChunks` event-time chunks plus the
+    * per-user sentinel, all admitted to `<work>/feed` at once. */
+  private def stageFeed(spark: SparkSession, dir: String,
       work: String, nChunks: Int): Unit = {
-    import graft.streaming.Streams
-    val evs = Tables(spark, src, "events")
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"))
-    val mm = evs.agg(min("ts_us"), max("ts_us")).head
-    val minUs = mm.getLong(0)
-    val maxUs = mm.getLong(1)
-    val span = (maxUs - minUs) / nChunks + 1
     val stage = s"$work/feed_stage"
-    // integer DIV (not Column./'s double division) — boundary events must
-    // land in exactly one chunk at any ts span (r14 ADVICE, same rule as
-    // Dedup.stageCorpusFeed)
-    evs.withColumn("chunk",
-        expr(s"CAST((ts_us - ${minUs}L) DIV ${span}L AS INT)"))
-      .repartition(nChunks, col("chunk"))
-      .write.mode("overwrite").partitionBy("chunk").parquet(stage)
-    val feed = new java.io.File(s"$work/feed")
-    org.apache.commons.io.FileUtils.deleteQuietly(feed)
-    feed.mkdirs()
-    val t0ms = System.currentTimeMillis() - 3600000L
-    for (k <- 0 until nChunks) {
-      val dir = new java.io.File(s"$stage/chunk=$k")
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .zipWithIndex.foreach { case (f, i) =>
-          val to = new java.io.File(feed, f"b$k%03d-$i.parquet")
-          java.nio.file.Files.move(f.toPath, to.toPath)
-          require(to.setLastModified(t0ms + k * 1000L),
-            s"setLastModified failed staging $to")
-        }
-    }
-    evs.select(col("user_id")).distinct()
-      .select(col("user_id"), lit(maxUs + 10 * Streams.GapUs).as("ts_us"),
-        lit(Long.MaxValue).as("event_id"))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$work/sentinel_stage")
-    Option(new java.io.File(s"$work/sentinel_stage").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet"))
-      .zipWithIndex.foreach { case (f, i) =>
-        val to = new java.io.File(feed, s"zz-sentinel-$i.parquet")
-        java.nio.file.Files.move(f.toPath, to.toPath)
-        require(to.setLastModified(t0ms + nChunks * 1000L),
-          s"setLastModified failed staging $to")
-      }
+    ScaleLaws.stageEventFeed(spark, dir, stage, nChunks)
+    org.apache.commons.io.FileUtils
+      .deleteQuietly(new java.io.File(s"$work/feed"))
+    ScaleLaws.admit(stage, s"$work/feed", 0 until nChunks, sentinel = true)
   }
 
   private def startQuery(spark: SparkSession, work: String) = {
@@ -150,7 +77,8 @@ object StreamKillMain {
     val src = args(0)
     val work = args(1)
     val phase = args(2)
-    // optional ×copies blow-up (StressMain mode=streamkill passes 100):
+    // optional ×copies blow-up (ScaleLawMain's streamkill group passes
+    // its copies):
     // same kill/resume machinery, corpus and chunk count scaled so the
     // halt lands mid-drain of a 10M-event (×100) / 1B-event (×10000)
     // feed instead of a 1k one. Threads scale with the tier — ×10000's
@@ -186,7 +114,8 @@ object StreamKillMain {
     }
 
     if (phase == "kill") {
-      if (copies > 1) buildCorpus(spark, src, copies, work)
+      if (copies > 1)
+        ScaleLaws.blowUpTable(spark, src, "events", copies, s"$work/x$copies")
       stageFeed(spark, srcDir, work, nChunks)
       // ×10000 disk budget: the blown-up corpus (17 GB at 1B events) has
       // served its purpose once the feed is staged — the resume compare
@@ -367,19 +296,19 @@ object StreamKillMain {
     val got: DataFrame = spark.read.parquet(s"$work/sessions")
       .select(col("user_id"), col("n_events"), col("start_us"),
         col("end_us"))
-    // The comparison frame. At ≤×1000 it is the batch q_sessionize run
-    // on the SAME blown-up corpus — the strongest form. At ×10000 that
-    // twin's own window sort needs ~50 GB of shuffle+spill on top of
+    // The comparison frame. At ≤×1000 it is the batch q_sessionize run on
+    // the SAME blown-up corpus — the strongest form. At ×10000 that twin's
+    // own window sort needs ~50 GB of shuffle+spill on top of
     // feed+state+sink (the first 1B attempt filled the disk during the
-    // compare, not the drain), so the tier pivots on the structure of
-    // the corpus instead: buildCorpus shifts ONLY user_id/event_id per
-    // copy and session rows carry no event_id, so the batch answer at
-    // ×copies IS the base answer with user_id shifted per copy — a law
-    // the r14 events ×10000 batch record verified AGAINST the real 1B
-    // batch run ("exact per copy"). Holding the resumed sink to this
-    // blow-up frame is therefore holding it to the batch twin, at the
-    // cost of a ~95k-row base run instead of a 1B-row one (the recorded
-    // ×10000 tier: 95,465 base sessions → 954,650,000 per side).
+    // compare, not the drain), so the tier pivots on the structure of the
+    // corpus instead: ScaleLaws.blowUpTable shifts ONLY user_id and event_id
+    // per copy and session rows carry no event_id, so the batch answer at
+    // ×copies IS the base answer with user_id shifted per copy — a law the
+    // r14 events ×10000 batch record verified AGAINST the real 1B batch run
+    // ("exact per copy"). Holding the resumed sink to this blow-up frame is
+    // therefore holding it to the batch twin, at the cost of a ~95k-row base
+    // run instead of a 1B-row one (the recorded ×10000 tier: 95,465 base
+    // sessions → 954,650,000 per side).
     val want = (if (copies >= 10000) {
       val uOff = Tables(spark, src, "events")
         .agg(max("user_id")).head.getLong(0) + 1
