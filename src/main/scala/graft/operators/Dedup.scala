@@ -81,6 +81,19 @@ object Dedup {
     Arith.sqlMicro6(s"""len(list_intersect($a, $b))::DOUBLE /
               len(list_distinct(list_concat($a, $b)))""")
 
+  /** The exact-Jaccard threshold at and above which two documents are
+    * near-duplicates, on both engines. */
+  private val NearDupJaccard = 0.5
+
+  /** DuckDB twin of [[verifiedPairs]]: every pair of the shingle CTE
+    * `sh` as (a_id < b_id, jac), brute-forced, with exact Jaccard at or
+    * above [[NearDupJaccard]]. */
+  private def sqlNearDupPairs(sh: String): String =
+    s"""SELECT a.doc_id AS a_id, b.doc_id AS b_id,
+                ${sqlJaccard("a.sh", "b.sh")} AS jac
+              FROM $sh a JOIN $sh b ON a.doc_id < b.doc_id
+              WHERE ${sqlJaccard("a.sh", "b.sh")} >= $NearDupJaccard"""
+
   // MinHash: NumHashes hash functions via Kirsch-Mitzenmacher double
   // hashing (h_i = h1 + i·h2 over the two 64-bit lanes of MurmurHash3
   // x64-128). Only candidate RECALL depends on these hashes
@@ -210,6 +223,20 @@ object Dedup {
     .filter(col("a_id") < col("b_id"))
     .select("a_id", "b_id")
     .dropDuplicates("a_id", "b_id")
+
+  /** The MinHash verify chain: the [[lshCandidates]] of `bands`, each
+    * pair joined back to both of its shingle sets in `sh`, kept as
+    * (a_id, b_id, jac) when exact Jaccard is at or above
+    * [[NearDupJaccard]]. Only candidates pay the Jaccard, and the oracle
+    * brute-forces all pairs ([[sqlNearDupPairs]]): they agree because
+    * band recall at the threshold is ≈ 1 (see the object scaladoc). */
+  private def verifiedPairs(sh: DataFrame, bands: DataFrame): DataFrame =
+    lshCandidates(bands)
+      .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
+      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
+      .withColumn("jac", jaccard(col("a_sh"), col("b_sh")))
+      .filter(col("jac") >= NearDupJaccard)
+      .select("a_id", "b_id", "jac")
 
   /** SimHash over exploded (token, hex-position) votes — fully codegen'd,
     * partial aggregation map-side, two tiny shuffles (docs × 32 rows, then
@@ -463,24 +490,50 @@ object Dedup {
       .select(col("v"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
   }
 
-  /** Verified near-dup pairs (a_id, b_id): LSH candidates filtered by exact
-    * Jaccard ≥ 0.5 — the shared front half of both clustering rows. */
-  private[graft] def nearDupPairs(s: SparkSession,
-      d: String): DataFrame = {
+  /** (a_id, b_id, jac): the verified near-dup pairs of the documents. */
+  private def minhashPairs(s: SparkSession, d: String): DataFrame = {
     val sh = shingled(docs(s, d)).localCheckpoint()
-    lshCandidates(minhashBands(s, sh))
-      .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
-      .join(sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
-      .withColumn("jac", jaccard(col("a_sh"), col("b_sh")))
-      .filter(col("jac") >= 0.5)
-      .select("a_id", "b_id")
+    verifiedPairs(sh, minhashBands(s, sh))
+  }
+
+  /** Verified near-dup pairs (a_id, b_id) — the shared front half of both
+    * clustering rows. */
+  private[graft] def nearDupPairs(s: SparkSession, d: String): DataFrame =
+    minhashPairs(s, d).select("a_id", "b_id")
+
+  /** Exact-first representatives: the shingle sets `bSh` and band keys
+    * `bBands` of ONE document per distinct text of `batch` (the min
+    * doc_id per hash of `bHash(doc_id, h)`), both localCheckpointed — the
+    * bands feed the corpus band-join and the batch self-join, so
+    * without the checkpoint the minhash kernel runs twice.
+    *
+    * Banding every exact copy makes the intra-batch LSH buckets quadratic
+    * in the per-batch duplication factor, while the verdicts are
+    * INVARIANT to the restriction: a non-representative's reason is
+    * exact_corpus / exact_batch before any near flag is consulted, and
+    * every band collision a dropped copy would have produced survives
+    * through its representative's identical band keys — the rep is the
+    * MIN doc_id per hash, so any a<b candidate pair a copy produced has a
+    * rep-pair with rep_a ≤ a < b still present. DedupSpec pins the
+    * with/without-restriction verdict equality on a planted
+    * high-duplication frame. The rep set is a groupBy-argmin, not a
+    * window over h: a Zipf-giant exact-duplicate cluster would land on
+    * ONE window task, while the partial min shuffles one row per
+    * distinct hash per map partition. */
+  private def representatives(s: SparkSession, batch: DataFrame,
+      bHash: DataFrame): (DataFrame, DataFrame) = {
+    val repIds = bHash.groupBy("h")
+      .agg(min(col("doc_id")).as("doc_id"))
+      .select("doc_id")
+    val bSh = shingled(batch.join(repIds, "doc_id")).localCheckpoint()
+    (bSh, minhashBands(s, bSh).localCheckpoint())
   }
 
   /** Incremental (batch-vs-corpus) dedup core — factored out of the
     * q_dedup_incremental registration so DedupSpec can drive it with
     * planted frames. Drop priority: exact_corpus > exact_batch >
     * near_corpus > near_batch. `near_batch` drops a batch doc that
-    * near-dups (minhash-band candidates, exact-Jaccard ≥ 0.5 verify) an
+    * near-dups (minhash-band candidates, exact-Jaccard verify) an
     * EARLIER batch doc — the min-id representative convention
     * q_dedup_exact's keep-first and the CC min-label rule already use —
     * regardless of whether that earlier doc itself survives:
@@ -488,44 +541,18 @@ object Dedup {
     * candidate generation shuffles only 32-byte digests and band keys
     * (batch bands ⋈ corpus bands + batch-band self-join), never text;
     * the exact-Jaccard verifies join candidate ids back to the shingle
-    * tables — the same verify cost q_dedup_minhash pays. */
+    * tables — the same verify cost q_dedup_minhash pays. Only the
+    * batch's [[representatives]] are shingled and banded. */
   def incrementalDedup(s: SparkSession, batch: DataFrame,
       corpus: DataFrame): DataFrame = {
-    // EXACT-FIRST discipline (the ×10000 corpus-stream lesson, r17 —
-    // see corpusStreamBatch below): shingle/minhash and BOTH near-dup
-    // candidate passes run on one REPRESENTATIVE per distinct batch
-    // text. Banding every exact copy makes the intra-batch LSH buckets
-    // quadratic in the per-batch duplication factor (measured in the
-    // streaming twin as a >69 GB spill that filled the box at ~156
-    // copies/text), while the verdicts are INVARIANT to the
-    // restriction: a non-representative's reason is exact_corpus /
-    // exact_batch before any near flag is consulted, and every
-    // (repX, repY) band collision a dropped copy would have produced
-    // survives through the representatives' identical band keys —
-    // the rep is the MIN doc_id per hash, so any a<b candidate pair a
-    // copy produced has a rep-pair with rep_a ≤ a < b still present.
-    // Pinned by DedupSpec's with/without-restriction verdict equality
-    // on a planted high-duplication frame.
     val bHash = batch
       .select(col("doc_id"), sha2(col("text"), 256).as("h"))
       // checkpointed: consumed by the rep claim pass AND the verdict
       // assembly in incrementalDedupPre
       .localCheckpoint()
-    // groupBy-argmin, not a window over h: a Zipf-giant exact-duplicate
-    // cluster would land on ONE window task; the partial min shuffles
-    // one row per distinct hash per map partition instead
-    val repIds = bHash.groupBy("h")
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    val bSh = shingled(batch.join(repIds, "doc_id")).localCheckpoint()
+    val (bSh, bBands) = representatives(s, batch, bHash)
     val cSh = shingled(corpus).localCheckpoint()
-    incrementalDedupPre(s,
-      bHash,
-      bSh,
-      // checkpointed: consumed by BOTH the corpus band-join and the
-      // batch-internal self-join below — without it the minhash kernel
-      // runs twice over the batch
-      minhashBands(s, bSh).localCheckpoint(),
+    incrementalDedupPre(s, bHash, bSh, bBands,
       corpus.select(sha2(col("text"), 256).as("h")).distinct(),
       cSh, minhashBands(s, cSh))
       .orderBy("doc_id")
@@ -557,7 +584,9 @@ object Dedup {
     * band computed when a doc was the BATCH side collides with later
     * batches exactly as a globally-computed band would. Frames:
     * bHash(doc_id, h), bSh/cSh(doc_id, sh), bBands/cBands(doc_id, band),
-    * cHash(h). */
+    * cHash(h). The verdicts come unsorted: the streaming arm only filters
+    * and joins them, so a sort here would cost each micro-batch a range
+    * exchange; [[incrementalDedup]] sorts its own output. */
   private[graft] def incrementalDedupPre(s: SparkSession, bHash: DataFrame,
       bSh: DataFrame, bBands: DataFrame, cHash0: DataFrame,
       cSh: DataFrame, cBands: DataFrame): DataFrame = {
@@ -571,15 +600,10 @@ object Dedup {
         "b_id")
       .join(cSh.select(col("doc_id").as("c_id"), col("sh").as("c_sh")),
         "c_id")
-      .filter(jaccard(col("b_sh"), col("c_sh")) >= 0.5)
+      .filter(jaccard(col("b_sh"), col("c_sh")) >= NearDupJaccard)
       .select(col("b_id").as("doc_id")).distinct()
       .withColumn("near_corpus", lit(1L))
-    val nearBatch = lshCandidates(bBands)
-      .join(bSh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")),
-        "a_id")
-      .join(bSh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")),
-        "b_id")
-      .filter(jaccard(col("a_sh"), col("b_sh")) >= 0.5)
+    val nearBatch = verifiedPairs(bSh, bBands)
       .select(col("b_id").as("doc_id")).distinct()
       .withColumn("near_batch", lit(1L))
     // first_id via groupBy-argmin + a NULL-SAFE join, not a window over
@@ -608,10 +632,6 @@ object Dedup {
       .withColumn("keep", col("reason") === "kept")
       .select(col("doc_id"), col("keep"), col("reason"))
   }
-  // ^ no determinism sort HERE: the streaming arm consumes the verdict
-  // frame with filters/joins only, and its per-batch orderBy was a range
-  // exchange + sort paid once per micro-batch for nothing (r19). The
-  // batch row adds its own output sort below.
 
   /** The recursive transitive-closure CTE chain ending in
     * `labels(doc_id, cluster_id)` — shared by the clustering rows and
@@ -619,10 +639,7 @@ object Dedup {
     * `WITH RECURSIVE`). */
   private lazy val sqlClusterLabelCtes: String =
     s"""sh AS (${sqlShingled("documents")}),
-       pairs AS (
-         SELECT a.doc_id AS a_id, b.doc_id AS b_id
-         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         WHERE ${sqlJaccard("a.sh", "b.sh")} >= 0.5),
+       pairs AS (${sqlNearDupPairs("sh")}),
        edges AS (
          SELECT a_id AS src, b_id AS dst FROM pairs
          UNION SELECT b_id, a_id FROM pairs),
@@ -681,7 +698,7 @@ object Dedup {
     * by the batch chain and the streaming arm so the two can't drift. */
   private def corpusD0(in: DataFrame): DataFrame = in
     .select(col("doc_id"), col("source"), col("n_chars"), col("text"))
-    .withColumn("toks", split(lower(col("text")), " "))
+    .withColumn("toks", TextOps.tokens)
     .withColumn("n_tokens", size(col("toks")).cast("long"))
 
   /** Pipeline stage 2: the quality gate over a stage-1 frame (expects
@@ -733,12 +750,7 @@ object Dedup {
       .filter(col("doc_id") === col("first_id"))
       .drop("first_id").localCheckpoint()
     val sh3 = shingled(s3).localCheckpoint()
-    val nearDrop = lshCandidates(minhashBands(s, sh3))
-      .join(sh3.select(col("doc_id").as("a_id"), col("sh").as("a_sh")),
-        "a_id")
-      .join(sh3.select(col("doc_id").as("b_id"), col("sh").as("b_sh")),
-        "b_id")
-      .filter(jaccard(col("a_sh"), col("b_sh")) >= 0.5)
+    val nearDrop = verifiedPairs(sh3, minhashBands(s, sh3))
       .select(col("b_id").as("doc_id")).distinct()
     val s4 = s3.join(nearDrop, Seq("doc_id"), "left_anti")
       .localCheckpoint()
@@ -846,22 +858,9 @@ object Dedup {
 
     // ---- MinHash + LSH near-dup ------------------------------------------
     Q("q_dedup_minhash",
-      (s, d) => {
-        val sh = shingled(docs(s, d)).localCheckpoint()
-        val cand = lshCandidates(minhashBands(s, sh))
-        cand
-          .join(sh.select(col("doc_id").as("a_id"), col("sh").as("a_sh")), "a_id")
-          .join(sh.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")
-          .withColumn("jac", jaccard(col("a_sh"), col("b_sh")))
-          .filter(col("jac") >= 0.5)
-          .select(col("a_id"), col("b_id"), col("jac"))
-          .orderBy("a_id", "b_id")
-      },
+      (s, d) => minhashPairs(s, d).orderBy("a_id", "b_id"),
       Some(s"""WITH sh AS (${sqlShingled("documents")})
-              SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-                ${sqlJaccard("a.sh", "b.sh")} AS jac
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              WHERE ${sqlJaccard("a.sh", "b.sh")} >= 0.5
+              ${sqlNearDupPairs("sh")}
               ORDER BY a_id, b_id""")),
 
     // ---- near-dup clustering (pairs → keep/drop decisions) ---------------
@@ -1213,11 +1212,10 @@ object Dedup {
               near AS (
                 SELECT DISTINCT bsh.doc_id
                 FROM bsh JOIN csh
-                ON ${sqlJaccard("bsh.sh", "csh.sh")} >= 0.5),
+                ON ${sqlJaccard("bsh.sh", "csh.sh")} >= $NearDupJaccard),
               nearb AS (
-                SELECT DISTINCT b2.doc_id
-                FROM bsh b1 JOIN bsh b2 ON b1.doc_id < b2.doc_id
-                WHERE ${sqlJaccard("b1.sh", "b2.sh")} >= 0.5)
+                SELECT DISTINCT b_id AS doc_id
+                FROM (${sqlNearDupPairs("bsh")}))
               SELECT bh.doc_id,
                 (CASE WHEN ch.h IS NOT NULL THEN 'exact_corpus'
                       WHEN bh.doc_id > bh.first_id THEN 'exact_batch'
@@ -1398,9 +1396,7 @@ object Dedup {
               p AS MATERIALIZED (
                 -- MATERIALIZED: referenced 4× below; inlined, the pair
                 -- Jaccard would brute-force 4 times over
-                SELECT a.doc_id AS a_id, b.doc_id AS b_id
-                FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-                WHERE ${sqlJaccard("a.sh", "b.sh")} >= 0.5)
+                ${sqlNearDupPairs("sh")})
               SELECT (SELECT COUNT(*) FROM p) AS n_edges,
                 (SELECT COUNT(*)
                  FROM p e1 JOIN p e2 ON e1.b_id = e2.a_id
@@ -1454,9 +1450,7 @@ object Dedup {
               -- MATERIALIZED: DuckDB inlines CTEs by default, and adj
               -- references p twice while every round references adj —
               -- inlined, the brute-force pair Jaccard would re-run ~6×
-              SELECT a.doc_id AS a_id, b.doc_id AS b_id
-              FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-              WHERE ${sqlJaccard("a.sh", "b.sh")} >= 0.5),
+              ${sqlNearDupPairs("sh")}),
             adj AS MATERIALIZED (
                     SELECT a_id AS v, b_id AS u FROM p
                     UNION ALL SELECT b_id, a_id FROM p
@@ -1499,7 +1493,7 @@ object Dedup {
   private[graft] lazy val CorpusPipelineOracleSql: String =
     s"""WITH d0 AS (
                 SELECT doc_id, source, n_chars, text,
-                  CAST(len(string_split(lower(text), ' ')) AS BIGINT)
+                  CAST(len(${TextOps.sqlTokens}) AS BIGINT)
                     AS n_tokens
                 FROM documents),
               s1 AS (SELECT * FROM d0 WHERE n_tokens >= 12),
@@ -1510,8 +1504,8 @@ object Dedup {
                       "(n_chars - n_tokens + 1)::DOUBLE / n_tokens")}
                       AS mwl,
                     ${Arith.sqlMicro6(
-                      """len([t FOR t IN string_split(lower(text), ' ')
-                        IF regexp_matches(t, '^(a|the|of|and|to|in)$')])
+                      s"""len([t FOR t IN ${TextOps.sqlTokens}
+                        IF regexp_matches(t, '^(a|the|of|and|to|in)$$')])
                       ::DOUBLE / n_tokens""")} AS sr
                   FROM s1)
                 WHERE ${Arith.sqlMicro6(
@@ -1524,10 +1518,8 @@ object Dedup {
                   OVER (PARTITION BY sha256(text))),
               sh AS (${sqlShingled("s3")}),
               drops AS (
-                SELECT DISTINCT b.doc_id
-                FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-                WHERE ${sqlJaccard("a.sh", "b.sh")}
-                  >= 0.5),
+                SELECT DISTINCT b_id AS doc_id
+                FROM (${sqlNearDupPairs("sh")})),
               s4 AS (SELECT * FROM s3
                      WHERE doc_id NOT IN (SELECT doc_id FROM drops)),
               s5 AS (
@@ -1591,36 +1583,13 @@ object Dedup {
     val s1b = d0b.filter(col("n_tokens") >= 12)
     val s2b = corpusQuality(s1b).localCheckpoint()
     // no localCheckpoint: sha2 over the (checkpointed) batch is cheaper
-    // to recompute at its three consumers (the repIds claim pass, the
+    // to recompute at its three consumers (the representatives' claim, the
     // verdict assembly, the hash-state put) than one more eager job —
     // this row's cost is JOB COUNT on tiny per-batch frames, not CPU
     val bHash = s2b.select(col("doc_id"), sha2(col("text"), 256).as("h"))
-    // EXACT-FIRST discipline, the ×10000 corpus-stream lesson: shingle/
-    // minhash work and near-dup candidate generation run on one
-    // REPRESENTATIVE per distinct batch text (the min-doc_id copy — the
-    // same first_id the exact_batch verdict keys on). Exact copies carry
-    // identical shingle sets and band keys, so banding them all makes the
-    // intra-batch LSH buckets quadratic in the per-batch duplication
-    // factor (at ×10000, ~156 copies/text/batch → C(156,2)·texts·bands
-    // candidate pairs, each dragging two shingle arrays — measured as a
-    // >69 GB spill that filled the box inside batch 0), while the
-    // verdicts are INVARIANT to the restriction: a non-representative's
-    // reason is exact_batch/exact_corpus before any near flag is
-    // consulted, and every (repX, repY) band collision a dropped copy
-    // would have produced survives through the representatives'
-    // identical band keys. The batch pipeline already has this shape
-    // (stage-3 exact dedup precedes stage-4 LSH); this keeps the
-    // streaming twin's per-batch near-dup cost O(distinct), not
-    // O(batch²/texts).
-    // groupBy, not a window over h: the rep set is an argmin per hash, so
-    // a map-side partial min shuffles one row per distinct text instead
-    // of sorting the whole batch's (doc_id, h) pairs
-    val repIds = bHash.groupBy("h")
-      .agg(min(col("doc_id")).as("doc_id"))
-      .select("doc_id")
-    val s2bR = s2b.join(repIds, "doc_id")
-    val bSh = shingled(s2bR).localCheckpoint()
-    val bBands = minhashBands(s, bSh).localCheckpoint()
+    // per-batch near-dup cost stays O(distinct texts), as in the batch
+    // pipeline, where stage-3 exact dedup precedes stage-4 LSH
+    val (bSh, bBands) = representatives(s, s2b, bHash)
     val verdicts = incrementalDedupPre(s, bHash, bSh, bBands,
       st.prior("hash", bid, bHash.select("h")), st.prior("sh", bid, bSh),
       st.prior("band", bid, bBands)).localCheckpoint()

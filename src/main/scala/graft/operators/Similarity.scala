@@ -845,6 +845,7 @@ object Similarity {
     val cents = st.read("cents")
     // checkpointed: consumed by BOTH partial puts below
     val assigned = assignByArray(s, e, cents).localCheckpoint()
+    val (stats, dims) = annPartials(s, assigned, cents)
     // partials carry their batch id as a COLUMN (not just the dir name):
     // compaction merges dirs, and the drift-trajectory report
     // ([[annIndexDriftResult]]) needs per-batch resolution to survive it.
@@ -852,6 +853,17 @@ object Similarity {
     // overlapped, the batch pays ~max(write) instead of Σ(write) (the
     // corpus stream's §2.6 recipe; any failure fails the batch before
     // the offset commits, so a replay rewrites both).
+    Materialize.overlap(Seq(
+      () => st.put("stats", bid, stats.withColumn("bid", lit(bid))),
+      () => st.put("dims", bid, dims.withColumn("bid", lit(bid)))))
+  }
+
+  /** The index-health partials `(stats, dims)` of `assigned` against its
+    * frozen `cents`, as laid out in the section comment above — one body
+    * for the stream's batches and [[annIndexBatchReport]], so the two
+    * cannot drift. */
+  private def annPartials(s: SparkSession, assigned: DataFrame,
+      cents: DataFrame): (DataFrame, DataFrame) = {
     val stats = assigned
       .join(broadcast(cents), col("bucket") === col("c_id"))
       .withColumn("cos", cosine(s, col("embedding"), col("c_v")))
@@ -861,16 +873,12 @@ object Similarity {
         // integer micros and sum as long — associative across batches
         sum(floor(col("cos") * 1e6 + 0.5).cast("long")).as("cos_micro"),
         min(col("cos")).as("min_cos"))
-      .withColumn("bid", lit(bid))
     val dims = assigned
       .select(col("bucket"), posexplode(col("embedding")).as(Seq("i", "x")))
       .groupBy("bucket", "i")
       .agg(sum(floor(col("x").cast("double") * 1e6 + 0.5).cast("long"))
         .as("sx"))
-      .withColumn("bid", lit(bid))
-    Materialize.overlap(Seq(
-      () => st.put("stats", bid, stats),
-      () => st.put("dims", bid, dims)))
+    (stats, dims)
   }
 
   /** Start the index-maintenance stream over a staged embedding feed
@@ -997,23 +1005,13 @@ object Similarity {
     * frame exactly; the registered row's DuckDB oracle is its SQL twin. */
   private[graft] def annIndexBatchReport(s: SparkSession,
       d: String): DataFrame = {
-    val e = dropZeroNorm(s, embs(s, d).select(col("vec_id"), col("embedding")))
+    val e = nonzeroEmbs(s, d)
     val cents = e.filter(col("vec_id") < AnnCentroids)
       .select(col("vec_id").as("c_id"), col("embedding").as("c_v"))
-    val assigned = assignByArray(s, e, cents).localCheckpoint()
-    val stats = assigned
-      .join(broadcast(cents), col("bucket") === col("c_id"))
-      .withColumn("cos", cosine(s, col("embedding"), col("c_v")))
-      .groupBy("bucket")
-      .agg(count(lit(1)).as("n_vecs"),
-        sum(floor(col("cos") * 1e6 + 0.5).cast("long")).as("cm"),
-        min(col("cos")).as("min_cos"))
-    val dims = assigned
-      .select(col("bucket"), posexplode(col("embedding")).as(Seq("i", "x")))
-      .groupBy("bucket", "i")
-      .agg(sum(floor(col("x").cast("double") * 1e6 + 0.5).cast("long"))
-        .as("sx"))
-    annReportAssemble(s, stats, dims, cents)
+    val (stats, dims) = annPartials(s,
+      assignByArray(s, e, cents).localCheckpoint(), cents)
+    annReportAssemble(s, stats.select(col("bucket"), col("n").as("n_vecs"),
+      col("cos_micro").as("cm"), col("min_cos")), dims, cents)
   }
 
   /** Shared final assembly of the index-health report from the exact
@@ -1635,18 +1633,29 @@ object Similarity {
     Window.partitionBy("q_id").orderBy(col("cos").desc, col("vec_id"))
   }
 
-  /** The IVF rows' exact arm: each query's (vec_id < 10) top-10 cosine
-    * neighbors `(q_id, nn_id)`, by one broadcast-query corpus scan. */
-  private def exactTop10(s: SparkSession, e: DataFrame): DataFrame = {
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
+  /** The per-query top-k tail: over candidate rows carrying a query
+    * `(q_id, q_v)` and a vector `(vec_id, embedding)`, drop the query
+    * itself, score `cos` and keep the `k` best as `rk` 1..k in
+    * [[byQueryCos]] order. */
+  private def topKByQuery(s: SparkSession, cands: DataFrame,
+      k: Int): DataFrame =
+    cands.filter(col("vec_id") =!= col("q_id"))
       .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
       .withColumn("rk", row_number().over(byQueryCos))
-      .filter(col("rk") <= 10)
-      .select(col("q_id"), col("vec_id").as("nn_id"))
+      .filter(col("rk") <= k)
+
+  /** Exact top-k: each query's (vec_id < 10) `k` nearest vectors of `e`,
+    * by one broadcast-query corpus scan. */
+  private def exactTopK(s: SparkSession, e: DataFrame, k: Int): DataFrame = {
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
+    topKByQuery(s, e.crossJoin(broadcast(q)), k)
   }
+
+  /** The IVF rows' exact arm: each query's top-10 cosine neighbors
+    * `(q_id, nn_id)`. */
+  private def exactTop10(s: SparkSession, e: DataFrame): DataFrame =
+    exactTopK(s, e, 10).select(col("q_id"), col("vec_id").as("nn_id"))
 
   /** Each query vector's rank `c_rk` over the centroids `cents`, by
     * cosine `c_cos` descending, ties to the lower c_id. */
@@ -1670,11 +1679,36 @@ object Similarity {
     * buckets `qp(q_id, q_v, bucket)`, ranked `rk` by [[byQueryCos]]. */
   private def probedTopK(s: SparkSession, bucketed: DataFrame,
       qp: DataFrame, k: Int): DataFrame =
-    bucketed.join(qp, Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-      .withColumn("rk", row_number().over(byQueryCos))
-      .filter(col("rk") <= k)
+    topKByQuery(s, bucketed.join(qp, Seq("bucket")), k)
+
+  /** The nonzero embeddings `(vec_id, embedding)` the ANN rows index. */
+  private def nonzeroEmbs(s: SparkSession, d: String): DataFrame =
+    dropZeroNorm(s, embs(s, d).select(col("vec_id"), col("embedding")))
+
+  /** The k-means rows' output: per bucket of `assigned`, its size and
+    * smallest vec_id. */
+  private def bucketHistogram(assigned: DataFrame): DataFrame = assigned
+    .groupBy("bucket")
+    .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_vec"))
+    .orderBy("bucket")
+
+  /** [[bucketHistogram]]'s oracle after `rounds` unrolled Lloyd rounds. */
+  private def sqlBucketHistogram(rounds: Int): String =
+    s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
+              ${sqlKmeansRounds(rounds)}
+              SELECT bucket, COUNT(*) AS n_vecs, MIN(vec_id) AS min_vec
+              FROM a$rounds GROUP BY bucket ORDER BY bucket"""
+
+  /** The kNN rows' oracle prologue: two unrolled Lloyd rounds (`a2`) and
+    * every same-bucket pair as `cand(vec_id, nn_id, cos)`. */
+  private val sqlKnnCands: String =
+    s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
+              ${sqlKmeansRounds(2)},
+              cand AS (
+                SELECT a.vec_id, b.vec_id AS nn_id,
+                  ${sqlCosineCols("a.v", "b.v")} AS cos
+                FROM a2 a JOIN a2 b
+                  ON a.bucket = b.bucket AND a.vec_id <> b.vec_id)"""
 
   /** The IVF rows' oracle prologue: 8 buckets over the nonzero vectors
     * `e`, two unrolled Lloyd rounds (`a2`) and the probe centroids
@@ -1829,21 +1863,10 @@ object Similarity {
     // Rank on the ROUNDED cosine with vec_id tiebreak so ranking is
     // deterministic and engine-independent.
     Q("q_ann_topk",
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val e = embs(s, d).select(col("vec_id"), col("embedding"))
-        val q = e.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_v"))
-        val scored = e.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("q_id"))
-          .withColumn("cos", cosine(s, col("embedding"), col("q_v")))
-        val w = Window.partitionBy("q_id")
-          .orderBy(col("cos").desc, col("vec_id"))
-        scored.withColumn("rk", row_number().over(w))
-          .filter(col("rk") <= 5)
-          .select(col("q_id"), col("rk"), col("vec_id").as("nn_id"), col("cos"))
-          .orderBy("q_id", "rk")
-      },
+      (s, d) => exactTopK(s,
+        embs(s, d).select(col("vec_id"), col("embedding")), 5)
+        .select(col("q_id"), col("rk"), col("vec_id").as("nn_id"), col("cos"))
+        .orderBy("q_id", "rk"),
       Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
               scored AS (
                 SELECT q.vec_id AS q_id, b.vec_id AS nn_id,
@@ -1870,8 +1893,7 @@ object Similarity {
     // tie-breaks) is fully deterministic, so it has an exact SQL oracle.
     Q("q_ann_ivf",
       (s, d) => {
-        val e = Similarity.dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
         val bucketed = kmeansIterate(s, e, 8, 2)
         val cents = centroidsOf(bucketed)
         // queries probe their 2 nearest buckets (tiny set: rank per query)
@@ -1908,8 +1930,7 @@ object Similarity {
     // computed corpus-wide, and the per-query contract is unchanged.
     Q("q_ann_ivf_recall",
       (s, d) => {
-        val e = dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
         val exact = exactTop10(s, e)
         val bucketed = kmeansIterate(s, e, 8, 2)
         val cents = centroidsOf(bucketed)
@@ -1959,8 +1980,7 @@ object Similarity {
     // cross-check (r11 ADVICE). One exact IEEE long/double division.
     Q("q_ann_probe_curve",
       (s, d) => {
-        val e = dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
         val exact = exactTop10(s, e).localCheckpoint()
         val bucketed = kmeansIterate(s, e, 8, 2)
         val cents = centroidsOf(bucketed).localCheckpoint()
@@ -2010,13 +2030,7 @@ object Similarity {
       (s, d) => knnJoin(s,
         embs(s, d).select(col("vec_id"), col("embedding")), 3, 8)
         .orderBy("vec_id", "rk"),
-      Some(s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
-              ${sqlKmeansRounds(2)},
-              cand AS (
-                SELECT a.vec_id, b.vec_id AS nn_id,
-                  ${sqlCosineCols("a.v", "b.v")} AS cos
-                FROM a2 a JOIN a2 b
-                  ON a.bucket = b.bucket AND a.vec_id <> b.vec_id)
+      Some(s"""$sqlKnnCands
               SELECT vec_id, CAST(rk AS INTEGER) AS rk, nn_id, cos FROM (
                 SELECT vec_id, nn_id, cos,
                   row_number() OVER (PARTITION BY vec_id
@@ -2058,13 +2072,7 @@ object Similarity {
             col("n_votes"), (col("nn_label") === col("label")).as("correct"))
           .orderBy("vec_id")
       },
-      Some(s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
-              ${sqlKmeansRounds(2)},
-              cand AS (
-                SELECT a.vec_id, b.vec_id AS nn_id,
-                  ${sqlCosineCols("a.v", "b.v")} AS cos
-                FROM a2 a JOIN a2 b
-                  ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
+      Some(s"""$sqlKnnCands,
               nn AS (
                 SELECT vec_id, nn_id FROM (
                   SELECT vec_id, nn_id,
@@ -2092,18 +2100,8 @@ object Similarity {
     // bucket HISTOGRAM has an exact SQL oracle. Zero-norm vectors are
     // excluded on both sides (no defined cosine).
     Q("q_ann_kmeans",
-      (s, d) => {
-        val e = Similarity.dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
-        kmeansRefine(s, e, 8)
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_vec"))
-          .orderBy("bucket")
-      },
-      Some(s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
-              ${sqlKmeansRounds(1)}
-              SELECT bucket, COUNT(*) AS n_vecs, MIN(vec_id) AS min_vec
-              FROM a1 GROUP BY bucket ORDER BY bucket""")),
+      (s, d) => bucketHistogram(kmeansRefine(s, nonzeroEmbs(s, d), 8)),
+      Some(sqlBucketHistogram(1))),
 
     // ---- iterated k-means (the real clustering for the IVF index) --------
     // Lloyd iterated for exactly 4 rounds (kmeansIterate — no early
@@ -2113,18 +2111,8 @@ object Similarity {
     // (round-2 changed count > 0, strong decay across rounds) with a
     // test-local loop over lloydRound.
     Q("q_ann_kmeans_iter",
-      (s, d) => {
-        val e = Similarity.dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
-        kmeansIterate(s, e, 8, 4)
-          .groupBy("bucket")
-          .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_vec"))
-          .orderBy("bucket")
-      },
-      Some(s"""WITH ${sqlIvfAssign(8, sqlZeroNormWhere)},
-              ${sqlKmeansRounds(4)}
-              SELECT bucket, COUNT(*) AS n_vecs, MIN(vec_id) AS min_vec
-              FROM a4 GROUP BY bucket ORDER BY bucket""")),
+      (s, d) => bucketHistogram(kmeansIterate(s, nonzeroEmbs(s, d), 8, 4)),
+      Some(sqlBucketHistogram(4))),
 
     // ---- cluster-balanced diversity sampling ------------------------------
     // The SemDeDup-family curation move: embedding-cluster the corpus,
@@ -2142,8 +2130,7 @@ object Similarity {
     // budgeted by config. Oracle unrolls the identical 2 Lloyd rounds.
     Q("q_diversity_sample",
       (s, d) => {
-        val e = Similarity.dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("bucket")
           .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
@@ -2183,8 +2170,7 @@ object Similarity {
     Q("q_ann_pq",
       (s, d) => {
         val m = 8; val subDim = 8; val k = 8
-        val e = Similarity.dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
         // codebooks are TRAINED ON A DETERMINISTIC SAMPLE (every 2nd
         // vector), the FAISS practice — codeword quality needs thousands
         // of members per codeword, not the whole corpus, so training cost
@@ -2247,8 +2233,7 @@ object Similarity {
     Q("q_ann_ivfpq",
       (s, d) => {
         val m = 8; val subDim = 8; val k = 8; val nBuckets = 8
-        val e = Similarity.dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
         val assigned = kmeansIterate(s, e, nBuckets, 2)
         val cents = centroidsOf(assigned)
         // residual = v − its bucket's centroid: float→double is exact and
@@ -2361,8 +2346,7 @@ object Similarity {
         // before-plan. Same discipline as the dedup rows' shingle
         // checkpoint; at production scale this diagnostic runs on a
         // sample by design.
-        val e = dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
           .select(col("vec_id"),
             transform(col("embedding"), x => x.cast("double"))
               .as("embedding"))
@@ -2689,8 +2673,7 @@ object Similarity {
     // bucket mean is shuffle-order-independent and exact cross-engine.
     Q("q_ann_index_stats",
       (s, d) => {
-        val e = dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
         val bucketed = kmeansIterate(s, e, 8, 2)
         val cents = centroidsOf(bucketed)
         bucketed.join(broadcast(cents), col("bucket") === col("c_id"))
@@ -2799,8 +2782,7 @@ object Similarity {
     // lower doc_id.
     Q("q_mmr_rerank",
       (s, d) => {
-        val e = dropZeroNorm(s,
-          embs(s, d).select(col("vec_id"), col("embedding")))
+        val e = nonzeroEmbs(s, d)
         val qv = e.filter(col("vec_id") === 0)
           .select(col("embedding").as("q_v"))
         val cand = e.filter(col("vec_id") =!= 0)

@@ -29,6 +29,19 @@ object TextOps {
   private def docs(s: SparkSession, d: String) =
     Tables(s, d, "documents")
 
+  /** The corpus tokenizer: the lowercased text split on single spaces
+    * (a run of spaces leaves empty tokens). */
+  private[operators] def tokens: Column = split(lower(col("text")), " ")
+
+  /** [[tokens]] without its empty tokens. */
+  private[operators] def nonEmptyTokens: Column =
+    filter(tokens, t => t =!= "")
+
+  /** DuckDB twins of [[tokens]] and [[nonEmptyTokens]]. */
+  private[operators] val sqlTokens = "string_split(lower(text), ' ')"
+  private[operators] val sqlNonEmptyTokens =
+    s"[x FOR x IN $sqlTokens IF x <> '']"
+
   /** English function words used by the language-ID / quality heuristics.
     * Kept tiny and mirrored verbatim in the oracle SQL (whose
     * regexp_matches('^(a|the|of|and|to|in)$') is exactly set membership).
@@ -69,8 +82,7 @@ object TextOps {
   private def bm25Corpus(s: SparkSession,
       d: String): (DataFrame, DataFrame, DataFrame) = {
     val toks = docs(s, d)
-      .select(col("doc_id"),
-        explode(split(lower(col("text")), " ")).as("word"))
+      .select(col("doc_id"), explode(tokens).as("word"))
       .filter(col("word") =!= "")
     val dl = toks.groupBy("doc_id")
       .agg(count(lit(1)).cast("double").as("dl"))
@@ -108,7 +120,7 @@ object TextOps {
     * re-joining the table against its own quality frame on doc_id. */
   private def qualityScored(s: SparkSession, d: String): DataFrame =
     docs(s, d)
-      .withColumn("toks", split(lower(col("text")), " "))
+      .withColumn("toks", tokens)
       .withColumn("n_tokens", size(col("toks")).cast("long"))
       .withColumn("mean_word_len",
         Arith.micro6((col("n_chars") - col("n_tokens") + 1).cast("double") /
@@ -304,9 +316,9 @@ object TextOps {
     * the oracle twin of [[bm25Scores]], shared by q_bm25 and
     * q_hybrid_rrf. */
   private[operators] val sqlBm25Ctes: String =
-    """toks AS (
+    s"""toks AS (
         SELECT doc_id, word FROM (
-          SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
+          SELECT doc_id, unnest($sqlTokens) AS word
           FROM documents)
         WHERE word <> ''),
       dl AS (SELECT doc_id, COUNT(*)::DOUBLE AS dl FROM toks
@@ -372,9 +384,9 @@ object TextOps {
     * twin of [[bm25ScoresBatch]] against the query batch held in a CTE
     * named `qt(q_id BIGINT, word)` that the caller prepends. */
   private[operators] val sqlBm25BatchCtes: String =
-    """btoks AS (
+    s"""btoks AS (
         SELECT doc_id, word FROM (
-          SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
+          SELECT doc_id, unnest($sqlTokens) AS word
           FROM documents)
         WHERE word <> ''),
       bdl AS (SELECT doc_id, COUNT(*)::DOUBLE AS dl FROM btoks
@@ -413,7 +425,7 @@ object TextOps {
   /** [[tokenPairs]]' oracle: a CTE chain ending in `pairs`, which selects
     * `cols` from the adjacent token rows `a`, `b` (doc_id, w, i). */
   private def sqlTokenPairs(cols: String): String = s"""WITH t AS (
-                SELECT doc_id, string_split(lower(text), ' ') AS toks
+                SELECT doc_id, $sqlTokens AS toks
                 FROM documents),
               u AS (
                 SELECT doc_id, unnest(toks) AS w,
@@ -447,8 +459,7 @@ object TextOps {
   def chunkTokens(df: org.apache.spark.sql.DataFrame,
       window: Int, stride: Int): org.apache.spark.sql.DataFrame = {
     require(0 < stride && stride <= window, s"bad window/stride $window/$stride")
-    df.select(col("doc_id"),
-        filter(split(lower(col("text")), " "), t => t =!= "").as("toks"))
+    df.select(col("doc_id"), nonEmptyTokens.as("toks"))
       .withColumn("n", size(col("toks")).cast("long"))
       .filter(col("n") > 0)
       .withColumn("m",
@@ -491,6 +502,20 @@ object TextOps {
           col("sclog").cast("double") / col("n_chars")) + lit(0.0))
           .as("entropy"))
 
+  /** q_quality_classifier's hashed margin over the token list `toks`:
+    * each token's bucket weight is its md5's first four hex digits as a
+    * signed 16-bit integer, the hex spelled per char (no conv() in
+    * DuckDB): d1*4096 + d2*256 + d3*16 + d4, digits via strpos (1-based,
+    * so −1). */
+  private val sqlHashMargin: String =
+    """COALESCE(list_sum([
+                    (strpos('0123456789abcdef', substr(md5('w_' || x), 1, 1)) - 1) * 4096
+                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 2, 1)) - 1) * 256
+                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 3, 1)) - 1) * 16
+                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 4, 1)) - 1)
+                  - 32768
+                  FOR x IN toks]), 0)"""
+
   /** Count of stop-word tokens in a token-array column (repeats count). */
   private def nStop(toks: org.apache.spark.sql.Column) =
     size(filter(toks, t => t.isin(stopWords: _*))).cast("long")
@@ -500,15 +525,14 @@ object TextOps {
     * read. */
   private def positionedTerms(s: SparkSession, d: String): DataFrame =
     docs(s, d)
-      .select(col("doc_id"),
-        posexplode(split(lower(col("text")), " ")).as(Seq("p0", "term")))
+      .select(col("doc_id"), posexplode(tokens).as(Seq("p0", "term")))
       .filter(col("term") =!= "")
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("i"),
         col("term"))
 
   /** [[positionedTerms]]' oracle: the CTE `f(doc_id, term, i)`. */
-  private val sqlPositionedTerms: String = """WITH t AS (
-                SELECT doc_id, string_split(lower(text), ' ') AS toks
+  private val sqlPositionedTerms: String = s"""WITH t AS (
+                SELECT doc_id, $sqlTokens AS toks
                 FROM documents),
               u AS (
                 SELECT doc_id, unnest(toks) AS term,
@@ -626,12 +650,12 @@ object TextOps {
     // ---- word count (the reference's flagship job, Q1-Q4) -----------------
     Q("q_wordcount",
       (s, d) => docs(s, d)
-        .select(explode(split(lower(col("text")), " ")).as("word"))
+        .select(explode(tokens).as("word"))
         .filter(col("word") =!= "")
         .groupBy("word").agg(count(lit(1)).as("cnt"))
         .orderBy("word"),
-      Some("""SELECT word, COUNT(*) AS cnt FROM (
-                SELECT unnest(string_split(lower(text), ' ')) AS word
+      Some(s"""SELECT word, COUNT(*) AS cnt FROM (
+                SELECT unnest($sqlTokens) AS word
                 FROM documents)
               WHERE word <> '' GROUP BY word ORDER BY word""")),
 
@@ -650,7 +674,7 @@ object TextOps {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val counts = docs(s, d)
-          .select(explode(split(lower(col("text")), " ")).as("word"))
+          .select(explode(tokens).as("word"))
           .filter(col("word") =!= "")
           .groupBy("word").agg(count(lit(1)).as("cnt"))
           .localCheckpoint() // consumed twice: total + head
@@ -666,9 +690,9 @@ object TextOps {
           .select(col("rank"), col("word"), col("cnt"), col("cum_ppm"))
           .orderBy("rank")
       },
-      Some("""WITH c AS (
+      Some(s"""WITH c AS (
                 SELECT word, CAST(COUNT(*) AS BIGINT) AS cnt FROM (
-                  SELECT unnest(string_split(lower(text), ' ')) AS word
+                  SELECT unnest($sqlTokens) AS word
                   FROM documents)
                 WHERE word <> '' GROUP BY word),
               t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS total FROM c),
@@ -720,7 +744,7 @@ object TextOps {
     // is identical, so the heuristic stands in for it deterministically.
     Q("q_lang_id",
       (s, d) => docs(s, d)
-        .withColumn("toks", split(lower(col("text")), " "))
+        .withColumn("toks", tokens)
         .withColumn("n_tokens", size(col("toks")).cast("long"))
         .withColumn("n_stop", nStop(col("toks")))
         .withColumn("stop_ratio",
@@ -738,7 +762,7 @@ object TextOps {
               CASE WHEN ${Arith.sqlMicro6(
                 """len([t FOR t IN toks IF regexp_matches(t, '^(a|the|of|and|to|in)$')])::DOUBLE
                     / len(toks)""")} >= 0.08 THEN 'en' ELSE 'und' END AS pred_lang
-              FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
+              FROM (SELECT doc_id, $sqlTokens AS toks
                     FROM documents) ORDER BY doc_id""")),
 
     // ---- quality scoring --------------------------------------------------
@@ -839,8 +863,7 @@ object TextOps {
         val n = docs(s, d)
           .agg(count(lit(1)).cast("double").as("corpus_n"))
         val tf = docs(s, d)
-          .select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("word"))
+          .select(col("doc_id"), explode(tokens).as("word"))
           .filter(col("word") =!= "")
           .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
         val df = tf.groupBy("word")
@@ -859,7 +882,7 @@ object TextOps {
       },
       Some(s"""WITH tf AS (
                 SELECT doc_id, word, COUNT(*) AS tf FROM (
-                  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
+                  SELECT doc_id, unnest($sqlTokens) AS word
                   FROM documents)
                 WHERE word <> '' GROUP BY doc_id, word),
               dfc AS (SELECT word, COUNT(DISTINCT doc_id) AS df FROM tf GROUP BY word),
@@ -908,8 +931,7 @@ object TextOps {
     Q("q_unigram_logprob",
       (s, d) => {
         val toks = docs(s, d)
-          .select(col("doc_id"),
-            explode(split(lower(col("text")), " ")).as("word"))
+          .select(col("doc_id"), explode(tokens).as("word"))
           .filter(col("word") =!= "")
         val cnt = toks.groupBy("word").agg(count(lit(1)).as("wc"))
         val tot = toks.agg(count(lit(1)).cast("double").as("tot"))
@@ -925,7 +947,7 @@ object TextOps {
       },
       Some(s"""WITH toks AS (
                 SELECT doc_id, word FROM (
-                  SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
+                  SELECT doc_id, unnest($sqlTokens) AS word
                   FROM documents)
                 WHERE word <> ''),
               cnt AS (SELECT word, COUNT(*) AS wc FROM toks GROUP BY word),
@@ -952,7 +974,7 @@ object TextOps {
     Q("q_bigram_lm",
       (s, d) => {
         val pairs = tokenPairs(docs(s, d)
-            .select(col("doc_id"), split(lower(col("text")), " ").as("toks")),
+            .select(col("doc_id"), tokens.as("toks")),
             col("doc_id"))
           .select(col("doc_id"),
             concat_ws(" ", col("p.w1"), col("p.w2")).as("bg"),
@@ -1006,8 +1028,7 @@ object TextOps {
       (s, d) => {
         val base = docs(s, d).select(col("doc_id"),
           (substring(md5(col("doc_id").cast("string")), 1, 2) >= "1a")
-            .as("is_train"),
-          split(lower(col("text")), " ").as("toks"))
+            .as("is_train"), tokens.as("toks"))
         val toks = base
           .select(col("doc_id"), col("is_train"), explode(col("toks")).as("w"))
           .filter(col("w") =!= "")
@@ -1046,7 +1067,7 @@ object TextOps {
       Some(s"""WITH t AS (
                 SELECT doc_id,
                   substr(md5(doc_id::VARCHAR), 1, 2) >= '1a' AS is_train,
-                  string_split(lower(text), ' ') AS toks
+                  $sqlTokens AS toks
                 FROM documents),
               u AS (
                 SELECT doc_id, is_train, w FROM (
@@ -1106,7 +1127,7 @@ object TextOps {
     Q("q_cooccur_pmi",
       (s, d) => {
         val base = tokenPairs(docs(s, d)
-            .select(split(lower(col("text")), " ").as("toks")))
+            .select(tokens.as("toks")))
           .select(concat_ws(" ", col("p.w1"), col("p.w2")).as("bg"),
             col("p.w1").as("w1"), col("p.w2").as("w2"))
         val c2 = base.groupBy("bg", "w1", "w2")
@@ -1150,36 +1171,21 @@ object TextOps {
     // compare.
     Q("q_quality_classifier",
       (s, d) => docs(s, d)
-        .select(col("doc_id"),
-          filter(split(lower(col("text")), " "), t => t =!= "").as("toks"))
+        .select(col("doc_id"), nonEmptyTokens.as("toks"))
         .select(col("doc_id"), size(col("toks")).cast("long").as("n_tokens"),
           aggregate(col("toks"), lit(0L), (acc, t) =>
             acc + (conv(substring(md5(concat(lit("w_"), t)), 1, 4), 16, 10)
               .cast("long") - 32768L)).as("margin"))
         .withColumn("keep", col("margin") > 0)
         .orderBy("doc_id"),
-      // hex → int spelled per char (no conv() in DuckDB):
-      // d1*4096 + d2*256 + d3*16 + d4, digits via strpos (1-based, so −1)
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
                 SELECT doc_id,
-                  [x FOR x IN string_split(lower(text), ' ') IF x <> '']
+                  $sqlNonEmptyTokens
                     AS toks
                 FROM documents)
               SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-                CAST(COALESCE(list_sum([
-                    (strpos('0123456789abcdef', substr(md5('w_' || x), 1, 1)) - 1) * 4096
-                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 2, 1)) - 1) * 256
-                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 3, 1)) - 1) * 16
-                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 4, 1)) - 1)
-                  - 32768
-                  FOR x IN toks]), 0) AS BIGINT) AS margin,
-                COALESCE(list_sum([
-                    (strpos('0123456789abcdef', substr(md5('w_' || x), 1, 1)) - 1) * 4096
-                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 2, 1)) - 1) * 256
-                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 3, 1)) - 1) * 16
-                  + (strpos('0123456789abcdef', substr(md5('w_' || x), 4, 1)) - 1)
-                  - 32768
-                  FOR x IN toks]), 0) > 0 AS keep
+                CAST($sqlHashMargin AS BIGINT) AS margin,
+                $sqlHashMargin > 0 AS keep
               FROM t ORDER BY doc_id""")),
 
     // ---- trained Naive Bayes classifier -----------------------------------
@@ -1214,12 +1220,11 @@ object TextOps {
       (s, d) => nbClassify(docs(s, d).select(col("doc_id"),
         col("lang").as("label"),
         (substring(md5(col("doc_id").cast("string")), 1, 2) >= "1a")
-          .as("is_train"),
-        split(lower(col("text")), " ").as("toks"))),
+          .as("is_train"), tokens.as("toks"))),
       Some(s"""WITH t AS (
                 SELECT doc_id, lang,
                   substr(md5(doc_id::VARCHAR), 1, 2) >= '1a' AS is_train,
-                  string_split(lower(text), ' ') AS toks
+                  $sqlTokens AS toks
                 FROM documents),
               u AS (
                 SELECT doc_id, lang, is_train, w FROM (
@@ -1956,7 +1961,7 @@ object TextOps {
     // 50 are broken by the bigram text, making the cut deterministic.
     Q("q_vocab_bigrams",
       (s, d) => docs(s, d)
-        .select(split(lower(col("text")), " ").as("toks"))
+        .select(tokens.as("toks"))
         .select(explode(arrays_zip(
           slice(col("toks"), lit(1), size(col("toks")) - 1).as("w1"),
           slice(col("toks"), lit(2), size(col("toks")) - 1).as("w2")))
@@ -1966,17 +1971,9 @@ object TextOps {
         .groupBy("bigram").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("bigram"))
         .limit(50),
-      Some("""WITH t AS (
-                SELECT doc_id, string_split(lower(text), ' ') AS toks
-                FROM documents),
-              u AS (
-                SELECT doc_id, unnest(toks) AS w,
-                  generate_subscripts(toks, 1) AS i
-                FROM t)
-              SELECT a.w || ' ' || b.w AS bigram, COUNT(*) AS cnt
-              FROM u a JOIN u b ON a.doc_id = b.doc_id AND b.i = a.i + 1
-              WHERE a.w <> '' AND b.w <> ''
-              GROUP BY 1 ORDER BY cnt DESC, bigram LIMIT 50""")),
+      Some(s"""${sqlTokenPairs("a.w || ' ' || b.w AS bigram")}
+              SELECT bigram, COUNT(*) AS cnt FROM pairs
+              GROUP BY bigram ORDER BY cnt DESC, bigram LIMIT 50""")),
 
     // ---- end-to-end training-data pipeline (the composed funnel) ----------
     // The full pre-training preparation chain as ONE declarative plan:
@@ -2088,9 +2085,9 @@ object TextOps {
       (s, d) => chunkTokens(
         docs(s, d).select(col("doc_id"), col("text")), 32, 24)
         .orderBy("doc_id", "chunk_id"),
-      Some("""WITH t AS (
+      Some(s"""WITH t AS (
                 SELECT doc_id,
-                  [x FOR x IN string_split(lower(text), ' ') IF x <> '']
+                  $sqlNonEmptyTokens
                     AS toks
                 FROM documents),
               n AS (
@@ -2361,9 +2358,7 @@ object TextOps {
         val toks = w.select(col("word"),
           size(split(regexp_replace(col("w"), "^\\(|\\)$", ""), "\\)\\("))
             .cast("long").as("n_tok"))
-        docs(s, d).select(col("lang"),
-            explode(filter(split(lower(col("text")), " "),
-              t => t =!= "")).as("word"))
+        docs(s, d).select(col("lang"), explode(nonEmptyTokens).as("word"))
           .groupBy("lang", "word").agg(count(lit(1)).as("c"))
           .join(toks, "word")
           .groupBy("lang")
@@ -2400,8 +2395,7 @@ object TextOps {
         // a real corpus has, while the agg is O(n) with map-side
         // partials.
         val withT = docs(s, d)
-          .withColumn("toks",
-            filter(split(lower(col("text")), " "), t => t =!= ""))
+          .withColumn("toks", nonEmptyTokens)
           .withColumn("n_tokens", size(col("toks")).cast("long"))
           .withColumn("dup3_frac", when(col("n_tokens") >= 3,
             floor((lit(1.0) -
@@ -2429,9 +2423,9 @@ object TextOps {
             col("top_share"), col("keep"))
           .orderBy("doc_id")
       },
-      Some("""WITH dt AS (
+      Some(s"""WITH dt AS (
                 SELECT doc_id,
-                  list_filter(string_split(lower(text), ' '),
+                  list_filter($sqlTokens,
                     x -> x <> '') AS toks
                 FROM documents),
               dr AS (
@@ -2475,8 +2469,7 @@ object TextOps {
     * localCheckpointed so every training round reads types, never text. */
   private def bpeWords0(s: SparkSession, d: String): DataFrame =
     docs(s, d)
-      .select(explode(filter(split(lower(col("text")), " "),
-        t => t =!= "")).as("word"))
+      .select(explode(nonEmptyTokens).as("word"))
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .select(col("word"),
         regexp_replace(col("word"), "(.)", "($1)").as("w"), col("cnt"))
@@ -2573,8 +2566,7 @@ object TextOps {
       size(split(regexp_replace(col("w"), "^\\(|\\)$", ""), "\\)\\("))
         .cast("long").as("n_tok"))
     val tf = docs(s, d).select(col("doc_id"),
-        explode(filter(split(lower(col("text")), " "),
-          t => t =!= "")).as("word"))
+        explode(nonEmptyTokens).as("word"))
       .groupBy("doc_id", "word").agg(count(lit(1)).as("c"))
     tf.join(toks, "word")
       .groupBy("doc_id")
@@ -2701,7 +2693,7 @@ object TextOps {
     }.mkString(",\n")
     s"""wd AS (
           SELECT w AS word, COUNT(*) AS cnt FROM (
-            SELECT unnest(string_split(lower(text), ' ')) AS w
+            SELECT unnest($sqlTokens) AS w
             FROM documents)
           WHERE w <> '' GROUP BY w),
         w0 AS (SELECT word, regexp_replace(word, '(.)', '(\\1)', 'g') AS w,
@@ -2726,7 +2718,7 @@ object TextOps {
                AS n_tok
            FROM w$bpeK),
         tf AS (SELECT doc_id, word, COUNT(*) AS c FROM (
-                 SELECT doc_id, unnest(string_split(lower(text), ' ')) AS word
+                 SELECT doc_id, unnest($sqlTokens) AS word
                  FROM documents)
                WHERE word <> '' GROUP BY doc_id, word)"""
 
@@ -2762,7 +2754,7 @@ object TextOps {
                AS n_tok
            FROM w$bpeK),
         tfl AS (SELECT lang, word, COUNT(*) AS c FROM (
-                 SELECT lang, unnest(string_split(lower(text), ' ')) AS word
+                 SELECT lang, unnest($sqlTokens) AS word
                  FROM documents)
                WHERE word <> '' GROUP BY lang, word)
         SELECT lang, CAST(SUM(c) AS BIGINT) AS n_words,

@@ -7,9 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards `src/main/scala` and the scale-law harness (the `ScaleLaw*`
-  * files and StreamKillMain) against copied code: fails on any run of at
-  * least [[DuplicateRuns.MinLines]] consecutive lines, totalling at least
-  * [[DuplicateRuns.MinChars]] characters, that appears twice. Lines are
+  * files, StreamKillMain and StreamingSpec) against copied code: fails on
+  * any run of at least [[DuplicateRuns.MinLines]] consecutive lines,
+  * totalling at least [[DuplicateRuns.MinChars]] characters, that
+  * appears twice. Lines are
   * compared after whitespace collapse; blank, comment, `import` and
   * `package` lines are skipped. A shared body belongs in one `private
   * def` or `val` of the owning module, parameterized by what differs. */
@@ -30,8 +31,9 @@ class DuplicateRunsSpec extends AnyFunSuite {
     val root = Paths.get("src/test/scala")
     assert(Files.exists(root.resolve("graft/ScaleLaws.scala")),
       s"run from the repo root: $root")
-    noRuns(DuplicateRuns.scan(root, p => Seq("ScaleLaw", "StreamKillMain")
-      .exists(p.getFileName.toString.startsWith)))
+    noRuns(DuplicateRuns.scan(root, p =>
+      Seq("ScaleLaw", "StreamKillMain", "StreamingSpec")
+        .exists(p.getFileName.toString.startsWith)))
   }
 
   test("the scan finds a planted copy and ignores comments and imports") {

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.Streams
@@ -14,6 +16,57 @@ class StreamingSpec extends AnyFunSuite {
 
   private def spark = TestSpark.spark
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** Runs `query` over the parquet files in `src` (read with `schema`)
+    * with an AvailableNow trigger into the append-mode parquet sink `out`,
+    * checkpointed in `ckpt`, and waits until it has drained. */
+  private def drainParquet(src: java.nio.file.Path, schema: String,
+      out: java.nio.file.Path, ckpt: java.nio.file.Path)(
+      query: DataFrame => DataFrame): Unit =
+    query(spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1000000")
+      .parquet(src.toString + "/*.parquet"))
+      .writeStream
+      .format("parquet")
+      .option("path", out.toString)
+      .option("checkpointLocation", ckpt.toString)
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** q_sessionize's batch answer as sorted
+    * (user_id, n_events, start_us, end_us). */
+  private def batchSessions(): Seq[(Long, Long, Long, Long)] =
+    SparkEntry.queries("q_sessionize")(spark, sfDir)
+      .select(col("user_id"), col("n_events"), col("start_us"),
+        col("end_us"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).sortBy(identity).toSeq
+
+  /** Sessionizes the events, plus one far-future sentinel per user that
+    * closes every open session, from a MemoryStream into the memory
+    * table `name`; returns the stopped query and its closed sessions. */
+  private def memorySessions(name: String)
+      : (StreamingQuery, Set[(Long, Long, Long, Long)]) = {
+    val s = spark
+    import s.implicits._
+    val evs = Tables(s, sfDir, "events")
+      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
+      .as[Ev].collect().toSeq
+    val maxUs = evs.map(_.ts_us).max
+    val sentinels = evs.map(_.user_id).distinct
+      .map(u => Ev(u, maxUs + 10 * Streams.GapUs, Long.MaxValue))
+    val input = MemoryStream[Ev](s)
+    input.addData(evs: _*)
+    input.addData(sentinels: _*)
+    val q = Streams.sessionize(input.toDS()).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val got = s.table(name).as[Session].collect()
+      .map(x => (x.user_id, x.n_events, x.start_us, x.end_us)).toSet
+    (q, got)
+  }
 
   test("streaming hourlyCounts == batch hourly aggregation") {
     val s = spark
@@ -141,18 +194,8 @@ class StreamingSpec extends AnyFunSuite {
     ).toDF("ts_s", "event_type", "value")
       .select(to_timestamp($"ts_s").as("ts"), $"event_type", $"value")
       .write.parquet(src.resolve("b1.parquet").toString)
-    val stream = s.readStream
-      .schema("ts TIMESTAMP, event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1000000")
-      .parquet(src.toString + "/*.parquet")
-    val q = Streams.hourlyCounts(stream).writeStream
-      .format("parquet")
-      .option("path", out.toString)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drainParquet(src, "ts TIMESTAMP, event_type STRING, value DOUBLE", out,
+      ckpt)(Streams.hourlyCounts)
     val rows = s.read.parquet(out.toString)
       .select($"hour_ts", $"event_type", $"n").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -185,21 +228,9 @@ class StreamingSpec extends AnyFunSuite {
     all.filter(unix_micros($"ts") < splitUs)
       .write.parquet(src.resolve("t1.parquet").toString)
 
-    def drain(): Unit = {
-      val q = Streams.hourlyCounts(
-        s.readStream
-          .schema("ts TIMESTAMP, event_type STRING, value DOUBLE")
-          .option("maxFilesPerTrigger", "1000000")
-          .parquet(src.toString + "/*.parquet"))
-        .writeStream
-        .format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def drain(): Unit = drainParquet(src,
+      "ts TIMESTAMP, event_type STRING, value DOUBLE", out, ckpt)(
+      Streams.hourlyCounts)
 
     drain()
     val run1 = s.read.parquet(out.toString).count()
@@ -262,33 +293,10 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stateful sessionize == batch q_sessionize (closed sessions)") {
-    val s = spark
-    import s.implicits._
-    val evs = Tables(s, sfDir, "events")
-      .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
-      .as[Ev].collect().toSeq
-
-    // Sentinel event per user, far in the future: forces the open session
-    // to close so the streaming output covers every REAL session.
-    val maxUs = evs.map(_.ts_us).max
-    val sentinels = evs.map(_.user_id).distinct
-      .map(u => Ev(u, maxUs + 10 * Streams.GapUs, Long.MaxValue))
-
-    val input = MemoryStream[Ev](s)
-    input.addData(evs: _*)
-    input.addData(sentinels: _*)
-    val q = Streams.sessionize(input.toDS()).writeStream
-      .format("memory").queryName("sessions").outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-
-    val got = s.table("sessions").as[Session].collect()
-      .map(x => (x.user_id, x.n_events, x.start_us, x.end_us)).toSet
-
-    val want = SparkEntry.queries("q_sessionize")(s, sfDir)
-      .select($"user_id", $"n_events", $"start_us", $"end_us")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
-    assert(got == want)
+    // the sentinels close every open session, so the streaming output
+    // covers every REAL session
+    val (_, got) = memorySessions("sessions")
+    assert(got == batchSessions().toSet)
   }
 
   test("sessionize on the RocksDB state store matches the default store") {
@@ -299,36 +307,14 @@ class StreamingSpec extends AnyFunSuite {
     // (flatMapGroupsWithState sessionize) runs on it UNCHANGED: identical
     // closed sessions vs the batch twin, with the query's own progress
     // metrics proving RocksDB really was the store (no silent fallback).
-    val s = spark
-    import s.implicits._
     import scala.jdk.CollectionConverters._
-    Streams.withConf(s, Streams.RocksDbProvider) {
-      val evs = Tables(s, sfDir, "events")
-        .select($"user_id", unix_micros($"ts").as("ts_us"), $"event_id")
-        .as[Ev].collect().toSeq
-      val maxUs = evs.map(_.ts_us).max
-      val sentinels = evs.map(_.user_id).distinct
-        .map(u => Ev(u, maxUs + 10 * Streams.GapUs, Long.MaxValue))
-      val input = MemoryStream[Ev](s)
-      input.addData(evs: _*)
-      input.addData(sentinels: _*)
-      val q = Streams.sessionize(input.toDS()).writeStream
-        .format("memory").queryName("sessions_rocksdb")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
-
+    Streams.withConf(spark, Streams.RocksDbProvider) {
+      val (q, got) = memorySessions("sessions_rocksdb")
       val usedRocks = q.recentProgress.flatMap(_.stateOperators)
         .exists(_.customMetrics.keySet.asScala.exists(_.contains("rocksdb")))
       assert(usedRocks,
         "no rocksdb custom metrics in progress — provider did not take effect")
-
-      val got = s.table("sessions_rocksdb").as[Session].collect()
-        .map(x => (x.user_id, x.n_events, x.start_us, x.end_us)).toSet
-      val want = SparkEntry.queries("q_sessionize")(s, sfDir)
-        .select($"user_id", $"n_events", $"start_us", $"end_us")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSet
-      assert(got == want)
+      assert(got == batchSessions().toSet)
     }
   }
 
@@ -393,20 +379,9 @@ class StreamingSpec extends AnyFunSuite {
     all.filter($"ts_us" < splitUs)
       .write.parquet(src.resolve("t1.parquet").toString)
 
-    def drain(): Unit = {
-      val q = Streams.sessionize(
-        s.readStream.schema("user_id LONG, ts_us LONG, event_id LONG")
-          .option("maxFilesPerTrigger", "1000000")
-          .parquet(src.toString + "/*.parquet").as[Ev])
-        .writeStream
-        .format("parquet")
-        .option("path", out.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    def drain(): Unit = drainParquet(src,
+      "user_id LONG, ts_us LONG, event_id LONG", out, ckpt)(
+      df => Streams.sessionize(df.as[Ev]).toDF())
 
     drain()
     // tranche 2 + sentinels land while NO query is running
@@ -421,10 +396,7 @@ class StreamingSpec extends AnyFunSuite {
     val got = s.read.parquet(out.toString).as[Session].collect()
       .map(x => (x.user_id, x.n_events, x.start_us, x.end_us))
       .sortBy(identity).toSeq
-    val want = SparkEntry.queries("q_sessionize")(s, sfDir)
-      .select($"user_id", $"n_events", $"start_us", $"end_us")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).sortBy(identity).toSeq
+    val want = batchSessions()
     assert(got == want,
       s"recovered session set diverges: got ${got.size} sessions, " +
         s"want ${want.size}")
